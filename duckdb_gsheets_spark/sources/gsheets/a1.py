@@ -146,7 +146,13 @@ class A1Range:
         parts = []
         if self.sheet is not None:
             name = self.sheet
-            if re.search(r"[^A-Za-z0-9_]", name) or name == "":
+            # Quote a name that would otherwise parse back as a cell,
+            # column or row reference (``out``, ``Q1``, ``2024``).
+            if (
+                name == ""
+                or re.search(r"[^A-Za-z0-9_]", name)
+                or _is_valid_ref_part(name)
+            ):
                 name = "'" + name.replace("'", "''") + "'"
             parts.append(name)
         if self.cell_range:

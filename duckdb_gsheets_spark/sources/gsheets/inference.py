@@ -14,13 +14,15 @@ Exact behavior parity with the reference's bind-time inference
   blank first cell is VARCHAR, integers become DOUBLE.
 * Casting: empty string → NULL; a short row pads trailing NULLs;
   boolean cast is permissive (any-case true/false) like the engine
-  cast the reference delegates to.
+  cast the reference delegates to. The cast grid is one Arrow table,
+  the single read format of every entry point.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -130,18 +132,20 @@ def cast_cell(value: str | None, type_name: str):
     return value
 
 
+_ARROW_TYPES = {"boolean": pa.bool_(), "double": pa.float64(), "string": pa.string()}
+
+
 def cast_rows(
     values: list[list[str]], schema: SheetSchema, header: bool
-) -> list[tuple]:
-    """Materialize the data rows as typed tuples (ragged rows padded)."""
-    start = 1 if header else 0
-    width = len(schema.names)
-    out = []
-    for row in values[start:]:
-        out.append(
-            tuple(
-                cast_cell(row[i] if i < len(row) else None, schema.types[i])
-                for i in range(width)
-            )
+) -> pa.Table:
+    """Materialize the data rows as a typed Arrow table, one column at a
+    time (ragged rows padded)."""
+    rows = values[1:] if header else values
+    columns = [
+        pa.array(
+            [cast_cell(row[i] if i < len(row) else None, type_name) for row in rows],
+            type=_ARROW_TYPES[type_name],
         )
-    return out
+        for i, type_name in enumerate(schema.types)
+    ]
+    return pa.Table.from_arrays(columns, names=list(schema.names))

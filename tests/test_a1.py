@@ -101,3 +101,12 @@ def test_parse_bounds():
     assert parse_bounds("2:4") == GridBounds(1, 3, None, None)
     assert parse_bounds(None) == GridBounds(None, None, None, None)
     assert parse_bounds("B3") == GridBounds(2, 2, 1, 1)
+
+
+@pytest.mark.parametrize("name", ["out", "Q1", "FY24", "2024"])
+def test_to_string_quotes_reference_like_sheet_names(name):
+    """A tab name that also reads as a cell, column or row reference is
+    quoted, so it parses back as the tab and not as a range."""
+    rendered = A1Range(name, None).to_string()
+    assert rendered == f"'{name}'"
+    assert A1Range.parse(rendered) == A1Range(name, None)

@@ -164,26 +164,129 @@ def test_http_call_count_matches_reference(spark, sheets_server):
     assert len(meta_gets) <= 1
 
 
-def test_partition_payload_is_sliced_not_replicated():
-    """Each RowBlock carries only its own rows, and the reader object
-    pickled with every task is near-empty after partitions() — a task
-    must never deserialize the whole grid."""
+def test_arrow_partitions_carry_only_their_own_rows():
+    """Each ArrowBlock holds one record batch of at most ARROW_BATCH_ROWS
+    rows that owns its own buffers, the blocks together are the table,
+    and the reader object pickled with every task is near-empty after
+    partitions() — a task must never deserialize the whole grid."""
     import pickle
 
+    import pyarrow as pa
+
     from duckdb_gsheets_spark.sources.gsheets.datasource import (
-        BATCH_ROWS,
+        ARROW_BATCH_ROWS,
         GSheetsReader,
     )
 
-    rows = [(i, "x" * 100) for i in range(3 * BATCH_ROWS + 5)]
-    reader = GSheetsReader(rows)
+    n = 3 * ARROW_BATCH_ROWS + 5
+    table = pa.table(
+        {"n": pa.array([float(i) for i in range(n)]), "s": ["x" * 100] * n}
+    )
+    whole = len(pickle.dumps(table))
+    reader = GSheetsReader(table)
     blocks = reader.partitions()
-    assert len(blocks) == 4
-    assert [len(b.rows) for b in blocks] == [BATCH_ROWS] * 3 + [5]
-    assert [r for b in blocks for r in b.rows] == rows
+    assert [b.batch.num_rows for b in blocks] == [ARROW_BATCH_ROWS] * 3 + [5]
+    assert pa.Table.from_batches([b.batch for b in blocks]).equals(table)
+    # A block's payload follows its own row count, not the table's (a
+    # bare slice would pickle the parent's full buffers).
+    for b in blocks:
+        assert len(pickle.dumps(b)) < whole * b.batch.num_rows / n + 4096
     # The reader itself ships slim: far smaller than one block.
     assert len(pickle.dumps(reader)) < len(pickle.dumps(blocks[0])) / 100
-    assert list(reader.read(blocks[3])) == rows[3 * BATCH_ROWS :]
+    assert list(reader.read(blocks[3])) == [blocks[3].batch]
+
+
+def test_data_source_hands_its_table_to_the_reader():
+    """Spark pickles the data source instance into every read task's
+    command, so after reader() it must no longer hold the bound table."""
+    import pickle
+
+    import pyarrow as pa
+
+    from duckdb_gsheets_spark.sources.gsheets.datasource import GSheetsDataSource
+    from duckdb_gsheets_spark.sources.gsheets.inference import SheetSchema
+
+    table = pa.table({"s": ["x" * 100] * 10_000})
+    source = GSheetsDataSource({})
+    source._cached = (SheetSchema(("s",), ("string",)), table)
+    reader = source.reader(source.schema())
+    assert len(pickle.dumps(source)) < 10_000
+    assert pa.Table.from_batches([b.batch for b in reader.partitions()]).equals(table)
+
+
+def test_read_gsheet_leaves_session_conf_as_it_was(spark, sheets_server, people_sheet):
+    """read_gsheet lowers the LocalRelation threshold for its own
+    createDataFrame call only."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    sid, _ = people_sheet
+    read_gsheet(spark, sid, **opts(sheets_server))
+    assert spark.conf.get(key, None) is None
+    spark.conf.set(key, "1MB")
+    try:
+        read_gsheet(spark, sid, **opts(sheets_server))
+        assert spark.conf.get(key, None) == "1MB"
+    finally:
+        spark.conf.unset(key)
+
+
+def _entry_point_reads(spark, server, sid, options):
+    """One sheet read through each read surface: read_gsheet,
+    spark.read.format("gsheets"), a USING gsheets temp view and
+    sheets_sql. Returns {surface: (schema, rows)}."""
+    from duckdb_gsheets_spark.sources.gsheets import sheets_sql
+
+    register(spark)
+    creds = opts(server)
+    frames = {"read_gsheet": read_gsheet(spark, sid, **creds, **options)}
+    reader = spark.read.format("gsheets")
+    for key, value in {**creds, **options}.items():
+        reader = reader.option(key, value)
+    frames["format"] = reader.load(sid)
+    view = f"entry_points_{sid.replace('-', '_')}"
+    sql_opts = "".join(
+        f", {key} '{str(value).lower() if isinstance(value, bool) else value}'"
+        for key, value in options.items()
+    )
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW {view} USING gsheets OPTIONS ("
+        f"path '{url_for(sid)}', token 'test-token', "
+        f"api_base '{server.base_url}'{sql_opts})"
+    )
+    frames["using_view"] = spark.table(view)
+    frames["sheets_sql"] = sheets_sql(
+        spark, f"SELECT * FROM '{url_for(sid)}'", **creds, **options
+    )
+    return {
+        name: (df.schema, [tuple(r) for r in df.collect()])
+        for name, df in frames.items()
+    }
+
+
+@pytest.mark.parametrize(
+    "grid, options, n_rows",
+    [
+        pytest.param(None, {}, 6, id="people"),
+        pytest.param(None, {"Header": False}, 7, id="header_false"),
+        pytest.param(None, {"ALL_VARCHAR": True}, 6, id="all_varchar"),
+        pytest.param([["id", "name"]], {"header": "true"}, 0, id="header_only"),
+    ],
+)
+def test_read_entry_points_agree(
+    spark, sheets_server, people_sheet, grid, options, n_rows
+):
+    """Every read surface binds the same way and returns the same schema
+    and rows, whether options come as bool kwargs or strings and
+    whatever the case of their keys."""
+    sid, store = people_sheet
+    if grid is not None:
+        store.grids["Sheet1"] = grid
+    got = _entry_point_reads(spark, sheets_server, sid, options)
+    schema, rows = got["read_gsheet"]
+    assert len(rows) == n_rows
+    for name, result in got.items():
+        assert result == (schema, rows), name
+    if grid is not None:
+        assert [f.dataType.simpleString() for f in schema.fields] == ["string"] * 2
 
 
 def test_sheets_catalog_lists_tabs_and_reads_each_way(

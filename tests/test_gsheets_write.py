@@ -176,6 +176,31 @@ def test_param_beats_url_gid(spark, sheets_server, spreadsheets_df):
     assert not store.grids["Second"]
 
 
+@pytest.mark.parametrize("tab", ["out", "Q1"])
+def test_write_then_read_tab_named_like_a1_ref(
+    spark, sheets_server, spreadsheets_df, tab
+):
+    """A tab whose name also reads as A1 notation (column OUT, cell Q1)
+    is a plain tab name for the writer, as it is for the reader: the
+    header lands in column A of that tab, not in a range on it, and
+    the other tabs stay untouched."""
+    sid = f"write-a1-name-{tab}"
+    store = sheets_server.new_spreadsheet(sid)
+    store.add_sheet("Sheet1", [["keep"]])
+    store.add_sheet(tab, [])
+    write_gsheet(spreadsheets_df.coalesce(1), sid, sheet=tab, **opts(sheets_server))
+    assert store.grids[tab][0] == ["company", "product", "year_founded"]
+    assert len(store.grids[tab]) == 5
+    assert store.grids["Sheet1"] == [["keep"]]
+    df = read_gsheet(spark, sid, sheet=tab, **opts(sheets_server))
+    assert sorted((r.company, r.year_founded) for r in df.collect()) == [
+        ("Apple", 1984.0),
+        ("Google", 2006.0),
+        ("LibreOffice", 2000.0),
+        ("Microsoft", 1985.0),
+    ]
+
+
 def test_null_cells_written_empty(spark, sheets_server):
     """NULL → '' on write (src/gsheets_copy.cpp:163-175)."""
     sid, store = _fresh(sheets_server, "write-nulls")

@@ -11,6 +11,11 @@ from duckdb_gsheets_spark.sources.gsheets.inference import (
 )
 
 
+def _tuples(table):
+    """The cast Arrow table's rows as Python tuples."""
+    return [tuple(row.values()) for row in table.to_pylist()]
+
+
 def test_is_valid_number():
     assert is_valid_number("30")
     assert is_valid_number("-1.5e3")
@@ -73,7 +78,7 @@ def test_header_only_zero_rows_all_varchar():
     values = [["id", "name"]]
     schema = infer_schema(values, header=True)
     assert schema.types == ("string", "string")
-    assert cast_rows(values, schema, header=True) == []
+    assert cast_rows(values, schema, header=True).to_pylist() == []
 
 
 def test_empty_raises():
@@ -92,7 +97,7 @@ def test_cast_rows_nulls_and_ragged():
         ["Archie", "99", ""],
     ]
     schema = infer_schema(values, header=True)
-    rows = cast_rows(values, schema, header=True)
+    rows = _tuples(cast_rows(values, schema, header=True))
     assert rows[0] == ("Alice", 30.0, "Toronto")
     assert rows[1] == ("Drake", None, None)
     assert rows[2] == (None, None, None)
@@ -112,5 +117,5 @@ def test_type_collapse_f11():
 def test_permissive_bool_cast():
     values = [["flag"], ["TRUE"], ["false"], ["1"], ["bogus"]]
     schema = infer_schema(values, header=True)
-    rows = cast_rows(values, schema, header=True)
+    rows = _tuples(cast_rows(values, schema, header=True))
     assert [r[0] for r in rows] == [True, False, True, None]
