@@ -7,8 +7,8 @@ and sheet-only ranges; at most one ``!`` and one ``:``; dangling
 ``!``/``:`` and misplaced ``$``/quotes are invalid.
 
 The grid-math helpers (column letter ↔ index, bounds resolution) back
-the fake-server fixture and the reader's partition splitting; the
-reference needs none because Google does its grid math server-side.
+the test suite's fake Sheets server; the reference needs none because
+Google does its grid math server-side.
 """
 
 from __future__ import annotations
@@ -215,9 +215,7 @@ def parse_bounds(cell_range: str | None) -> GridBounds:
         c1, r1 = one(left)
         c2, r2 = one(right)
         return GridBounds(row_start=r1, row_end=r2, col_start=c1, col_end=c2)
+    # A single ref: a cell is an open-ended anchor for writes and one
+    # cell for reads (callers decide); a bare column or row is that line.
     c1, r1 = one(cell_range)
-    if c1 is not None and r1 is not None:
-        # Single-cell anchor: Google treats it as an open-ended anchor
-        # for writes and a single cell for reads; callers decide.
-        return GridBounds(row_start=r1, row_end=r1, col_start=c1, col_end=c1)
     return GridBounds(row_start=r1, row_end=r1, col_start=c1, col_end=c1)

@@ -395,15 +395,10 @@ class GSheetsWriter(DataSourceWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         self._options = options
         self._schema = schema
-        overwrite_range_default = options.get("range") is not None and _truthy(
-            options.get("overwrite_range"), False
-        )
-        self.overwrite_sheet = _truthy(
-            options.get("overwrite_sheet"), overwrite and not overwrite_range_default
-        )
         self.overwrite_range = _truthy(options.get("overwrite_range"), False)
-        if self.overwrite_range:
-            self.overwrite_sheet = _truthy(options.get("overwrite_sheet"), False)
+        self.overwrite_sheet = _truthy(
+            options.get("overwrite_sheet"), overwrite and not self.overwrite_range
+        )
         self.create_if_not_exists = _truthy(
             options.get("create_if_not_exists"), False
         )

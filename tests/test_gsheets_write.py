@@ -226,10 +226,11 @@ def test_default_write_preserves_order_without_caller_coalesce(
 
 
 def test_parallel_write_lands_all_rows(spark, sheets_server):
-    """parallel=True: per-partition appends, complete but unordered."""
+    """An 8-partition frame written by parallel tasks lands every row
+    exactly once, under one header."""
     sid, store = _fresh(sheets_server, "write-parallel")
     df = spark.range(100).selectExpr("id AS n").repartition(8)
-    write_gsheet(df, sid, parallel=True, **opts(sheets_server))
+    write_gsheet(df, sid, **opts(sheets_server))
     grid = store.grids["Sheet1"]
     body = sorted(int(row[0]) for row in grid[1:])
     assert body == list(range(100))

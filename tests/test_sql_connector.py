@@ -175,6 +175,7 @@ def test_literal_url_user_alias_wins(spark, sheets_server, people_sheet):
     alias, and a self-join through two literal references reads the
     sheet ONCE (one fetch per distinct URL per statement)."""
     sid, store = people_sheet
+    sheets_server.request_log.clear()
     out = _sheets_sql(
         spark,
         sheets_server,
@@ -186,6 +187,10 @@ def test_literal_url_user_alias_wins(spark, sheets_server, people_sheet):
         ("Archie", 99.0),
         ("Charlie", 45.0),
     ]
+    values_gets = [
+        p for m, p in sheets_server.request_log if m == "GET" and "/values/" in p
+    ]
+    assert len(values_gets) == 1
 
 
 def test_literal_url_only_in_table_position(spark, sheets_server, people_sheet):
@@ -219,8 +224,8 @@ def test_literal_url_prefix_guard(spark, sheets_server, people_sheet):
 
 def test_literal_url_alias_survives_table_suffix_clauses(spark, sheets_server, people_sheet):
     """Clauses that may follow a table reference must not be mistaken
-    for a user alias: SORT BY keeps the base-name alias available,
-    and TABLESAMPLE — which Spark only parses with the alias AFTER
+    for a user alias: SORT BY and MINUS keep the base-name alias
+    available, and TABLESAMPLE — which Spark only parses with the alias AFTER
     the clause — still rewrites to runnable SQL (alias suppressed;
     the user's own post-clause alias binds)."""
     sid, _ = people_sheet
@@ -230,6 +235,12 @@ def test_literal_url_alias_survives_table_suffix_clauses(spark, sheets_server, p
         f"SELECT edit.name FROM '{url_for(sid)}' SORT BY edit.name",
     ).collect()
     assert {r.name for r in rows} >= {"Alice", "Archie"}
+    minus = _sheets_sql(
+        spark,
+        sheets_server,
+        f"SELECT edit.name FROM '{url_for(sid)}' MINUS SELECT 'Bob' AS name",
+    ).collect()
+    assert {r.name for r in minus} == {"Alice", "Charlie", "Drake", "Archie", None}
     sampled = _sheets_sql(
         spark,
         sheets_server,
@@ -383,3 +394,62 @@ def test_literal_url_comma_user_alias_prescanned(
         ("Alice", 7.0),
         ("Charlie", 9.0),
     ]
+
+
+def test_literal_url_comma_list_then_join_numbering(
+    spark, sheets_server, people_sheet
+):
+    """``FROM 'a', 'b' JOIN 'c'`` over three different sheets: injected
+    base-name aliases are numbered over the FROM/JOIN refs first, in
+    text order, then over the comma-listed refs — 'a' is `edit`, 'c'
+    is `edit_2` and the comma-listed 'b' is `edit_3`."""
+    sid, _ = people_sheet
+    bonus = sheets_server.new_spreadsheet("numbering-bonus")
+    bonus.add_sheet("Sheet1", [["who", "bonus"], ["Alice", "7"], ["Charlie", "9"]])
+    team = sheets_server.new_spreadsheet("numbering-team")
+    team.add_sheet(
+        "Sheet1", [["member", "team"], ["Alice", "red"], ["Charlie", "blue"]]
+    )
+    rows = _sheets_sql(
+        spark,
+        sheets_server,
+        f"SELECT edit.name, edit_3.bonus, edit_2.team FROM '{url_for(sid)}', "
+        f"'{url_for('numbering-bonus')}' JOIN '{url_for('numbering-team')}' "
+        "ON edit_3.who = edit_2.member "
+        "WHERE edit.name = edit_3.who ORDER BY edit.name",
+    ).collect()
+    assert [(r.name, r.bonus, r.team) for r in rows] == [
+        ("Alice", 7.0, "red"),
+        ("Charlie", 9.0, "blue"),
+    ]
+
+
+def test_literal_url_temp_view_outlives_the_call(spark, sheets_server, people_sheet):
+    """A temp view that ``sheets_sql`` creates over a sheet URL stays
+    queryable after the call returns: the sheet's own view persists in
+    the session, so the user's view still resolves."""
+    sid, _ = people_sheet
+    _sheets_sql(
+        spark,
+        sheets_server,
+        "CREATE OR REPLACE TEMP VIEW people_from_url AS "
+        f"SELECT name FROM '{url_for(sid)}' WHERE age > 28",
+    )
+    rows = spark.table("people_from_url").orderBy("name").collect()
+    assert [r.name for r in rows] == ["Alice", "Archie", "Charlie"]
+
+
+def test_literal_url_braces_in_string_literal_survive(
+    spark, sheets_server, people_sheet
+):
+    """The rewrite splices view names into the statement and leaves
+    every other character alone — ``{`` and ``}`` in a string literal
+    come through as written."""
+    sid, _ = people_sheet
+    row = _sheets_sql(
+        spark,
+        sheets_server,
+        f"SELECT name, '{{x}} {{0}}' AS tag FROM '{url_for(sid)}' "
+        "WHERE name = 'Alice'",
+    ).collect()[0]
+    assert (row.name, row.tag) == ("Alice", "{x} {0}")
