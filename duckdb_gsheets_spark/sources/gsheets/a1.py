@@ -1,14 +1,10 @@
-"""A1-notation ranges: validation, parsing, and grid math.
+"""A1-notation ranges: validation and parsing.
 
 Validation matches the reference's state-machine semantics
 (src/sheets/range.cpp:6-156): quoted sheet names with ``''`` escapes,
 absolute refs (``$A$1``), column-only (``A:Z``), row-only (``1:100``)
 and sheet-only ranges; at most one ``!`` and one ``:``; dangling
 ``!``/``:`` and misplaced ``$``/quotes are invalid.
-
-The grid-math helpers (column letter ↔ index, bounds resolution) back
-the test suite's fake Sheets server; the reference needs none because
-Google does its grid math server-side.
 """
 
 from __future__ import annotations
@@ -161,61 +157,3 @@ class A1Range:
             return self.cell_range
         return parts[0] if parts else ""
 
-
-# ---------------------------------------------------------------------------
-# Grid math (used by the fake server and reader partitioning)
-# ---------------------------------------------------------------------------
-
-
-def col_to_index(col: str) -> int:
-    """Column letters → 0-based index (A=0, Z=25, AA=26)."""
-    n = 0
-    for ch in col.upper():
-        n = n * 26 + (ord(ch) - ord("A") + 1)
-    return n - 1
-
-
-def index_to_col(idx: int) -> str:
-    """0-based index → column letters."""
-    idx += 1
-    out = ""
-    while idx > 0:
-        idx, rem = divmod(idx - 1, 26)
-        out = chr(ord("A") + rem) + out
-    return out
-
-
-@dataclass(frozen=True)
-class GridBounds:
-    """Half-open-free inclusive bounds; None = unbounded."""
-
-    row_start: int | None  # 0-based
-    row_end: int | None  # inclusive
-    col_start: int | None
-    col_end: int | None
-
-
-def parse_bounds(cell_range: str | None) -> GridBounds:
-    """Resolve a validated cell range (no sheet part) to grid bounds."""
-    if not cell_range:
-        return GridBounds(None, None, None, None)
-
-    def one(ref: str) -> tuple[int | None, int | None]:
-        m = _REF_RE.match(ref)
-        assert m is not None
-        col = m.group("col")
-        row = m.group("row")
-        return (
-            col_to_index(col) if col else None,
-            int(row) - 1 if row else None,
-        )
-
-    if ":" in cell_range:
-        left, _, right = cell_range.partition(":")
-        c1, r1 = one(left)
-        c2, r2 = one(right)
-        return GridBounds(row_start=r1, row_end=r2, col_start=c1, col_end=c2)
-    # A single ref: a cell is an open-ended anchor for writes and one
-    # cell for reads (callers decide); a bare column or row is that line.
-    c1, r1 = one(cell_range)
-    return GridBounds(row_start=r1, row_end=r1, col_start=c1, col_end=c1)

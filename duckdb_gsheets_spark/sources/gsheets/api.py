@@ -34,6 +34,15 @@ def register(spark: SparkSession) -> None:
     spark.dataSource.register(GSheetsDataSource)
 
 
+def _options(url_or_id: str, options: dict) -> CaseInsensitiveDict:
+    """Keyword options normalised the way ``DataFrameReader.option``
+    passes them to the Data Source: case-insensitive keys,
+    ``true``/``false`` strings, and ``path`` set to the sheet."""
+    opts = CaseInsensitiveDict({key: to_str(value) for key, value in options.items()})
+    opts["path"] = url_or_id
+    return opts
+
+
 #: Below this many bytes of Arrow batches, ``createDataFrame`` copies
 #: every row into a driver-side LocalRelation, which the optimizer copies
 #: again for each projection or filter and each scan task then carries;
@@ -56,15 +65,11 @@ def read_gsheet(spark: SparkSession, url_or_id: str, **options) -> DataFrame:
     ``perfbench``'s ``sheet_scan`` slower and the driver JVM's peak RSS
     14-41% higher (4-core machine). A concurrent ``createDataFrame`` in
     another thread may also skip the LocalRelation, which changes its
-    plan, not its rows. Options are
-    normalised the way ``DataFrameReader.option`` passes them to the
-    Data Source (case-insensitive keys, ``true``/``false`` strings), so
-    both surfaces read a sheet identically. Also registers the
+    plan, not its rows. Options go through :func:`_options`, so this
+    and the Data Source read a sheet identically. Also registers the
     ``gsheets`` format on the session."""
     register(spark)
-    opts = CaseInsensitiveDict({key: to_str(value) for key, value in options.items()})
-    opts["path"] = url_or_id
-    schema, table = bind(opts)
+    schema, table = bind(_options(url_or_id, options))
     previous = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
     spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
     try:
@@ -246,19 +251,21 @@ def sheets(spark: SparkSession, url_or_id: str, **options) -> DataFrame:
 
     The tab list is bounded metadata (ONE spreadsheets.get call), so
     it enters the session as a local DataFrame — no job, no scan."""
-    opts = dict(options)
-    opts.setdefault("path", url_or_id)
-    client = _build_client(opts)
-    meta = client.spreadsheet(
-        extract_spreadsheet_id(url_or_id)
-    ).get_metadata()
-    rows = [
+    return spark.createDataFrame(
+        _tabs(url_or_id, options),
+        "gid long, title string, sheet_index int, sheet_type string",
+    )
+
+
+def _tabs(url_or_id: str, options: dict) -> list[tuple[int, str, int, str]]:
+    """``(gid, title, sheet_index, sheet_type)`` of every tab, from one
+    metadata call."""
+    client = _build_client(_options(url_or_id, options))
+    meta = client.spreadsheet(extract_spreadsheet_id(url_or_id)).get_metadata()
+    return [
         (int(s.sheet_id), s.title, int(s.index), s.sheet_type)
         for s in meta.sheets
     ]
-    return spark.createDataFrame(
-        rows, "gid long, title string, sheet_index int, sheet_type string"
-    )
 
 
 def _catalog_ident(raw: str) -> str:
@@ -296,16 +303,15 @@ def register_sheet_catalog(
     referenced table); ``name`` defaults to a sanitized form of the
     spreadsheet id. Returns the listing DataFrame.
     """
-    tabs = sheets(spark, url_or_id, **options).collect()
     sid = extract_spreadsheet_id(url_or_id)
     base = _catalog_ident(name if name is not None else "gsheet_" + sid)
     used: set[str] = set()
     rows = []
-    for t in tabs:
-        view = f"{base}_{_catalog_ident(t.title)}"
+    for gid, title, sheet_index, sheet_type in _tabs(url_or_id, options):
+        view = f"{base}_{_catalog_ident(title)}"
         n = 2
         while view in used:
-            view = f"{base}_{_catalog_ident(t.title)}_{n}"
+            view = f"{base}_{_catalog_ident(title)}_{n}"
             n += 1
         used.add(view)
         # Read by GID, not title: a title containing '!' (legal in
@@ -314,12 +320,10 @@ def register_sheet_catalog(
         read_gsheet(
             spark,
             f"https://docs.google.com/spreadsheets/d/{sid}/edit"
-            f"?gid={t.gid}#gid={t.gid}",
+            f"?gid={gid}#gid={gid}",
             **options,
         ).createOrReplaceGlobalTempView(view)
-        rows.append(
-            (t.gid, t.title, t.sheet_index, t.sheet_type, view)
-        )
+        rows.append((gid, title, sheet_index, sheet_type, view))
     listing = spark.createDataFrame(
         rows,
         "gid long, title string, sheet_index int, sheet_type string, "

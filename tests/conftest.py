@@ -7,7 +7,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 from duckdb_gsheets_spark.plans.session import get_spark  # noqa: E402
-from tests.fake_sheets import FakeSheetsServer  # noqa: E402
+from tests.sheets_server import SheetsServer  # noqa: E402
 
 #: FIXTURES.md F1 `people`: header, blanks, ragged rows.
 PEOPLE_GRID = [
@@ -37,7 +37,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def sheets_server():
-    server = FakeSheetsServer().start()
+    server = SheetsServer().start()
     yield server
     server.stop()
 

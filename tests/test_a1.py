@@ -3,14 +3,7 @@ test/unit/sheets/test_range.cpp case families."""
 
 import pytest
 
-from duckdb_gsheets_spark.sources.gsheets.a1 import (
-    A1Range,
-    GridBounds,
-    col_to_index,
-    index_to_col,
-    is_valid_a1,
-    parse_bounds,
-)
+from duckdb_gsheets_spark.sources.gsheets.a1 import A1Range, is_valid_a1
 from duckdb_gsheets_spark.sources.gsheets.errors import InvalidRangeError
 
 VALID = [
@@ -86,21 +79,6 @@ def test_to_string_quotes_when_needed():
     assert A1Range("My Sheet", "A1").to_string() == "'My Sheet'!A1"
     assert A1Range("Sheet1", "A1:B2").to_string() == "Sheet1!A1:B2"
     assert A1Range("It's", None).to_string() == "'It''s'"
-
-
-def test_col_math_roundtrip():
-    for name, idx in [("A", 0), ("Z", 25), ("AA", 26), ("AZ", 51), ("BA", 52)]:
-        assert col_to_index(name) == idx
-        assert index_to_col(idx) == name
-
-
-def test_parse_bounds():
-    assert parse_bounds("A1:B2") == GridBounds(0, 1, 0, 1)
-    assert parse_bounds("C6:E10") == GridBounds(5, 9, 2, 4)
-    assert parse_bounds("A:C") == GridBounds(None, None, 0, 2)
-    assert parse_bounds("2:4") == GridBounds(1, 3, None, None)
-    assert parse_bounds(None) == GridBounds(None, None, None, None)
-    assert parse_bounds("B3") == GridBounds(2, 2, 1, 1)
 
 
 @pytest.mark.parametrize("name", ["out", "Q1", "FY24", "2024"])

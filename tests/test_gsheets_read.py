@@ -386,3 +386,27 @@ def test_register_sheet_catalog_sql_only_surface(spark, sheets_server):
             "SELECT city FROM global_temp.book_city_stats_2"
         ).collect()
     ] == ["Berlin"]
+
+
+def test_catalog_helpers_accept_option_keys_in_any_case(spark, sheets_server):
+    """sheets() and register_sheet_catalog() read option keys without
+    regard to case, as read_gsheet and the Data Source do: TOKEN and
+    API_BASE are the token and api_base options."""
+    from duckdb_gsheets_spark.sources.gsheets import (
+        register_sheet_catalog,
+        sheets,
+    )
+
+    store = sheets_server.new_spreadsheet("upper-case-options")
+    store.add_sheet("People", [["name"], ["Alice"]])
+    upper = {"TOKEN": "test-token", "API_BASE": sheets_server.base_url}
+
+    tabs = sheets(spark, url_for("upper-case-options"), **upper).collect()
+    assert [t.title for t in tabs] == ["People"]
+    listing = register_sheet_catalog(
+        spark, url_for("upper-case-options"), name="upper", **upper
+    )
+    assert [r.view_name for r in listing.collect()] == ["upper_people"]
+    assert [
+        r.name for r in spark.table("global_temp.upper_people").collect()
+    ] == ["Alice"]

@@ -126,6 +126,24 @@ def test_header_once_across_batches(spark, sheets_server):
     assert readback.count() == 10000
 
 
+def test_multi_partition_write_appends_per_partition(spark, sheets_server):
+    """Each partition's rows go out in their own 2048-row appends: a
+    3-partition, 15,000-row write makes 1 header append plus
+    3 * ceil(5000/2048) = 9 data appends, and the rows land in
+    partition order."""
+    sid, store = _fresh(sheets_server, "write-15k-3p")
+    df = spark.range(0, 15000, 1, 3)
+    sheets_server.request_log.clear()
+    write_gsheet(df, sid, **opts(sheets_server))
+    appends = [
+        p for m, p in sheets_server.request_log if m == "POST" and p.endswith(":append")
+    ]
+    assert len(appends) == 1 + 9
+    grid = store.grids["Sheet1"]
+    assert grid[0] == ["id"]
+    assert [row[0] for row in grid[1:]] == [str(i) for i in range(15000)]
+
+
 def test_create_if_not_exists(spark, sheets_server, spreadsheets_df):
     sid, store = _fresh(sheets_server, "write-create")
     write_gsheet(

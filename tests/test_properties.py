@@ -8,7 +8,6 @@ scale but that example-based tests can only sample.
 * A1 grammar: generated-valid references always validate and
   round-trip through parse/to_string; corrupting them with grammar-
   breaking characters invalidates them.
-* Column letters: col_to_index / index_to_col are inverses.
 """
 
 from decimal import Decimal
@@ -16,12 +15,7 @@ from decimal import Decimal
 from hypothesis import given, settings, strategies as st
 
 from duckdb_gsheets_spark.operators.determinism import dsum
-from duckdb_gsheets_spark.sources.gsheets.a1 import (
-    col_to_index,
-    index_to_col,
-    is_valid_a1,
-    A1Range,
-)
+from duckdb_gsheets_spark.sources.gsheets.a1 import A1Range, is_valid_a1
 
 #: Money-like values: exact 2-decimal doubles in a realistic range.
 money = st.integers(min_value=-10_000_000, max_value=10_000_000).map(
@@ -73,12 +67,6 @@ def test_a1_parse_roundtrip(c1, r1, c2, r2):
     s = f"{c1}{r1}:{c2}{r2}"
     parsed = A1Range.parse(s)
     assert parsed.to_string() == s
-
-
-@settings(max_examples=500, deadline=None)
-@given(st.integers(min_value=0, max_value=18_277))  # A..ZZZ
-def test_col_index_roundtrip(idx):
-    assert col_to_index(index_to_col(idx)) == idx
 
 
 @given(

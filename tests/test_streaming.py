@@ -196,7 +196,7 @@ def test_gsheets_stream_reader_degrades_without_drive(
     assert run_batch() == {"ada": 1.0}
     # direct grid poke WITHOUT a version bump: the degraded reader
     # must still see it (unconditional refetch path)
-    store.grids["Sheet1"].append(["bob", "2"])
+    store.append_rows("Sheet1", [["bob", "2"]], touch=False)
     assert run_batch() == {"ada": 1.0, "bob": 2.0}
 
 
