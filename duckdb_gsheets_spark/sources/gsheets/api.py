@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import CaseInsensitiveDict
 from pyspark.sql.utils import to_str
 
+from duckdb_gsheets_spark.sources.gsheets.auth import redact_options
 from duckdb_gsheets_spark.sources.gsheets.datasource import (
     GSheetsDataSource,
     _build_client,
@@ -175,6 +176,15 @@ def _url_base_name(url: str) -> str:
     return base[:dot] if dot > 0 else base
 
 
+def _view_name(url: str, options: dict) -> str:
+    """``gsheet_<md5>`` of the URL and its normalised read options, so
+    a read with other options gets its own view instead of replacing
+    one that user views are built on. Credentials are redacted before
+    hashing."""
+    key = repr(sorted(redact_options(_options(url, options)).items()))
+    return "gsheet_" + hashlib.md5(key.encode()).hexdigest()[:10]
+
+
 def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
     """Run SQL in which a bare spreadsheet URL is a table — the
     replacement-scan entry point (src/gsheets_extension.cpp:29-46)
@@ -201,8 +211,9 @@ def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
     are reserved first; base-name aliases are then numbered over the
     FROM/JOIN references in text order, then the comma-listed ones.
     Each distinct URL is read once and registered as a session temp
-    view ``gsheet_<md5>``, which outlives the call so SQL views over
-    it keep working; one splice puts the view names in the statement.
+    view named by :func:`_view_name`, which outlives the call so SQL
+    views over it keep working; one splice puts the view names in the
+    statement.
     """
     register(spark)
     refs = _sheet_refs(sql)
@@ -213,7 +224,7 @@ def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
     for ref in sorted(refs, key=lambda r: r.in_list):
         view = views.get(ref.url)
         if view is None:
-            view = "gsheet_" + hashlib.md5(ref.url.encode()).hexdigest()[:10]
+            view = _view_name(ref.url, options)
             read_gsheet(spark, ref.url, **options).createOrReplaceTempView(view)
             views[ref.url] = view
         if (

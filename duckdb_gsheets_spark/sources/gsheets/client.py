@@ -26,12 +26,6 @@ from duckdb_gsheets_spark.version import __version__
 
 BASE_URL = "https://sheets.googleapis.com/v4"
 
-#: Drive API v3 base — the Sheets API has no cheap change signal, but
-#: Drive's ``files.get(fileId, fields="version")`` returns a counter
-#: that bumps on every spreadsheet mutation. The streaming reader
-#: polls it to skip grid refetches between unchanged micro-batches.
-DRIVE_URL = "https://www.googleapis.com/drive/v3"
-
 
 @dataclass(frozen=True)
 class SheetProperties:
@@ -82,12 +76,10 @@ class GSheetsClient:
         transport: Transport,
         auth: AuthProvider,
         base_url: str = BASE_URL,
-        drive_url: str = DRIVE_URL,
     ):
         self._transport = transport
         self._auth = auth
         self.base_url = base_url.rstrip("/")
-        self.drive_url = drive_url.rstrip("/")
 
     def headers(self) -> dict[str, str]:
         return {
@@ -102,25 +94,6 @@ class GSheetsClient:
 
     def values(self, spreadsheet_id: str) -> "ValuesResource":
         return ValuesResource(self, spreadsheet_id)
-
-    def file_version(self, spreadsheet_id: str) -> int | None:
-        """Drive ``files.get(fields=version)`` change counter for the
-        spreadsheet, or ``None`` when the Drive surface is missing or
-        malformed (wrong scope, proxy without Drive routes, hermetic
-        server without the endpoint) — callers treat ``None`` as
-        "assume changed" and fall back to unconditional refetch, so
-        revision polling is a pure optimization, never a correctness
-        dependency."""
-        try:
-            resp = self._transport.get(
-                f"{self.drive_url}/files/{spreadsheet_id}?fields=version",
-                self.headers(),
-            )
-            if resp.status != 200:
-                return None
-            return int(json.loads(resp.body).get("version"))
-        except Exception:
-            return None
 
     # HTTP verbs against base_url + path (reference: base.cpp:7-31).
     def do_get(self, path: str) -> HttpResponse:

@@ -21,8 +21,12 @@ shares that bind and that table:
 * ``spark.read.format("gsheets")`` and ``CREATE TEMPORARY VIEW ...
   USING gsheets`` bind in Spark's planning worker; :class:`GSheetsReader`
   serves the table as one partition per Arrow record batch;
-* ``spark.readStream.format("gsheets")`` re-binds the grid per
-  micro-batch in :class:`GSheetsStreamReader`.
+* ``spark.readStream.format("gsheets")`` refetches the range with one
+  values.get per micro-batch in :class:`GSheetsStreamReader` and casts
+  it with the schema fixed at stream start.
+
+Every surface speaks only the Sheets v4 API (plus the OAuth token
+endpoint), like the reference.
 
 Write lifecycle (parity with gsheets_copy.cpp): driver-side setup
 (resolve sheet > gid > index 0, optional create, clear per
@@ -52,11 +56,7 @@ from duckdb_gsheets_spark.sources.gsheets.auth import (
     auth_from_options,
     redact_options,
 )
-from duckdb_gsheets_spark.sources.gsheets.client import (
-    BASE_URL,
-    DRIVE_URL,
-    GSheetsClient,
-)
+from duckdb_gsheets_spark.sources.gsheets.client import BASE_URL, GSheetsClient
 from duckdb_gsheets_spark.sources.gsheets.errors import SheetsError
 from duckdb_gsheets_spark.sources.gsheets.inference import (
     SheetSchema,
@@ -109,19 +109,7 @@ def _build_client(options: Mapping) -> GSheetsClient:
             "GSHEETS_TOKEN / GOOGLE_APPLICATION_CREDENTIALS "
             f"(got options: {redact_options(options)})"
         )
-    api_base = options.get("api_base", BASE_URL)
-    # Drive base for the streaming reader's revision poll: explicit
-    # option wins; otherwise, when a custom api_base points at a
-    # hermetic/proxy host, derive its Drive root on the SAME host
-    # (strip the Sheets /v4 suffix) so one fake server serves both
-    # surfaces; the public default is DRIVE_URL.
-    drive_base = options.get("drive_base")
-    if drive_base is None:
-        if api_base == BASE_URL:
-            drive_base = DRIVE_URL
-        else:
-            drive_base = api_base.rstrip("/").removesuffix("/v4") + "/drive/v3"
-    return GSheetsClient(transport, auth, api_base, drive_base)
+    return GSheetsClient(transport, auth, options.get("api_base", BASE_URL))
 
 
 def _resolve_target(
@@ -234,23 +222,14 @@ class GSheetsDataSource(DataSource):
 
 class GSheetsStreamReader(SimpleDataSourceStreamReader):
     """Poll-based micro-batch reader: the offset is the count of data
-    rows already emitted plus the spreadsheet's Drive REVISION counter
-    at the time they were read; each batch first polls the cheap
-    revision signal (``files.get(fields=version)`` — one tiny metadata
-    GET) and refetches the grid ONLY when the revision moved, emitting
-    the rows appended since the last offset.
-
-    Revision-polling semantics: Drive's ``version`` is a monotonically
-    increasing per-file counter that bumps on EVERY mutation (values,
-    metadata, any sheet in the spreadsheet), so ``version unchanged``
-    is a sound "no new rows" proof, while ``version changed`` merely
-    permits a refetch that may find nothing appended (an edit to
-    another tab) — correct either way, never missing data. When the
-    Drive surface is unavailable (scope, proxy, hermetic server
-    without the route) the poll returns ``None`` and every trigger
-    degrades to the unconditional refetch — revision polling is an
-    optimization, not a correctness dependency (pinned by
-    tests/test_streaming.py::test_gsheets_stream_reader_degrades_without_drive).
+    rows already emitted. Every trigger fetches the range with one
+    values GET, casts it with the schema fixed at stream start and
+    emits the rows past the last offset; ``read`` and
+    ``readBetweenOffsets`` share that one fetch-and-slice. The Sheets
+    API has no cheap change signal, so an unchanged sheet costs the
+    same GET and emits nothing. A checkpoint that also carries a
+    ``version`` key (written by an earlier reader) resumes from its
+    ``rows`` alone.
 
     The schema is fixed at stream start (Spark's contract). Rows are
     assumed append-only between polls — in-place edits of
@@ -269,41 +248,31 @@ class GSheetsStreamReader(SimpleDataSourceStreamReader):
         self._client: GSheetsClient | None = None
         self._target: ResolvedTarget | None = None
 
-    def _connect(self) -> None:
+    def _slice(
+        self, start: dict, end: dict | None = None
+    ) -> tuple[Iterator[tuple], dict]:
+        """Fetch the range, cast it and return the data rows from
+        ``start`` up to ``end`` (the current last row when ``end`` is
+        None) with the offset they end at."""
         if self._client is None:
-            self._client = _build_client(dict(self._options))
-            self._target = _resolve_target(dict(self._options), self._client)
-
-    def _table(self) -> pa.Table:
-        self._connect()
+            self._client = _build_client(self._options)
+            self._target = _resolve_target(self._options, self._client)
         grid = self._client.values(self._target.spreadsheet_id).get(
             self._target.a1()
         )
-        return cast_rows(grid.values, self._schema, header=self._header)
-
-    def _version(self) -> int | None:
-        self._connect()
-        return self._client.file_version(self._target.spreadsheet_id)
+        table = cast_rows(grid.values, self._schema, header=self._header)
+        stop = table.num_rows if end is None else end["rows"]
+        begin = min(start["rows"], stop)
+        return _tuples(table.slice(begin, stop - begin)), {"rows": stop}
 
     def initialOffset(self) -> dict:
-        return {"rows": 0, "version": None}
+        return {"rows": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        v = self._version()
-        # Unchanged revision => provably nothing new; skip the grid
-        # fetch entirely and keep the offset (None never equals an
-        # int, so a missing Drive surface always falls through; a
-        # pre-revision checkpoint has no "version" key and refetches
-        # once, then carries the revision forward).
-        if v is not None and start.get("version") == v:
-            return iter(()), start
-        table = self._table()
-        begin = min(start["rows"], table.num_rows)
-        return _tuples(table.slice(begin)), {"rows": table.num_rows, "version": v}
+        return self._slice(start)
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        table = self._table()
-        return _tuples(table.slice(start["rows"], end["rows"] - start["rows"]))
+        return self._slice(start, end)[0]
 
 
 def _tuples(table: pa.Table) -> Iterator[tuple]:

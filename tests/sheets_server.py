@@ -6,18 +6,15 @@ The emulator is loaded from its file, not imported from ``perfbench/``
 on ``sys.path``, so that directory's top-level ``sheets``/``run``/
 ``corpus`` modules never shadow anything. The additions:
 
-* the Drive ``files.get`` route the streaming reader polls, backed by a
-  per-spreadsheet ``version`` that goes up on every successful write
-  call, every added tab and every direct grid write;
 * ``request_log``: one ``(method, path)`` tuple per API request;
-* ``book.grids[title]``: a tab's stored rows; assigning replaces them.
+* ``book.grids[title]``: a tab's stored rows; assigning replaces them;
+* ``book.append_rows(title, rows)``: add rows below a tab's stored rows.
 """
 
 from __future__ import annotations
 
 import importlib.util
 import os
-import re
 import threading
 
 _spec = importlib.util.spec_from_file_location(
@@ -32,11 +29,6 @@ emulator = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(emulator)
 
 Grid = emulator.Grid
-
-_BOOK_RE = re.compile(r"^/v4/spreadsheets/([^/:]+)")
-#: Drive v3 files.get, served on the same host: the connector derives
-#: the Drive root from a custom ``api_base``.
-_DRIVE_RE = re.compile(r"^/drive/v3/files/([^/:]+)$")
 
 
 class Grids:
@@ -56,35 +48,25 @@ class Grids:
         sheet = self._book.sheets[title]
         sheet.clear((None, None, None, None))
         sheet.write(0, 0, [list(r) for r in rows])
-        self._book.touch()
+        self._book.get_cache.clear()
 
 
 class Book(emulator.Spreadsheet):
-    """A spreadsheet with a Drive version counter."""
+    """A spreadsheet whose tabs tests can read and write directly."""
 
     def __init__(self, spreadsheet_id: str):
         super().__init__(spreadsheet_id)
-        self.version = 1
         self.grids = Grids(self)
-
-    def touch(self, bump: bool = True) -> None:
-        """Record a direct change: drop cached reads, bump the version."""
-        self.get_cache.clear()
-        if bump:
-            self.version += 1
 
     def add_sheet(self, title: str, grid: Grid | None = None) -> dict:
         # Copy the rows: the emulator stores and later mutates them.
-        props = super().add_sheet(title, [list(r) for r in grid or []])
-        self.touch()
-        return props
+        return super().add_sheet(title, [list(r) for r in grid or []])
 
-    def append_rows(self, title: str, rows: Grid, touch: bool = True) -> None:
-        """Add rows below the tab's stored rows. ``touch=False`` leaves
-        the version alone, as a change Drive has not yet reported."""
+    def append_rows(self, title: str, rows: Grid) -> None:
+        """Add rows below the tab's stored rows."""
         sheet = self.sheets[title]
         sheet.write(len(sheet.rows), 0, [list(r) for r in rows])
-        self.touch(bump=touch)
+        self.get_cache.clear()
 
 
 class SheetsServer(emulator.Emulator):
@@ -107,14 +89,7 @@ class SheetsServer(emulator.Emulator):
 
     def api(self, method, path, query, payload, raw):
         self.request_log.append((method, path))
-        m = _DRIVE_RE.match(path)
-        if m and method == "GET":
-            # Drive serialises version as a string.
-            return "drive_get", 200, {"version": str(self.books[m.group(1)].version)}
-        route, status, body = super().api(method, path, query, payload, raw)
-        if method != "GET" and status == 200:
-            self.books[_BOOK_RE.match(path).group(1)].version += 1
-        return route, status, body
+        return super().api(method, path, query, payload, raw)
 
     def start(self) -> "SheetsServer":
         threading.Thread(target=self.server.serve_forever, daemon=True).start()

@@ -22,6 +22,12 @@ def test_is_valid_number():
     assert not is_valid_number("")
     assert not is_valid_number("12abc")
     assert not is_valid_number("abc")
+    # stod stops at "_" and at trailing whitespace, but skips leading
+    # whitespace (src/gsheets_read.cpp:14-29).
+    assert not is_valid_number("1_000")
+    assert not is_valid_number("12 ")
+    assert is_valid_number(" 12")
+    assert infer_schema([["a", "b"], ["1_000", "12 "]]).types == ("string", "string")
 
 
 def test_people_inference():

@@ -453,3 +453,34 @@ def test_literal_url_braces_in_string_literal_survive(
         "WHERE name = 'Alice'",
     ).collect()[0]
     assert (row.name, row.tag) == ("Alice", "{x} {0}")
+
+
+def test_literal_url_view_is_keyed_on_read_options(
+    spark, sheets_server, people_sheet
+):
+    """A later ``sheets_sql`` over the same URL with other read options
+    gets its own sheet view, so a user view built on the first read
+    keeps its columns; no credential enters the view name."""
+    from duckdb_gsheets_spark.sources.gsheets import sheets_sql
+    from duckdb_gsheets_spark.sources.gsheets.api import _view_name
+
+    sid, _ = people_sheet
+    _sheets_sql(
+        spark,
+        sheets_server,
+        "CREATE OR REPLACE TEMP VIEW people_by_header AS "
+        f"SELECT name, age FROM '{url_for(sid)}'",
+    )
+    headerless = sheets_sql(
+        spark,
+        f"SELECT * FROM '{url_for(sid)}'",
+        header=False,
+        token="test-token",
+        api_base=sheets_server.base_url,
+    )
+    assert headerless.columns == ["column1", "column2", "column3"]
+    rows = spark.table("people_by_header").where("age > 28").orderBy("name")
+    assert [r.name for r in rows.collect()] == ["Alice", "Archie", "Charlie"]
+    assert _view_name(url_for(sid), {"token": "a"}) == _view_name(
+        url_for(sid), {"TOKEN": "b"}
+    )

@@ -60,7 +60,9 @@ def test_stateful_sessionize_matches_batch(spark):
 def test_gsheets_stream_reader_incremental(spark, sheets_server, tmp_path):
     """spark.readStream.format("gsheets"): first run emits the current
     rows; after more rows land in the sheet, a second run on the same
-    checkpoint emits only the appended rows."""
+    checkpoint emits only the appended rows, and a third run with no
+    change emits nothing. Every run costs exactly two values GETs: the
+    schema bind at stream start and the one trigger's fetch."""
     from duckdb_gsheets_spark.sources.gsheets.api import register
 
     store = sheets_server.new_spreadsheet("stream-sheet")
@@ -72,7 +74,15 @@ def test_gsheets_stream_reader_incremental(spark, sheets_server, tmp_path):
     checkpoint = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
 
+    def values_gets():
+        return sum(
+            1
+            for m, p in sheets_server.request_log
+            if m == "GET" and "/stream-sheet/values/" in p
+        )
+
     def run_batch():
+        before = values_gets()
         stream = (
             spark.readStream.format("gsheets")
             .option("token", "test-token")
@@ -87,28 +97,29 @@ def test_gsheets_stream_reader_incremental(spark, sheets_server, tmp_path):
             .start()
         )
         assert q.awaitTermination(180), "availableNow drain timed out"
-        return {r.name: r.score for r in spark.read.parquet(out_dir).collect()}
+        assert values_gets() - before == 2
+        return sorted((r.name, r.score) for r in spark.read.parquet(out_dir).collect())
 
     first = run_batch()
-    assert first == {"ada": 1.0, "bob": 2.0}
+    assert first == [("ada", 1.0), ("bob", 2.0)]
 
     store.append_rows("Sheet1", [["cal", "3"], ["dee", "4"]])
     second = run_batch()
     # Parquet sink accumulates; the second availableNow batch added
     # ONLY the appended rows (offset came from the checkpoint).
-    assert second == {"ada": 1.0, "bob": 2.0, "cal": 3.0, "dee": 4.0}
+    assert second == [("ada", 1.0), ("bob", 2.0), ("cal", 3.0), ("dee", 4.0)]
+
+    assert run_batch() == second
 
 
-def test_gsheets_stream_reader_revision_poll_skips_fetch(
+def test_gsheets_stream_reader_refetch_sees_append(
     spark, sheets_server, tmp_path
 ):
-    """Revision polling: a trigger against an UNCHANGED sheet must not
-    refetch the grid — only the cheap Drive files.get lands — and a
-    mutation (version bump) re-enables the values fetch and emits
-    exactly the appended rows."""
+    """Each trigger refetches the grid, so rows appended to the sheet
+    between runs flow on the next run."""
     from duckdb_gsheets_spark.sources.gsheets.api import register
 
-    store = sheets_server.new_spreadsheet("rev-sheet")
+    store = sheets_server.new_spreadsheet("append-sheet")
     store.add_sheet("Sheet1", [["name", "score"], ["ada", "1"]])
     register(spark)
     checkpoint = str(tmp_path / "ckpt")
@@ -119,7 +130,7 @@ def test_gsheets_stream_reader_revision_poll_skips_fetch(
             spark.readStream.format("gsheets")
             .option("token", "test-token")
             .option("api_base", sheets_server.base_url)
-            .load("rev-sheet")
+            .load("append-sheet")
         )
         q = (
             stream.writeStream.format("parquet")
@@ -131,73 +142,31 @@ def test_gsheets_stream_reader_revision_poll_skips_fetch(
         assert q.awaitTermination(180), "availableNow drain timed out"
         return {r.name: r.score for r in spark.read.parquet(out_dir).collect()}
 
-    def values_gets():
-        return sum(
-            1
-            for m, p in sheets_server.request_log
-            if m == "GET" and "/rev-sheet/values/" in p
-        )
-
-    # Every run pays ONE values GET at stream construction (S1 read
-    # bind: eager fetch for schema inference); the assertions below
-    # are therefore on DELTAS: a revision-skipped trigger adds exactly
-    # that 1, a refetching trigger adds 2 (inference + reader fetch).
     assert run_batch() == {"ada": 1.0}
-    after_first = values_gets()
-    assert after_first >= 2
-
-    # No mutation: the trigger polls ONLY the revision — the reader
-    # adds zero values GETs — and emits nothing new.
-    assert run_batch() == {"ada": 1.0}
-    after_skip = values_gets()
-    assert after_skip - after_first == 1
-
-    # Mutation bumps the version: the next trigger refetches (reader
-    # GET is back) and emits exactly the appended row.
     store.append_rows("Sheet1", [["bob", "2"]])
     assert run_batch() == {"ada": 1.0, "bob": 2.0}
-    assert values_gets() - after_skip == 2
 
 
-def test_gsheets_stream_reader_degrades_without_drive(
-    spark, sheets_server, tmp_path
-):
-    """Revision polling is an optimization, not a correctness
-    dependency: with the Drive surface pointed nowhere, every trigger
-    falls back to the unconditional grid refetch and appended rows
-    still flow."""
-    from duckdb_gsheets_spark.sources.gsheets.api import register
+def test_gsheets_stream_reader_resumes_old_checkpoint(sheets_server):
+    """An offset that still carries the ``version`` key an earlier
+    reader wrote resumes from its ``rows`` alone: no row is emitted
+    twice and the next offset drops the key."""
+    from duckdb_gsheets_spark.sources.gsheets.datasource import (
+        GSheetsStreamReader,
+        bind,
+    )
 
-    store = sheets_server.new_spreadsheet("nodrive-sheet")
-    store.add_sheet("Sheet1", [["name", "score"], ["ada", "1"]])
-    register(spark)
-    checkpoint = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-
-    def run_batch():
-        stream = (
-            spark.readStream.format("gsheets")
-            .option("token", "test-token")
-            .option("api_base", sheets_server.base_url)
-            # a Drive root the fake server 404s on
-            .option("drive_base", sheets_server.base_url + "/no-such-api")
-            .load("nodrive-sheet")
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180), "availableNow drain timed out"
-        return {r.name: r.score for r in spark.read.parquet(out_dir).collect()}
-
-    assert run_batch() == {"ada": 1.0}
-    # direct grid poke WITHOUT a version bump: the degraded reader
-    # must still see it (unconditional refetch path)
-    store.append_rows("Sheet1", [["bob", "2"]], touch=False)
-    assert run_batch() == {"ada": 1.0, "bob": 2.0}
+    store = sheets_server.new_spreadsheet("old-ckpt-sheet")
+    store.add_sheet("Sheet1", [["name", "score"], ["ada", "1"], ["bob", "2"]])
+    options = {
+        "path": "old-ckpt-sheet",
+        "token": "test-token",
+        "api_base": sheets_server.base_url,
+    }
+    schema, _ = bind(options)
+    rows, end = GSheetsStreamReader(options, schema).read({"rows": 1, "version": 7})
+    assert list(rows) == [("bob", 2.0)]
+    assert end == {"rows": 2}
 
 
 def test_session_window_matches_custom_sessionizer(spark):
