@@ -9,6 +9,10 @@ replacement-scan hook, so the parity surface is:
 * ``read_gsheet(spark, url, **options)`` — the table function shape, or
 * ``sheets_sql(spark, "SELECT ... FROM 'https://docs.google.com/...'")``
   — literal-URL SQL with the reference's replacement semantics.
+
+``read_gsheet`` and ``sheets_sql`` bind in the caller and never use the
+Data Source, so they leave the session's formats alone; only
+:func:`write_gsheet` registers ``gsheets`` itself.
 """
 
 from __future__ import annotations
@@ -67,9 +71,7 @@ def read_gsheet(spark: SparkSession, url_or_id: str, **options) -> DataFrame:
     14-41% higher (4-core machine). A concurrent ``createDataFrame`` in
     another thread may also skip the LocalRelation, which changes its
     plan, not its rows. Options go through :func:`_options`, so this
-    and the Data Source read a sheet identically. Also registers the
-    ``gsheets`` format on the session."""
-    register(spark)
+    and the Data Source read a sheet identically."""
     schema, table = bind(_options(url_or_id, options))
     previous = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
     spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
@@ -215,7 +217,6 @@ def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
     views over it keep working; one splice puts the view names in the
     statement.
     """
-    register(spark)
     refs = _sheet_refs(sql)
     user_aliases = {r.word for r in refs if _is_user_alias(r.word)}
     used_aliases = set(user_aliases)

@@ -410,3 +410,33 @@ def test_catalog_helpers_accept_option_keys_in_any_case(spark, sheets_server):
     assert [
         r.name for r in spark.table("global_temp.upper_people").collect()
     ] == ["Alice"]
+
+
+def test_only_write_gsheet_registers_the_data_source(
+    spark, sheets_server, people_sheet, monkeypatch
+):
+    """``read_gsheet`` and ``sheets_sql`` bind in the caller, so they
+    leave the session's formats alone; ``write_gsheet`` goes through
+    ``format("gsheets")`` and registers it once per call."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from duckdb_gsheets_spark.sources.gsheets import sheets_sql, write_gsheet
+
+    calls = []
+    original = DataSourceRegistration.register
+
+    def recording(self, data_source):
+        calls.append(data_source.name())
+        return original(self, data_source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", recording)
+    sid, _ = people_sheet
+    assert read_gsheet(spark, sid, **opts(sheets_server)).count() == 6
+    sql = f"SELECT count(*) AS n FROM '{url_for(sid)}'"
+    assert sheets_sql(spark, sql, **opts(sheets_server)).first().n == 6
+    assert calls == []
+    out = sheets_server.new_spreadsheet("register-once")
+    out.add_sheet("Sheet1", [])
+    write_gsheet(spark.range(3).coalesce(1), "register-once", **opts(sheets_server))
+    assert calls == ["gsheets"]
+    assert len(out.grids["Sheet1"]) == 4
