@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import hashlib
 import re
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +56,10 @@ def _options(url_or_id: str, options: dict) -> CaseInsensitiveDict:
 #: above it, the JVM keeps the batches and converts them in the scan.
 _LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 
+#: Held while :func:`read_gsheet` has the threshold lowered: two calls
+#: interleaving their save, set and restore could leave it at 0.
+_THRESHOLD_LOCK = threading.Lock()
+
 
 def read_gsheet(spark: SparkSession, url_or_id: str, **options) -> DataFrame:
     """``read_gsheet(...)`` table-function parity
@@ -68,20 +74,23 @@ def read_gsheet(spark: SparkSession, url_or_id: str, **options) -> DataFrame:
     LocalRelation threshold is 0 for that one call and restored after
     it: as a LocalRelation, a 40,000-row tab made the statements of
     ``perfbench``'s ``sheet_scan`` slower and the driver JVM's peak RSS
-    14-41% higher (4-core machine). A concurrent ``createDataFrame`` in
-    another thread may also skip the LocalRelation, which changes its
-    plan, not its rows. Options go through :func:`_options`, so this
-    and the Data Source read a sheet identically."""
+    14-41% higher (4-core machine). Concurrent calls bind in parallel
+    but take turns for that section (:data:`_THRESHOLD_LOCK`). A
+    concurrent ``createDataFrame`` elsewhere may also skip the
+    LocalRelation, which changes its plan, not its rows. Options go
+    through :func:`_options`, so this and the Data Source read a sheet
+    identically."""
     schema, table = bind(_options(url_or_id, options))
-    previous = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
-    spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
-    try:
-        return spark.createDataFrame(table, schema.to_struct_type())
-    finally:
-        if previous is None:
-            spark.conf.unset(_LOCAL_RELATION_THRESHOLD)
-        else:
-            spark.conf.set(_LOCAL_RELATION_THRESHOLD, previous)
+    with _THRESHOLD_LOCK:
+        previous = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
+        spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
+        try:
+            return spark.createDataFrame(table, schema.to_struct_type())
+        finally:
+            if previous is None:
+                spark.conf.unset(_LOCAL_RELATION_THRESHOLD)
+            else:
+                spark.conf.set(_LOCAL_RELATION_THRESHOLD, previous)
 
 
 #: Only URLs with this prefix are replaced — the reference's exact
@@ -209,25 +218,25 @@ def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
     (credentials, api_base, header/range/sheet/all_varchar) apply to
     every sheet the statement references.
 
-    The statement is scanned once (:func:`_sheet_refs`). User aliases
-    are reserved first; base-name aliases are then numbered over the
-    FROM/JOIN references in text order, then the comma-listed ones.
-    Each distinct URL is read once and registered as a session temp
-    view named by :func:`_view_name`, which outlives the call so SQL
-    views over it keep working; one splice puts the view names in the
+    The statement is scanned once (:func:`_sheet_refs`). Each distinct
+    URL is read once by :func:`_read_all`, all of them at the same
+    time, and registered as a session temp view named by
+    :func:`_view_name`, which outlives the call so SQL views over it
+    keep working. User aliases are reserved first; base-name aliases
+    are then numbered over the FROM/JOIN references in text order,
+    then the comma-listed ones. One splice puts the view names in the
     statement.
     """
     refs = _sheet_refs(sql)
+    urls = list(dict.fromkeys(ref.url for ref in refs))
+    views = {url: _view_name(url, options) for url in urls}
+    for url, df in zip(urls, _read_all(spark, urls, options)):
+        df.createOrReplaceTempView(views[url])
     user_aliases = {r.word for r in refs if _is_user_alias(r.word)}
     used_aliases = set(user_aliases)
-    views: dict[str, str] = {}
     spliced: dict[_SheetRef, str] = {}
     for ref in sorted(refs, key=lambda r: r.in_list):
-        view = views.get(ref.url)
-        if view is None:
-            view = _view_name(ref.url, options)
-            read_gsheet(spark, ref.url, **options).createOrReplaceTempView(view)
-            views[ref.url] = view
+        view = views[ref.url]
         if (
             ref.word in user_aliases
             or ref.word in _ALIAS_UNSAFE_KEYWORDS
@@ -248,6 +257,20 @@ def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
         pos = ref.end
     parts.append(sql[pos:])
     return spark.sql("".join(parts))
+
+
+def _read_all(spark: SparkSession, urls: list[str], options: dict) -> list[DataFrame]:
+    """:func:`read_gsheet` of each URL, all at the same time, so a
+    statement waits for its slowest tab instead of the sum of its tabs'
+    round trips: the caller reads the first URL while a thread each
+    reads the others. Every read finishes before this returns or
+    raises; the first URL in ``urls`` whose read failed raises."""
+    if not urls:
+        return []
+    with ThreadPoolExecutor(max_workers=max(1, len(urls) - 1)) as pool:
+        rest = [pool.submit(read_gsheet, spark, url, **options) for url in urls[1:]]
+        first = read_gsheet(spark, urls[0], **options)
+        return [first] + [read.result() for read in rest]
 
 
 def sheets(spark: SparkSession, url_or_id: str, **options) -> DataFrame:

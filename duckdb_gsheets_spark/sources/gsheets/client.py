@@ -50,10 +50,14 @@ class SpreadsheetMetadata:
 
 @dataclass(frozen=True)
 class ValueRange:
-    """Row-oriented string payload (reference: types.hpp:95-101)."""
+    """Row-oriented payload (reference: types.hpp:95-101). ``values``
+    holds the cells as the response JSON has them: strings under the
+    default FORMATTED_VALUE rendering, any JSON scalar otherwise. The
+    reader's inference turns them into text and types
+    (``inference.cast_rows``), so no per-cell pass runs here."""
 
     range: str
-    values: list[list[str]]
+    values: list[list]
     major_dimension: str = "ROWS"
 
 
@@ -196,7 +200,7 @@ class ValuesResource:
         payload = _parse_json(self._client.do_get(self._path(a1)))
         return ValueRange(
             range=payload.get("range", a1),
-            values=[[str(c) for c in row] for row in payload.get("values", [])],
+            values=payload.get("values", []),
             major_dimension=payload.get("majorDimension", "ROWS"),
         )
 

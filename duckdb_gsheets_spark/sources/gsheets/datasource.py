@@ -23,7 +23,7 @@ shares that bind and that table:
   serves the table as one partition per Arrow record batch;
 * ``spark.readStream.format("gsheets")`` refetches the range with one
   values.get per micro-batch in :class:`GSheetsStreamReader` and casts
-  it with the schema fixed at stream start.
+  the new rows with the schema fixed at stream start.
 
 Every surface speaks only the Sheets v4 API (plus the OAuth token
 endpoint), like the reference.
@@ -223,8 +223,8 @@ class GSheetsDataSource(DataSource):
 class GSheetsStreamReader(SimpleDataSourceStreamReader):
     """Poll-based micro-batch reader: the offset is the count of data
     rows already emitted. Every trigger fetches the range with one
-    values GET, casts it with the schema fixed at stream start and
-    emits the rows past the last offset; ``read`` and
+    values GET and casts and emits only the rows past the last offset,
+    with the schema fixed at stream start; ``read`` and
     ``readBetweenOffsets`` share that one fetch-and-slice. The Sheets
     API has no cheap change signal, so an unchanged sheet costs the
     same GET and emits nothing. A checkpoint that also carries a
@@ -251,19 +251,20 @@ class GSheetsStreamReader(SimpleDataSourceStreamReader):
     def _slice(
         self, start: dict, end: dict | None = None
     ) -> tuple[Iterator[tuple], dict]:
-        """Fetch the range, cast it and return the data rows from
-        ``start`` up to ``end`` (the current last row when ``end`` is
-        None) with the offset they end at."""
+        """Fetch the range and return the data rows from ``start`` up to
+        ``end`` (the current last row when ``end`` is None), cast, with
+        the offset they end at. Only those rows are cast."""
         if self._client is None:
             self._client = _build_client(self._options)
             self._target = _resolve_target(self._options, self._client)
         grid = self._client.values(self._target.spreadsheet_id).get(
             self._target.a1()
-        )
-        table = cast_rows(grid.values, self._schema, header=self._header)
-        stop = table.num_rows if end is None else end["rows"]
+        ).values
+        rows = grid[1:] if self._header else grid
+        stop = len(rows) if end is None else end["rows"]
         begin = min(start["rows"], stop)
-        return _tuples(table.slice(begin, stop - begin)), {"rows": stop}
+        table = cast_rows(rows[begin:stop], self._schema, header=False)
+        return _tuples(table), {"rows": stop}
 
     def initialOffset(self) -> dict:
         return {"rows": 0}

@@ -12,10 +12,16 @@ Exact behavior parity with the reference's bind-time inference
   first cell, or ``all_varchar=True`` → string. Deliberately naive —
   do not "improve" (SURVEY §7 risk register): a numeric column with a
   blank first cell is VARCHAR, integers become DOUBLE.
-* Casting: empty string → NULL; a short row pads trailing NULLs;
-  boolean cast is permissive (any-case true/false) like the engine
-  cast the reference delegates to. The cast grid is one Arrow table,
-  the single read format of every entry point.
+* Casting: empty string and JSON ``null`` → NULL; a short row pads
+  trailing NULLs; boolean cast is permissive (any-case true/false)
+  like the engine cast the reference delegates to. The cast grid is
+  one Arrow table, the single read format of every entry point.
+
+The grid arrives as the API sent it: strings under the default
+FORMATTED_VALUE rendering, but any JSON scalar is accepted and reads
+as ``str()`` of itself. :func:`cast_cell` is the per-cell rule;
+:func:`cast_rows` applies it a column at a time with pyarrow compute
+and gives the same values.
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -46,6 +53,11 @@ def is_valid_number(value: str) -> bool:
         return True
     except ValueError:
         return False
+
+
+def _text(cell) -> str:
+    """A JSON scalar as the string the casts read; ``null`` is blank."""
+    return "" if cell is None else str(cell)
 
 
 @dataclass(frozen=True)
@@ -73,13 +85,16 @@ def infer_schema(
     all_varchar: bool = False,
     range_label: str = "",
 ) -> SheetSchema:
-    """Infer names and types from the fetched grid."""
+    """Infer names and types from the fetched grid. Only the header row
+    and the first data row are read, each cell as :func:`_text` of it."""
     if not values:
         raise EmptyRangeError(range_label or "(unspecified)")
     header_row = values[0] if header else []
     first_data = values[1] if header and len(values) > 1 else (
         values[0] if not header else []
     )
+    header_row = [_text(c) for c in header_row]
+    first_data = [_text(c) for c in first_data]
     width = max(len(header_row), len(first_data))
     if width == 0:
         raise EmptyRangeError(range_label or "(unspecified)")
@@ -134,20 +149,57 @@ def cast_cell(value: str | None, type_name: str):
     return value
 
 
-_ARROW_TYPES = {"boolean": pa.bool_(), "double": pa.float64(), "string": pa.string()}
+#: The data rows as one Arrow list array. Large offsets: a grid near the
+#: Sheets cap (10M cells) can hold more than 2 GB of text.
+_GRID_TYPE = pa.large_list(pa.large_string())
+_NULL_TEXT = pa.scalar(None, pa.large_string())
+_NULL_INDEX = pa.scalar(None, pa.int64())
 
 
-def cast_rows(
-    values: list[list[str]], schema: SheetSchema, header: bool
-) -> pa.Table:
-    """Materialize the data rows as a typed Arrow table, one column at a
-    time (ragged rows padded)."""
-    rows = values[1:] if header else values
-    columns = [
-        pa.array(
-            [cast_cell(row[i] if i < len(row) else None, type_name) for row in rows],
-            type=_ARROW_TYPES[type_name],
+def _cast_column(column: pa.Array, type_name: str) -> pa.Array:
+    """:func:`cast_cell` over a whole text column.
+
+    Doubles: Arrow's cast and ``float()`` read every finite number
+    Arrow accepts alike, but Arrow rejects some strings ``float()``
+    reads (``" 1"``, ``"1_000"``, ``"١٢"``) and reads some non-finite
+    ones ``float()`` rejects (``"nan()"``, ``"-+inf"``). A column with
+    either kind goes through :func:`cast_cell` cell by cell. Booleans:
+    :func:`cast_cell` runs once per distinct string."""
+    if type_name == "double":
+        try:
+            doubles = pc.cast(column, pa.float64())
+            if not pc.any(pc.invert(pc.is_finite(doubles))).as_py():
+                return doubles
+        except pa.ArrowInvalid:
+            pass
+        return pa.array(
+            [cast_cell(c, type_name) for c in column.to_pylist()], pa.float64()
         )
-        for i, type_name in enumerate(schema.types)
-    ]
+    if type_name == "boolean":
+        encoded = column.dictionary_encode()
+        lookup = pa.array(
+            [cast_cell(c, type_name) for c in encoded.dictionary.to_pylist()],
+            pa.bool_(),
+        )
+        return lookup.take(encoded.indices)
+    return column.cast(pa.string())
+
+
+def cast_rows(values: list[list], schema: SheetSchema, header: bool) -> pa.Table:
+    """Materialize the data rows as a typed Arrow table. The rows become
+    one Arrow list array; column ``i`` takes each row's ``i``-th cell,
+    NULL past the end of a short row, and is cast as a whole."""
+    rows = values[1:] if header else values
+    try:
+        grid = pa.array(rows, _GRID_TYPE)
+    except pa.ArrowTypeError:  # a non-string JSON scalar
+        grid = pa.array(
+            [[c if c is None else str(c) for c in row] for row in rows], _GRID_TYPE
+        )
+    cells = pc.if_else(pc.equal(grid.values, ""), _NULL_TEXT, grid.values)
+    starts, lengths = grid.offsets[:-1], pc.list_value_length(grid)
+    columns = []
+    for i, type_name in enumerate(schema.types):
+        at = pc.if_else(pc.greater(lengths, i), pc.add(starts, i), _NULL_INDEX)
+        columns.append(_cast_column(cells.take(at), type_name))
     return pa.Table.from_arrays(columns, names=list(schema.names))

@@ -440,3 +440,105 @@ def test_only_write_gsheet_registers_the_data_source(
     write_gsheet(spark.range(3).coalesce(1), "register-once", **opts(sheets_server))
     assert calls == ["gsheets"]
     assert len(out.grids["Sheet1"]) == 4
+
+
+def test_a_json_null_cell_reads_as_null(spark, sheets_server):
+    """A cell the API sends as JSON ``null`` is NULL in every column
+    type, not the string ``"None"``; a null header cell is unnamed."""
+    sid = "json-null"
+    store = sheets_server.new_spreadsheet(sid)
+    store.add_sheet(
+        "Sheet1",
+        [
+            ["name", "n", "ok", None],
+            ["ada", "1", "TRUE", "x"],
+            [None, None, None, "y"],
+            ["bob", "2", None, None],
+        ],
+    )
+    df = read_gsheet(spark, sid, **opts(sheets_server))
+    assert df.columns == ["name", "n", "ok", "column4"]
+    assert [tuple(r) for r in df.collect()] == [
+        ("ada", 1.0, True, "x"),
+        (None, None, None, "y"),
+        ("bob", 2.0, None, None),
+    ]
+
+
+def test_concurrent_read_gsheet_leaves_session_conf_as_it_was(
+    spark, sheets_server, people_sheet, monkeypatch
+):
+    """Two threads in ``read_gsheet`` at once must not leave the
+    LocalRelation threshold lowered. ``createDataFrame`` is held at a
+    barrier so both calls would be inside it together; the later one
+    then returns only after the earlier one has restored the conf, the
+    order that loses the conf when the section is not exclusive. When
+    it is, the barrier times out and the calls run one after another."""
+    import threading
+    import time
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    sid, _ = people_sheet
+    barrier = threading.Barrier(2, timeout=3)
+    arrivals = []
+    create = spark.createDataFrame
+
+    def meeting_create(*args, **kwargs):
+        arrivals.append(threading.get_ident())
+        try:
+            barrier.wait()
+        except threading.BrokenBarrierError:
+            return create(*args, **kwargs)
+        if arrivals[-1] == threading.get_ident():  # the later arrival
+            deadline = time.monotonic() + 10
+            while spark.conf.get(key, None) is not None:
+                assert time.monotonic() < deadline
+                time.sleep(0.01)
+        return create(*args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", meeting_create)
+    assert spark.conf.get(key, None) is None
+    results = []
+
+    def read():
+        results.append(read_gsheet(spark, sid, **opts(sheets_server)))
+
+    threads = [threading.Thread(target=read) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert len(results) == 2
+    assert spark.conf.get(key, None) is None
+
+
+def test_read_gsheet_under_thread_stress(spark, sheets_server, people_sheet):
+    """More reading threads than cores, switching often: every read
+    returns the sheet and the session's threshold ends as it began."""
+    import sys
+    import threading
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    sid, _ = people_sheet
+    results = []
+
+    def read():
+        rows = read_gsheet(spark, sid, **opts(sheets_server)).collect()
+        results.append(len(rows))
+
+    spark.conf.set(key, "1MB")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=read) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+        assert spark.conf.get(key, None) == "1MB"
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.unset(key)
+    assert results == [6] * 8

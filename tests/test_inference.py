@@ -2,9 +2,12 @@
 (reference: src/gsheets_read.cpp:196-238, test/sql/read_gsheet.test)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from duckdb_gsheets_spark.sources.gsheets.errors import EmptyRangeError
 from duckdb_gsheets_spark.sources.gsheets.inference import (
+    SheetSchema,
+    cast_cell,
     cast_rows,
     infer_schema,
     is_valid_number,
@@ -125,3 +128,82 @@ def test_permissive_bool_cast():
     schema = infer_schema(values, header=True)
     rows = _tuples(cast_rows(values, schema, header=True))
     assert [r[0] for r in rows] == [True, False, True, None]
+
+
+def test_double_cast_matches_float_on_strings_arrow_reads_differently():
+    """Strings Arrow's cast rejects but ``float()`` reads (column a), and
+    strings Arrow reads but ``float()`` rejects (column b), cast as
+    ``float()`` says."""
+    a = ["1", " 1", "1 ", "1_000", "١٢", ""]
+    b = ["2", "nan()", "-+inf", "inf", "1e500", ""]
+    values = [["a", "b"]] + [list(cells) for cells in zip(a, b)]
+    table = cast_rows(values, infer_schema(values), header=True)
+    assert table.column("a").to_pylist() == [1.0, 1.0, 1.0, 1000.0, 12.0, None]
+    inf = float("inf")
+    assert table.column("b").to_pylist() == [2.0, None, None, inf, inf, None]
+
+
+def _per_cell(values, schema, header):
+    """The reference rule: :func:`cast_cell` on every cell, a JSON
+    ``null`` or a padded cell as NULL, any other scalar as its str()."""
+    rows = values[1:] if header else values
+    return [
+        tuple(
+            cast_cell(
+                None if i >= len(row) or row[i] is None else str(row[i]), type_name
+            )
+            for i, type_name in enumerate(schema.types)
+        )
+        for row in rows
+    ]
+
+
+def _exact(rows):
+    """Rows compared by type and repr: NaN equals NaN, -0.0 is not 0.0,
+    True is not 1.0."""
+    return [tuple((type(v), repr(v)) for v in row) for row in rows]
+
+
+_NUMBERS = st.one_of(
+    st.integers(-(10**20), 10**20).map(str),
+    st.floats().map(repr),
+    st.floats(allow_nan=False).map(lambda f: f"{f:.6e}"),
+    st.sampled_from(
+        [".5", "+.5", "1.", "-0", "00012", "1e500", "-1e500", "1e-400", "inf",
+         "-Infinity", "nan", "NaN"]
+    ),
+)
+_ODD = st.sampled_from(
+    ["", " 1", "1 ", " 12", "1_000", "١٢", "nan()", "-+inf", "TRUE", "FALSE",
+     "true", " yes ", "No", "bogus", "t", "0", "1", "None"]
+)
+_SCALARS = st.one_of(st.none(), st.booleans(), st.integers(), st.floats())
+_CELLS = st.sampled_from(
+    [
+        st.one_of(_NUMBERS, st.just(""), st.none()),  # mostly the Arrow path
+        _ODD,
+        st.one_of(_NUMBERS, _ODD, _SCALARS, st.text(max_size=5)),
+    ]
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(data=st.data())
+def test_columnar_cast_equals_per_cell_cast(data):
+    """``cast_rows`` gives what :func:`cast_cell` gives cell by cell, on
+    ragged and empty rows, rows wider than the schema, and any
+    declared type."""
+    cells = data.draw(_CELLS)
+    width = data.draw(st.integers(1, 5))
+    types = tuple(
+        data.draw(st.lists(st.sampled_from(["boolean", "double", "string"]),
+                           min_size=width, max_size=width))
+    )
+    schema = SheetSchema(tuple(f"c{i}" for i in range(width)), types)
+    header = data.draw(st.booleans())
+    values = data.draw(st.lists(st.lists(cells, max_size=width + 2), max_size=12))
+    if header:
+        values = [["h"] * width] + values
+    table = cast_rows(values, schema, header=header)
+    assert table.column_names == list(schema.names)
+    assert _exact(_tuples(table)) == _exact(_per_cell(values, schema, header))

@@ -484,3 +484,64 @@ def test_literal_url_view_is_keyed_on_read_options(
     assert _view_name(url_for(sid), {"token": "a"}) == _view_name(
         url_for(sid), {"TOKEN": "b"}
     )
+
+
+def _two_tab_book(server, sid):
+    store = server.new_spreadsheet(sid)
+    store.add_sheet("fact", [["k", "v"], ["1", "10"], ["2", "20"], ["2", "5"]])
+    store.add_sheet("dim", [["key", "region"], ["1", "north"], ["2", "south"]])
+    return [f"{url_for(sid)}?gid={gid}" for gid in (0, 1)]
+
+
+def test_sheets_sql_over_two_tabs_keeps_the_call_contract(
+    spark, sheets_server, monkeypatch
+):
+    """Two tabs of one spreadsheet, read concurrently: one metadata GET
+    and one values GET per tab, one module-level ``read_gsheet`` call
+    per distinct URL (``perfbench/sheets.py`` times binds by patching
+    that name), and the joined rows."""
+    from duckdb_gsheets_spark.sources.gsheets import api
+
+    fact, dim = _two_tab_book(sheets_server, "two-tabs")
+    calls = []
+    original = api.read_gsheet
+
+    def counting_read_gsheet(spark, url_or_id, **options):
+        calls.append(url_or_id)
+        return original(spark, url_or_id, **options)
+
+    monkeypatch.setattr(api, "read_gsheet", counting_read_gsheet)
+    sheets_server.request_log.clear()
+    rows = _sheets_sql(
+        spark,
+        sheets_server,
+        f"SELECT d.region, sum(f.v) AS total FROM '{fact}' AS f "
+        f"JOIN '{dim}' AS d ON f.k = d.key "
+        f"WHERE f.k IN (SELECT k FROM '{fact}') GROUP BY d.region ORDER BY 1",
+    ).collect()
+    assert [tuple(r) for r in rows] == [("north", 10.0), ("south", 25.0)]
+    assert sorted(calls) == sorted([fact, dim])
+    gets = [p for m, p in sheets_server.request_log if m == "GET"]
+    assert len(gets) == len(sheets_server.request_log) == 4
+    assert gets.count("/v4/spreadsheets/two-tabs") == 2
+    values_gets = sorted(p.rsplit("/", 1)[1] for p in gets if "/values/" in p)
+    assert values_gets == ["'dim'", "fact"]  # "dim" also reads as a column
+
+
+def test_sheets_sql_raises_the_first_failing_tab_in_text_order(
+    spark, sheets_server
+):
+    """When several tabs fail to read, the error is the first one's in
+    the statement, as when the tabs were read one after another."""
+    from duckdb_gsheets_spark.sources.gsheets.errors import SheetNotFoundError
+
+    _two_tab_book(sheets_server, "bad-tabs")
+    bad = [f"{url_for('bad-tabs')}?gid={gid}" for gid in (7, 9)]
+    with pytest.raises(SheetNotFoundError, match="7"):
+        _sheets_sql(
+            spark, sheets_server, f"SELECT * FROM '{bad[0]}' JOIN '{bad[1]}' USING (k)"
+        )
+    with pytest.raises(SheetNotFoundError, match="9"):
+        _sheets_sql(
+            spark, sheets_server, f"SELECT * FROM '{bad[1]}' JOIN '{bad[0]}' USING (k)"
+        )
