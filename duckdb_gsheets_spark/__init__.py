@@ -15,7 +15,6 @@ Spark-first:
   (Catalyst supplies optimization), plus large-scale training-data ops
   (dedup, similarity search, text analysis) that go beyond the
   reference.
-* ``streaming`` — Structured Streaming over the events table.
 * ``plans`` — session construction and table catalog helpers.
 """
 

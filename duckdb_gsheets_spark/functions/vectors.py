@@ -116,32 +116,3 @@ def centroid_assign_np(centroids: np.ndarray, ids: np.ndarray):
         )
 
     return assign
-
-
-def probe_lists_np(centroids: np.ndarray, ids: np.ndarray, nprobe: int):
-    """Build a pandas_udf: query embedding → array of the ``nprobe``
-    nearest centroid ids — the per-query half of the IVF contract
-    (``centroid_assign_np`` is the per-corpus-row half). Same GEMM +
-    round-6 math, same (−sim, centroid_id) ordering the registered
-    IVF oracle replays, so a stream of queries selects exactly the
-    lists the batch query probes.
-    """
-    from pyspark.sql.types import ArrayType
-
-    unit = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    id_arr = np.asarray(ids)
-
-    @pandas_udf(ArrayType(LongType()))
-    def probes(emb: pd.Series) -> pd.Series:
-        M = np.stack(emb.to_numpy())
-        norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-        sims = np.round((M @ unit.T) / norms[:, None], 6)
-        out = []
-        for row in sims:
-            # lexsort: last key primary — sim desc, centroid id asc
-            # (the vectorized form of the oracle's ORDER BY s DESC, cid).
-            order = np.lexsort((id_arr, -row))[:nprobe]
-            out.append([int(id_arr[j]) for j in order])
-        return pd.Series(out)
-
-    return probes

@@ -378,10 +378,7 @@ def bloom_artifact(
     |distinct bench grams|)`` and ``words`` is the m-bit membership
     mask packed ``BLOOM_WORD_BITS`` bits per non-negative long
     (``ceil(m / 63)`` words). This is the TRAINED ARTIFACT both
-    consumers ship to executors as a one-row broadcast literal — the
-    batch audit (:func:`contamination_bloom`) and the streaming intake
-    gate (streaming.events_stream.streaming_bloom_gate) fit it through
-    this one function so the gate can never drift from the audit.
+    consumers ship to executors as a one-row broadcast literal.
 
     The whole fit is ONE distributed action: a single collect of the
     K raw 60-bit hashes per distinct gram. The sizing count is the
@@ -432,31 +429,6 @@ def bloom_artifact(
             b = r[s] % m
             words[b // BLOOM_WORD_BITS] |= 1 << (b % BLOOM_WORD_BITS)
     return m, words
-
-
-def bloom_doc_flag(toks: Column, m: int) -> Column:
-    """TRUE iff ANY ``CONTAM_N``-gram of the token array tests
-    positive against the word-packed ``bloom_words`` column — the
-    whole gate as one per-row JVM expression (transform → exists over
-    higher-order lambdas, no explode, no shuffle): the form a
-    streaming intake gate runs per arriving document. Caller
-    guarantees ``size(toks) >= CONTAM_N`` and a ``bloom_words``
-    column in scope (the broadcast artifact row)."""
-    gram = lambda i: F.md5(  # noqa: E731 — md5 of the i-started gram
-        F.array_join(F.slice(toks, i, CONTAM_N), " ")
-    )
-    def _contained(g: Column) -> Column:
-        hit = None
-        for s in range(BLOOM_K):
-            h = _bloom_word_hit(
-                _bloom_bit(g, s, m), F.col("bloom_words")
-            )
-            hit = h if hit is None else (hit & h)
-        return hit
-    return F.exists(
-        F.sequence(F.lit(1), F.size(toks) - (CONTAM_N - 1)),
-        lambda i: _contained(gram(i)),
-    )
 
 
 def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -686,8 +658,8 @@ def write_bloom_artifact_sharded(
     """Fit the partitioned decontamination filter and PERSIST it as a
     parquet artifact — ``(fingerprint, shard, m, words)`` rows, one
     per shard — the trained-index pattern the ANN family uses: fit
-    once after the benchmark suite changes, then every batch audit
-    and streaming gate session LOADS instead of refitting. Returns
+    once after the benchmark suite changes, then every audit session
+    LOADS instead of refitting. Returns
     ``artifact_dir``."""
     shards = bloom_artifact_sharded(
         spark, sf_dir, bench_grams=bench_grams, bits_per_item=bits_per_item

@@ -566,9 +566,9 @@ VOCAB_TOP = 20
 def frequency_vocab(toks: DataFrame) -> DataFrame:
     """THE vocab rule — top ``VOCAB_TOP`` tokens by (count desc,
     token tiebreak) from any frame with a ``tok`` column, as a
-    ``(tok, cnt)`` frame. Shared by the OOV audit, the tokenizer
-    encode, and the streaming OOV gate so the ranking/tiebreak can
-    never silently diverge between them (one edit point). The top-K
+    ``(tok, cnt)`` frame. Shared by the OOV audit and the tokenizer
+    encode so the ranking/tiebreak can never silently diverge
+    between them (one edit point). The top-K
     compiles to TakeOrderedAndProject — no global sort."""
     return (
         toks.groupBy("tok")
@@ -1113,7 +1113,7 @@ RESAMPLE_GRID = 4_294_967_296
 def resample_thresholds(docs: DataFrame) -> DataFrame:
     """(lang, n_docs_in, lang_tokens, threshold) from a tokenized
     corpus frame — the pure-integer equal-token-share thresholds
-    shared by the batch operator and the streaming gate."""
+    shared by the resample operator and the pipeline gate."""
     by_lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs_in"),
         F.sum("n_tokens").alias("lang_tokens"),
@@ -2330,8 +2330,7 @@ def _dsir_weights(docs: DataFrame, raw_excludes_target: bool = False) -> DataFra
     passes here and benched 5.4× its DuckDB twin). The per-document
     weight is now a PROJECTION, not an aggregation: the fitted
     ≤ DSIR_BUCKETS-row llr table is folded into a constant array
-    literal (the same fitted-artifact-as-literal device the streaming
-    scorer uses) and each document sums its own bucket array with one
+    literal and each document sums its own bucket array with one
     ``aggregate`` HOF — ZERO shuffles and zero joins after the fit
     (guide §2.4; the exact integer sum is unchanged: same per-bucket
     longs, integer addition in any order).
@@ -2384,9 +2383,8 @@ def _dsir_weights(docs: DataFrame, raw_excludes_target: bool = False) -> DataFra
 def dsir_feat_array():
     """Column expression: the DSIR hashed-feature stream of a tokenized
     document row (``toks`` column) as ONE array — unigrams ⧺ adjacent
-    bigrams, multiplicity preserved. Shared by the batch explode path
-    (:func:`_dsir_feats`) and the per-row streaming scorer
-    (streaming.events_stream.streaming_dsir_weight_counts), so the
+    bigrams, multiplicity preserved. Shared by the explode path
+    (:func:`_dsir_feats`) and the per-document scorer, so the
     feature definition cannot drift between the two."""
     n_bi = F.size("toks") - 1  # ≥ 0: split() yields ≥ 1 token
     return F.concat(
@@ -2437,17 +2435,15 @@ def dsir_bucket_llr(
     # frame: the plan needs an aggregation-on-aggregation (the totals
     # fold reads the bucket tally) plus an eager localCheckpoint,
     # both analysis-illegal under Structured Streaming — skipping the
-    # checkpoint would only move the failure to the totals fold. The
-    # streaming DSIR scorer is unaffected by design: it fits this
-    # artifact ONCE from its STATIC corpus and collects the ≤
-    # DSIR_BUCKETS rows into a map literal (dsir_row_scorer), which
-    # is how a production gate consumes a fitted artifact anyway.
+    # checkpoint would only move the failure to the totals fold. A
+    # streaming consumer fits this artifact ONCE from a STATIC corpus
+    # and collects the ≤ DSIR_BUCKETS rows into a literal.
     if feats.isStreaming:
         raise ValueError(
             "dsir_bucket_llr fits from a STATIC corpus only (the llr "
             "table is an agg-on-agg plan Structured Streaming cannot "
             "analyze); fit on the static frame and broadcast the "
-            "collected table into the stream, as dsir_row_scorer does"
+            "collected table into the stream"
         )
     is_target = F.col("source").isin(*DSIR_TARGET_SOURCES)
     # The bucket tally is ≤ DSIR_BUCKETS rows — the trained artifact.

@@ -1005,12 +1005,11 @@ GROUP BY doc_a, n_tokens_a
 def _minhash_sigs_hof(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The all-JVM higher-order-function signature build — per row,
     each of the 16 permutation mins is an ``array_min`` over a
-    ``transform`` of the shingle array, ZERO shuffles. This is the
-    form the STREAMING twins run (single-consumer by construction, no
-    checkpoint possible) and the formulation-equivalence pytest pins
-    the Arrow batch builder against — Spark evaluates these lambdas
-    INTERPRETED, which is why the batch path moved off it (round
-    14)."""
+    ``transform`` of the shingle array, ZERO shuffles. Kept ONLY as
+    the reference the formulation-equivalence pytest pins the Arrow
+    builder against — Spark evaluates these lambdas INTERPRETED,
+    which is why :func:`minhash_signatures` moved off it (round 14).
+    Not reachable from any registered query."""
     shingled = _shingle_sets(docs, text_col)
 
     def perm_min(perm: int):
@@ -1080,7 +1079,7 @@ def _minhash_sigs_np_batches(it):
 def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """doc_id + hashed-shingle MinHash signature (array<long>) + shingle set.
 
-    BATCH frames build signatures in ONE Arrow-batched pass
+    Signatures are built in ONE Arrow-batched pass
     (:func:`_minhash_sigs_np_batches`): tokens come from the same JVM
     expression as every oracle (so tokenization cannot drift), and the
     residue/shingle/permutation arithmetic runs vectorized in numpy —
@@ -1088,16 +1087,12 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     per element, and the signature build was the dominant wall of
     every MinHash consumer (round-14 A/B at sf0.1: 1.46 s HOF vs 0.92 s
     Arrow, identical output bit-for-bit on all 5000 docs; the
-    formulation-equivalence pytest pins batch == HOF == streaming).
+    formulation-equivalence pytest pins Arrow == HOF).
     The md5 → first-15-hex → mod-P residue is the portable-hash
     contract both engines compute (hashlib md5 IS md5); all shingle
     and affine arithmetic stays < 2^62, exact in int64 everywhere.
 
-    STREAMING frames keep the all-JVM HOF form
-    (:func:`_minhash_sigs_hof`): single-consumer by construction, no
-    checkpoint possible, and the ingest-gate plans stay pure-JVM.
-
-    BATCH frames are eagerly ``localCheckpoint``'ed (round 8): every
+    The frame is eagerly ``localCheckpoint``'ed (round 8): every
     consumer fans the signature frame into several branches (the band
     self-join reads it twice, candidate verification re-attaches the
     shingle payload per side), and an unmaterialized frame re-runs
@@ -1106,8 +1101,6 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Materializing the (doc_id, shingles, signature) index once is the
     production pattern (a MinHash index IS a persisted artifact).
     """
-    if docs.isStreaming:
-        return _minhash_sigs_hof(docs, text_col)
     toksed = fan_out(docs.where(F.col(text_col).isNotNull())).select(
         "doc_id", T.tokens(F.lower(F.col(text_col))).alias("toks")
     )
@@ -1122,8 +1115,8 @@ def _band_rows(sigs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Slim ``(doc_id, band_idx, band_hash)`` LSH band rows from a
     signature frame — no shingle payload by default, so any join over
     them shuffles only 24 bytes/row/band. ``carry`` rides extra
-    columns through the explode for callers that must stay
-    single-stream (the streaming twin can't re-join its own stream)."""
+    columns through the explode, so a caller that needs them on the
+    candidate side skips a re-join."""
     n_bands = MINHASH_PERMS // MINHASH_BAND_ROWS
     return sigs.select(
         "doc_id",
@@ -1401,10 +1394,9 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
         sig = sig + F.when(
             F.col(f"v{k}") > 0, F.lit(2**k).cast("long")
         ).otherwise(0)
-    out = votes.select("doc_id", sig.alias("sig"))
-    if not out.isStreaming:
-        out = out.localCheckpoint(eager=True)
-    return out
+    return votes.select("doc_id", sig.alias("sig")).localCheckpoint(
+        eager=True
+    )
 
 
 def _band_val(sig: F.Column, b: int) -> F.Column:
@@ -2846,11 +2838,11 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs_b = minhash_signatures(batch)
     sigs_c = minhash_signatures(corpus)
-    # The delta's shingles RIDE the band-row broadcast (carry=, the
-    # streaming twin's device) instead of a second delta broadcast +
-    # re-join: round-14 job-floor decomposition read this row at 15
-    # jobs / 100% scheduling floor, and each distinct broadcast frame
-    # is one job — one candidate dropDuplicates per (b_id, c_id) pair
+    # The delta's shingles RIDE the band-row broadcast (carry=)
+    # instead of a second delta broadcast + re-join: round-14
+    # job-floor decomposition read this row at 15 jobs / 100%
+    # scheduling floor, and each distinct broadcast frame is one
+    # job — one candidate dropDuplicates per (b_id, c_id) pair
     # replaces the old band-distinct + shingle-attach chain (sh_a is
     # functionally dependent on b_id, so any survivor carries the
     # right array).
@@ -3303,7 +3295,7 @@ def dedup_longest_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Session-scoped memo for the suffix-sort spine + tied-rows
 #: extension table shared by the LRS report, the scrub manifest, the
-#: composed scrub pipeline, and the streaming intake fit — keyed like
+#: and the composed scrub pipeline — keyed like
 #: similarity's exact-baseline memo: (applicationId, sf_dir, source
 #: mtime), so a new session, another scale factor, or a rewritten
 #: documents table never sees stale checkpoint blocks. The suffix

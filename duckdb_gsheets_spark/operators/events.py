@@ -1,10 +1,6 @@
 """Event-stream analytics over the ``events`` table: time bucketing,
 pivot, sessionization, as-of join, JSON extraction.
 
-These are the batch twins of the Structured Streaming ops in
-``duckdb_gsheets_spark.streaming`` — identical logical shapes, so the
-streaming path can be validated against these oracle-checked results.
-
 Scale notes: sessionization and the as-of join are both expressed as a
 single partition-by-user window pass (no self-join, no range join) —
 the shape that survives 100 TB: one shuffle on user_id, then a linear
@@ -43,7 +39,7 @@ def _epoch_us(col: Column | str) -> Column:
 
 
 def events_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-hour aggregate: the batch twin of a streaming window."""
+    """Tumbling-hour aggregate."""
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(
@@ -1987,8 +1983,8 @@ def events_rollup_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def daily_from_hourly_partials(hourly: DataFrame) -> DataFrame:
     """Merge an hourly partial table (hour_start, event_type, n, s1,
     mn, mx — scaled-long state) into final daily statistics. Shared by
-    the batch rollup and its streaming twin (the streaming job
-    maintains the hourly partials; any serving grain merges them)."""
+    the daily rollup and its incremental refresh (any serving grain
+    merges the partials)."""
     return (
         hourly.groupBy(
             F.col("hour_start").cast("date").cast("string").alias("day_start"),
@@ -2037,11 +2033,10 @@ def rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast).
 
     The 100 TB contract: the refresh never rescans history. The base
-    slice is filtered to the affected DAY (directory-pruned under the
-    plans/partitioning.py layout; in production it is read straight
-    from the materialized hourly-partial table, O(hours) rows, no raw
-    scan at all), the delta slice is just the new hour, and the merge
-    is exact because the partials are algebraic integer state — so
+    slice is filtered to the affected DAY (in production it is read
+    straight from the materialized hourly-partial table, O(hours)
+    rows, no raw scan at all), the delta slice is just the new hour,
+    and the merge is exact because the partials are algebraic integer state — so
     the refreshed day is bit-identical to a full recompute, which is
     exactly what the oracle computes directly from raw rows.
     """

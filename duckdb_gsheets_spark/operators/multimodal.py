@@ -51,16 +51,10 @@ DECODE_SCHEMA = StructType(
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → multimodal table: binary payload + typed metadata.
 
-    Schema: (doc_id, payload binary, format string, meta struct).
+    Schema: (doc_id, payload binary, format string, meta struct);
+    format by doc_id, payload = text bytes.
     """
-    return media_from_docs(load_table(spark, sf_dir, "documents"))
-
-
-def media_from_docs(docs: DataFrame) -> DataFrame:
-    """The media projection over any documents-shaped frame —
-    streaming readers and planted pytest corpora route through the
-    same mapping as the batch table (format by doc_id, payload =
-    text bytes)."""
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.col("text").cast("binary").alias("payload"),
@@ -665,9 +659,8 @@ def phash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phash_sigs_from_media(media: DataFrame) -> DataFrame:
-    """Signature builder over any media-shaped frame (the streaming
-    gate feeds it the static corpus slice; pytest feeds it planted
-    payloads). No checkpoint here — callers decide.
+    """Signature builder over a media-shaped frame; no checkpoint
+    here (:func:`phash_signatures` adds it).
 
     Round 14: this is now the per-row HOF formulation (one projection
     per payload — anchor scan, chunk spans, md5 votes and the final
@@ -678,10 +671,9 @@ def _phash_sigs_from_media(media: DataFrame) -> DataFrame:
     the HOF form doesn't pay; measured 4.7→3.9 s at sf0.1 on sub-KB
     payloads and asymptotically worse on real media. The old builder
     survives as :func:`_phash_sigs_explode_reference`, pinned equal
-    by the streaming formulation-equivalence pytest. ``fan_out``
-    because the signature is compute-dense and the low-SF payload
-    scan is 1-3 partitions (4.3→0.9 s; no-op at scale, pass-through
-    on streaming frames)."""
+    by the formulation-equivalence pytest. ``fan_out`` because the
+    signature is compute-dense and the low-SF payload scan is 1-3
+    partitions (4.3→0.9 s; no-op at scale)."""
     media = fan_out(media).where(F.col("payload").isNotNull())
     base = media.select(
         "doc_id",
@@ -705,7 +697,7 @@ def _phash_sigs_from_media(media: DataFrame) -> DataFrame:
 def _phash_sigs_explode_reference(media: DataFrame) -> DataFrame:
     """The round-13 per-byte posexplode + window signature builder,
     kept ONLY as the pytest formulation-equivalence reference for the
-    HOF production path (tests/test_streaming.py) — the two must stay
+    HOF production path (tests/test_ops.py) — the two must stay
     bit-identical. Not reachable from any registered query."""
     media = media.where(F.col("payload").isNotNull())
     base = media.select(
@@ -781,16 +773,12 @@ def _phash_sigs_explode_reference(media: DataFrame) -> DataFrame:
     )
 
 
-#: Per-row (no explode, no shuffle) form of the SAME signature, for
-#: streaming frames where the batch builder's posexplode + window +
-#: groupBy are unavailable: content-defined chunk ends via
-#: filter-over-sequence, chunk spans via zip_with against the
+#: Per-row (no explode, no shuffle) perceptual signature, the form
+#: :func:`_phash_sigs_from_media` runs: content-defined chunk ends
+#: via filter-over-sequence, chunk spans via zip_with against the
 #: shifted ends array, and the 60 SimHash votes folded through ONE
-#: aggregate whose accumulator is the vote array. Interpreted HOF
-#: lambdas (the portable_hash cost note) — fine for an ingest gate's
-#: per-row arrival rate; the batch builder stays the bulk path. The
-#: batch-equality test pins this formulation bit-identical to
-#: phash_signatures.
+#: aggregate whose accumulator is the vote array. A pytest pins it
+#: bit-identical to :func:`_phash_sigs_explode_reference`.
 _PHASH_ROW_SIG_SQL = f"""
 aggregate(
   transform(
@@ -824,28 +812,6 @@ concat(
   array(n - 1)
 )
 """
-
-
-def phash_row_signatures(media: DataFrame) -> DataFrame:
-    """(doc_id, format, sig) via the per-row HOF signature — works on
-    STREAMING frames (stateless projection). Same gating as the batch
-    builder: NULL payloads and payloads under PHASH_MIN_BYTES drop."""
-    return (
-        media.where(F.col("payload").isNotNull())
-        .select(
-            "doc_id",
-            "format",
-            F.hex("payload").alias("h"),
-            F.expr("length(hex(payload)) div 2").cast("long").alias("n"),
-        )
-        .where(F.col("n") >= PHASH_MIN_BYTES)
-        .withColumn("_pends", F.expr(_PHASH_ROW_ENDS_SQL))
-        .select(
-            "doc_id",
-            "format",
-            F.expr(_PHASH_ROW_SIG_SQL).alias("sig"),
-        )
-    )
 
 
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -646,9 +646,8 @@ def _probe_selection(
 ) -> tuple:
     """Driver-side coarse-quantizer probe selection, the ONE home of
     the (round-6 sims, nprobe lowest (−sim, centroid_id)) contract the
-    IVF oracles replay — shared by the IVF-Flat scan, the IVF-PQ scan
-    and (as the per-row streaming twin) functions.vectors'
-    probe_lists_np. Returns ``(unit, id_arr, Q, qids, qnorm,
+    IVF oracles replay — shared by the IVF-Flat scan and the IVF-PQ
+    scan. Returns ``(unit, id_arr, Q, qids, qnorm,
     by_list)`` where ``by_list`` inverts probes to
     {list_id: query indices}."""
     C = np.array([r.emb for r in centroid_rows])

@@ -394,9 +394,9 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gopher_rules(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """Per-document Gopher rule flags for any (batch OR streaming)
-    frame with (doc_id, text) — the narrow projection behind
-    :func:`text_gopher_quality` and the streaming quality twin.
+    """Per-document Gopher rule flags for any frame with (doc_id,
+    text) — the narrow projection behind :func:`text_gopher_quality`
+    and the pipeline quality gates.
     ``carry`` names extra input columns to pass through unchanged
     (e.g. ``("lang",)`` for a per-language rollup downstream)."""
     c = F.col("text")

@@ -70,10 +70,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     the raw input rows (cheap) and is a no-op at scale, where file
     splits already exceed core count.
     """
-    # Streaming frames can't be partition-probed (and micro-batch
-    # parallelism is the source's concern anyway): pass them through.
-    if df.isStreaming:
-        return df
     # The .rdd probe forces one driver-side physical-planning pass
     # per plan BUILD (~tens of ms, no job) — acceptable for these
     # hand-built operator plans; don't call it inside per-row or

@@ -1,8 +1,8 @@
 """Persisted quality-classifier probe (write-once/read-many).
 
-The quality-gate family (``pipeline_classifier_gate``, the
-``streaming_classifier_gate`` ingest twin) scores documents against a
-hashed-feature logistic probe whose fit costs a tokenize pass plus
+The quality gate (``pipeline_classifier_gate``) scores documents
+against a hashed-feature logistic probe whose fit costs a tokenize
+pass plus
 ``CLS_GATE_ITERS`` full-batch GD rounds over the corpus. Within one
 session the fit runs once per consumer; every NEW session pays it
 again while the corpus is unchanged — and at 100 TB the fit is the
@@ -26,8 +26,6 @@ Usage::
     write_classifier_probe(spark, sf_dir, art_dir)      # once
     w = load_classifier_probe(spark, sf_dir, art_dir)   # per session
     pipeline_classifier_gate(spark, sf_dir, weights=w)
-    streaming.events_stream.classifier_row_scorer(
-        spark, sf_dir, weights=w)
 """
 
 from __future__ import annotations
@@ -110,7 +108,7 @@ def load_classifier_probe(
     spark: SparkSession, sf_dir: str, artifact_dir: str
 ) -> dict[int, int]:
     """Load a persisted probe as the ``{bucket: ws}`` weight dict the
-    gate and the row scorer consume, refusing an artifact whose
+    gate consumes, refusing an artifact whose
     config fingerprint OR corpus stamp disagrees with this session's
     constants and live corpus."""
     try:

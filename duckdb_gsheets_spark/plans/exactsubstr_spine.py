@@ -9,9 +9,8 @@ but every NEW session pays the full distributed suffix sort again —
 at 100 TB that build is the dominant cost of the family, and it is
 pure recomputation whenever the corpus is unchanged.
 
-This module is the layout-layer answer, same trade as
-``plans.bucketing``: pay one artifact WRITE, then every later session
-LOADS the spine instead of rebuilding it. The artifact is plain
+This module pays one artifact WRITE, then every later session LOADS
+the spine instead of rebuilding it. The artifact is plain
 parquet — the spine's global suffix order is carried entirely by the
 ``pid`` column plus the within-partition ``(ks, doc_id, pos)`` sort
 key, both data columns, so a parquet round-trip preserves the

@@ -1,9 +1,10 @@
 """Persisted perceptual-signature index (write-once/read-many).
 
 The perceptual media near-dup family (``multimodal_phash_neardup``,
-the ``streaming_phash_gate`` ingest twin) probes the corpus's 60-bit
-CDC-chunk SimHash signatures. Within one session the signature frame
-is built once and checkpointed, but every NEW session pays the full
+``multimodal_phash_clusters``, ``multimodal_phash_survivor``) probes
+the corpus's 60-bit CDC-chunk SimHash signatures. Within one session
+the signature frame is built once and checkpointed, but every NEW
+session pays the full
 per-byte hex explode + chunk hash + vote aggregation again — pure
 recomputation while the corpus is unchanged, and at 100 TB the
 signature build touches every payload byte.
@@ -26,8 +27,7 @@ Usage::
 
     write_phash_index(spark, sf_dir, art_dir)   # once, after ingest
     sigs = load_phash_index(spark, sf_dir, art_dir)  # per session
-    streaming.events_stream.phash_gate_ledger(
-        spark, sf_dir, delta_media, corpus_sigs=sigs)
+    multimodal_phash_clusters(spark, sf_dir, sigs=sigs)
 """
 
 from __future__ import annotations

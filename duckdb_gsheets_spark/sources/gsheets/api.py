@@ -420,8 +420,8 @@ def write_gsheet_stream(
     COPY would. Dedup by key belongs in the sheet's consumer or in a
     pre-sink ``dropDuplicates``.
 
-    Runs with an ``availableNow`` trigger (drain-all semantics, same
-    as the other streaming twins) and blocks until the drain finishes;
+    Runs with an ``availableNow`` trigger (drain-all semantics) and
+    blocks until the drain finishes;
     returns the terminated query handle.
     """
 

@@ -30,8 +30,10 @@ endpoint), like the reference.
 
 Write lifecycle (parity with gsheets_copy.cpp): driver-side setup
 (resolve sheet > gid > index 0, optional create, clear per
-overwrite_sheet/overwrite_range, header append exactly once), then
-per-partition batched ``values.append`` calls of 2048 rows.
+overwrite_sheet/overwrite_range, header append exactly once); each
+task only stringifies its rows and ships them to the driver in its
+commit message, and ``commit()`` appends every partition's rows once,
+in partition order, as ``values.append`` calls of 2048 rows.
 """
 
 from __future__ import annotations

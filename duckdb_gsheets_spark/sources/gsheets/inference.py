@@ -44,9 +44,15 @@ from duckdb_gsheets_spark.sources.gsheets.errors import EmptyRangeError
 def is_valid_number(value: str) -> bool:
     """Full-string numeric parse (reference IsValidNumber,
     src/gsheets_read.cpp:14-29: stod must consume the whole string).
-    ``stod`` skips leading whitespace but stops at trailing whitespace
-    and at ``_``, both of which Python's ``float`` accepts."""
-    if not value or value[-1].isspace() or "_" in value:
+    ``stod`` skips leading whitespace but stops at trailing whitespace,
+    at ``_`` and at any non-ASCII character (it reads ASCII digits
+    only), all of which Python's ``float`` accepts."""
+    if (
+        not value
+        or not value.isascii()
+        or value[-1].isspace()
+        or "_" in value
+    ):
         return False
     try:
         float(value)

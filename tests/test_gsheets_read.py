@@ -542,3 +542,4 @@ def test_read_gsheet_under_thread_stress(spark, sheets_server, people_sheet):
         sys.setswitchinterval(interval)
         spark.conf.unset(key)
     assert results == [6] * 8
+

@@ -31,6 +31,11 @@ def test_is_valid_number():
     assert not is_valid_number("12 ")
     assert is_valid_number(" 12")
     assert infer_schema([["a", "b"], ["1_000", "12 "]]).types == ("string", "string")
+    # stod reads ASCII digits only; float also takes any Unicode digit
+    # (Arabic-Indic, fullwidth).
+    assert not is_valid_number("١٢")
+    assert not is_valid_number("１２")
+    assert infer_schema([["a", "b"], ["١٢", "１２"]]).types == ("string", "string")
 
 
 def test_people_inference():

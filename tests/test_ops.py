@@ -75,10 +75,10 @@ def test_minhash_np_builder_matches_hof_reference(spark):
     (numpy md5-residue/shingle/affine in mapInPandas) must be
     bit-identical — shingle arrays INCLUDING first-occurrence order,
     and all 16 signature components — to the all-JVM higher-order-
-    function form the streaming twins still run, over the real sf
-    corpus AND a planted edge-case frame (1-token and 2-token docs
-    that exercise the NULL_SENTINEL padding, unicode tokens,
-    whitespace-only text that tokenizes to the empty string)."""
+    function form (:func:`_minhash_sigs_hof`, kept as the reference),
+    over the real sf corpus AND a planted edge-case frame (1-token and
+    2-token docs that exercise the NULL_SENTINEL padding, unicode
+    tokens, whitespace-only text that tokenizes to the empty string)."""
     from duckdb_gsheets_spark.operators.dedup import _minhash_sigs_hof
     from duckdb_gsheets_spark.plans.catalog import load_table
 
@@ -7361,18 +7361,21 @@ def test_bloom_word_packed_mask_past_2e24_bits(spark):
     ``bits_per_item`` override forces m > 2^24 from a small planted
     gram set (so the test doesn't need a half-million-gram benchmark),
     the packed ``array<long>`` artifact stays ceil(m/63) words of
-    non-negative longs, and the per-row gate (bloom_doc_flag) finds
-    every planted member — a Bloom filter has no false negatives at
-    ANY size, which only holds if word index / bit-in-word arithmetic
-    is consistent between fit (python packing) and probe (JVM
-    element_at + bitwise-AND)."""
+    non-negative longs, and the per-gram probe
+    (``_bloom_bit`` / ``_bloom_word_hit``, the expression
+    contamination_bloom runs) finds every planted member — a Bloom
+    filter has no false negatives at ANY size, which only holds if
+    word index / bit-in-word arithmetic is consistent between fit
+    (python packing) and probe (JVM element_at + bitwise-AND)."""
     from pyspark.sql import functions as F
 
     from duckdb_gsheets_spark.operators.chunking import (
+        BLOOM_K,
         BLOOM_WORD_BITS,
         CONTAM_N,
+        _bloom_bit,
+        _bloom_word_hit,
         bloom_artifact,
-        bloom_doc_flag,
     )
 
     # 600 planted grams × 2^16 bits/item = 39.3M bits > 2^24.
@@ -7393,7 +7396,8 @@ def test_bloom_word_packed_mask_past_2e24_bits(spark):
     assert all(w >= 0 for w in words)
 
     mask_df = spark.createDataFrame([(words,)], "bloom_words array<long>")
-    docs = spark.createDataFrame(
+    # Every text is exactly one CONTAM_N-gram, so its gram is md5(text).
+    grams = spark.createDataFrame(
         # members: the planted grams; non-members: unseen token runs
         [(t, True) for t in texts[:50]]
         + [
@@ -7401,12 +7405,16 @@ def test_bloom_word_packed_mask_past_2e24_bits(spark):
             for i in range(200)
         ],
         "text string, planted boolean",
-    ).select(
-        "planted", F.split(F.col("text"), r"\s+").alias("toks")
-    )
+    ).select("planted", F.md5(F.col("text")).alias("gram"))
+    hit = None
+    for s in range(BLOOM_K):
+        h = _bloom_word_hit(
+            _bloom_bit(F.col("gram"), s, m), F.col("bloom_words")
+        )
+        hit = h if hit is None else (hit & h)
     flagged = (
-        docs.crossJoin(F.broadcast(mask_df))
-        .select("planted", bloom_doc_flag(F.col("toks"), m).alias("hit"))
+        grams.crossJoin(F.broadcast(mask_df))
+        .select("planted", hit.alias("hit"))
         .collect()
     )
     assert all(r.hit for r in flagged if r.planted)  # no false negatives
@@ -7611,6 +7619,30 @@ def test_tokenizer_fertility_invariants(spark):
         assert r.tokens_per_char_micro <= 1_000_000
         assert r.fertility_micro > 1_000_000
     assert any(r.n_bpe_tokens < r.n_chars for r in rows)
+
+
+def test_phash_signatures_match_explode_reference(spark):
+    """Formulation equivalence for the perceptual signature: the
+    production builder (per-row HOF since round 14) must be
+    bit-identical to the round-13 posexplode + window reference."""
+    from duckdb_gsheets_spark.operators.multimodal import (
+        _phash_sigs_explode_reference,
+        media_table,
+        phash_signatures,
+    )
+
+    b = {
+        r.doc_id: (r.format, r.sig)
+        for r in phash_signatures(spark, SF).collect()
+    }
+    ref = {
+        r.doc_id: (r.format, r.sig)
+        for r in _phash_sigs_explode_reference(
+            media_table(spark, SF)
+        ).collect()
+    }
+    assert b == ref
+    assert b
 
 
 def test_phash_neardup_planted_edit(spark, tmp_path):

@@ -1,5 +1,7 @@
-"""Partitioned-layout plan tests: the scan-pruning claim.
+"""Hive-partitioned parquet over a catalog table: the scan-pruning claim.
 
+The layout is one ``write.partitionBy`` of ``load_table``'s frame; the
+partition keys come back as columns rebuilt from the directory names.
 Central assertions: a literal predicate on the partition key becomes a
 planning-time ``PartitionFilters`` entry (static pruning); a runtime
 join filter becomes a ``dynamicpruningexpression`` (DPP); and pruning
@@ -13,10 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_gsheets_spark.plans.catalog import load_table
-from duckdb_gsheets_spark.plans.partitioning import (
-    partition_layout,
-    read_partitioned,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,7 +22,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs_by_lang(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("layout") / "documents_by_lang")
-    partition_layout(spark, SF, "documents", ["lang"], out)
+    load_table(spark, SF, "documents").write.partitionBy("lang").parquet(out)
     return out
 
 
@@ -37,7 +35,7 @@ def _physical(df):
 def test_partition_key_filter_prunes_at_plan_time(spark, docs_by_lang):
     """lang = 'en' must land in PartitionFilters (directory pruning),
     not in per-row DataFilters."""
-    docs = read_partitioned(spark, docs_by_lang)
+    docs = spark.read.parquet(docs_by_lang)
     plan = _physical(docs.where(F.col("lang") == "en"))
     scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
     pf = scan.split("PartitionFilters: ")[-1]
@@ -49,7 +47,7 @@ def test_join_filter_prunes_dynamically(spark, docs_by_lang):
     """A filter that reaches the partition key THROUGH a join (the
     star-schema case) must inject dynamic partition pruning on the
     fact scan."""
-    docs = read_partitioned(spark, docs_by_lang)
+    docs = spark.read.parquet(docs_by_lang)
     dim = spark.createDataFrame(
         [("en", 1), ("fr", 0), ("de", 0), ("es", 0), ("zh", 0)],
         "lang string, keep int",
@@ -71,7 +69,7 @@ def test_pruned_partition_is_never_read(spark, docs_by_lang):
     with open(bomb, "wb") as f:
         f.write(b"this is not a parquet file")
     try:
-        docs = read_partitioned(spark, docs_by_lang)
+        docs = spark.read.parquet(docs_by_lang)
         n_en = docs.where(F.col("lang") == "en").count()
         assert n_en > 0
         with pytest.raises(Exception):
@@ -86,7 +84,7 @@ def test_partitioned_read_matches_plain(spark, docs_by_lang):
     keys round-trip through directory names)."""
     got = sorted(
         (r.doc_id, r.lang, r.n_chars)
-        for r in read_partitioned(spark, docs_by_lang)
+        for r in spark.read.parquet(docs_by_lang)
         .where(F.col("lang") == "en")
         .select("doc_id", "lang", "n_chars")
         .collect()

@@ -246,54 +246,3 @@ def test_round_half_away_matches_duckdb_round(x, ndigits):
         f"SELECT ROUND(CAST(? AS DOUBLE), {ndigits})", [x]
     ).fetchone()[0]
     assert got == expected
-
-
-def _py_morton(coords: list[int], bits: int) -> int:
-    """Reference Morton code: bit b of dim d lands at b*D + d."""
-    z = 0
-    for d, g in enumerate(coords):
-        for b in range(bits):
-            z |= ((g >> b) & 1) << (b * len(coords) + d)
-    return z
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    pairs=st.lists(
-        st.tuples(st.integers(0, 255), st.integers(0, 255)),
-        min_size=1,
-        max_size=40,
-        unique=True,
-    )
-)
-def test_zvalue_matches_reference_and_is_injective(spark, pairs):
-    """plans.zorder.zvalue must equal the reference bit-interleave for
-    ANY grid coordinates (bounds chosen so the normalization is the
-    identity: span == grid), and distinct cells must get distinct
-    codes — the bijectivity that makes disjoint z-ranges disjoint
-    hyper-rectangles."""
-    from pyspark.sql import functions as F
-
-    from duckdb_gsheets_spark.plans.zorder import zvalue
-
-    df = spark.createDataFrame(pairs, "x int, y int")
-    got = [
-        r.z
-        for r in df.select(
-            zvalue(
-                [F.col("x"), F.col("y")],
-                [(0.0, 256.0), (0.0, 256.0)],
-                bits=8,
-            ).alias("z")
-        ).collect()
-    ]
-    want = [_py_morton([x, y], 8) for x, y in pairs]
-    assert got == want
-    assert len(set(got)) == len(pairs)  # injective on distinct cells
-    # Axis monotonicity at a sample point: bumping one coordinate
-    # (other fixed) strictly increases the code.
-    x0, y0 = pairs[0]
-    if x0 < 255:
-        assert _py_morton([x0 + 1, y0], 8) > _py_morton([x0, y0], 8)
-    if y0 < 255:
-        assert _py_morton([x0, y0 + 1], 8) > _py_morton([x0, y0], 8)
