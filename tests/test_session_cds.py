@@ -1,7 +1,8 @@
-"""``plans.session._cds_java_options``: when the driver JVM starts from
-a class-data-sharing archive, when it records one, and how a recording
-becomes the archive. A stub ``$JAVA_HOME/bin/java`` stands in for the
-JVM that checks a recording, so no JVM starts here."""
+"""``plans.session._driver_java_options``: when the driver JVM starts
+from a class-data-sharing archive, when it records one, how a recording
+becomes the archive, and when it gets the heap policy. A stub
+``$JAVA_HOME/bin/java`` stands in for the JVM that checks a recording,
+so no JVM starts here."""
 
 import os
 import stat
@@ -40,7 +41,10 @@ def cds(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_HOME", str(spark_home))
     monkeypatch.setenv("JAVA_HOME", str(tmp_path / "jdk"))
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
-    for name in session._LAUNCHER_ENV + ("PYSPARK_GATEWAY_PORT",):
+    for name in (
+        session._LAUNCHER_ENV + session._JAVA_OPTIONS_ENV
+        + ("PYSPARK_GATEWAY_PORT", "SPARK_GRAFT_DRIVER_MEM")
+    ):
         monkeypatch.delenv(name, raising=False)
     monkeypatch.setattr(SparkContext, "_gateway", None)
 
@@ -54,9 +58,13 @@ def cds(tmp_path, monkeypatch):
             (tmp_path / "java_rc").write_text(str(rc))
 
         @staticmethod
-        def options() -> str | None:
+        def options(conf: dict[str, str] | None = None) -> str | None:
+            """The options for a session with ``conf`` and, unless that
+            says otherwise, a 16 GB driver heap."""
             monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
-            return session._cds_java_options({})
+            return session._driver_java_options(
+                {"spark.driver.memory": "16g", **(conf or {})}
+            )
 
         @staticmethod
         def archive() -> str:
@@ -79,7 +87,9 @@ def _dead_pid() -> int:
 
 def test_templates_only_conf_dir_gives_options_and_an_empty_conf_dir(cds):
     options = cds.options()
-    assert options.endswith(" -Xlog:cds*=off")
+    assert options.split()[1:] == [
+        "-Xlog:cds*=off", "-XX:+UseParallelGC", "-Xmn512m"
+    ]
     assert os.environ["SPARK_CONF_DIR"] == str(cds.cache / "conf")
     assert os.listdir(os.environ["SPARK_CONF_DIR"]) == []
 
@@ -92,7 +102,7 @@ def test_a_non_template_conf_file_skips_cds(cds):
 
 def test_a_preset_spark_conf_dir_is_left_alone(cds, monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
-    assert session._cds_java_options({}) is None
+    assert session._driver_java_options({}) is None
     assert os.environ["SPARK_CONF_DIR"] == str(tmp_path)
 
 
@@ -101,13 +111,15 @@ def test_a_preset_spark_conf_dir_is_left_alone(cds, monkeypatch, tmp_path):
     ("spark.driver.extraClassPath", "lib/classes"),
 ])
 def test_user_driver_options_win(cds, key, value):
-    assert session._cds_java_options({key: value}) is None
+    """Neither CDS nor the heap policy: the user's options are left as
+    they are."""
+    assert session._driver_java_options({key: value, "spark.driver.memory": "16g"}) is None
     assert "SPARK_CONF_DIR" not in os.environ
 
 
 def test_a_running_driver_jvm_skips_cds(cds, monkeypatch):
     monkeypatch.setattr(SparkContext, "_gateway", object())
-    assert session._cds_java_options({}) is None
+    assert session._driver_java_options({}) is None
     assert "SPARK_CONF_DIR" not in os.environ
 
 
@@ -205,9 +217,50 @@ def test_a_jvm_that_cannot_start_from_the_archive_starts_without_it(
         return "session"
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
     assert session.get_spark(master="local[1]") == "session"
     assert launches == [
-        (f"-XX:SharedArchiveFile={archive} -Xlog:cds*=off", str(cds.cache / "conf")),
+        (f"-XX:SharedArchiveFile={archive} -Xlog:cds*=off -XX:+UseParallelGC -Xmn256m",
+         str(cds.cache / "conf")),
         ("", None),
     ]
     assert not os.path.exists(archive)
+
+
+HEAP = ["-XX:+UseParallelGC", "-Xmn512m"]
+
+
+def test_the_heap_policy_comes_with_an_archive_and_with_a_recording(cds):
+    assert cds.options().split()[0].startswith("-XX:ArchiveClassesAtExit=")
+    assert cds.options().split()[2:] == HEAP
+    open(cds.archive(), "wb").close()
+    assert cds.options().split()[0].startswith("-XX:SharedArchiveFile=")
+    assert cds.options().split()[2:] == HEAP
+
+
+def test_a_cache_path_the_options_cannot_carry_skips_only_cds(
+    cds, monkeypatch, tmp_path
+):
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "my cache"))
+    assert cds.options().split() == HEAP
+    assert "SPARK_CONF_DIR" not in os.environ
+
+
+@pytest.mark.parametrize("memory, young", [
+    ("16g", "512m"), ("2g", "512m"), ("1g", "256m"), ("1536m", "384m"),
+    ("1073741824", "256m"),
+])
+def test_the_young_generation_is_at_most_a_quarter_of_the_heap(cds, memory, young):
+    assert cds.options({"spark.driver.memory": memory}).split()[-1] == f"-Xmn{young}"
+
+
+@pytest.mark.parametrize("env", [None, *session._JAVA_OPTIONS_ENV])
+def test_a_collector_the_user_selects_is_not_doubled(cds, monkeypatch, env):
+    """The JVM refuses two collectors, and a JVM that fails to start
+    would cost the archive: the user's choice stands alone."""
+    if env is None:
+        options = cds.options({"spark.driver.extraJavaOptions": "-Dx=1 -XX:+UseG1GC"})
+    else:
+        monkeypatch.setenv(env, "-XX:+UseZGC -Dx=1")
+        options = cds.options()
+    assert options.split()[2:] == ["-Xmn512m"]
