@@ -554,10 +554,7 @@ def _bloom_shard_of(gram: Column) -> Column:
 
 
 def bloom_artifact_sharded(
-    spark,
-    sf_dir: str,
-    bench_grams: DataFrame | None = None,
-    bits_per_item: int = BLOOM_BITS_PER_ITEM,
+    bench_grams: DataFrame,
 ) -> dict[int, tuple[int, list[int]]]:
     """Fit the PARTITIONED decontamination filter: ``{shard: (m_s,
     words_s)}`` where each shard's filter is sized from ITS gram
@@ -574,16 +571,12 @@ def bloom_artifact_sharded(
     packing all run driver-side over those bounded rows (round 12
     fused the former per-shard count job + bit distinct shuffle into
     this pass)."""
-    if bench_grams is None:
-        bench, _ = _contam_gram_frames(spark, sf_dir)
-        # single consumer below — no checkpoint needed on this path
-        bench_grams = bench.select("gram").distinct()
     # LIMIT-bounded like bloom_artifact's fit: the sharded budget is
     # BLOOM_SHARDS × the single-mask item cap, and any suite past it
     # gets the friendly error before the driver holds more than one
     # row over that bound (per-shard skew past BLOOM_MAX_M is still
     # caught by the per-shard sizing check below).
-    max_items = BLOOM_SHARDS * (BLOOM_MAX_M // bits_per_item)
+    max_items = BLOOM_SHARDS * (BLOOM_MAX_M // BLOOM_BITS_PER_ITEM)
     hash_rows = (
         bench_grams.select(
             _bloom_shard_of(F.col("gram")).alias("shard"),
@@ -599,14 +592,15 @@ def bloom_artifact_sharded(
         raise ValueError(
             f"sharded bloom: suite exceeds {max_items} distinct grams "
             f"(BLOOM_SHARDS {BLOOM_SHARDS} × BLOOM_MAX_M {BLOOM_MAX_M} "
-            f"at {bits_per_item} bits/item) — raise BLOOM_SHARDS for a "
-            "suite this large"
+            f"at {BLOOM_BITS_PER_ITEM} bits/item) — raise BLOOM_SHARDS "
+            "for a suite this large"
         )
     counts: dict[int, int] = {}
     for r in hash_rows:
         counts[int(r.shard)] = counts.get(int(r.shard), 0) + 1
     ms = {
-        s: max(BLOOM_MIN_M, bits_per_item * n) for s, n in counts.items()
+        s: max(BLOOM_MIN_M, BLOOM_BITS_PER_ITEM * n)
+        for s, n in counts.items()
     }
     for s, m in ms.items():
         if m > BLOOM_MAX_M:
@@ -629,73 +623,8 @@ def bloom_artifact_sharded(
     return {s: (ms[s], words[s]) for s in ms}
 
 
-def _bloom_artifact_fingerprint(bits_per_item: int) -> str:
-    """Seeded fingerprint of the sharded-filter CONFIGURATION: every
-    constant that parameterizes the trained artifact (hash count,
-    bits/element, shard count, word packing, floor size). A persisted
-    artifact stamped with this fingerprint can only be loaded by a
-    consumer whose probe-side constants match — loading a filter
-    built under different constants would silently probe the wrong
-    bits (false NEGATIVES, the one failure a Bloom screen must never
-    have)."""
-    import hashlib
-
-    tag = (
-        f"bloom-sharded-v1|k={BLOOM_K}|bpi={bits_per_item}"
-        f"|shards={BLOOM_SHARDS}|word_bits={BLOOM_WORD_BITS}"
-        f"|min_m={BLOOM_MIN_M}"
-    )
-    return hashlib.md5(tag.encode()).hexdigest()
-
-
-def write_bloom_artifact_sharded(
-    spark,
-    sf_dir: str,
-    artifact_dir: str,
-    bench_grams: DataFrame | None = None,
-    bits_per_item: int = BLOOM_BITS_PER_ITEM,
-) -> str:
-    """Fit the partitioned decontamination filter and PERSIST it as a
-    parquet artifact — ``(fingerprint, shard, m, words)`` rows, one
-    per shard — the trained-index pattern the ANN family uses: fit
-    once after the benchmark suite changes, then every audit session
-    LOADS instead of refitting. Returns
-    ``artifact_dir``."""
-    shards = bloom_artifact_sharded(
-        spark, sf_dir, bench_grams=bench_grams, bits_per_item=bits_per_item
-    )
-    fp = _bloom_artifact_fingerprint(bits_per_item)
-    rows = [(fp, s, m, w) for s, (m, w) in sorted(shards.items())]
-    spark.createDataFrame(
-        rows, "fingerprint string, shard long, m long, words array<long>"
-    ).coalesce(1).write.mode("overwrite").parquet(artifact_dir)
-    return artifact_dir
-
-
-def load_bloom_artifact_sharded(
-    spark,
-    artifact_dir: str,
-    bits_per_item: int = BLOOM_BITS_PER_ITEM,
-) -> dict[int, tuple[int, list[int]]]:
-    """Load a persisted ``{shard: (m, words)}`` filter, refusing an
-    artifact whose configuration fingerprint does not match this
-    build's constants (see :func:`_bloom_artifact_fingerprint`)."""
-    rows = spark.read.parquet(artifact_dir).collect()
-    fp = _bloom_artifact_fingerprint(bits_per_item)
-    stamped = {r.fingerprint for r in rows}
-    if stamped != {fp}:
-        raise ValueError(
-            f"sharded bloom artifact at {artifact_dir!r} was built under "
-            f"different filter constants (stamped {sorted(stamped)!r}, "
-            f"expected {fp!r}) — refit with write_bloom_artifact_sharded"
-        )
-    return {int(r.shard): (int(r.m), list(r.words)) for r in rows}
-
-
 def contamination_bloom_sharded(
-    spark: SparkSession,
-    sf_dir: str,
-    shards: dict[int, tuple[int, list[int]]] | None = None,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """PARTITIONED Bloom decontamination screen — the documented
     scale path past one filter's broadcast budget, as a running
@@ -713,21 +642,15 @@ def contamination_bloom_sharded(
     only probed shards, the property the one-row literal cannot
     give). Everything after the join is the same pure-JVM word-probe
     and per-source rollup as :func:`contamination_bloom`; the exact
-    side and the report tail are shared code.
-
-    ``shards`` accepts a PRELOADED ``{shard: (m, words)}`` filter
-    (:func:`load_bloom_artifact_sharded`) so a session probing an
-    unchanged benchmark suite skips the refit entirely; the default
-    fits in-session — the driver-contract standalone path.
+    side and the report tail are shared code. The filter is fit in
+    the same session, from the checkpointed benchmark grams the exact
+    side also reads.
     """
     bench, corpus = _contam_gram_frames(spark, sf_dir)
     bench_grams = (
         bench.select("gram").distinct().localCheckpoint(eager=True)
     )
-    if shards is None:
-        shards = bloom_artifact_sharded(
-            spark, sf_dir, bench_grams=bench_grams
-        )
+    shards = bloom_artifact_sharded(bench_grams)
     shard_df = spark.createDataFrame(
         [(s, m, w) for s, (m, w) in sorted(shards.items())],
         "shard long, m long, bloom_words array<long>",

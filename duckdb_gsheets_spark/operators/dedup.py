@@ -3294,16 +3294,16 @@ def dedup_longest_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Session-scoped memo for the suffix-sort spine + tied-rows
-#: extension table shared by the LRS report, the scrub manifest, the
-#: and the composed scrub pipeline — keyed like
-#: similarity's exact-baseline memo: (applicationId, sf_dir, source
-#: mtime), so a new session, another scale factor, or a rewritten
-#: documents table never sees stale checkpoint blocks. The suffix
-#: array is a persisted index artifact in the ExactSubstr pipeline;
-#: building it once per (session, corpus) is the point. BOUNDED:
-#: inserting a key evicts every other entry for the same sf_dir
-#: (keep-latest-per-sf_dir) — a long-lived session sweeping rewritten
-#: corpora must not pin every prior corpus's checkpoint blocks.
+#: extension table shared by the LRS report, the scrub manifest and
+#: the composed scrub pipeline — keyed like similarity's
+#: exact-baseline memo: (applicationId, sf_dir, source mtime), so a
+#: new session, another scale factor, or a rewritten documents table
+#: never sees stale checkpoint blocks. The spine is the ExactSubstr
+#: family's shared index; building it once per (session, corpus) is
+#: the point. BOUNDED: inserting a key evicts every other entry for
+#: the same sf_dir (keep-latest-per-sf_dir) — a long-lived session
+#: sweeping rewritten corpora must not pin every prior corpus's
+#: checkpoint blocks.
 #: bench.py clears this (clear_plan_caches) before every timed run so
 #: measurements stay cold-plan honest.
 _LRS_SPINE_CACHE: dict = {}
@@ -3341,15 +3341,15 @@ def _lrs_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         toks = _lrs_toks(docs).localCheckpoint(eager=True)
         ranged = _lrs_suffix_from_toks(toks)
         cached = (ranged, _lrs_ext_from_toks(ranged, toks))
-        _lrs_cache_put(key, cached)
+        for stale in [k for k in _LRS_SPINE_CACHE if k[1] == sf_dir]:
+            del _LRS_SPINE_CACHE[stale]
+        _LRS_SPINE_CACHE[key] = cached
     return cached
 
 
 def _lrs_cache_key(spark: SparkSession, sf_dir: str):
-    """Memo key for the spine artifacts: (session, corpus path,
-    corpus mtime) — shared by the in-session builder and the
-    persisted-artifact loader (plans.exactsubstr_spine) so a prebuilt
-    spine registers under exactly the key the family looks up."""
+    """Memo key for the spine tables: (session, corpus path, corpus
+    mtime), so a new session or a rewritten corpus builds afresh."""
     import os
 
     try:
@@ -3357,15 +3357,6 @@ def _lrs_cache_key(spark: SparkSession, sf_dir: str):
     except OSError:
         mtime = -1.0
     return (spark.sparkContext.applicationId, sf_dir, mtime)
-
-
-def _lrs_cache_put(key, tables) -> None:
-    """Install spine tables under ``key``, evicting stale entries for
-    the same corpus path (a rewritten corpus must never serve a spine
-    built from its previous contents)."""
-    for stale in [k for k in _LRS_SPINE_CACHE if k[1] == key[1]]:
-        del _LRS_SPINE_CACHE[stale]
-    _LRS_SPINE_CACHE[key] = tables
 
 
 def _lrs_toks(docs: DataFrame) -> DataFrame:

@@ -888,8 +888,7 @@ def _phash_close_sig_pairs(sigs: DataFrame) -> DataFrame:
 
 def _phash_pairs(sigs: DataFrame) -> DataFrame:
     """Doc-level near-dup pairs over a signature frame — the
-    registered query's body, parameterized so the persisted signature
-    index (plans.phash_index) can feed it directly."""
+    registered query's body."""
     within = (
         sigs.alias("a")
         .join(
@@ -1009,22 +1008,16 @@ def _phash_cluster_labels(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "format", "n_bytes", "comp")
 
 
-def multimodal_phash_clusters(
-    spark: SparkSession, sf_dir: str, sigs: DataFrame | None = None
-) -> DataFrame:
+def multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive perceptual near-dup CLUSTERS over the media
     payloads — the pair query emits edges; real media dedup collapses
     A≈B≈C into one component even when A and C never band-collide.
     Output: every signature-bearing payload with its cluster id
     (= min doc_id in the component), the cluster size, and the
-    structural-representative flag. ``sigs`` lets a production
-    session ride the persisted signature index
-    (plans.phash_index.load_phash_index) instead of rebuilding.
-    Payloads under PHASH_MIN_BYTES have no signature and are absent
-    by design — byte-identical dedup still covers them."""
-    if sigs is None:
-        sigs = phash_signatures(spark, sf_dir)
-    labels = _phash_cluster_labels(sigs)
+    structural-representative flag. Payloads under PHASH_MIN_BYTES
+    have no signature and are absent by design — byte-identical dedup
+    still covers them."""
+    labels = _phash_cluster_labels(phash_signatures(spark, sf_dir))
     sizes = labels.groupBy("comp").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -1037,9 +1030,7 @@ def multimodal_phash_clusters(
     )
 
 
-def multimodal_phash_survivor(
-    spark: SparkSession, sf_dir: str, sigs: DataFrame | None = None
-) -> DataFrame:
+def multimodal_phash_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best-copy ELECTION over the perceptual clusters — the media
     twin of dedup_quality_survivor: within each transitive component,
     keep the copy with the MOST payload bytes (the decode-free
@@ -1053,13 +1044,10 @@ def multimodal_phash_survivor(
     Shapes, sized for 100 TB: the component window partitions on the
     cluster label (groups are duplicate-multiplicity-sized) and the
     rollup is |formats| rows; everything else is the cluster
-    labeling's collapsed graph. Rides the persisted signature index
-    via ``sigs`` like the cluster query."""
-    if sigs is None:
-        sigs = phash_signatures(spark, sf_dir)
+    labeling's collapsed graph."""
     from pyspark.sql import Window
 
-    labels = _phash_cluster_labels(sigs)
+    labels = _phash_cluster_labels(phash_signatures(spark, sf_dir))
     w = Window.partitionBy("comp").orderBy(F.desc("n_bytes"), "doc_id")
     ranked = labels.withColumn("rk", F.row_number().over(w))
     return (

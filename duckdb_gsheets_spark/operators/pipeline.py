@@ -1325,8 +1325,8 @@ def _classifier_feature_counts(docs: DataFrame) -> DataFrame:
 
 
 def _classifier_fit(
-    spark: SparkSession, docs: DataFrame, fc: DataFrame | None = None
-) -> tuple[dict[int, int], int]:
+    spark: SparkSession, docs: DataFrame, fc: DataFrame
+) -> dict[int, int]:
     """Fit the hashed-feature logistic probe on the class-balanced
     training slice: ``CLS_GATE_ITERS`` full-batch GD steps, each one
     pass over the checkpointed feature frame — per iteration the
@@ -1341,14 +1341,14 @@ def _classifier_fit(
     snap to grids in-plan, and the driver applies the update with the
     oracle's exact float expression (``LR·g/N·1000`` left to right,
     half-away rounding), so the trajectory replays bit-identically in
-    the unrolled-CTE oracle. Returns ``(weights, n_train)``."""
+    the unrolled-CTE oracle. ``fc`` is the gate's feature-count frame
+    (:func:`_classifier_feature_counts` of ``docs``). Returns the
+    ``{bucket: weight}`` dict."""
     import math
 
     from duckdb_gsheets_spark.operators.curation import DSIR_BUCKETS
     from duckdb_gsheets_spark.operators.determinism import round_half_away
 
-    if fc is None:
-        fc = _classifier_feature_counts(docs)
     train = _classifier_training_set(docs).select(
         "doc_id", F.col("is_pos").cast("long").alias("y")
     )
@@ -1438,12 +1438,10 @@ def _classifier_fit(
                 )
             )
             w[int(row.bucket)] = w.get(int(row.bucket), 0) - delta
-    return w, n_train
+    return w
 
 
-def pipeline_classifier_gate(
-    spark: SparkSession, sf_dir: str, weights: dict[int, int] | None = None
-) -> DataFrame:
+def pipeline_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUALITY-CLASSIFIER GATE — the second half of the GPT-3/CCNet
     recipe that :func:`pipeline_classifier_corpus` builds the
     training set for: fit the hashed-feature logistic probe on the
@@ -1462,19 +1460,14 @@ def pipeline_classifier_gate(
     table plus map-side-combined rollups; driver state is kilobytes
     per iteration (the logreg parameter-server shape). No
     corpus-sized shuffle other than the (doc_id) count rollup the
-    feature build pays once. ``weights`` lets a production session
-    pass the PERSISTED probe (plans.classifier_probe) and skip the
-    fit entirely — the gate then costs one scoring scan."""
+    feature build pays once."""
     from duckdb_gsheets_spark.operators.curation import _doc_tokens
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
     fc = _classifier_feature_counts(docs)
-    if weights is None:
-        w, _n = _classifier_fit(spark, docs, fc=fc)
-    else:
-        w = weights
+    w = _classifier_fit(spark, docs, fc)
     w_df = spark.createDataFrame(
         [(int(b), int(ws)) for b, ws in sorted(w.items())],
         "bucket long, ws long",

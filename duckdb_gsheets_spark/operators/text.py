@@ -1503,9 +1503,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     round rescans only the vocab table; the apply side collapses the
     corpus to DISTINCT (lang, word) counts first — merges then run
     as 3 literal replaces over the bounded vocab-per-lang table, not
-    per token occurrence. In production the merge table is a
-    persisted artifact (the spine/Bloom pattern) and the learn phase
-    drops out entirely.
+    per token occurrence.
     """
     merges = _bpe_learn(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")

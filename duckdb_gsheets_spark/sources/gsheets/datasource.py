@@ -59,7 +59,10 @@ from duckdb_gsheets_spark.sources.gsheets.auth import (
     redact_options,
 )
 from duckdb_gsheets_spark.sources.gsheets.client import BASE_URL, GSheetsClient
-from duckdb_gsheets_spark.sources.gsheets.errors import SheetsError
+from duckdb_gsheets_spark.sources.gsheets.errors import (
+    SheetNotFoundError,
+    SheetsError,
+)
 from duckdb_gsheets_spark.sources.gsheets.inference import (
     SheetSchema,
     cast_rows,
@@ -127,7 +130,8 @@ def _resolve_target(
     when it also reads as a cell or column (``out``, ``Q1``); default
     sheet is index 0. A named sheet costs one metadata GET to validate;
     ``create_missing`` (the writer's ``create_if_not_exists``) adds it
-    instead of failing.
+    when that GET shows it missing. Any other failure of the GET (an
+    HTTP error, malformed metadata) propagates as is.
     """
     url = options.get("path") or options.get("url") or ""
     spreadsheet_id = extract_spreadsheet_id(url)
@@ -155,7 +159,7 @@ def _resolve_target(
         # Validate existence like the reference (SheetNotFoundException).
         try:
             spreadsheet.sheet_by_name(sheet_name)
-        except SheetsError:
+        except SheetNotFoundError:
             if not create_missing:
                 raise
             spreadsheet.create_sheet(sheet_name)

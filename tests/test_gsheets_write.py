@@ -168,6 +168,30 @@ def test_create_if_not_exists_requires_sheet(spark, sheets_server, spreadsheets_
         )
 
 
+def test_create_if_not_exists_keeps_metadata_error():
+    """``create_if_not_exists`` adds a sheet only when the metadata GET
+    shows it missing: a 503 on that GET surfaces as the 503, with no
+    ``addSheet`` POST that would fail with 400 "already exists"."""
+    from duckdb_gsheets_spark.sources.gsheets.auth import BearerTokenAuth
+    from duckdb_gsheets_spark.sources.gsheets.client import GSheetsClient
+    from duckdb_gsheets_spark.sources.gsheets.datasource import (
+        _resolve_target,
+    )
+    from duckdb_gsheets_spark.sources.gsheets.errors import SheetsApiError
+    from duckdb_gsheets_spark.sources.gsheets.transport import MockTransport
+
+    transport = MockTransport()
+    transport.add_response(503, '{"error": {"status": "UNAVAILABLE"}}')
+    transport.add_response(400, '{"error": {"message": "already exists"}}')
+    client = GSheetsClient(transport, BearerTokenAuth("tok"))
+    with pytest.raises(SheetsApiError) as exc:
+        _resolve_target(
+            {"path": "abc", "sheet": "Fresh"}, client, create_missing=True
+        )
+    assert exc.value.status == 503
+    assert len(transport.requests) == 1
+
+
 def test_missing_sheet_without_create_raises(spark, sheets_server, spreadsheets_df):
     sid, _ = _fresh(sheets_server, "write-missing-sheet")
     with pytest.raises(Exception, match="[Nn]ot found"):

@@ -7423,43 +7423,6 @@ def test_bloom_word_packed_mask_past_2e24_bits(spark):
     assert sum(r.hit for r in flagged if not r.planted) <= 2
 
 
-def test_bloom_sharded_artifact_load_equals_fit(spark, tmp_path):
-    """Persisted sharded-Bloom artifact (write → parquet → load): the
-    audit run from the LOADED filter must be row-identical to the
-    in-session fit (same shard sizes, same words, hence the same
-    verdicts), and a loader whose filter constants disagree with the
-    artifact's stamped fingerprint must refuse loudly rather than
-    probe the wrong bits."""
-    import pytest
-
-    from duckdb_gsheets_spark.operators.chunking import (
-        contamination_bloom_sharded,
-        load_bloom_artifact_sharded,
-        write_bloom_artifact_sharded,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    art = str(tmp_path / "bloom_shards")
-    write_bloom_artifact_sharded(spark, sf, art)
-    loaded = load_bloom_artifact_sharded(spark, art)
-
-    fit_rows = sorted(
-        map(tuple, contamination_bloom_sharded(spark, sf).collect())
-    )
-    load_rows = sorted(
-        map(
-            tuple,
-            contamination_bloom_sharded(spark, sf, shards=loaded).collect(),
-        )
-    )
-    assert load_rows == fit_rows
-
-    # config drift → loud refusal (a silently-wrong filter would mean
-    # false negatives, the one failure a Bloom screen must never have)
-    with pytest.raises(ValueError, match="different filter constants"):
-        load_bloom_artifact_sharded(spark, art, bits_per_item=16)
-
-
 def test_source_flow_matrix_planted_and_invariants(spark, tmp_path):
     """dedup_source_flow_matrix on a PLANTED two-source corpus: a text
     duplicated within src_x and across into src_y must produce an
@@ -7799,15 +7762,18 @@ def test_doremi_weights_invariants(spark):
     assert math.exp(DOREMI_EXCESS_CAP_MICRO / 1e6) * 1e9 * 1e6 < 2**63
 
 
-def test_bloom_fit_oversized_suite_refuses_before_collect(spark):
+def test_bloom_fit_oversized_suite_refuses_before_collect(
+    spark, monkeypatch
+):
     """The Bloom fits' one-action collect is LIMIT-bounded: a suite
     past the mask budget raises the friendly sizing ValueError after
     holding at most max_items+1 rows on the driver (an unbounded
     collect of an oversized benchmark would OOM before the old
-    post-collect guard ran). bits_per_item=BLOOM_MAX_M admits exactly
+    post-collect guard ran). BLOOM_MAX_M bits per item admits exactly
     1 gram (4 sharded), so 8 grams must refuse."""
     import pytest
 
+    from duckdb_gsheets_spark.operators import chunking
     from duckdb_gsheets_spark.operators.chunking import (
         BLOOM_MAX_M,
         bloom_artifact,
@@ -7821,10 +7787,10 @@ def test_bloom_fit_oversized_suite_refuses_before_collect(spark):
         bloom_artifact(
             spark, SF, bench_grams=grams, bits_per_item=BLOOM_MAX_M
         )
+    # The sharded fit sizes at the module's BLOOM_BITS_PER_ITEM.
+    monkeypatch.setattr(chunking, "BLOOM_BITS_PER_ITEM", BLOOM_MAX_M)
     with pytest.raises(ValueError, match="raise BLOOM_SHARDS"):
-        bloom_artifact_sharded(
-            spark, SF, bench_grams=grams, bits_per_item=BLOOM_MAX_M
-        )
+        bloom_artifact_sharded(grams)
 
 
 def test_classifier_gate_ledger_invariants(spark):

@@ -1226,332 +1226,3 @@ def test_dsir_gate_tiles_the_global_rank(spark):
     # the final plan reads the materialized tile (pid column present),
     # not a re-sort — same contract the ccnet pin checks.
     assert "Scan ExistingRDD" in physical and "pid#" in physical
-
-
-def test_plans_md_covers_every_registered_query():
-    """PLANS.md (the physical-plan self-audit) must have a row for
-    EVERY registered query — a registry addition without a
-    plan_report.py regeneration fails here, so the audit artifact can
-    never silently lag the code (round-9 verdict: PLANS.md missed
-    pipeline_exactsubstr_corpus and two changed plans)."""
-    import os
-    import re
-
-    from duckdb_gsheets_spark.operators import all_queries
-
-    plans_path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    with open(plans_path) as fh:
-        text = fh.read()
-    listed = set(re.findall(r"^\| (\S+) \|", text, flags=re.MULTILINE))
-    listed.discard("query")  # header row
-    registered = set(all_queries())
-    missing = sorted(registered - listed)
-    assert not missing, (
-        f"PLANS.md is stale — {len(missing)} registered queries have no "
-        f"row (run `python tools/plan_report.py`): {missing[:10]}"
-    )
-
-
-def test_lrs_spine_artifact_reuse_identical_and_no_rebuild(spark, tmp_path):
-    """The persisted ExactSubstr spine (plans.exactsubstr_spine) must
-    (a) register under the family's own memo key so a later "session"
-    (memo cleared) consumes the artifact instead of re-running the
-    distributed suffix sort — pinned by asserting the registered
-    frames read ONLY artifact parquet files — and (b) produce
-    bit-identical family results to the in-session build."""
-    from duckdb_gsheets_spark.operators import dedup as D
-    from duckdb_gsheets_spark.plans.exactsubstr_spine import (
-        register_lrs_spine,
-        write_lrs_spine,
-    )
-
-    art = str(tmp_path / "lrs_artifacts")
-    fresh = sorted(
-        map(tuple, D.dedup_longest_substring(spark, SF).collect())
-    )
-    fresh_scrub = sorted(
-        map(tuple, D.dedup_substring_scrub(spark, SF).collect())
-    )
-    spine_path, ext_path = write_lrs_spine(spark, SF, art)
-
-    # simulate a fresh session: drop the in-session memo, register
-    # the artifact, and verify the family now roots on the parquet
-    D._LRS_SPINE_CACHE.clear()
-    register_lrs_spine(spark, SF, art)
-    ranged, ext = D._lrs_tables(spark, SF)
-    assert ranged.inputFiles() and all(
-        spine_path in f for f in ranged.inputFiles()
-    )
-    assert ext.inputFiles() and all(
-        ext_path in f for f in ext.inputFiles()
-    )
-
-    reused = sorted(
-        map(tuple, D.dedup_longest_substring(spark, SF).collect())
-    )
-    reused_scrub = sorted(
-        map(tuple, D.dedup_substring_scrub(spark, SF).collect())
-    )
-    assert reused == fresh
-    assert reused_scrub == fresh_scrub
-    # leave no prebuilt spine behind for other tests
-    D._LRS_SPINE_CACHE.clear()
-
-
-def test_production_session_recipe(spark, tmp_path):
-    """The README's 'production session' path, end to end: write the
-    persisted index artifacts once (LRS spine + sharded Bloom +
-    perceptual-signature index + classifier probe), then simulate a
-    fresh session (memos cleared), register/load everything, and run
-    the ExactSubstr, contamination, perceptual-dedup, and
-    quality-gate families — with inputFiles proving the spine and
-    signature frames read ONLY artifact parquet, and every
-    loaded-artifact screen matching the in-session fit row for
-    row."""
-    from duckdb_gsheets_spark.operators import dedup as D
-    from duckdb_gsheets_spark.operators.chunking import (
-        contamination_bloom_sharded,
-        load_bloom_artifact_sharded,
-        write_bloom_artifact_sharded,
-    )
-    from duckdb_gsheets_spark.operators.multimodal import (
-        multimodal_phash_clusters,
-        multimodal_phash_survivor,
-    )
-    from duckdb_gsheets_spark.operators.pipeline import (
-        pipeline_classifier_gate,
-    )
-    from duckdb_gsheets_spark.plans import classifier_probe as CP
-    from duckdb_gsheets_spark.plans import phash_index as PI
-    from duckdb_gsheets_spark.plans.exactsubstr_spine import (
-        register_lrs_spine,
-        write_lrs_spine,
-    )
-
-    # -- ingest time: write all four trained artifacts --
-    spine_dir = str(tmp_path / "spine")
-    bloom_dir = str(tmp_path / "bloom")
-    phash_dir = str(tmp_path / "phash")
-    probe_dir = str(tmp_path / "probe")
-    spine_path, ext_path = write_lrs_spine(spark, SF, spine_dir)
-    write_bloom_artifact_sharded(spark, SF, bloom_dir)
-    phash_sigs_path = PI.write_phash_index(spark, SF, phash_dir)
-    CP.write_classifier_probe(spark, SF, probe_dir)
-    fit_rows = sorted(
-        map(tuple, contamination_bloom_sharded(spark, SF).collect())
-    )
-    fresh_lrs = sorted(
-        map(tuple, D.dedup_longest_substring(spark, SF).collect())
-    )
-    fresh_clusters = sorted(
-        map(tuple, multimodal_phash_clusters(spark, SF).collect())
-    )
-    fresh_survivor = sorted(
-        map(tuple, multimodal_phash_survivor(spark, SF).collect())
-    )
-    fresh_gate = sorted(
-        map(tuple, pipeline_classifier_gate(spark, SF).collect())
-    )
-
-    # -- fresh session: clear memos, register/load, query --
-    D._LRS_SPINE_CACHE.clear()
-    register_lrs_spine(spark, SF, spine_dir)
-    shards = load_bloom_artifact_sharded(spark, bloom_dir)
-    phash_sigs = PI.load_phash_index(spark, SF, phash_dir)
-    probe_w = CP.load_classifier_probe(spark, SF, probe_dir)
-    assert (
-        sorted(
-            map(
-                tuple,
-                pipeline_classifier_gate(
-                    spark, SF, weights=probe_w
-                ).collect(),
-            )
-        )
-        == fresh_gate
-    )
-    assert phash_sigs.inputFiles() and all(
-        phash_sigs_path in f for f in phash_sigs.inputFiles()
-    )
-    assert (
-        sorted(
-            map(
-                tuple,
-                multimodal_phash_clusters(
-                    spark, SF, sigs=phash_sigs
-                ).collect(),
-            )
-        )
-        == fresh_clusters
-    )
-    assert (
-        sorted(
-            map(
-                tuple,
-                multimodal_phash_survivor(
-                    spark, SF, sigs=phash_sigs
-                ).collect(),
-            )
-        )
-        == fresh_survivor
-    )
-
-    ranged, ext = D._lrs_tables(spark, SF)
-    assert ranged.inputFiles() and all(
-        spine_path in f for f in ranged.inputFiles()
-    )
-    assert ext.inputFiles() and all(ext_path in f for f in ext.inputFiles())
-    assert (
-        sorted(map(tuple, D.dedup_longest_substring(spark, SF).collect()))
-        == fresh_lrs
-    )
-    loaded_rows = sorted(
-        map(
-            tuple,
-            contamination_bloom_sharded(spark, SF, shards=shards).collect(),
-        )
-    )
-    assert loaded_rows == fit_rows
-    D._LRS_SPINE_CACHE.clear()
-
-
-def test_phash_index_artifact_roundtrip_and_refusals(spark, tmp_path):
-    """Persisted perceptual-signature index: load equals the
-    in-session build row for row, reading only artifact parquet; and
-    both staleness guards refuse loudly — a tampered config
-    fingerprint and a corpus rewritten after the write."""
-    import os
-
-    import pytest
-
-    from duckdb_gsheets_spark.operators.multimodal import phash_signatures
-    from duckdb_gsheets_spark.plans import phash_index as PI
-
-    art = str(tmp_path / "phash_art")
-    sigs_path = PI.write_phash_index(spark, SF, art)
-    loaded = PI.load_phash_index(spark, SF, art)
-    assert loaded.inputFiles() and all(
-        sigs_path in f for f in loaded.inputFiles()
-    )
-    assert sorted(map(tuple, loaded.collect())) == sorted(
-        map(tuple, phash_signatures(spark, SF).collect())
-    )
-
-    # corpus rewritten after the write → refuse (simulated by
-    # perturbing the stamped mtime; testdata is read-only)
-    meta_path = os.path.join(art, PI._META_SUBDIR)
-    meta = spark.read.parquet(meta_path).collect()
-    spark.createDataFrame(
-        [
-            (r.fingerprint, r.corpus_path, float(r.corpus_mtime) - 1.0)
-            for r in meta
-        ],
-        "fingerprint string, corpus_path string, corpus_mtime double",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    with pytest.raises(ValueError, match="rebuild with write_phash_index"):
-        PI.load_phash_index(spark, SF, art)
-
-    # config drift → refuse
-    spark.createDataFrame(
-        [
-            ("0" * 32, r.corpus_path, float(r.corpus_mtime))
-            for r in meta
-        ],
-        "fingerprint string, corpus_path string, corpus_mtime double",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    with pytest.raises(ValueError, match="rebuild with write_phash_index"):
-        PI.load_phash_index(spark, SF, art)
-
-
-def test_lrs_spine_artifact_stale_corpus_refused(spark, tmp_path):
-    """A spine written BEFORE a corpus rewrite must be REFUSED by
-    register_lrs_spine (the stamped corpus fingerprint disagrees with
-    the live corpus), not silently installed under the current mtime
-    key — the load_bloom_artifact_sharded loud-refusal contract. The
-    rewrite is simulated by perturbing the stamped mtime (testdata is
-    read-only)."""
-    import os
-
-    import pytest
-
-    from duckdb_gsheets_spark.operators import dedup as D
-    from duckdb_gsheets_spark.plans import exactsubstr_spine as S
-
-    art = str(tmp_path / "lrs_art_stale")
-    S.write_lrs_spine(spark, SF, art)
-    meta_path = os.path.join(art, S._META_SUBDIR)
-    rows = spark.read.parquet(meta_path).collect()
-    spark.createDataFrame(
-        [
-            (r.version, r.corpus_path, float(r.corpus_mtime) - 1.0)
-            for r in rows
-        ],
-        "version string, corpus_path string, corpus_mtime double",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    D._LRS_SPINE_CACHE.clear()
-    with pytest.raises(ValueError, match="different corpus state"):
-        S.register_lrs_spine(spark, SF, art)
-    D._LRS_SPINE_CACHE.clear()
-
-
-def test_classifier_probe_artifact_roundtrip_and_refusals(spark, tmp_path):
-    """Persisted classifier probe: the loaded weight dict reproduces
-    the in-session fit exactly (the batch gate fed the artifact
-    matches its fit-fresh run row for row), and both staleness guards
-    refuse loudly — a tampered config fingerprint and a corpus
-    rewritten after the write."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from duckdb_gsheets_spark.operators.pipeline import (
-        _classifier_fit,
-        pipeline_classifier_gate,
-    )
-    from duckdb_gsheets_spark.plans import classifier_probe as CP
-    from duckdb_gsheets_spark.plans.catalog import load_table
-
-    art = str(tmp_path / "probe_art")
-    CP.write_classifier_probe(spark, SF, art)
-    loaded = CP.load_classifier_probe(spark, SF, art)
-    docs = load_table(spark, SF, "documents").where(
-        F.col("text").isNotNull()
-    )
-    fit_w, _n = _classifier_fit(spark, docs)
-    assert loaded == fit_w
-
-    fresh = sorted(map(tuple, pipeline_classifier_gate(spark, SF).collect()))
-    from_art = sorted(
-        map(
-            tuple,
-            pipeline_classifier_gate(spark, SF, weights=loaded).collect(),
-        )
-    )
-    assert from_art == fresh
-
-    # corpus rewritten after the write → refuse (simulated by
-    # perturbing the stamped mtime; testdata is read-only)
-    meta_path = os.path.join(art, CP._META_SUBDIR)
-    meta = spark.read.parquet(meta_path).collect()
-    spark.createDataFrame(
-        [
-            (r.fingerprint, r.corpus_path, float(r.corpus_mtime) - 10.0,
-             int(r.n_train))
-            for r in meta
-        ],
-        "fingerprint string, corpus_path string, corpus_mtime double, "
-        "n_train long",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    with pytest.raises(ValueError, match="does not match this session"):
-        CP.load_classifier_probe(spark, SF, art)
-
-    # tampered config fingerprint → refuse
-    spark.createDataFrame(
-        [("not-the-fingerprint", meta[0].corpus_path,
-          float(meta[0].corpus_mtime), int(meta[0].n_train))],
-        "fingerprint string, corpus_path string, corpus_mtime double, "
-        "n_train long",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    with pytest.raises(ValueError, match="does not match this session"):
-        CP.load_classifier_probe(spark, SF, art)
