@@ -12,7 +12,8 @@ replacement-scan hook, so the parity surface is:
 
 ``read_gsheet`` and ``sheets_sql`` bind in the caller and never use the
 Data Source, so they leave the session's formats alone; only
-:func:`write_gsheet` registers ``gsheets`` itself.
+:func:`write_gsheet` and :func:`write_gsheet_stream` register
+``gsheets`` themselves.
 """
 
 from __future__ import annotations
@@ -378,16 +379,15 @@ def write_gsheet(
 
     The reference appends one ordered stream
     (src/gsheets_copy.cpp:129-181). The sink buffers each partition's
-    stringified rows in its commit message and the driver appends them
-    once, in partition order, at commit time — so row order matches the
-    frame's partition order even with parallel tasks, and task
-    retries/speculative attempts can never double-append.
+    stringified rows in its commit message. Once the job has succeeded,
+    the driver resolves, clears and writes the header, then appends the
+    rows once, in partition order — so row order matches the frame's
+    partition order even with parallel tasks, task retries/speculative
+    attempts can never double-append, and a failed job leaves the sheet
+    untouched.
     """
     register(df.sparkSession)
-    writer = df.write.format("gsheets").mode(mode)
-    for key, value in options.items():
-        writer = writer.option(key, value)
-    writer.save(url_or_id)
+    df.write.format("gsheets").mode(mode).options(**options).save(url_or_id)
 
 
 def write_gsheet_stream(
@@ -399,56 +399,37 @@ def write_gsheet_stream(
     **options,
 ):
     """Streaming sink twin of :func:`write_gsheet`: continuously COPY
-    a streaming DataFrame TO a sheet via ``foreachBatch`` — the shape
-    a live ingest-gate dashboard publishes through (the reference's
-    COPY is batch-only; this is the Spark-native extension of the same
-    sink, one ordered append stream per micro-batch,
-    src/gsheets_copy.cpp:129-181 semantics per batch).
+    a streaming DataFrame TO a sheet through
+    ``writeStream.format("gsheets")`` — the shape a live ingest-gate
+    dashboard publishes through (the reference's COPY is batch-only;
+    this is the Spark-native extension of the same sink, one ordered
+    append stream per micro-batch, src/gsheets_copy.cpp:129-181
+    semantics per batch).
 
-    Batch 0 honors ``mode`` AND the batch writer's full K1 clear
-    matrix (overwrite clears + writes the header once;
-    ``overwrite_range=True`` with a ``range`` option clears ONLY the
-    target range, the ``copy_to_range_flags.test:59-69`` semantics);
-    every later micro-batch appends rows only — both overwrite flags
-    are forced off past batch 0, so a ranged stream never re-clears
-    its own earlier batches — the multi-batch header-once invariant
-    the batch writer already enforces per job, extended across the
-    stream's lifetime. Durability contract: the
-    checkpoint gives foreachBatch at-least-once delivery, and Sheets
-    appends are not idempotent — a batch retried after a sink-side
-    failure can duplicate rows, exactly as re-running the reference's
-    COPY would. Dedup by key belongs in the sheet's consumer or in a
-    pre-sink ``dropDuplicates``.
+    Each micro-batch commits through the batch writer's own commit.
+    Batch 0 honors ``mode`` AND the full K1 clear matrix (overwrite
+    clears + writes the header once; ``overwrite_range=True`` with a
+    ``range`` option clears ONLY the target range, the
+    ``copy_to_range_flags.test:59-69`` semantics); every later
+    micro-batch appends rows only, and a later batch without rows
+    makes no call. The batch id comes from the checkpoint, so a restart
+    on the same checkpoint never clears again. Durability contract:
+    the checkpoint gives at-least-once delivery, and Sheets appends
+    are not idempotent — a batch retried after a sink-side failure can
+    duplicate rows, exactly as re-running the reference's COPY would.
+    Dedup by key belongs in the sheet's consumer or in a pre-sink
+    ``dropDuplicates``.
 
     Runs with an ``availableNow`` trigger (drain-all semantics) and
     blocks until the drain finishes;
     returns the terminated query handle.
     """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Batch 0 always runs, even empty: the overwrite/clear +
-        # header must happen exactly once at stream start, not at the
-        # first batch that happens to carry rows (an empty batch 0
-        # followed by data would otherwise append headerless rows
-        # onto stale sheet content).
-        if batch_df.isEmpty() and batch_id > 0:
-            return
-        batch_mode = mode if batch_id == 0 else "append"
-        batch_opts = dict(options)
-        if batch_id > 0:
-            batch_opts["header"] = False
-            # Clears belong to batch 0 only: a later batch re-running
-            # the K1 clear (whole-sheet OR ranged) would wipe the
-            # rows earlier batches appended.
-            batch_opts["overwrite_sheet"] = False
-            batch_opts["overwrite_range"] = False
-        write_gsheet(batch_df, url_or_id, mode=batch_mode, **batch_opts)
-
+    register(stream_df.sparkSession)
     query = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+        stream_df.writeStream.format("gsheets")
+        .options(**options, mode=mode, checkpointLocation=checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
+        .start(url_or_id)
     )
     if not query.awaitTermination(timeout_s):
         query.stop()

@@ -22,18 +22,19 @@ shares that bind and that table:
   USING gsheets`` bind in Spark's planning worker; :class:`GSheetsReader`
   serves the table as one partition per Arrow record batch;
 * ``spark.readStream.format("gsheets")`` refetches the range with one
-  values.get per micro-batch in :class:`GSheetsStreamReader` and casts
-  the new rows with the schema fixed at stream start.
+  values.get per micro-batch in :class:`GSheetsStreamReader`, casts
+  the new rows with the schema fixed at stream start and hands them to
+  Spark as Arrow record batches.
 
 Every surface speaks only the Sheets v4 API (plus the OAuth token
 endpoint), like the reference.
 
-Write lifecycle (parity with gsheets_copy.cpp): driver-side setup
-(resolve sheet > gid > index 0, optional create, clear per
-overwrite_sheet/overwrite_range, header append exactly once); each
-task only stringifies its rows and ships them to the driver in its
-commit message, and ``commit()`` appends every partition's rows once,
-in partition order, as ``values.append`` calls of 2048 rows.
+Write lifecycle (parity with gsheets_copy.cpp), ``df.write`` and
+``df.writeStream`` alike: each task only stringifies its rows into its
+commit message; once every task has succeeded, ``commit()`` makes all
+of the write's Sheets calls (resolve, optional create, clear, header,
+then the rows in partition order as ``values.append`` calls of 2048
+rows). A stream clears and writes the header at micro-batch 0 only.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from pyspark import TaskContext
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
@@ -218,6 +220,13 @@ class GSheetsDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool) -> "GSheetsWriter":
         return GSheetsWriter(dict(self.options), schema, overwrite)
 
+    def streamWriter(self, schema: StructType, overwrite: bool) -> "GSheetsWriter":
+        """The batch writer, committed per micro-batch. Option ``mode``
+        (default ``overwrite``) plays ``df.write``'s mode at batch 0;
+        Spark's flag only marks the complete output mode."""
+        overwrite = self.options.get("mode", "overwrite").lower() == "overwrite"
+        return GSheetsWriter(dict(self.options), schema, overwrite)
+
     def simpleStreamReader(self, schema: StructType) -> "GSheetsStreamReader":
         """``spark.readStream.format("gsheets")``: micro-batch polling
         of the sheet (beyond-reference; the reference has no streaming
@@ -230,10 +239,10 @@ class GSheetsStreamReader(SimpleDataSourceStreamReader):
     """Poll-based micro-batch reader: the offset is the count of data
     rows already emitted. Every trigger fetches the range with one
     values GET and casts and emits only the rows past the last offset,
-    with the schema fixed at stream start; ``read`` and
-    ``readBetweenOffsets`` share that one fetch-and-slice. The Sheets
-    API has no cheap change signal, so an unchanged sheet costs the
-    same GET and emits nothing. A checkpoint that also carries a
+    with the schema fixed at stream start, as Arrow record batches;
+    ``read`` and ``readBetweenOffsets`` share that one fetch-and-slice.
+    The Sheets API has no cheap change signal, so an unchanged sheet
+    costs the same GET and emits nothing. A checkpoint that also carries a
     ``version`` key (written by an earlier reader) resumes from its
     ``rows`` alone.
 
@@ -256,10 +265,11 @@ class GSheetsStreamReader(SimpleDataSourceStreamReader):
 
     def _slice(
         self, start: dict, end: dict | None = None
-    ) -> tuple[Iterator[tuple], dict]:
+    ) -> tuple[Iterator[pa.RecordBatch], dict]:
         """Fetch the range and return the data rows from ``start`` up to
         ``end`` (the current last row when ``end`` is None), cast, with
-        the offset they end at. Only those rows are cast."""
+        the offset they end at. Only those rows are cast; no rows give
+        no batch, as Spark wants of a read that did not advance."""
         if self._client is None:
             self._client = _build_client(self._options)
             self._target = _resolve_target(self._options, self._client)
@@ -270,20 +280,16 @@ class GSheetsStreamReader(SimpleDataSourceStreamReader):
         stop = len(rows) if end is None else end["rows"]
         begin = min(start["rows"], stop)
         table = cast_rows(rows[begin:stop], self._schema, header=False)
-        return _tuples(table), {"rows": stop}
+        return iter(table.to_batches() if table.num_rows else []), {"rows": stop}
 
     def initialOffset(self) -> dict:
         return {"rows": 0}
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def read(self, start: dict) -> tuple[Iterator[pa.RecordBatch], dict]:
         return self._slice(start)
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[pa.RecordBatch]:
         return self._slice(start, end)[0]
-
-
-def _tuples(table: pa.Table) -> Iterator[tuple]:
-    return zip(*(column.to_pylist() for column in table.columns))
 
 
 @dataclass
@@ -334,9 +340,10 @@ class AppendResult(WriterCommitMessage):
     Executor tasks do NO network IO: Spark may re-run ``write()`` on
     task retry or speculative execution, but exactly one successful
     attempt's commit message per partition reaches ``commit()``, so
-    buffering here and appending there makes the sink exactly-once.
-    Driver-side buffering is safe for this sink because the Sheets API
-    caps a spreadsheet at 10M cells — the payload is bounded small.
+    buffering here and appending there makes a job's appends
+    exactly-once. Driver-side buffering is safe for this sink because
+    the Sheets API caps a spreadsheet at 10M cells — the payload is
+    bounded small.
     """
 
     partition_id: int
@@ -353,7 +360,7 @@ def _stringify(value) -> str:
     return str(value)
 
 
-class GSheetsWriter(DataSourceWriter):
+class GSheetsWriter(DataSourceWriter, DataSourceStreamWriter):
     """COPY TO parity: mode matrix from gsheets_copy.cpp:39-52.
 
     | overwrite_sheet | overwrite_range | effect                      |
@@ -363,9 +370,16 @@ class GSheetsWriter(DataSourceWriter):
     | false           | false           | pure append below existing  |
 
     header defaults to (overwrite_sheet or overwrite_range);
-    create_if_not_exists requires an explicit sheet name. Driver-side
-    setup runs once in __init__ (the reference's global init); the
-    pickled writer carries only what executors need for appends.
+    create_if_not_exists requires an explicit sheet name.
+
+    The constructor only reads options: Spark builds the writer before
+    the job, and a stream builds it again for every micro-batch's
+    commit. Every Sheets call runs in :meth:`commit`, after all tasks
+    have succeeded, so a failed job leaves the sheet as it was and
+    ``abort`` (the base class's no-op) has nothing to undo. The cost: a
+    wrong sheet name fails after the job, not before it; the Sheets
+    10M-cell cap bounds that job. A batch write commits as micro-batch
+    0 of a stream.
     """
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
@@ -385,29 +399,6 @@ class GSheetsWriter(DataSourceWriter):
             raise SheetsError(
                 "create_if_not_exists requires an explicit 'sheet' option"
             )
-        self._setup()
-
-    def _setup(self) -> None:
-        """Resolve sheet, optionally create, clear, write header once."""
-        client = _build_client(self._options)
-        target = _resolve_target(
-            self._options, client, create_missing=self.create_if_not_exists
-        )
-        values = client.values(target.spreadsheet_id)
-        # Range clear beats sheet clear (src/gsheets_copy.cpp:98-104).
-        if self.overwrite_range and target.cell_range:
-            values.clear(target.a1())
-        elif self.overwrite_sheet:
-            values.clear(A1Range(target.sheet_name, None).to_string())
-
-        self._append_a1 = target.a1()
-        self._spreadsheet_id = target.spreadsheet_id
-        if self.header:
-            header_row = [[f.name for f in self._schema.fields]]
-            if target.cell_range:
-                values.update(self._append_a1, header_row)
-            else:
-                values.append(self._append_a1, header_row)
 
     def write(self, iterator: Iterator) -> AppendResult:
         """Executor side: stringify only — rows ship to the driver in
@@ -419,23 +410,36 @@ class GSheetsWriter(DataSourceWriter):
             partition_id, [[_stringify(v) for v in row] for row in iterator]
         )
 
-    def commit(self, messages) -> None:
-        """Driver side: append every partition's rows exactly once, in
-        partition order (deterministic sheet row order regardless of
-        task scheduling), 2048 rows per POST like the reference
-        (src/gsheets_copy.cpp:129-181)."""
-        client = _build_client(dict(self._options))
-        values = client.values(self._spreadsheet_id)
-        for msg in sorted(
-            (m for m in messages if m is not None),
-            key=lambda m: m.partition_id,
-        ):
+    def commit(self, messages, batchId: int = 0) -> None:
+        """Driver side, gsheets_copy.cpp:54-181 with one client: resolve
+        the target (creating it if asked), clear, write the header, then
+        append every partition's rows in partition order (deterministic
+        regardless of task scheduling), 2048 rows per POST. Only batch 0
+        clears and writes the header; a later batch without rows makes
+        no call."""
+        parts = sorted(
+            (m for m in messages if m is not None), key=lambda m: m.partition_id
+        )
+        if batchId > 0 and not any(m.rows for m in parts):
+            return
+        client = _build_client(self._options)
+        target = _resolve_target(
+            self._options, client, create_missing=self.create_if_not_exists
+        )
+        values = client.values(target.spreadsheet_id)
+        a1 = target.a1()
+        if batchId == 0:
+            # Range clear beats sheet clear (src/gsheets_copy.cpp:98-104).
+            if self.overwrite_range and target.cell_range:
+                values.clear(a1)
+            elif self.overwrite_sheet:
+                values.clear(A1Range(target.sheet_name, None).to_string())
+            if self.header:
+                header_row = [[f.name for f in self._schema.fields]]
+                if target.cell_range:
+                    values.update(a1, header_row)
+                else:
+                    values.append(a1, header_row)
+        for msg in parts:
             for start in range(0, len(msg.rows), BATCH_ROWS):
-                values.append(self._append_a1, msg.rows[start : start + BATCH_ROWS])
-
-    def abort(self, messages) -> None:
-        # Nothing was appended (appends happen only in commit), so a
-        # failed job cannot leave partial data rows. The bind-time
-        # clear/header from _setup may have run — documented, same
-        # exposure as the reference's non-transactional COPY.
-        return None
+                values.append(a1, msg.rows[start : start + BATCH_ROWS])

@@ -300,12 +300,60 @@ def test_task_retry_cannot_double_append(spark, sheets_server, spreadsheets_df):
         for m, p in sheets_server.request_log[before:]
         if m == "POST" and ":append" in p
     ]
-    assert len(appends) == 1
+    # commit() also writes the header, as the first append: the data
+    # rows take exactly one more.
+    data_appends = len(appends) - 1
+    assert data_appends == 1
     grid = store.grids["Sheet1"]
     assert grid[-2:] == [
         ["Microsoft", "Excel", "1985"],
         ["Google", "Google Sheets", "2006"],
     ]
+
+
+def _failing(df):
+    """``df`` with a task that raises once it meets the row whose
+    ``year_founded`` is 2000."""
+    import pyspark.sql.functions as F
+
+    return df.withColumn(
+        "year_founded",
+        F.when(
+            F.col("year_founded") == 2000, F.raise_error(F.lit("task failed"))
+        ).otherwise(F.col("year_founded")),
+    )
+
+
+def test_failed_job_leaves_sheet_unchanged(spark, sheets_server, spreadsheets_df):
+    """Every Sheets call of a write runs after the job: a job whose task
+    raises neither clears the tab nor writes a header, and building the
+    writer makes no request at all."""
+    from duckdb_gsheets_spark.sources.gsheets.datasource import GSheetsWriter
+
+    sid, store = _fresh(sheets_server, "write-failed-job")
+    store.grids["Sheet1"] = [["old", "rows"], ["1", "2"]]
+    sheets_server.request_log.clear()
+    GSheetsWriter({"path": sid, **opts(sheets_server)}, spreadsheets_df.schema, True)
+    assert sheets_server.request_log == []
+    with pytest.raises(Exception, match="task failed"):
+        write_gsheet(_failing(spreadsheets_df).coalesce(1), sid, **opts(sheets_server))
+    assert store.grids["Sheet1"] == [["old", "rows"], ["1", "2"]]
+
+
+def test_failed_job_creates_no_sheet(spark, sheets_server, spreadsheets_df):
+    """``create_if_not_exists`` adds the tab only when the job has
+    succeeded."""
+    sid, store = _fresh(sheets_server, "write-failed-create")
+    with pytest.raises(Exception, match="task failed"):
+        write_gsheet(
+            _failing(spreadsheets_df).coalesce(1),
+            sid,
+            sheet="Fresh",
+            create_if_not_exists=True,
+            **opts(sheets_server),
+        )
+    assert "Fresh" not in store.grids
+    assert store.grids["Sheet1"] == []
 
 
 def test_commit_appends_in_partition_order(spark, sheets_server, spreadsheets_df):
@@ -437,3 +485,46 @@ def test_streaming_sink_overwrite_range(spark, sheets_server, tmp_path):
         1 for row in g if len(row) > 3 and row[2:4] == ["id", "name"]
     )
     assert header_count == 1
+
+
+def test_streaming_sink_empty_later_batch_makes_no_call(
+    spark, sheets_server, tmp_path
+):
+    """A micro-batch past batch 0 whose rows were all filtered away
+    makes no Sheets request: the drain costs 1 metadata GET, 1 clear,
+    the header append and batch 0's one data append."""
+    import os
+
+    from duckdb_gsheets_spark.sources.gsheets import write_gsheet_stream
+
+    src = tmp_path / "empty_batch_src"
+    src.mkdir()
+    spark.createDataFrame([(1, "alpha"), (2, "beta")], ["id", "name"]).coalesce(
+        1
+    ).write.parquet(str(src / "p1"))
+    spark.createDataFrame([(99, "dropped")], ["id", "name"]).coalesce(
+        1
+    ).write.parquet(str(src / "p2"))
+    for n, part in enumerate(sorted(src.glob("p*/*.parquet"))):
+        os.utime(part, (1_700_000_000 + n, 1_700_000_000 + n))  # p1 first
+
+    sid, store = _fresh(sheets_server, "stream-empty-batch")
+    stream = (
+        spark.readStream.schema("id long, name string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src) + "/*")
+    )
+    sheets_server.request_log.clear()
+    query = write_gsheet_stream(
+        stream.where("id < 10"),
+        sid,
+        checkpoint_dir=str(tmp_path / "ckpt_empty"),
+        **opts(sheets_server),
+    )
+    assert max(p["batchId"] for p in query.recentProgress) == 1
+    log = sheets_server.request_log
+    assert [p for m, p in log if m == "GET"] == ["/v4/spreadsheets/stream-empty-batch"]
+    assert sum(1 for _, p in log if p.endswith(":clear")) == 1
+    assert sum(1 for _, p in log if p.endswith(":append")) == 2
+    assert len(log) == 4
+    assert store.grids["Sheet1"] == [["id", "name"], ["1", "alpha"], ["2", "beta"]]

@@ -102,6 +102,8 @@ def test_gsheets_stream_reader_resumes_old_checkpoint(sheets_server):
     """An offset that still carries the ``version`` key an earlier
     reader wrote resumes from its ``rows`` alone: no row is emitted
     twice and the next offset drops the key."""
+    import pyarrow as pa
+
     from duckdb_gsheets_spark.sources.gsheets.datasource import (
         GSheetsStreamReader,
         bind,
@@ -115,8 +117,9 @@ def test_gsheets_stream_reader_resumes_old_checkpoint(sheets_server):
         "api_base": sheets_server.base_url,
     }
     schema, _ = bind(options)
-    rows, end = GSheetsStreamReader(options, schema).read({"rows": 1, "version": 7})
-    assert list(rows) == [("bob", 2.0)]
+    batches, end = GSheetsStreamReader(options, schema).read({"rows": 1, "version": 7})
+    rows = pa.Table.from_batches(list(batches)).to_pylist()
+    assert rows == [{"name": "bob", "score": 2.0}]
     assert end == {"rows": 2}
 
 
