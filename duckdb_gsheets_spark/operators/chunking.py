@@ -50,7 +50,10 @@ beyond-reference training-data layer SURVEY.md §2.3 commits to.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_gsheets_spark.functions.text import WHITESPACE_SPLIT
@@ -367,6 +370,68 @@ def _bloom_word_hit(bit: Column, words: Column) -> Column:
     return F.element_at(words, widx + 1).bitwiseAND(probe) != 0
 
 
+def _bloom_contains(gram: Column, m, words: Column) -> Column:
+    """TRUE iff all ``BLOOM_K`` bits of ``gram`` in an ``m``-bit mask
+    are set in the word-packed ``words``."""
+    hits = [
+        _bloom_word_hit(_bloom_bit(gram, s, m), words) for s in range(BLOOM_K)
+    ]
+    return functools.reduce(operator.and_, hits)
+
+
+def _bloom_fit(
+    bench_grams: DataFrame,
+    shard: Column,
+    bits_per_item: int,
+    max_items: int,
+    too_many: str,
+) -> dict[int, tuple[int, list[int]]]:
+    """Fit one Bloom filter per ``shard`` value of the distinct grams:
+    ``{shard: (m, words)}`` where ``m = max(BLOOM_MIN_M, bits_per_item
+    × |shard's grams|)`` and ``words`` is the m-bit mask packed
+    ``BLOOM_WORD_BITS`` bits per non-negative long (``ceil(m / 63)``
+    words). Shards without grams get no filter.
+
+    The fit is ONE distributed action: a collect of ``(shard, h0 ..
+    h{K-1})``, the raw 60-bit hashes per distinct gram. Counts, sizing,
+    the mod-m reduction and the packing run on the driver over those
+    rows. The collect is LIMIT-bounded at one row past ``max_items``,
+    so an oversized suite raises ``ValueError(too_many)`` holding at
+    most that many rows on the driver."""
+    hash_rows = (
+        bench_grams.select(
+            shard.alias("shard"),
+            *[
+                _bloom_hash60(F.col("gram"), s).alias(f"h{s}")
+                for s in range(BLOOM_K)
+            ],
+        )
+        .limit(max_items + 1)
+        .collect()
+    )
+    if len(hash_rows) > max_items:
+        raise ValueError(too_many)
+    by_shard: dict[int, list] = {}
+    for r in hash_rows:
+        by_shard.setdefault(int(r.shard), []).append(r)
+    fits = {}
+    for s, rows in by_shard.items():
+        m = max(BLOOM_MIN_M, bits_per_item * len(rows))
+        if m > BLOOM_MAX_M:
+            raise ValueError(
+                f"sharded bloom: shard {s} needs {m} bits (> BLOOM_MAX_M "
+                f"{BLOOM_MAX_M}) — raise BLOOM_SHARDS for a suite this "
+                "large"
+            )
+        words = [0] * ((m + BLOOM_WORD_BITS - 1) // BLOOM_WORD_BITS)
+        for r in rows:
+            for h in r[1:]:
+                b = h % m
+                words[b // BLOOM_WORD_BITS] |= 1 << (b % BLOOM_WORD_BITS)
+        fits[s] = (m, words)
+    return fits
+
+
 def bloom_artifact(
     spark,
     sf_dir: str,
@@ -374,19 +439,13 @@ def bloom_artifact(
     bits_per_item: int = BLOOM_BITS_PER_ITEM,
 ) -> tuple[int, list[int]]:
     """Fit the decontamination Bloom filter from the benchmark slice:
-    ``(m, words)`` where ``m = max(BLOOM_MIN_M, bits_per_item ×
-    |distinct bench grams|)`` and ``words`` is the m-bit membership
-    mask packed ``BLOOM_WORD_BITS`` bits per non-negative long
-    (``ceil(m / 63)`` words). This is the TRAINED ARTIFACT both
-    consumers ship to executors as a one-row broadcast literal.
+    ``(m, words)``, the one-shard case of :func:`_bloom_fit` — one
+    collect, ``m = max(BLOOM_MIN_M, bits_per_item × |distinct bench
+    grams|)``, ``ceil(m / 63)`` packed words. This is the TRAINED
+    ARTIFACT :func:`contamination_bloom` ships to executors as a
+    one-row broadcast literal. An empty benchmark gives the empty
+    ``BLOOM_MIN_M``-bit mask.
 
-    The whole fit is ONE distributed action: a single collect of the
-    K raw 60-bit hashes per distinct gram. The sizing count is the
-    length of that same result (no separate ``.count()`` job), and
-    the mod-m reduction + word packing run on the driver over the
-    already-bounded artifact rows (the round-11 shape collected
-    distinct post-mod bits instead, which cost an extra count job and
-    a full distinct shuffle per fit — the round-12 job-floor cut).
     ``bench_grams`` (the distinct-gram frame) may be passed in by a
     caller that also consumes it elsewhere. ``bits_per_item`` exists
     so tests can force a past-2^24-bit mask without a
@@ -397,38 +456,20 @@ def bloom_artifact(
         bench, _ = _contam_gram_frames(spark, sf_dir)
         # single consumer below — no checkpoint needed on this path
         bench_grams = bench.select("gram").distinct()
-    # The collect is LIMIT-bounded at one row past the largest suite
-    # the mask budget admits (BLOOM_MAX_M / bits_per_item grams), so
-    # an oversized benchmark hits the friendly ValueError below — the
-    # same guard the pre-fusion shape ran as a separate count job —
-    # instead of an unbounded driver collect, and a legal fit still
-    # pays exactly ONE action.
     max_items = BLOOM_MAX_M // bits_per_item
-    hash_rows = (
-        bench_grams.select(
-            *[
-                _bloom_hash60(F.col("gram"), s).alias(f"h{s}")
-                for s in range(BLOOM_K)
-            ]
-        )
-        .limit(max_items + 1)
-        .collect()
+    fits = _bloom_fit(
+        bench_grams,
+        F.lit(0),
+        bits_per_item,
+        max_items,
+        f"bloom filter needs > BLOOM_MAX_M {BLOOM_MAX_M} bits "
+        f"(more than {max_items} distinct benchmark grams at "
+        f"{bits_per_item} bits/item): a mask past 2^30 bits exceeds "
+        "the one-row broadcast budget — shard the filter (partition "
+        "the benchmark gram space) for a suite this large",
     )
-    if len(hash_rows) > max_items:
-        raise ValueError(
-            f"bloom filter needs > BLOOM_MAX_M {BLOOM_MAX_M} bits "
-            f"(more than {max_items} distinct benchmark grams at "
-            f"{bits_per_item} bits/item): a mask past 2^30 bits exceeds "
-            "the one-row broadcast budget — shard the filter (partition "
-            "the benchmark gram space) for a suite this large"
-        )
-    m = max(BLOOM_MIN_M, bits_per_item * len(hash_rows))
-    words = [0] * ((m + BLOOM_WORD_BITS - 1) // BLOOM_WORD_BITS)
-    for r in hash_rows:
-        for s in range(BLOOM_K):
-            b = r[s] % m
-            words[b // BLOOM_WORD_BITS] |= 1 << (b % BLOOM_WORD_BITS)
-    return m, words
+    empty = [0] * ((BLOOM_MIN_M + BLOOM_WORD_BITS - 1) // BLOOM_WORD_BITS)
+    return fits.get(0, (BLOOM_MIN_M, empty))
 
 
 def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,9 +491,10 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact ORACLE-CHECKED — DuckDB rebuilds the same filter as a
     bit TABLE and replays membership as a count-all-K join.
 
-    Plan shape: the filter ships as a one-row broadcast literal — a
-    WORD-PACKED ``array<long>`` (63 usable bits per word; see
-    BLOOM_WORD_BITS for why not 64) — and membership is BLOOM_K
+    Plan shape: :func:`bloom_artifact` fits the filter in one collect,
+    and it ships as a one-row broadcast literal — a WORD-PACKED
+    ``array<long>`` (63 usable bits per word; see BLOOM_WORD_BITS for
+    why not 64). Membership is :func:`_bloom_contains`, BLOOM_K
     pure-JVM element_at + bitwise-AND probes per corpus gram — ZERO
     corpus-side shuffle before the per-source rollup of per-doc
     flags. The exact side reuses the broadcast bench join. No false
@@ -470,12 +512,7 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, words = bloom_artifact(spark, sf_dir, bench_grams=bench_grams)
     mask_df = spark.createDataFrame([(words,)], "bloom_words array<long>")
 
-    contained = None
-    for s in range(BLOOM_K):
-        hit = _bloom_word_hit(
-            _bloom_bit(F.col("gram"), s, m), F.col("bloom_words")
-        )
-        contained = hit if contained is None else (contained & hit)
+    contained = _bloom_contains(F.col("gram"), m, F.col("bloom_words"))
     corpus_hit = corpus.crossJoin(F.broadcast(mask_df)).select(
         "doc_id", "gram", contained.alias("bloom_hit_gram")
     )
@@ -557,70 +594,25 @@ def bloom_artifact_sharded(
     bench_grams: DataFrame,
 ) -> dict[int, tuple[int, list[int]]]:
     """Fit the PARTITIONED decontamination filter: ``{shard: (m_s,
-    words_s)}`` where each shard's filter is sized from ITS gram
-    count by the same bits-per-item rule (so per-gram FP behavior is
-    identical to the unsharded filter) and word-packed exactly like
-    :func:`bloom_artifact`. Shards with no benchmark grams have no
-    filter — a gram routing there is definitionally not contained.
-    Each shard individually respects BLOOM_MAX_M; total capacity is
-    BLOOM_SHARDS × that.
-
-    Like :func:`bloom_artifact`, the fit is ONE distributed action —
-    a single collect of (shard, K raw 60-bit hashes) per distinct
-    gram; per-shard counts, sizing, the mod-m_s reduction and word
-    packing all run driver-side over those bounded rows (round 12
-    fused the former per-shard count job + bit distinct shuffle into
-    this pass)."""
-    # LIMIT-bounded like bloom_artifact's fit: the sharded budget is
-    # BLOOM_SHARDS × the single-mask item cap, and any suite past it
-    # gets the friendly error before the driver holds more than one
-    # row over that bound (per-shard skew past BLOOM_MAX_M is still
-    # caught by the per-shard sizing check below).
+    words_s)}`` from :func:`_bloom_fit` over the ``_bloom_shard_of``
+    routing, so each shard is sized from ITS gram count by the same
+    bits-per-item rule (per-gram FP behavior identical to the
+    unsharded filter) in the same one collect. Shards with no
+    benchmark grams have no filter — a gram routing there is
+    definitionally not contained. Each shard individually respects
+    BLOOM_MAX_M; total capacity is BLOOM_SHARDS × that, and a suite
+    past it (or a shard skewed past BLOOM_MAX_M) raises."""
     max_items = BLOOM_SHARDS * (BLOOM_MAX_M // BLOOM_BITS_PER_ITEM)
-    hash_rows = (
-        bench_grams.select(
-            _bloom_shard_of(F.col("gram")).alias("shard"),
-            *[
-                _bloom_hash60(F.col("gram"), s).alias(f"h{s}")
-                for s in range(BLOOM_K)
-            ],
-        )
-        .limit(max_items + 1)
-        .collect()
+    return _bloom_fit(
+        bench_grams,
+        _bloom_shard_of(F.col("gram")),
+        BLOOM_BITS_PER_ITEM,
+        max_items,
+        f"sharded bloom: suite exceeds {max_items} distinct grams "
+        f"(BLOOM_SHARDS {BLOOM_SHARDS} × BLOOM_MAX_M {BLOOM_MAX_M} "
+        f"at {BLOOM_BITS_PER_ITEM} bits/item) — raise BLOOM_SHARDS "
+        "for a suite this large",
     )
-    if len(hash_rows) > max_items:
-        raise ValueError(
-            f"sharded bloom: suite exceeds {max_items} distinct grams "
-            f"(BLOOM_SHARDS {BLOOM_SHARDS} × BLOOM_MAX_M {BLOOM_MAX_M} "
-            f"at {BLOOM_BITS_PER_ITEM} bits/item) — raise BLOOM_SHARDS "
-            "for a suite this large"
-        )
-    counts: dict[int, int] = {}
-    for r in hash_rows:
-        counts[int(r.shard)] = counts.get(int(r.shard), 0) + 1
-    ms = {
-        s: max(BLOOM_MIN_M, BLOOM_BITS_PER_ITEM * n)
-        for s, n in counts.items()
-    }
-    for s, m in ms.items():
-        if m > BLOOM_MAX_M:
-            raise ValueError(
-                f"sharded bloom: shard {s} needs {m} bits (> BLOOM_MAX_M "
-                f"{BLOOM_MAX_M}) — raise BLOOM_SHARDS for a suite this "
-                "large"
-            )
-    words: dict[int, list[int]] = {
-        s: [0] * ((m + BLOOM_WORD_BITS - 1) // BLOOM_WORD_BITS)
-        for s, m in ms.items()
-    }
-    for r in hash_rows:
-        shard, m = int(r.shard), ms[int(r.shard)]
-        for s in range(BLOOM_K):
-            b = r[s + 1] % m
-            words[shard][b // BLOOM_WORD_BITS] |= 1 << (
-                b % BLOOM_WORD_BITS
-            )
-    return {s: (ms[s], words[s]) for s in ms}
 
 
 def contamination_bloom_sharded(
@@ -640,11 +632,12 @@ def contamination_bloom_sharded(
     broadcasts at this size and which SCALES by partition-routing
     when the filter table outgrows broadcast (each executor holds
     only probed shards, the property the one-row literal cannot
-    give). Everything after the join is the same pure-JVM word-probe
-    and per-source rollup as :func:`contamination_bloom`; the exact
-    side and the report tail are shared code. The filter is fit in
-    the same session, from the checkpointed benchmark grams the exact
-    side also reads.
+    give). The fit (:func:`bloom_artifact_sharded`, the same one
+    collect as the unsharded filter's, over the shard routing) reads
+    the checkpointed benchmark grams the exact side also reads. After
+    the join come the same probe (:func:`_bloom_contains`, with each
+    row's own ``m``) and the same report tail as
+    :func:`contamination_bloom`.
     """
     bench, corpus = _contam_gram_frames(spark, sf_dir)
     bench_grams = (
@@ -655,12 +648,9 @@ def contamination_bloom_sharded(
         [(s, m, w) for s, (m, w) in sorted(shards.items())],
         "shard long, m long, bloom_words array<long>",
     )
-    contained = None
-    for s in range(BLOOM_K):
-        hit = _bloom_word_hit(
-            _bloom_bit(F.col("gram"), s, F.col("m")), F.col("bloom_words")
-        )
-        contained = hit if contained is None else (contained & hit)
+    contained = _bloom_contains(
+        F.col("gram"), F.col("m"), F.col("bloom_words")
+    )
     # LEFT join: a shard with no benchmark grams has no filter row
     # (definitionally not contained), but its corpus grams must still
     # reach the one-pass screened/exact rollup — coalesce(NULL-probe,

@@ -9,10 +9,11 @@ Scale design (the point of these ops at 100 TB):
 * MinHash/SimHash candidate generation never compares all pairs: band
   buckets bound comparisons to colliding documents only; verification
   joins are per-candidate-pair, not per-pair-of-corpus.
-* The exact-Jaccard join is prefix-filtered (AllPairs/PPJoin): only
-  each document's rarest ``(1−t)·|A|+1`` tokens are indexed plus a
-  length filter, so no corpus-wide token ever drives a quadratic join
-  — same exact result set as the naive inverted index the oracle runs.
+* The exact-Jaccard and containment joins are prefix-filtered
+  (AllPairs/PPJoin): only each document's rarest ``(1−t)·|A|+1``
+  tokens enter the join, plus length and positional filters, so no
+  corpus-wide token ever drives a quadratic join — same exact result
+  set as the naive inverted index the oracle runs.
 
 All signatures are built from the PORTABLE md5/affine hash family
 (functions/portable_hash.py) — JVM-side, deterministic, and computable
@@ -23,13 +24,19 @@ no Python in any hot path.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_gsheets_spark.functions import portable_hash as PH
 from duckdb_gsheets_spark.functions import text as T
 from duckdb_gsheets_spark.operators.registry import QueryDef
-from duckdb_gsheets_spark.plans.catalog import fan_out, load_table
+from duckdb_gsheets_spark.plans.catalog import (
+    fan_out,
+    load_table,
+    session_memo,
+)
 
 #: MinHash configuration: 16 permutations in 8 bands of 2 rows.
 MINHASH_PERMS = 16
@@ -47,15 +54,11 @@ SIMHASH_MAX_HAMMING = 3
 #: Unigram-Jaccard near-dup threshold for the oracle-checked query.
 NGRAM_JACCARD_THRESHOLD = 0.75
 
-#: Prefix-postings document frequency above which a token's PPJoin
-#: self-join branch is SALTED (split into defaultParallelism sub-keys
-#: with the posting list replicated across them — guide §2.5 hot-key
-#: handling). Below the bar a single key's pair work is ≤ df² ≤ 65k
-#: filter evaluations — milliseconds — so plain per-token keys spread
-#: fine; above it one key would own df²-sized work no partitioning of
-#: whole keys can split. Replication cost is paid only by lists this
-#: hot (near-stopwords at real scale; the whole 21-token testdata
-#: vocabulary locally).
+#: Document frequency above which a token's PPJoin candidate-join key
+#: is SALTED (see _candidate_pairs). Below it one key's pair work is
+#: ≤ df² ≤ 65k filter evaluations, so whole per-token keys spread fine;
+#: above it one key would own df²-sized work that no partitioning of
+#: whole keys can split.
 PPJOIN_HOT_DF = 256
 
 
@@ -67,19 +70,12 @@ def _default_parallelism(df: DataFrame) -> int:
 
 
 def _salt_width(df: DataFrame, max_df: int) -> int:
-    """Salt count for a PPJoin hot branch, sized from the MEASURED
-    skew instead of the scheduler width (round-14 verdict ask #3).
-
-    Round 14 used ``defaultParallelism`` — correct split, wrong size:
-    the hot right side is replicated ``n_salt`` ways, so tying the
-    width to the cluster replicates every hot posting list
-    thousands-fold at production scale (and 4× more at local[32] than
-    at local[8] — the measured 0.62 scaling inversion). The skew-sized
-    width ``⌈max_df / PPJOIN_HOT_DF⌉`` caps per-(key, salt) pair work
-    at ~df·HOT_DF evaluations — the same per-task bound the rare
-    branch enjoys — and replication stops growing once the skew is
-    split finely enough; the scheduler width stays only as an upper
-    cap (salting wider than the task slots buys nothing locally)."""
+    """Salt count for the PPJoin hot branch: ``⌈max_df /
+    PPJOIN_HOT_DF⌉``, capped at the scheduler width. The B side is
+    replicated ``n_salt`` ways, so the width follows the measured skew
+    (per-(key, salt) pair work stays near df·HOT_DF, the rare branch's
+    bound) rather than the cluster size; salting wider than the task
+    slots buys nothing."""
     return max(
         1,
         min(
@@ -190,223 +186,212 @@ GROUP BY 1
 NGRAM_TOPK_K = 5
 
 
+def _doc_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, toks, n_tokens)``: each non-NULL document's distinct
+    lowercased tokens, the input of both pair cores."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.where(F.col("text").isNotNull())
+        .select("doc_id", _distinct_tokens(F.col("text")).alias("toks"))
+        .withColumn("n_tokens", F.size("toks"))
+    )
+
+
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-set Jaccard near-dup pairs via PREFIX-FILTERED
-    inverted-index join (AllPairs / PPJoin family — Bayardo et al.,
-    WWW'07; Xiao et al., WWW'08; both public).
+    """Exact token-set Jaccard near-dup pairs ``(doc_a, doc_b,
+    jaccard)`` via the prefix-filtered PPJoin core
+    (:func:`_jaccard_pairs_from`).
 
     NOT registered directly: on a dup-dense corpus (the whole point of
     a dedup pass) the materialized pair set is inherently quadratic —
     the registered query is :func:`dedup_ngram_jaccard`, which bounds
     the output to each document's top-K matches; this all-pairs form
-    stays as the pytest oracle.
-
-    Identical result set to the naive full postings self-join (the
-    DuckDB oracle still runs that), but the index join is bounded:
-
-    * Global token order = (document frequency asc, token). Any pair
-      with J(A,B) ≥ t must share a token within each side's first
-      ``|A| − ⌈t·|A|⌉ + 1`` tokens of that order, so only those PREFIX
-      postings are indexed — at t = 0.75 that's ~¼ of the postings,
-      and the rarest ones, killing the hot-token quadratic blowup a
-      raw inverted index has (one corpus-wide token = |corpus|² join
-      rows; here a doc pairs only through its rarest tokens).
-    * Length filter in the join: J ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|).
-    * Verification is per CANDIDATE pair, narrow: join the two token
-      arrays in and take ``size(array_intersect)`` — no re-join of
-      full postings.
-
-    Shuffle ledger: DF agg + DF join (vocab-sized), one window by
-    doc_id, prefix self-join on token, candidate-verify joins — each
-    linear in postings/candidates. The output-size lower bound is the
-    only quadratic left, which is inherent to "return all pairs".
+    stays as the pytest oracle. Its result set is that of the naive
+    full postings self-join the DuckDB oracle runs.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks_arr = docs.where(F.col("text").isNotNull()).select(
-        "doc_id",
-        _distinct_tokens(F.col("text")).alias("toks"),
-    ).withColumn("n_tokens", F.size("toks"))
-    return _jaccard_pairs_from(toks_arr)
+    return _jaccard_pairs_from(_doc_token_sets(spark, sf_dir))
 
 
-def _jaccard_pairs_from(toks_arr: DataFrame) -> DataFrame:
-    """Prefix-filtered exact Jaccard pairs over a (doc_id, toks,
-    n_tokens) frame — the PPJoin core shared by the all-pairs pytest
-    oracle and the group-collapsed registered query (where it runs
-    over distinct-token-set representatives).
+class _PPJoinIndex(NamedTuple):
+    """The PPJoin index both pair cores build (:func:`_ppjoin_index`)."""
 
-    The verify stage is VOCAB-ADAPTIVE (decided from the materialized
-    dictionary): small vocabularies (≤ ``BITMASK_MAX_VOCAB``) verify
-    with fixed-width bitmasks — AND + popcount per pair
-    (:func:`_verify_bitmask`); larger ones dictionary-encode tokens
-    to injective int ids and intersect INTEGER arrays
-    (:func:`_verify_int_arrays` — string-array ``array_intersect``
-    was the original dominant cost at sf0.1, ≈9 µs/pair × 4.2M pairs
-    ≈ 37 s; int arrays ~5×, bitmasks far cheaper again). The
-    dictionary is vocab-sized — an index artifact, eagerly
-    checkpointed because BOTH verify sides join it and
-    ``monotonically_increasing_id`` is nondeterministic across
-    re-evaluations (two un-materialized evaluations could disagree on
-    ids and corrupt the intersection)."""
-    t = NGRAM_JACCARD_THRESHOLD
+    postings: DataFrame
+    vocab: DataFrame
+    n_vocab: int
+    n_salt: int
+    positioned: DataFrame
+
+
+def _ppjoin_index(toks_arr: DataFrame) -> _PPJoinIndex:
+    """The prefix-filter index (AllPairs / PPJoin — Bayardo et al.,
+    WWW'07; Xiao et al., WWW'08) over a ``(doc_id, toks, n_tokens)``
+    frame:
+
+    * ``postings`` — ``(doc_id, n_tokens, tok)``, one row per distinct
+      token of a document; the overlap cores read it.
+    * ``vocab`` — ``(tok, df)``, eagerly checkpointed: the position
+      window, the salt width and the overlap representation all read
+      it, and none re-runs the explode + groupBy.
+    * ``n_vocab`` and ``n_salt`` — one action over ``vocab`` measures
+      the vocabulary size (it picks the overlap representation) and
+      the largest df (it sizes the hot-branch salt).
+    * ``positioned`` — the postings plus ``df`` and ``pos``, each
+      token's 1-based place in its document's global (df asc, tok)
+      order, eagerly checkpointed: the candidate join reads it four
+      ways (rare/hot × A/B).
+    """
     postings = toks_arr.select(
         "doc_id", "n_tokens", F.explode("toks").alias("tok")
     )
-    dfs = postings.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # The (tok, df) dictionary is checkpointed FIRST and every later
-    # df consumer (prefix join, verify-path decision, salt sizing,
-    # int-dictionary build) reads the materialized vocab-sized frame
-    # instead of re-running the tokenize + explode + groupBy subtree
-    # (round 14 computed it twice: once inside the prefix checkpoint,
-    # once for the vocab count). One action then yields BOTH branch
-    # decisions: the verify representation (n_vocab) and the
-    # hot-branch salt width (max_df) — no extra job for the
-    # skew-sized salt (round-14 verdict ask #3).
-    vocab = dfs.localCheckpoint(eager=True)
+    vocab = (
+        postings.groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .localCheckpoint(eager=True)
+    )
     vstats = vocab.agg(
         F.count(F.lit(1)).alias("n_vocab"), F.max("df").alias("max_df")
     ).first()
-    n_vocab = int(vstats.n_vocab)
-    n_salt = _salt_width(toks_arr, vstats.max_df or 0)
     w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    # Eagerly checkpointed: FOUR join branches below (rare a/b, hot
-    # a/b) read this frame — unmaterialized, each would re-run the
-    # tokenize + postings explode + df join + row_number window
-    # subtree (the round-14 first cut did exactly that and the plan
-    # quadrupled). The frame is (1−t)·|postings| rows of 5 narrow
-    # columns — index-sized, the same materialize-once pattern as
-    # _token_set_groups.
-    prefix = (
+    positioned = (
         postings.join(vocab, "tok")
         .withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t) + 1)
-        .select("doc_id", "n_tokens", "tok", "pos", "df")
         .localCheckpoint(eager=True)
     )
-    # PPJoin positional filter (Xiao et al. 2008): a shared prefix
-    # token at df-order positions (pa, pb) bounds the overlap from
-    # above by 1 + min(na − pa, nb − pb); J ≥ t needs overlap ≥
-    # α = ⌈t·(na+nb)/(1+t)⌉. For a TRUE pair the FIRST common token
-    # in df order satisfies the bound (everything matching sits at or
-    # after it on both sides), so filtering every candidate
-    # OCCURRENCE row by its own bound keeps at least that row — no
-    # false negatives — while pruning the dup-dense candidate space
-    # BEFORE the array-intersect verify (sf0.1: 4.5M → ~1.6M pairs,
-    # the verify being the dominant cost at 31-token vocab). The 1e-9
-    # nudge before ceil only ever UNDER-prunes (float ε at an exact
-    # integer boundary must not round α up past a true pair).
-    alpha = F.ceil(
-        (F.col("a.n_tokens") + F.col("b.n_tokens"))
-        * F.lit(t / (1.0 + t))
-        - F.lit(1e-9)
+    return _PPJoinIndex(
+        postings,
+        vocab,
+        int(vstats.n_vocab),
+        _salt_width(toks_arr, vstats.max_df or 0),
+        positioned,
     )
-    ubound = (
-        F.least(
-            F.col("a.n_tokens") - F.col("a.pos"),
-            F.col("b.n_tokens") - F.col("b.pos"),
-        )
-        + 1
+
+
+def _prefix(positioned: DataFrame, t: float) -> DataFrame:
+    """Each document's first ``n − ⌈t·n⌉ + 1`` tokens in df order:
+    a document with at most ``n − ⌈t·n⌉`` tokens outside another
+    shares one of them with it."""
+    return positioned.where(
+        F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t) + 1
     )
-    # The candidate self-join is OUTPUT-EXPLODING: a few MB of prefix
-    # postings fan out to millions of pair rows, and every row pays
-    # the PPJoin length/positional filters. AQE's partition coalescing
-    # sizes post-shuffle partitions by INPUT bytes, so it folded this
-    # join (and the verify stage behind it) onto 1-2 tasks — measured
-    # 18.8 s end-to-end at sf0.1 with 30 of 32 cores idle vs 5.4 s
-    # with coalescing off (round-14 probe). The structural fix keeps
-    # coalescing on (it is right for every non-exploding exchange)
-    # and pins THIS join's width with user-numbered repartitions,
-    # which AQE never coalesces (REPARTITION_BY_NUM contract):
-    #
-    # * tokens with prefix-df ≤ PPJOIN_HOT_DF join plain, keyed and
-    #   sized by _wide() — per-key pair work is ≤ HOT_DF², bounded;
-    # * hotter tokens (a handful of near-stopwords at any scale; the
-    #   WHOLE tiny-vocab testdata) are SALTED (guide §2.5): the left
-    #   side gets a deterministic doc-hash salt in [0, P), the right
-    #   side replicates each row P ways, and the join key becomes
-    #   (tok, salt) — per-key work drops to df·(df/P) and the
-    #   replication cost is paid ONLY by the hot lists.
-    #
-    # The union of the two joins is row-for-row the original join's
-    # candidate multiset (each (a-occurrence, b-occurrence) match
-    # meets in exactly one branch and exactly one salt), so the
-    # .distinct() output — and everything downstream — is unchanged.
-    filt = (
-        (F.col("a.doc_id") < F.col("b.doc_id"))
-        # J ≥ t ⇒ the smaller set is ≥ t × the larger one.
-        & (
-            F.least("a.n_tokens", "b.n_tokens")
-            >= F.greatest("a.n_tokens", "b.n_tokens") * t
-        )
-        & (ubound >= alpha)
+
+
+def _side(positioned: DataFrame, s: str) -> DataFrame:
+    """One side of the candidate join: ``doc_{s}``, ``n{s}`` and
+    ``p{s}`` for ``s`` in ``a``/``b``, plus the keys ``tok`` and
+    ``df``."""
+    return positioned.select(
+        F.col("doc_id").alias(f"doc_{s}"),
+        F.col("n_tokens").alias(f"n{s}"),
+        "tok",
+        "df",
+        F.col("pos").alias(f"p{s}"),
     )
-    sel = [
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-    ]
-    rare = prefix.where(F.col("df") <= PPJOIN_HOT_DF)
-    hot = prefix.where(F.col("df") > PPJOIN_HOT_DF)
-    rare_cand = (
-        _wide(rare, "tok")
-        .alias("a")
-        .join(_wide(rare, "tok").alias("b"), "tok")
-        .where(filt)
-        .select(*sel)
+
+
+def _overlap_ubound() -> Column:
+    """PPJoin's positional bound (Xiao et al. 2008): a shared token at
+    df-order positions ``(pa, pb)`` bounds the pair's overlap by
+    ``1 + min(na − pa, nb − pb)``. A true pair's FIRST common token
+    meets any bound the overlap meets, so a filter on this keeps at
+    least that row of every true pair. The callers compare it with
+    ``⌈α − 1e-9⌉``: the nudge only ever under-prunes, so float error
+    at an exact integer never rounds α past a true pair."""
+    return (
+        F.least(F.col("na") - F.col("pa"), F.col("nb") - F.col("pb")) + 1
     )
-    hot_a = hot.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)).cast("int")
+
+
+def _candidate_pairs(
+    a: DataFrame, b: DataFrame, filt: Column, n_salt: int
+) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` pairs whose :func:`_side` rows share
+    a token and pass ``filt``.
+
+    The join is output-exploding (a few MB of postings fan out to
+    millions of pair rows), and AQE sizes post-shuffle partitions by
+    input bytes, so every exchange here is pinned to the scheduler
+    width with :func:`_wide`. Tokens at df ≤ ``PPJOIN_HOT_DF`` join on
+    ``tok`` alone. Hotter tokens are salted: each A row takes the salt
+    ``xxhash64(doc_a) mod n_salt``, each B row is replicated over all
+    ``n_salt`` salts, and the key is ``(tok, salt)``. Every matching
+    (A row, B row) meets in exactly one branch and one salt, so the
+    union holds the plain join's rows."""
+    rare, hot = F.col("df") <= PPJOIN_HOT_DF, F.col("df") > PPJOIN_HOT_DF
+    plain = _wide(a.where(rare), "tok").join(
+        _wide(b.where(rare), "tok"), "tok"
     )
-    hot_b = hot.withColumn(
+    hot_a = a.where(hot).withColumn(
+        "salt", F.pmod(F.xxhash64("doc_a"), F.lit(n_salt)).cast("int")
+    )
+    hot_b = b.where(hot).withColumn(
         "salt",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<int>")
-        ),
+        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<int>")),
     )
-    hot_cand = (
-        _wide(hot_a, "tok", "salt")
-        .alias("a")
-        .join(_wide(hot_b, "tok", "salt").alias("b"), ["tok", "salt"])
-        .where(filt)
-        .select(*sel)
+    salted = _wide(hot_a, "tok", "salt").join(
+        _wide(hot_b, "tok", "salt"), ["tok", "salt"]
     )
-    # Explicit width for the distinct + verify stages too: the pair
-    # frame is small in bytes but each row pays the bitmask/int-array
-    # overlap compute, so an AQE-folded exchange serializes it.
-    cand = _wide(rare_cand.unionByName(hot_cand), "doc_a", "doc_b").distinct()
-    # Vocab-adaptive verify. SMALL vocabularies (≤ BITMASK_MAX_VOCAB
-    # distinct tokens corpus-wide) verify with fixed-width BITMASKS:
-    # each token set becomes ⌈|vocab|/64⌉ longs, and the per-pair
-    # overlap is zip_with AND + popcount — constant work per pair vs
-    # array_intersect's per-element hashing, which measured ~4 µs/pair
-    # and dominated the whole query (sf0.1: verify ~18.5 s of 31.7 s;
-    # BASELINE.md round 10). LARGE vocabularies keep the int-array
-    # intersect: a 10M-token vocab would need 156 KB of mask per doc
-    # while real sets hold only hundreds of tokens — the sparse
-    # representation is the scale-correct one there. The cutoff is an
-    # index-build decision made from the MATERIALIZED (tok, df) frame
-    # (the same single action that sized the salt). The tid
-    # DICTIONARY (monotonic-id assignment + its pinning checkpoint —
-    # see _token_dictionary) is built only on the int-array path,
-    # its sole consumer: the bitmask path derives dense bit positions
-    # from this same vocab frame and never touches tid.
-    if n_vocab <= BITMASK_MAX_VOCAB:
-        verified = _verify_bitmask(cand, postings, vocab, n_vocab)
-    else:
-        verified = _verify_int_arrays(
-            cand, postings, _token_dictionary(vocab)
+    cand = plain.where(filt).select("doc_a", "doc_b").unionByName(
+        salted.where(filt).select("doc_a", "doc_b")
+    )
+    return _wide(cand, "doc_a", "doc_b").distinct()
+
+
+def _overlap(cand: DataFrame, ix: _PPJoinIndex) -> DataFrame:
+    """``(doc_a, doc_b, na, nb, overlap)`` per candidate pair. A
+    vocabulary of at most ``BITMASK_MAX_VOCAB`` tokens counts the
+    overlap on fixed-width bitmasks (:func:`_overlap_bitmask`); a
+    larger one on dictionary-encoded int arrays
+    (:func:`_overlap_int_arrays`), the sparse form that stays small
+    when sets hold far fewer tokens than the vocabulary."""
+    if ix.n_vocab <= BITMASK_MAX_VOCAB:
+        return _overlap_bitmask(cand, ix.postings, ix.vocab, ix.n_vocab)
+    return _overlap_int_arrays(cand, ix.postings, _token_dictionary(ix.vocab))
+
+
+def _jaccard_pairs_from(toks_arr: DataFrame) -> DataFrame:
+    """Exact token-set Jaccard pairs ``(doc_a, doc_b, jaccard)`` with
+    ``doc_a < doc_b`` and J ≥ ``NGRAM_JACCARD_THRESHOLD`` over a
+    ``(doc_id, toks, n_tokens)`` frame — the core of the all-pairs
+    pytest oracle and of the group-collapsed registered query (which
+    runs it over distinct-token-set representatives).
+
+    J is symmetric, so both join sides are prefixes. A candidate row
+    passes three filters: ``doc_a < doc_b``; the length bound
+    ``min(na, nb) ≥ t·max(na, nb)``; and the positional bound against
+    the overlap J ≥ t needs, ``α = ⌈t·(na + nb)/(1 + t)⌉``. J is
+    ``round(o / (na + nb − o), 6)``."""
+    t = NGRAM_JACCARD_THRESHOLD
+    ix = _ppjoin_index(toks_arr)
+    prefix = _prefix(ix.positioned, t)
+    na, nb = F.col("na"), F.col("nb")
+    alpha = F.ceil((na + nb) * F.lit(t / (1.0 + t)) - F.lit(1e-9))
+    filt = (
+        (F.col("doc_a") < F.col("doc_b"))
+        & (F.least(na, nb) >= F.greatest(na, nb) * t)
+        & (_overlap_ubound() >= alpha)
+    )
+    cand = _candidate_pairs(
+        _side(prefix, "a"), _side(prefix, "b"), filt, ix.n_salt
+    )
+    return (
+        _overlap(cand, ix)
+        .select(
+            "doc_a",
+            "doc_b",
+            _jaccard_expr(F.col("overlap")).alias("jaccard"),
         )
-    return verified.where(F.col("jaccard") >= t)
+        .where(F.col("jaccard") >= t)
+    )
 
 
-#: Vocabulary cutoff for the bitmask verify: 4096 tokens = 64 longs
+#: Vocabulary cutoff for the bitmask overlap: 4096 tokens = 64 longs
 #: (512 B) per document mask — broadcast-friendly and far below the
 #: point where sparse int arrays win (sets ≪ vocab).
 BITMASK_MAX_VOCAB = 4096
 
 
 def _jaccard_expr(overlap: Column) -> Column:
-    """round(o / (na + nb − o), 6) — one shared formula so the two
-    verify paths cannot drift."""
+    """round(o / (na + nb − o), 6)."""
     return F.round(
         overlap.cast("double")
         / (F.col("na") + F.col("nb") - overlap).cast("double"),
@@ -414,83 +399,35 @@ def _jaccard_expr(overlap: Column) -> Column:
     )
 
 
-def _verify_int_arrays(
-    cand: DataFrame, postings: DataFrame, tok_ids: DataFrame
-) -> DataFrame:
-    """General-vocabulary Jaccard verify over the shared overlap
-    core."""
-    return _overlap_int_arrays(cand, postings, tok_ids).select(
-        "doc_a",
-        "doc_b",
-        _jaccard_expr(F.col("overlap")).alias("jaccard"),
-    )
-
-
 def _overlap_int_arrays(
     cand: DataFrame, postings: DataFrame, tok_ids: DataFrame
 ) -> DataFrame:
-    """General-vocabulary overlap core: per-doc sorted int-id arrays,
+    """General-vocabulary overlap core: per-doc int-id arrays,
     ``(doc_a, doc_b, na, nb, overlap)`` with overlap =
-    size(array_intersect) per candidate pair — shared by the Jaccard
-    and containment verifies (the measures differ only in the final
-    ratio)."""
+    size(array_intersect) per candidate pair."""
     itoks = (
         postings.join(tok_ids, "tok")
         .groupBy("doc_id", "n_tokens")
-        .agg(F.collect_list("tid").alias("toks"))
+        .agg(F.collect_list("tid").alias("set"))
     )
-    ta = itoks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("toks").alias("toks_a"),
-        F.col("n_tokens").alias("na"),
-    )
-    tb = itoks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("toks").alias("toks_b"),
-        F.col("n_tokens").alias("nb"),
-    )
-    overlap = F.size(F.array_intersect("toks_a", "toks_b"))
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select("doc_a", "doc_b", "na", "nb", overlap.alias("overlap"))
-    )
-
-
-def _verify_bitmask(
-    cand: DataFrame,
-    postings: DataFrame,
-    tok_ids: DataFrame,
-    n_vocab: int | None = None,
-) -> DataFrame:
-    """Small-vocabulary Jaccard verify over the shared bitmask
-    overlap core."""
-    return _overlap_bitmask(cand, postings, tok_ids, n_vocab).select(
-        "doc_a",
-        "doc_b",
-        _jaccard_expr(F.col("overlap")).alias("jaccard"),
+    return _pair_overlap(
+        cand, itoks, lambda a, b: F.size(F.array_intersect(a, b))
     )
 
 
 def _overlap_bitmask(
-    cand: DataFrame,
-    postings: DataFrame,
-    tok_ids: DataFrame,
-    n_vocab: int | None = None,
+    cand: DataFrame, postings: DataFrame, tok_ids: DataFrame, n_vocab: int
 ) -> DataFrame:
     """Small-vocabulary overlap core ``(doc_a, doc_b, na, nb,
-    overlap)``: token sets as ⌈|vocab|/64⌉-long
-    bitmask arrays, overlap = Σ popcount(a AND b) per block. The
-    dense bit positions come from a row_number over the MATERIALIZED
-    ≤``BITMASK_MAX_VOCAB``-row vocab frame (any frame with a ``tok``
-    column; bounded single-task window — allowlisted in
-    tests/test_plans.py), and each token's (block, bit value) is
-    precomputed in that tiny frame so the per-posting work is one
-    broadcast-join lookup + a bit_or aggregate. ``n_vocab`` lets the
-    PPJoin callers pass the count their fused vocab action already
-    measured instead of paying one more driver-sequenced job here."""
-    if n_vocab is None:
-        n_vocab = tok_ids.count()
+    overlap)``: token sets as ⌈n_vocab/64⌉-long bitmask arrays,
+    overlap = Σ popcount(a AND b) per block. ``tok_ids`` is any frame
+    with a ``tok`` column and ``n_vocab`` rows (the PPJoin index's
+    materialized vocab and the count its one action measured). The
+    dense bit positions come from a row_number over that frame
+    (bounded single-task window — allowlisted in tests/test_plans.py),
+    and each token's (block, bit value) is precomputed there, so the
+    per-posting work is one broadcast-join lookup + a bit_or
+    aggregate."""
     nblocks = max(1, (n_vocab + 63) // 64)
     dense = (
         tok_ids.select("tok")
@@ -521,30 +458,41 @@ def _overlap_bitmask(
                 lambda b: F.coalesce(
                     F.element_at("mm", b), F.lit(0).cast("long")
                 ),
-            ).alias("mask"),
+            ).alias("set"),
         )
     )
-    ta = masks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("mask").alias("mask_a"),
-        F.col("n_tokens").alias("na"),
-    )
-    tb = masks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("mask").alias("mask_b"),
-        F.col("n_tokens").alias("nb"),
-    )
-    overlap = F.aggregate(
-        F.zip_with(
-            "mask_a", "mask_b", lambda x, y: F.bit_count(x.bitwiseAND(y))
+    return _pair_overlap(
+        cand,
+        masks,
+        lambda a, b: F.aggregate(
+            F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseAND(y))),
+            F.lit(0),
+            lambda acc, v: acc + v,
         ),
-        F.lit(0),
-        lambda acc, v: acc + v,
     )
+
+
+def _pair_overlap(cand: DataFrame, sets: DataFrame, overlap) -> DataFrame:
+    """Join both sides' ``(doc_id, n_tokens, set)`` rows onto the
+    ``(doc_a, doc_b)`` candidates and score ``overlap(set_a, set_b)``:
+    ``(doc_a, doc_b, na, nb, overlap)``."""
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("set").alias(f"set_{s}"),
+            F.col("n_tokens").alias(f"n{s}"),
+        )
+
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select("doc_a", "doc_b", "na", "nb", overlap.alias("overlap"))
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            "na",
+            "nb",
+            overlap(F.col("set_a"), F.col("set_b")).alias("overlap"),
+        )
     )
 
 
@@ -635,28 +583,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks): the DuckDB oracle still scores all pairs and ranks.
 
     The fingerprinted token-set frame is eagerly
-    ``localCheckpoint``'ed inside :func:`_token_set_groups`: six
-    downstream branches (groups, members, reps, the PPJoin postings,
-    both verify sides) otherwise re-expand the tokenize + per-token
-    md5 subtree per consumer — the round-8 plan audit read 32 scans
-    / 27 exchanges for this query; post-fix the plan roots on the
-    one materialized pass.
+    ``localCheckpoint``'ed inside :func:`_token_set_groups`, so groups,
+    members, reps and the PPJoin index all read one materialized pass
+    instead of re-expanding the tokenize + per-token md5 subtree.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks_arr = docs.where(F.col("text").isNotNull()).select(
-        "doc_id",
-        _distinct_tokens(F.col("text")).alias("toks"),
-    ).withColumn("n_tokens", F.size("toks"))
-    members, groups, reps = _token_set_groups(toks_arr)
+    members, groups, reps = _token_set_groups(_doc_token_sets(spark, sf_dir))
     # Eagerly checkpointed: ``dir_pairs`` below reads this frame TWICE
-    # (once per direction), and unmaterialized each branch re-executes
-    # the whole candidate+verify subtree — the most expensive stages
-    # of the query, racing as two concurrent copies under AQE (the
-    # round-14 instability: identical runs swung 15–42 s with the
-    # double execution, 8–11 s materialized). The frame is the
-    # J ≥ t pair set over DISTINCT-token-set representatives — the
-    # collapsed grain every downstream consumer (clusters, PageRank,
-    # triangles) already banks on being index-sized.
+    # (once per direction), and each read would otherwise re-run the
+    # candidate join and overlap, the query's most expensive stages.
+    # It is the J ≥ t pair set over distinct-token-set representatives.
     rep_pairs = _jaccard_pairs_from(reps).localCheckpoint(eager=True)
 
     # K+1 smallest member ids per group (K matches even after
@@ -737,168 +672,49 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set CONTAINMENT pairs ``C(A→B) = |A∩B| / |A| ≥ t``
     — the asymmetric near-dup signal Jaccard misses: a short document
     wholly quoted inside a long one has high containment but low
-    Jaccard (boilerplate, quoted posts, templated pages).
-
-    Same prefix-filter family as :func:`dedup_ngram_jaccard` (AllPairs
-    / PPJoin, public), adapted to the asymmetric measure: if
-    ``C(A→B) ≥ t`` then A has at most ``|A| − ⌈t·|A|⌉`` tokens outside
-    B, so A must share one of its first ``|A| − ⌈t·|A|⌉ + 1`` tokens
-    in the global (document-frequency asc, token) order with *some*
-    token of B. Only A-side prefixes are indexed; the B side keeps
-    full postings — but because prefixes hold each document's RAREST
-    tokens, a corpus-wide hot token contributes ~zero prefix rows, so
-    join size is Σ_tok prefix_count(tok)·df(tok), not df².  There is
-    no upper length filter (a superset B can be arbitrarily long —
-    that is the point of containment), but each candidate occurrence
-    row passes the PPJoin positional bound before the distinct (see
-    :func:`_containment_pairs_from`). Verification is exact via the
-    vocab-adaptive bitmask/int-array overlap cores.
-
-    Shuffle ledger: DF agg + join (vocab-sized), one window by doc_id,
-    prefix⋈postings join, candidate verify joins — all linear in
-    postings/candidates.
+    Jaccard (boilerplate, quoted posts, templated pages). The core is
+    :func:`_containment_pairs_from`; this all-pairs form is the pytest
+    oracle of :func:`dedup_containment`.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks_arr = (
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", _distinct_tokens(F.col("text")).alias("toks"))
-        .withColumn("n_tokens", F.size("toks"))
-    )
-    return _containment_pairs_from(toks_arr)
+    return _containment_pairs_from(_doc_token_sets(spark, sf_dir))
 
 
 def _containment_pairs_from(toks_arr: DataFrame) -> DataFrame:
-    """A-prefix-indexed exact containment pairs over a (doc_id, toks,
-    n_tokens) frame — shared by the all-pairs pytest oracle and the
-    group-collapsed registered rollup.
+    """Exact containment pairs ``(doc_a, doc_b, n_tokens_a,
+    n_tokens_b, containment)`` with C(A→B) ≥ ``CONTAINMENT_THRESHOLD``
+    over a ``(doc_id, toks, n_tokens)`` frame — the core of the
+    all-pairs pytest oracle and of the group-collapsed registered
+    rollup.
 
-    Round-14 optimization (same treatment as the Jaccard PPJoin, and
-    the round's largest single find: this row ran 131 s exec-only at
-    sf0.1 off-headline): the prefix⋈postings candidate join is
-    output-exploding and was AQE-folded onto 1-2 tasks, and the
-    verify was a per-pair STRING ``array_intersect`` — the exact cost
-    the Jaccard family already retired with the vocab-adaptive
-    bitmask/int-dictionary overlap cores. Now: the candidate join is
-    hot/rare split + salted + explicitly widened (`_wide`), and the
-    verify reuses `_overlap_bitmask` / `_overlap_int_arrays` — the
-    measures differ only in the final ratio (overlap/|A| here).
-
-    Round-15: the candidate occurrence rows additionally pass the
-    PPJoin POSITIONAL filter (both join sides now carry their
-    df-order position from the one checkpointed window) before the
-    distinct — the same candidate-space cut the Jaccard core has had
-    since round 14, previously missing here because the B side
-    carried no position."""
+    If C(A→B) ≥ t, A has at most ``na − ⌈t·na⌉`` tokens outside B, so
+    only the A side is a prefix; the B side is every posting. Because
+    prefixes hold each document's RAREST tokens, a corpus-wide hot
+    token adds almost no A rows, and the join size is Σ_tok
+    prefix_count(tok)·df(tok), not df². There is no upper length
+    bound (a superset B can be arbitrarily long). A candidate row
+    passes ``doc_a ≠ doc_b``, ``nb ≥ α`` and the positional bound,
+    with ``α = ⌈t·na⌉`` the overlap C ≥ t needs. C is
+    ``round(o / na, 6)``."""
     t = CONTAINMENT_THRESHOLD
-    postings = toks_arr.select(
-        "doc_id", "n_tokens", F.explode("toks").alias("tok")
-    )
-    dfs = postings.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # The (tok, df) dictionary checkpoints FIRST (same shape as
-    # _jaccard_pairs_from): one action yields the verify-path n_vocab
-    # AND the hot-branch salt width, and the post_df join below reads
-    # the materialized vocab instead of re-running the groupBy.
-    vocab = dfs.localCheckpoint(eager=True)
-    vstats = vocab.agg(
-        F.count(F.lit(1)).alias("n_vocab"), F.max("df").alias("max_df")
-    ).first()
-    n_vocab = int(vstats.n_vocab)
-    n_salt = _salt_width(toks_arr, vstats.max_df or 0)
-    # Checkpointed once WITH the per-document df-order position: the
-    # prefix/posting branches below read the frame four ways
-    # (rare/hot × a/b); unmaterialized, each re-ran the explode + df
-    # join subtree — and the round-14 shape additionally re-ran the
-    # row_number window once per PREFIX branch while the B side
-    # carried no position at all. Folding the window into the
-    # checkpoint runs it exactly once and gives both join sides the
-    # position the PPJoin positional filter below needs (guide §3 —
-    # prune the exploding join's output before the distinct/verify).
-    w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    pos_df = (
-        postings.join(vocab, "tok")
-        .withColumn("pos", F.row_number().over(w))
-        .localCheckpoint(eager=True)
-    )
-    prefix = pos_df.where(
-        F.col("pos") <= F.col("n_tokens") - F.ceil(F.col("n_tokens") * t) + 1
-    ).select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("n_tokens").alias("na"),
-        "tok",
-        "df",
-        F.col("pos").alias("pa"),
-    )
-    posts_b = pos_df.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("n_tokens").alias("nb"),
-        "tok",
-        "df",
-        F.col("pos").alias("pb"),
-    )
-    # PPJoin positional filter adapted to containment (Xiao et al.
-    # 2008, same device as _jaccard_pairs_from): C(A→B) ≥ t needs
-    # overlap ≥ α = ⌈t·na⌉, a shared token at df-order positions
-    # (pa, pb) bounds the overlap by 1 + min(na − pa, nb − pb), and B
-    # must hold at least α tokens at all. For a TRUE pair the FIRST
-    # common token in df order satisfies both bounds (every matching
-    # token sits at or after it on both sides), so filtering each
-    # candidate OCCURRENCE row keeps at least that row per true pair
-    # — the .distinct() pair set the exact verify then scores loses
-    # only false candidates (sf0.1: 54M occurrence rows → 37M, 15.1M
-    # distinct pairs → 11.3M before the bitmask verify). The 1e-9
-    # nudge mirrors the Jaccard core: float ε at an exact integer
-    # boundary must not round α up past a true pair.
+    ix = _ppjoin_index(toks_arr)
     alpha = F.ceil(F.col("na") * F.lit(t) - F.lit(1e-9))
     filt = (
         (F.col("doc_a") != F.col("doc_b"))
         & (F.col("nb") >= alpha)
-        & (
-            F.least(
-                F.col("na") - F.col("pa"), F.col("nb") - F.col("pb")
-            )
-            + 1
-            >= alpha
-        )
+        & (_overlap_ubound() >= alpha)
     )
-    rare_cand = (
-        _wide(prefix.where(F.col("df") <= PPJOIN_HOT_DF), "tok")
-        .join(_wide(posts_b.where(F.col("df") <= PPJOIN_HOT_DF), "tok"), "tok")
-        .where(filt)
+    cand = _candidate_pairs(
+        _side(_prefix(ix.positioned, t), "a"),
+        _side(ix.positioned, "b"),
+        filt,
+        ix.n_salt,
     )
-    hot_a = prefix.where(F.col("df") > PPJOIN_HOT_DF).withColumn(
-        "salt", F.pmod(F.xxhash64("doc_a"), F.lit(n_salt)).cast("int")
-    )
-    hot_b = posts_b.where(F.col("df") > PPJOIN_HOT_DF).withColumn(
-        "salt",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<int>")
-        ),
-    )
-    hot_cand = (
-        _wide(hot_a, "tok", "salt")
-        .join(_wide(hot_b, "tok", "salt"), ["tok", "salt"])
-        .where(filt)
-    )
-    cand = (
-        _wide(
-            rare_cand.select("doc_a", "doc_b")
-            .unionByName(hot_cand.select("doc_a", "doc_b")),
-            "doc_a",
-            "doc_b",
-        )
-        .distinct()
-    )
-    if n_vocab <= BITMASK_MAX_VOCAB:
-        overlapped = _overlap_bitmask(cand, postings, vocab, n_vocab)
-    else:
-        overlapped = _overlap_int_arrays(
-            cand, postings, _token_dictionary(vocab)
-        )
     containment = F.round(
         F.col("overlap").cast("double") / F.col("na").cast("double"), 6
     )
     return (
-        overlapped.select(
+        _overlap(cand, ix)
+        .select(
             "doc_a",
             "doc_b",
             F.col("na").alias("n_tokens_a"),
@@ -917,23 +733,15 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment. Output ≤ 1 row per document at any duplication
     density; the pair query stays as the pytest oracle.
 
-    Compute collapses the same way as :func:`dedup_ngram_jaccard`:
-    containment is a token-set function, so identical-set documents
-    group first and the A-prefix PPJoin scores only distinct-set
-    representatives. The rollup then never materializes expanded
-    pairs at all — it is pure group arithmetic: a member of group G
-    has ``(|G|−1)`` intra-group hosts at containment 1.0 plus
+    Identical-set documents group first (:func:`_token_set_groups`),
+    as in :func:`dedup_ngram_jaccard`, and
+    :func:`_containment_pairs_from` scores only the distinct-set
+    representatives. The rollup never expands pairs: a member of
+    group G has ``(|G|−1)`` intra-group hosts at containment 1.0 plus
     ``Σ_H |H|`` over rep-level matches ``C(G→H) ≥ t``, and
     ``max_containment`` is 1.0 when ``|G|>1`` else the rep-level max.
-    Exactly the all-pairs rollup, at distinct-content pairwise cost.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks_arr = (
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", _distinct_tokens(F.col("text")).alias("toks"))
-        .withColumn("n_tokens", F.size("toks"))
-    )
-    members, groups, reps = _token_set_groups(toks_arr)
+    members, groups, reps = _token_set_groups(_doc_token_sets(spark, sf_dir))
     rep_pairs = _containment_pairs_from(reps)
     # Per source group: total members across matched host groups and
     # the best rep-level containment.
@@ -3293,18 +3101,11 @@ def dedup_longest_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session-scoped memo for the suffix-sort spine + tied-rows
-#: extension table shared by the LRS report, the scrub manifest and
-#: the composed scrub pipeline — keyed like similarity's
-#: exact-baseline memo: (applicationId, sf_dir, source mtime), so a
-#: new session, another scale factor, or a rewritten documents table
-#: never sees stale checkpoint blocks. The spine is the ExactSubstr
-#: family's shared index; building it once per (session, corpus) is
-#: the point. BOUNDED: inserting a key evicts every other entry for
-#: the same sf_dir (keep-latest-per-sf_dir) — a long-lived session
-#: sweeping rewritten corpora must not pin every prior corpus's
-#: checkpoint blocks.
-#: bench.py clears this (clear_plan_caches) before every timed run so
+#: Session memo (plans.catalog.session_memo) for the suffix-sort
+#: spine + tied-rows extension table shared by the LRS report, the
+#: scrub manifest and the composed scrub pipeline: the spine is the
+#: ExactSubstr family's shared index, built once per (session,
+#: corpus). clear_plan_caches empties it before every timed run so
 #: measurements stay cold-plan honest.
 _LRS_SPINE_CACHE: dict = {}
 
@@ -3325,38 +3126,18 @@ def _lrs_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
       suffix re-sliced to ``LRS_EXT_CAP`` tokens and carried as the
       joined string ``eks``.
     """
-    key = _lrs_cache_key(spark, sf_dir)
-    cached = _LRS_SPINE_CACHE.get(key)
-    if cached is None:
+
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        # ONE tokenize pass feeds both artifacts (round-13 fusion):
-        # the suffix build consumes the token table twice on its own
-        # (repartitionByRange's sampling job + the materialization)
-        # and the extension build a third time — un-fused, each
-        # consumption re-ran scan+regex-tokenize over the corpus.
-        # Checkpointing the token table trades one corpus-sized write
-        # for three tokenize passes (measured A/B in BASELINE.md; the
-        # curation.py:314 lesson cuts the other way only when the
-        # duplicated work is a lightweight agg, not a regex explode).
+        # One checkpointed tokenize pass feeds both artifacts: the
+        # suffix build reads the token table twice (the range
+        # partitioner's sampling job and the materialization) and the
+        # extension build a third time.
         toks = _lrs_toks(docs).localCheckpoint(eager=True)
         ranged = _lrs_suffix_from_toks(toks)
-        cached = (ranged, _lrs_ext_from_toks(ranged, toks))
-        for stale in [k for k in _LRS_SPINE_CACHE if k[1] == sf_dir]:
-            del _LRS_SPINE_CACHE[stale]
-        _LRS_SPINE_CACHE[key] = cached
-    return cached
+        return ranged, _lrs_ext_from_toks(ranged, toks)
 
-
-def _lrs_cache_key(spark: SparkSession, sf_dir: str):
-    """Memo key for the spine tables: (session, corpus path, corpus
-    mtime), so a new session or a rewritten corpus builds afresh."""
-    import os
-
-    try:
-        mtime = os.path.getmtime(f"{sf_dir}/documents.parquet")
-    except OSError:
-        mtime = -1.0
-    return (spark.sparkContext.applicationId, sf_dir, mtime)
+    return session_memo(_LRS_SPINE_CACHE, spark, sf_dir, "documents", build)
 
 
 def _lrs_toks(docs: DataFrame) -> DataFrame:

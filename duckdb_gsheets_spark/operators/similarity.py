@@ -37,7 +37,11 @@ from duckdb_gsheets_spark.functions.vectors import (
     to_double,
 )
 from duckdb_gsheets_spark.operators.registry import QueryDef
-from duckdb_gsheets_spark.plans.catalog import fan_out, load_table
+from duckdb_gsheets_spark.plans.catalog import (
+    fan_out,
+    load_table,
+    session_memo,
+)
 
 TOPK_K = 5
 N_QUERY_VECTORS = 10  # vec_id < 10 are the query set
@@ -2270,25 +2274,10 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _width_recall_rollup(spark, full, trunc)
 
 
-#: Session-scoped memo for the exact full-dim baseline the two prefix
-#: audits grade against — keyed by (applicationId, sf_dir, source
-#: mtime) so a new session (whose checkpoint blocks would be gone), a
-#: different scale factor, or a REWRITTEN embeddings table never sees
-#: a stale frame. Entries are bounded two ways: each is a
-#: |queries|·k-row checkpoint, and inserting a key EVICTS every other
-#: entry for the same sf_dir (keep-latest-per-sf_dir) — a long-lived
-#: session sweeping rewritten corpora must not pin every prior
-#: corpus's checkpoint blocks.
+#: Session memo (plans.catalog.session_memo) for the exact full-dim
+#: baseline the two prefix audits grade against; each entry is a
+#: |queries|·k-row checkpoint.
 _EXACT_BASELINE_CACHE: dict = {}
-
-
-def _source_mtime(path: str) -> float:
-    import os
-
-    try:
-        return os.path.getmtime(path)
-    except OSError:
-        return -1.0
 
 
 def _exact_baseline_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2307,22 +2296,15 @@ def _exact_baseline_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     join build, query spine, left-join probe) all read the same
     50-row checkpoint instead of re-deriving the scoring subtree.
     """
-    key = (
-        spark.sparkContext.applicationId,
+    return session_memo(
+        _EXACT_BASELINE_CACHE,
+        spark,
         sf_dir,
-        _source_mtime(f"{sf_dir}/embeddings.parquet"),
+        "embeddings",
+        lambda: ann_cosine_topk(spark, sf_dir)
+        .select("vec_a", "vec_b")
+        .localCheckpoint(eager=True),
     )
-    cached = _EXACT_BASELINE_CACHE.get(key)
-    if cached is None:
-        cached = (
-            ann_cosine_topk(spark, sf_dir)
-            .select("vec_a", "vec_b")
-            .localCheckpoint(eager=True)
-        )
-        for stale in [k for k in _EXACT_BASELINE_CACHE if k[1] == sf_dir]:
-            del _EXACT_BASELINE_CACHE[stale]
-        _EXACT_BASELINE_CACHE[key] = cached
-    return cached
 
 
 def _width_recall_rollup(

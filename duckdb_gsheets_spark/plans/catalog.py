@@ -59,6 +59,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def session_memo(
+    cache: dict, spark: SparkSession, sf_dir: str, name: str, build
+):
+    """``cache``'s value for one table of one corpus in this session,
+    made by ``build()`` on a miss.
+
+    The key is ``(applicationId, sf_dir, mtime of <name>.parquet)``, so a
+    new session (whose checkpoint blocks are gone), another scale factor
+    or a rewritten table builds afresh. Inserting a key evicts every
+    other entry for the same ``sf_dir``: a long-lived session sweeping
+    rewritten corpora keeps only the latest one's blocks."""
+    try:
+        mtime = os.path.getmtime(os.path.join(sf_dir, f"{name}.parquet"))
+    except OSError:
+        mtime = -1.0
+    key = (spark.sparkContext.applicationId, sf_dir, mtime)
+    if key not in cache:
+        value = build()
+        for stale in [k for k in cache if k[1] == sf_dir]:
+            del cache[stale]
+        cache[key] = value
+    return cache[key]
+
+
 def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism
     when the upstream scan yields fewer partitions.

@@ -2,11 +2,10 @@
 
 What :func:`get_spark` sets, and why:
 
-- a UTC session timezone and naive parquet timestamps read as
-  ``TIMESTAMP_NTZ``, so results compare exactly with the DuckDB oracles;
+- a UTC session timezone, so results compare exactly with the DuckDB
+  oracles (naive parquet timestamps already read as ``TIMESTAMP_NTZ``
+  and AQE is already on: both are Spark's defaults);
 - Arrow transfer, which the pandas-UDF operators and ``toPandas`` use;
-- AQE, which coalesces small shuffle partitions and picks broadcast
-  joins once it sees a side's size;
 - local mode over the CPUs this process may run on, unless
   ``SPARK_GRAFT_CPUS`` says otherwise;
 - for a new driver JVM (:func:`_driver_java_options`): start-up from a
@@ -261,18 +260,11 @@ def get_spark(
         .master(master)
         # Correctness knobs: deterministic cross-engine comparison.
         .config("spark.sql.session.timeZone", "UTC")
-        # AQE re-plans shuffles at runtime: it coalesces tiny partitions,
-        # splits skewed ones and converts SMJ->BHJ when a side turns out
-        # small.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE (on by default: partition coalescing, skew-join splits,
+        # SMJ->BHJ) sizes shuffles from this starting width.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for any pandas-UDF / toPandas path (vectorized transfer).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Read timestamps without timezone as TIMESTAMP_NTZ, matching
-        # DuckDB's naive-timestamp semantics for the test parquet.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         # Some test parquet files carry TIMESTAMP(NANOS) which the
         # vectorized reader rejects; read them as long and convert in
         # the catalog loader (micros precision is preserved).

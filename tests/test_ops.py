@@ -357,18 +357,18 @@ def test_neardup_blocked_matches_exact_on_planted(spark):
 
 
 def test_bitmask_and_int_array_verify_agree(spark):
-    """The vocab-adaptive verify is an exact optimization: on the same
-    candidate set, the small-vocab bitmask path and the general
-    int-array path must produce identical (pair, jaccard) rows —
-    including a vocabulary that spans MULTIPLE 64-bit mask blocks
-    (130 distinct tokens -> 3 blocks) so the cross-block popcount sum
-    is exercised, not just block 0."""
+    """The vocab-adaptive overlap is an exact optimization: on the same
+    candidate set, the small-vocab bitmask core and the general
+    int-array core must produce identical ``(doc_a, doc_b, na, nb,
+    overlap)`` rows — including a vocabulary that spans MULTIPLE
+    64-bit mask blocks (130 distinct tokens -> 3 blocks) so the
+    cross-block popcount sum is exercised, not just block 0."""
     import random
 
     from duckdb_gsheets_spark.operators.dedup import (
+        _overlap_bitmask,
+        _overlap_int_arrays,
         _token_dictionary,
-        _verify_bitmask,
-        _verify_int_arrays,
     )
 
     rng = random.Random(7)
@@ -386,22 +386,19 @@ def test_bitmask_and_int_array_verify_agree(spark):
     )
     dfs = postings.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     tok_ids = _token_dictionary(dfs)
+    n_vocab = tok_ids.count()
     cand = (
         toks_arr.select(F.col("doc_id").alias("doc_a"))
         .crossJoin(toks_arr.select(F.col("doc_id").alias("doc_b")))
         .where(F.col("doc_a") < F.col("doc_b"))
     )
-    bm = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in _verify_bitmask(cand, postings, tok_ids).collect()
-    }
-    ia = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in _verify_int_arrays(cand, postings, tok_ids).collect()
-    }
+    bm = _overlap_bitmask(cand, postings, tok_ids, n_vocab).collect()
+    ia = _overlap_int_arrays(cand, postings, tok_ids).collect()
+    bm, ia = set(map(tuple, bm)), set(map(tuple, ia))
+    assert n_vocab == 130
     assert bm == ia
     assert len(bm) == 40 * 39 // 2
-    assert any(v > 0 for v in bm.values())
+    assert any(r[4] > 0 for r in bm)
 
 
 def test_prefix_filtered_jaccard_equals_all_pairs(spark):
@@ -533,6 +530,93 @@ def test_containment_positional_filter_keeps_threshold_pairs(
     assert (1, 2, 0.8) in got      # the exact-boundary pair survived
     assert (4, 1, 1.0) in got and (4, 2, 1.0) in got
     assert all(d != 3 for (d, _, _) in got)  # below-threshold A pruned
+
+
+def test_pair_cores_large_vocab_and_hot_tokens_equal_naive_scan(spark):
+    """Both PPJoin pair cores on a corpus the generated testdata never
+    produces: a vocabulary past ``BITMASK_MAX_VOCAB`` (so the overlap
+    runs on dictionary-encoded int arrays, not bitmasks), hot tokens
+    past ``PPJOIN_HOT_DF`` (the salted join branch) next to shared rare
+    tokens (the plain branch), and planted pairs exactly at the
+    thresholds: J = 6/8 = 0.75 and C = 4/5 = 0.8, plus near misses
+    just below each. Each core must equal a naive crossJoin +
+    array_intersect scan."""
+    from duckdb_gsheets_spark.operators.dedup import (
+        BITMASK_MAX_VOCAB,
+        CONTAINMENT_THRESHOLD,
+        NGRAM_JACCARD_THRESHOLD,
+        PPJOIN_HOT_DF,
+        _containment_pairs_from,
+        _jaccard_pairs_from,
+    )
+
+    assert (NGRAM_JACCARD_THRESHOLD, CONTAINMENT_THRESHOLD) == (0.75, 0.8)
+    hot = [f"hot{i}" for i in range(4)]
+    # 300 background docs: the four hot tokens plus 17 tokens of their
+    # own -> 5,104 distinct tokens, each hot token at df >= 300.
+    docs = [(i, hot + [f"u{i}_{j}" for j in range(17)]) for i in range(300)]
+    s, r, q, p = (
+        [f"{c}{j}" for j in range(1, 6)] for c in ("s", "r", "q", "p")
+    )
+    docs += [
+        (1000, ["hot0", *s, "a"]),         # J(1000, 1001) = 6/8 = 0.75
+        (1001, ["hot0", *s, "b"]),
+        (1002, [*r, "c"]),                 # J = 5/7, C = 5/6
+        (1003, [*r, "d"]),
+        (1004, [*q[:4], "e"]),             # C(1004 -> 1005) = 4/5 = 0.8
+        (1005, [*q[:4], "f1", "f2", "f3", "f4", "f5", "f6"]),
+        (1006, [*p[:3], "g"]),             # C(1006 -> 1007) = 3/4
+        (1007, [*p[:3], "h1", "h2", "h3", "h4"]),
+        (1008, [*hot, "k"]),               # pairs only through hot tokens
+        (1009, list(hot)),
+    ]
+    toks_arr = spark.createDataFrame(
+        [(d, t, len(t)) for d, t in docs],
+        "doc_id long, toks array<string>, n_tokens int",
+    )
+    postings = toks_arr.select("doc_id", F.explode("toks").alias("tok"))
+    dfs = [r["count"] for r in postings.groupBy("tok").count().collect()]
+    assert len(dfs) > BITMASK_MAX_VOCAB
+    assert max(dfs) > PPJOIN_HOT_DF
+    assert any(1 < d <= PPJOIN_HOT_DF for d in dfs)
+
+    a = toks_arr.selectExpr("doc_id AS doc_a", "toks AS ta")
+    b = toks_arr.selectExpr("doc_id AS doc_b", "toks AS tb")
+    ov = F.size(F.array_intersect("ta", "tb")).cast("double")
+    na, nb = F.size("ta"), F.size("tb")
+    jac = F.round(ov / (na + nb - ov), 6)
+    cont = F.round(ov / na.cast("double"), 6)
+    pairs = a.crossJoin(b)
+    naive_j = {
+        (x.doc_a, x.doc_b, x.j)
+        for x in pairs.where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", jac.alias("j"))
+        .where(F.col("j") >= NGRAM_JACCARD_THRESHOLD)
+        .collect()
+    }
+    naive_c = {
+        (x.doc_a, x.doc_b, x.na, x.nb, x.c)
+        for x in pairs.where(F.col("doc_a") != F.col("doc_b"))
+        .select(
+            "doc_a", "doc_b", na.alias("na"), nb.alias("nb"), cont.alias("c")
+        )
+        .where(F.col("c") >= CONTAINMENT_THRESHOLD)
+        .collect()
+    }
+    got_j = {
+        (x.doc_a, x.doc_b, x.jaccard)
+        for x in _jaccard_pairs_from(toks_arr).collect()
+    }
+    got_c = {
+        (x.doc_a, x.doc_b, x.n_tokens_a, x.n_tokens_b, x.containment)
+        for x in _containment_pairs_from(toks_arr).collect()
+    }
+    assert got_j == naive_j
+    assert got_c == naive_c
+    assert {(1000, 1001, 0.75), (1008, 1009, 0.8)} <= got_j
+    assert not any(x[:2] == (1002, 1003) for x in got_j)
+    assert {(1004, 1005, 5, 10, 0.8), (1008, 0, 5, 21, 0.8)} <= got_c
+    assert not any(x[:2] == (1006, 1007) for x in got_c)
 
 
 def test_bigram_topk_matches_positional_join(spark):

@@ -973,16 +973,14 @@ def test_no_unpartitioned_corpus_window_across_entire_registry(spark):
         # sealed behind the round-14 candidate checkpoint (the
         # min/max-struct aggregate rebuild) and no longer appear in
         # the registered plans.
-        # dedup_ngram_jaccard's bitmask-dictionary window (dense bit
-        # positions over the ≤BITMASK_MAX_VOCAB-row vocab) is sealed
-        # behind the round-14 rep_pairs checkpoint and no longer
-        # appears in the registered plan.
-        # dedup_containment routes through the same bitmask overlap
-        # core since round 14: its dictionary window ranks the
-        # CHECKPOINTED ≤BITMASK_MAX_VOCAB-row vocab frame (bounded
-        # independent of corpus size — the guarded branch falls back
-        # to the int-dictionary core past that cap), and its final
-        # plan is not checkpoint-sealed, so the window is visible.
+        # Both token-set pair cores share one PPJoin index and one
+        # overlap routine (dedup._overlap). On a vocabulary of at most
+        # BITMASK_MAX_VOCAB tokens the bitmask core numbers the tokens
+        # with a window over the CHECKPOINTED vocab frame, which is
+        # bounded by that cap at any corpus size (a larger vocabulary
+        # takes the windowless int-dictionary core). dedup_containment's
+        # final plan shows that window; dedup_ngram_jaccard's plan
+        # roots on its rep_pairs checkpoint, which hides it.
         "dedup_containment",
     }
     # privacy_k_anonymity's total-share broadcast is over the ≤3-row
