@@ -215,7 +215,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 class _PPJoinIndex(NamedTuple):
     """The PPJoin index both pair cores build (:func:`_ppjoin_index`)."""
 
-    postings: DataFrame
     vocab: DataFrame
     n_vocab: int
     n_salt: int
@@ -227,8 +226,6 @@ def _ppjoin_index(toks_arr: DataFrame) -> _PPJoinIndex:
     WWW'07; Xiao et al., WWW'08) over a ``(doc_id, toks, n_tokens)``
     frame:
 
-    * ``postings`` — ``(doc_id, n_tokens, tok)``, one row per distinct
-      token of a document; the overlap cores read it.
     * ``vocab`` — ``(tok, df)``, eagerly checkpointed: the position
       window, the salt width and the overlap representation all read
       it, and none re-runs the explode + groupBy.
@@ -238,7 +235,8 @@ def _ppjoin_index(toks_arr: DataFrame) -> _PPJoinIndex:
     * ``positioned`` — the postings plus ``df`` and ``pos``, each
       token's 1-based place in its document's global (df asc, tok)
       order, eagerly checkpointed: the candidate join reads it four
-      ways (rare/hot × A/B).
+      ways (rare/hot × A/B), and the overlap cores read its
+      ``(doc_id, n_tokens, tok)`` rows (:func:`_overlap`).
     """
     postings = toks_arr.select(
         "doc_id", "n_tokens", F.explode("toks").alias("tok")
@@ -258,7 +256,6 @@ def _ppjoin_index(toks_arr: DataFrame) -> _PPJoinIndex:
         .localCheckpoint(eager=True)
     )
     return _PPJoinIndex(
-        postings,
         vocab,
         int(vstats.n_vocab),
         _salt_width(toks_arr, vstats.max_df or 0),
@@ -342,10 +339,14 @@ def _overlap(cand: DataFrame, ix: _PPJoinIndex) -> DataFrame:
     overlap on fixed-width bitmasks (:func:`_overlap_bitmask`); a
     larger one on dictionary-encoded int arrays
     (:func:`_overlap_int_arrays`), the sparse form that stays small
-    when sets hold far fewer tokens than the vocabulary."""
+    when sets hold far fewer tokens than the vocabulary. Both read the
+    postings as the ``(doc_id, n_tokens, tok)`` columns of the
+    checkpointed ``positioned`` frame, not as a second explode of the
+    token arrays."""
+    postings = ix.positioned.select("doc_id", "n_tokens", "tok")
     if ix.n_vocab <= BITMASK_MAX_VOCAB:
-        return _overlap_bitmask(cand, ix.postings, ix.vocab, ix.n_vocab)
-    return _overlap_int_arrays(cand, ix.postings, _token_dictionary(ix.vocab))
+        return _overlap_bitmask(cand, postings, ix.vocab, ix.n_vocab)
+    return _overlap_int_arrays(cand, postings, _token_dictionary(ix.vocab))
 
 
 def _jaccard_pairs_from(toks_arr: DataFrame) -> DataFrame:

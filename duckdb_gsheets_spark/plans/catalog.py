@@ -2,18 +2,21 @@
 
 Tables are the TPC-H-ish star schema plus ``events`` (stream-shaped),
 ``documents`` (text corpus) and ``embeddings`` (vector corpus); see
-TESTDATA.md.  At 100 TB these would be partitioned/bucketed external
-tables; the loaders stay pure ``spark.read.parquet`` so Catalyst gets
+TESTDATA.md.  The loaders stay plain parquet scans, so Catalyst gets
 predicate pushdown, column pruning and partition pruning for free.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -33,29 +36,71 @@ TABLES: tuple[str, ...] = (
 TINY_DIMS: frozenset[str] = frozenset({"region", "nation"})
 
 
+#: The footer key under which Spark stores the schema of a frame it
+#: writes; Spark's reader returns that schema when the key is there.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType, list[str]]:
+    """The schema Spark's parquet reader infers for ``path``, read from
+    one footer with pyarrow, and the top-level columns stored as
+    ``TIMESTAMP(NANOS)``, which it gives as ``long``.
+
+    A directory, as Spark writes one, is read from its first data file
+    by name. A file Spark wrote carries its schema in the footer, and
+    that is the schema. Otherwise the arrow schema converts: a naive
+    timestamp is ``TIMESTAMP_NTZ`` when the session's
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on, and a
+    ``TIMESTAMP(NANOS)`` column is ``long``, as under
+    ``spark.sql.legacy.parquet.nanosAsLong``.
+    """
+    if os.path.isdir(path):
+        path = min(
+            os.path.join(path, name)
+            for name in os.listdir(path)
+            if not name.startswith(("_", "."))
+        )
+    footer = pq.read_schema(path)
+    stored = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored)), []
+    nanos = [
+        field.name
+        for field in footer
+        if pa.types.is_timestamp(field.type) and field.type.unit == "ns"
+    ]
+    footer = pa.schema(
+        [f.with_type(pa.int64()) if f.name in nanos else f for f in footer]
+    )
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return from_arrow_schema(footer, prefer_timestamp_ntz=ntz), nanos
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table. Plain parquet scan → full pushdown support."""
+    """Load one test table: a parquet scan given its schema from the
+    file's footer (:func:`_footer_schema`), so building a plan runs no
+    Spark job, where ``spark.read.parquet`` without a schema runs one
+    per call to infer it. ``tests/test_catalog.py`` checks that the two
+    schemas are equal for every table.
+
+    A ``TIMESTAMP(NANOS)`` column converts to ``timestamp_ntz`` at
+    microsecond precision, so downstream plans see one type whatever
+    unit a corpus stores. The test data store microseconds at every
+    scale factor; the conversion is for corpora written with
+    nanoseconds.
+    """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    # The driver harness builds a vanilla SparkSession (none of
-    # plans/session.py's confs apply), and events.parquet carries
-    # TIMESTAMP(NANOS) columns that a vanilla read rejects with
-    # PARQUET_TYPE_ILLEGAL. nanosAsLong is a runtime-settable SQL conf,
-    # so set it here — the one choke point every query loads through —
-    # and normalize the resulting long below.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # TIMESTAMP(NANOS) parquet columns arrive as long (see session.py
-    # nanosAsLong); normalize to timestamp_ntz at micro precision so
-    # downstream plans see one type at every scale factor.
-    for field in df.schema.fields:
-        if field.name == "ts" and isinstance(field.dataType, LongType):
-            # Integer `div` (not `/`): epoch-nanos overflow double
-            # precision, off-by-one-microsecond errors otherwise.
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-            )
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, nanos = _footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    for column in nanos:
+        # Integer `div` (not `/`): epoch-nanos overflow double
+        # precision, off-by-one-microsecond errors otherwise.
+        df = df.withColumn(
+            column,
+            F.timestamp_micros(F.expr(f"`{column}` div 1000")).cast("timestamp_ntz"),
+        )
     return df
 
 

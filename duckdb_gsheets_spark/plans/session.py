@@ -6,6 +6,9 @@ What :func:`get_spark` sets, and why:
   oracles (naive parquet timestamps already read as ``TIMESTAMP_NTZ``
   and AQE is already on: both are Spark's defaults);
 - Arrow transfer, which the pandas-UDF operators and ``toPandas`` use;
+- a generated-class cache (:data:`CODEGEN_CACHE_ENTRIES`) large
+  enough that a session repeating a pass of corpus queries compiles
+  each class once, not on every pass;
 - local mode over the CPUs this process may run on, unless
   ``SPARK_GRAFT_CPUS`` says otherwise;
 - for a new driver JVM (:func:`_driver_java_options`): start-up from a
@@ -54,6 +57,16 @@ _COLLECTOR = re.compile(r"-XX:\+Use\w+GC\b")
 #: The first word of a complete JDK dynamic archive. The JVM writes the
 #: header last, so a recording cut short starts with zeros.
 _ARCHIVE_MAGIC = (0xF00BABA8).to_bytes(4, sys.byteorder)
+
+#: ``spark.sql.codegen.cache.maxEntries``: how many compiled classes
+#: the driver keeps (Spark's default is 100). One pass over
+#: perfbench's ``corpus_ops`` queries compiles 137 distinct classes
+#: with Janino; a cache smaller than the cycle it serves keeps none of
+#: them for the next pass, which then compiles again. The cache is a
+#: Guava cache that splits its maximum over 4 segments and evicts per
+#: segment, so 256 (64 a segment) holds a pass whose classes hash
+#: unevenly across segments (34 a segment on average).
+CODEGEN_CACHE_ENTRIES = 256
 
 
 def _cache_dir() -> str:
@@ -265,9 +278,12 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for any pandas-UDF / toPandas path (vectorized transfer).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Some test parquet files carry TIMESTAMP(NANOS) which the
-        # vectorized reader rejects; read them as long and convert in
-        # the catalog loader (micros precision is preserved).
+        # A static conf: it sizes the cache once per JVM.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Without it, inferring the schema of a parquet file with a
+        # TIMESTAMP(NANOS) column fails; with it, the column reads as
+        # long. catalog.load_table does not infer, and converts such a
+        # column itself.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )

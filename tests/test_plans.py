@@ -3,7 +3,9 @@ promises (pushdown, pruning, broadcasts, no stray cross joins, no
 unpartitioned corpus-sized windows) pinned as tests so a refactor
 can't silently regress them."""
 
-from duckdb_gsheets_spark.operators import all_queries
+import pytest
+
+from duckdb_gsheets_spark.operators import all_queries, dedup
 
 SF = "/root/testdata/sf0.001"
 
@@ -322,6 +324,20 @@ def test_containment_rollup_collapses_identical_sets(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "md5" in _token_set_groups_builder_plan(spark)
+
+
+@pytest.mark.parametrize("core", ["_jaccard_pairs_from", "_containment_pairs_from"])
+def test_pair_cores_explode_the_token_arrays_once(spark, core):
+    """The pair cores of ``dedup_ngram_jaccard`` and ``dedup_containment``
+    explode the token arrays once, into the checkpointed PPJoin index,
+    and the overlap step reads that checkpoint. The one ``Generate
+    explode`` left replicates the hot tokens' B rows over the salts.
+    ``dedup_ngram_jaccard``'s own plan roots on its checkpointed pairs,
+    so the cores are pinned here."""
+    pairs = getattr(dedup, core)(dedup._doc_token_sets(spark, SF))
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Generate explode") == 1
+    assert "explode(toks" not in plan
 
 
 def test_duplicate_passages_count_shuffle_never_carries_text(spark):

@@ -1,11 +1,13 @@
-"""``plans.session.get_spark``: how it sizes local mode, and the heap
-policy the driver JVM of the test session runs with."""
+"""``plans.session.get_spark``: how it sizes local mode, the heap
+policy the driver JVM of the test session runs with, and its
+generated-class cache."""
 
 import os
 
 import pytest
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from duckdb_gsheets_spark.plans import session
 
@@ -53,3 +55,30 @@ def test_the_driver_jvm_young_generation_is_at_most_512_mb(spark, management):
         )
     )
     assert int(hotspot.getVMOption("MaxNewSize").getValue()) <= 512 * 1024**2
+
+
+def test_a_repeated_round_of_statements_compiles_no_class(spark):
+    """Statements that compile more distinct classes than Spark's
+    default cache of 100 holds, run twice in the same order: the second
+    round finds every class in the cache. A cache smaller than the
+    round evicts each class before its next use and compiles the round
+    again."""
+    assert (
+        int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+        == session.CODEGEN_CACHE_ENTRIES
+    )
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def round_():
+        # A literal is compiled into the classes, so each one is
+        # distinct; a statement compiles two.
+        for i in range(60):
+            spark.range(1).select((F.col("id") * 31 + i).alias("x")).collect()
+
+    start = compiles.getCount()
+    round_()
+    first = compiles.getCount()
+    assert first - start > 100
+    round_()
+    assert compiles.getCount() == first
