@@ -51,16 +51,11 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity in double precision."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine with precomputed norms — bitwise-identical to
-    :func:`cosine` (same fold, same operation order) but evaluates
-    each vector's norm ONCE per row instead of once per pair: in a
-    k-candidate scorer that's 2k norm folds saved per row."""
+    """Cosine similarity in double precision from precomputed norms:
+    ``dot(a, b) / (norm_a · norm_b)``, the DuckDB oracle's operation
+    order. Each vector's norm is folded once per row, not once per
+    pair: in a k-candidate scorer that saves 2k norm folds per row."""
     return dot(a, b) / (norm_a * norm_b)
 
 

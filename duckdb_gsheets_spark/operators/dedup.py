@@ -2491,8 +2491,8 @@ def neardup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer aggregates over edges; triangles ride the degree-ordered
     orientation. The three 1-row aggregates combine via broadcast
     cross joins. Degree co-moments stay in int64 here (Σ deg² over
-    edges); a hub-heavy trillion-edge graph would move them to
-    DECIMAL(38,0) accumulators, same as dsum_decimal.
+    edges, exact while under 2^63 ≈ 9.2e18); a graph whose Σ deg²
+    passes that would need DECIMAL(38,0) accumulators.
     """
     edges = _canonical_topk_edges(spark, sf_dir)
     deg = _edge_degrees(edges)

@@ -14,12 +14,12 @@ deterministic.
 representation error (~1e-12 relative) is far below 0.5 ulp of the
 scaled value for the magnitudes in play. Long overflow bound:
 |Σ x·10^s| must stay under 2^63 — at scale=6 that is ~9.2e12 in
-column units, comfortable through sf10 here; for corpora beyond that
-use :func:`dsum_decimal` (exact DECIMAL accumulation, ~3× slower —
-measured on the q1 aggregate at sf0.1).
+column units, comfortable through sf10 here. A sum past that bound
+needs DECIMAL accumulation instead (``SUM(CAST(x AS DECIMAL(p,s)))``
+in both engines, ~3× slower — measured on the q1 aggregate at sf0.1).
 
-This also matters at 100 TB: a result that changes with partition
-count is untestable; these helpers pin it.
+A result that changes with partition count is untestable; these
+helpers pin it.
 """
 
 from __future__ import annotations
@@ -48,14 +48,6 @@ def davg(col: Column | str, scale: int = 2) -> Column:
     """
     col = F.col(col) if isinstance(col, str) else col
     return dsum(col, scale) / F.count(col)
-
-
-def dsum_decimal(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
-    """DECIMAL-accumulating variant for magnitudes beyond the long
-    bound. Oracle: ``CAST(SUM(CAST(x AS DECIMAL(p,s))) AS DOUBLE)``.
-    """
-    col = F.col(col) if isinstance(col, str) else col
-    return F.sum(col.cast(f"decimal({precision},{scale})")).cast("double")
 
 
 def round_half_away(x: float, ndigits: int = 6) -> float:

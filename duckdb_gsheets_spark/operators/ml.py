@@ -135,7 +135,7 @@ def _assign_sim_np(centroids: np.ndarray):
 #: integer sum is partition-order-independent — the iterative model
 #: state never accumulates float drift. Long bound: |Σ x·1e6| < 2^63
 #: ⇒ ~9.2e12 in column units per group — comfortable through sf100;
-#: beyond that widen to DECIMAL (determinism.dsum_decimal shape).
+#: beyond that the sums must widen to DECIMAL(38,0).
 EMB_SCALE = 1_000_000
 
 

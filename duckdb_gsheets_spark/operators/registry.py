@@ -139,9 +139,11 @@ _ORACLELESS_TAIL: tuple[str, ...] = (
 def all_queries() -> dict[str, QueryDef]:
     """Collect every registered query across operator modules.
 
-    Insertion order is deliberate (see _PRIORITY_TAIL): LLM-data-pipeline
-    operators first, then windows/events, then a curated relational
-    head, then the rest of the TPC-H battery.
+    Insertion order is deliberate: the ``_WINDOW`` queries first (the
+    first 50 entries, each with an oracle), then every other query in
+    module order (pipeline, dedup, similarity, text, ... curation, as
+    listed below) and each module's ``QUERIES`` order, then the
+    oracle-less ``_ORACLELESS_TAIL`` last.
     """
     from duckdb_gsheets_spark.operators import (
         chunking,

@@ -1,25 +1,47 @@
-"""Similarity search over the ``embeddings`` table (array<float>):
+"""Similarity search and embedding audits over the ``embeddings``
+table (``vec_id``, ``label``, ``embedding`` array<float>). 23 queries:
 
-* brute-force cosine top-k (the exact baseline, oracle-checked),
-* random-hyperplane LSH bucketed ANN (the scale path),
-* embedding near-dup pairs (cosine threshold, oracle-checked),
-* per-vector norm statistics (oracle-checked).
+* the exact cosine top-k (``ann_cosine_topk``), the baseline every
+  approximate method is graded against, and the k-NN label vote built
+  on it (``knn_label_probe``);
+* approximate top-k: random-hyperplane LSH (``ann_lsh_topk``),
+  IVF-Flat (``ann_ivf_topk``), product-quantization ADC
+  (``ann_pq_adc_topk``), IVF-PQ (``ann_ivfpq_topk``), SQ8
+  (``ann_sq8_topk``) and SQ8 with an exact float rerank
+  (``ann_sq8_rerank_topk``);
+* audits of those methods against the baseline: recall@k
+  (``ann_recall_report``, ``ann_nprobe_recall_curve``,
+  ``ann_matryoshka_recall``, ``ann_prefix_ivf_recall``,
+  ``ann_sq8_recall``, ``ann_sq8_rerank_recall``), nDCG@k
+  (``ann_ndcg_report``) and IVF list balance
+  (``ann_ivf_balance_report``);
+* MMR diversification of the cosine pool (``ann_mmr_rerank``);
+* embedding checks: ``embedding_stats``, ``embedding_quantize``,
+  ``embedding_isotropy``, ``embedding_doc_coverage``, LSH-blocked
+  near-duplicate pairs (``embedding_neardup_pairs``) and lexical
+  near-dup pairs scored by cosine (``dedup_lexical_semantic_pairs``).
 
-Two scoring paths by design (see functions.vectors): hash-checked
-queries use the JVM-side HOF fold whose summation order matches the
-DuckDB oracle; the approximate ANN paths (LSH buckets, IVF assignment,
-candidate scoring) use Arrow-batched numpy GEMMs — ~10× faster per
-fold than interpreted HOFs, with < 1e-12 drift erased by the 6-decimal
-round. The LSH plane matrix / centroid table are tiny deterministic
-numpy arrays shipped in the UDF closure (broadcast-equivalent). At
-100 TB the brute-force scorer is what you run per-bucket AFTER
-blocking (LSH/IVF) bounds the candidate set; both stages ship here.
+Every top-k query scores (query, candidate) pairs and keeps each
+query's first ``TOPK_K`` by ``(sim DESC, vec_b)``: :func:`_rank_cut`
+does that in Spark and :func:`_topk_sql` in the oracles;
+:func:`_exact_topk_cte` is the oracle's exact baseline and
+:func:`_recall_rollup` / :func:`_recall_rollup_sql` the recall audit.
+
+Two scoring paths by design (see functions.vectors): queries whose
+result is the exact scorer's use the JVM-side HOF fold, whose
+summation order matches the DuckDB oracle; the approximate paths (LSH
+buckets, IVF assignment, candidate scoring) use Arrow-batched numpy
+GEMMs, about 10× faster per fold than interpreted HOFs, with < 1e-12
+drift erased by the 6-decimal round. The LSH plane matrix, the IVF
+centroids and the PQ codebook are small deterministic numpy arrays
+shipped in the kernel closures.
 """
 
 from __future__ import annotations
 
 import math
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -67,71 +89,198 @@ WITH v AS (
 """
 
 
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: exact ANN baseline.
+def _rank_cut(
+    df: DataFrame,
+    sim: str,
+    k: int = TOPK_K,
+    keys: tuple[str, ...] = ("vec_a",),
+    rank: str = "rank",
+) -> DataFrame:
+    """The cut every top-k query ends in: number each ``keys``
+    partition's rows by ``(sim DESC, vec_b)``, a total order, and keep
+    the first ``k`` as ``(*keys, vec_b, sim, rank)``."""
+    w = Window.partitionBy(*keys).orderBy(F.desc(sim), F.col("vec_b"))
+    return (
+        df.withColumn(rank, F.row_number().over(w))
+        .where(F.col(rank) <= k)
+        .select(*keys, "vec_b", sim, rank)
+    )
 
-    Query set (vec_id < N) is broadcast against the corpus; scoring is
-    one JVM HOF fold per pair (interpreted, not codegen — see
-    functions.vectors — but shuffle-free and oracle-order-exact);
-    ranking is a per-query window with a
-    rounded-similarity + vec_id tiebreak so order is engine-stable.
 
-    The bounded query batch is collected once and re-shipped as a
-    literal relation (exact doubles survive the round trip), so the
-    broadcast build doesn't re-scan the corpus; norms still come from
-    the JVM HOF fold — this query is hash-checked, and the fold's
-    summation order is the oracle contract.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("vec_b"), to_double(F.col("embedding")).alias("emb_b")
-    ).withColumn("norm_b", norm(F.col("emb_b")))
-    q_rows = _driver_vec_rows(sf_dir, list(range(N_QUERY_VECTORS)))
-    queries = spark.createDataFrame(
-        [(int(r.vec_id), list(r.emb)) for r in q_rows],
+def _topk_sql(name: str, src: str, sim: str, k: int = TOPK_K) -> str:
+    """The oracle twin of :func:`_rank_cut`: CTE ``name`` keeps each
+    query's first ``k`` rows of ``src`` by ``(sim DESC, vec_b)`` as
+    ``(vec_a, vec_b, sim, rank)``."""
+    return f"""{name} AS (
+  SELECT vec_a, vec_b, {sim},
+         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
+              ORDER BY {sim} DESC, vec_b) AS INTEGER) AS rank
+  FROM {src}
+  QUALIFY rank <= {k}
+)"""
+
+
+def _exact_topk_cte(
+    prefix: str = "ex", vname: str = "v", nname: str = "norms"
+) -> str:
+    """CTE chain (no WITH header) from ``vname``/``nname`` (positional
+    components and per-vector norms, default the full-width v/norms)
+    to ``{prefix}_topk`` ``(vec_a, vec_b, cos_sim, rank)``: the exact
+    brute-force top-k of every query vector. The width audits point
+    it at the :func:`_width_cte` slices."""
+    p = prefix
+    return f"""{p}_dots AS (
+  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dp
+  FROM {vname} a JOIN {vname} b ON a.i = b.i
+  WHERE a.vec_id < {N_QUERY_VECTORS} AND a.vec_id <> b.vec_id
+  GROUP BY 1, 2
+), {p}_scored AS (
+  SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cos_sim
+  FROM {p}_dots
+  JOIN {nname} na ON na.vec_id = vec_a
+  JOIN {nname} nb ON nb.vec_id = vec_b
+), {_topk_sql(f"{p}_topk", f"{p}_scored", "cos_sim")}"""
+
+
+def _rescored_topk_sql(prefix: str, vname: str = "v", nname: str = "norms") -> str:
+    """CTE chain (no WITH header) from the candidate pairs
+    ``{prefix}_cand`` to ``{prefix}_topk``: exact 6-decimal cosine of
+    each candidate, then the top-k cut."""
+    p = prefix
+    return f"""{p}_scored AS (
+  SELECT c.vec_a, c.vec_b,
+         ROUND(SUM(qa.x * qb.x) / (na.nrm * nb.nrm), 6) AS cos_sim
+  FROM {p}_cand c
+  JOIN {vname} qa ON qa.vec_id = c.vec_a
+  JOIN {vname} qb ON qb.vec_id = c.vec_b AND qb.i = qa.i
+  JOIN {nname} na ON na.vec_id = c.vec_a
+  JOIN {nname} nb ON nb.vec_id = c.vec_b
+  GROUP BY c.vec_a, c.vec_b, na.nrm, nb.nrm
+), {_topk_sql(f"{p}_topk", f"{p}_scored", "cos_sim")}"""
+
+
+def _sql_lit(value) -> str:
+    return f"'{value}'" if isinstance(value, str) else str(value)
+
+
+def _union_sql(key: str, arms: dict, cols: str = "vec_a, vec_b") -> str:
+    """One ``SELECT <value> AS key, cols FROM <cte>`` per arm, unioned."""
+    return "\n  UNION ALL\n  ".join(
+        f"SELECT {_sql_lit(v)} AS {key}, {cols} FROM {cte}"
+        for v, cte in arms.items()
+    )
+
+
+def _values_sql(values) -> str:
+    return ", ".join(f"({_sql_lit(v)})" for v in values)
+
+
+def _recall_rollup_sql(key: str, arms: dict) -> str:
+    """The recall audit's tail, CTEs then the final SELECT: recall@k
+    of each arm's top-k CTE (``arms`` maps a ``key`` value to it)
+    against ``ex_topk``, per query, rolled up per ``key``. The twin of
+    :func:`_recall_rollup`."""
+    k = float(TOPK_K)
+    return f"""rc_approx AS (
+  {_union_sql(key, arms)}
+), rc_matched AS (
+  SELECT a.{key}, e.vec_a, COUNT(*) AS n_matched
+  FROM ex_topk e JOIN rc_approx a
+    ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b
+  GROUP BY a.{key}, e.vec_a
+), rc_per_query AS (
+  SELECT m.{key}, s.vec_a, COALESCE(x.n_matched, 0) AS n_matched
+  FROM (SELECT DISTINCT vec_a FROM ex_topk) s
+  CROSS JOIN (VALUES {_values_sql(arms)}) m({key})
+  LEFT JOIN rc_matched x
+    ON x.{key} = m.{key} AND x.vec_a = s.vec_a
+)
+SELECT {key}, COUNT(*) AS n_queries,
+       ROUND(SUM(n_matched) / (COUNT(*) * {k}), 6) AS mean_recall,
+       ROUND(MIN(n_matched) / {k}, 6) AS min_recall,
+       CAST(SUM(CASE WHEN n_matched = {TOPK_K} THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_perfect
+FROM rc_per_query
+GROUP BY {key}
+"""
+
+
+def _query_batch(spark: SparkSession, sf_dir: str, ids=None) -> DataFrame:
+    """The bounded query batch ``(vec_a, emb_a, norm_a)`` (vec_id <
+    N_QUERY_VECTORS, or ``ids``), read driver-side and shipped as a
+    literal relation, so broadcasting it never re-scans the corpus
+    (float64 values survive the round trip exactly). The norm is the
+    JVM HOF fold, the oracle's summation order."""
+    rows = _driver_vec_rows(
+        sf_dir, list(range(N_QUERY_VECTORS)) if ids is None else ids
+    )
+    return spark.createDataFrame(
+        [(int(r.vec_id), list(r.emb)) for r in rows],
         "vec_a long, emb_a array<double>",
     ).withColumn("norm_a", norm(F.col("emb_a")))
+
+
+def _vectors(
+    emb: DataFrame, id_as: str, side: str, vec: F.Column | None = None
+) -> DataFrame:
+    """``(id_as, emb_<side>, norm_<side>)``: each row's embedding as
+    doubles, or the expression ``vec``, with its L2 norm."""
+    v = to_double(F.col("embedding")) if vec is None else vec
+    return emb.select(
+        F.col("vec_id").alias(id_as), v.alias(f"emb_{side}")
+    ).withColumn(f"norm_{side}", norm(F.col(f"emb_{side}")))
+
+
+def _cos6(a: str, b: str) -> F.Column:
+    """6-decimal cosine of ``emb_<a>`` and ``emb_<b>`` (one HOF fold)
+    over their precomputed norms."""
+    return F.round(
+        cosine_pre(
+            F.col(f"emb_{a}"), F.col(f"emb_{b}"),
+            F.col(f"norm_{a}"), F.col(f"norm_{b}"),
+        ),
+        6,
+    )
+
+
+def _broadcast_scored(
+    spark: SparkSession, sf_dir: str, sim: str, vec=None
+) -> tuple[DataFrame, DataFrame]:
+    """The broadcast query batch × corpus frame ``(vec_a, vec_b,
+    <sim>)`` of every pair but a query with itself, plus the query
+    batch. ``vec(emb)`` gives the corpus side's vector expression
+    (default the float embedding). Shared by the exact baseline and
+    the SQ8 index, so their scoring cannot drift."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = _vectors(emb, "vec_b", "b", None if vec is None else vec(emb))
+    queries = _query_batch(spark, sf_dir)
     scored = (
         F.broadcast(queries)
         .crossJoin(corpus)
         .where(F.col("vec_a") != F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                cosine_pre(
-                    F.col("emb_a"), F.col("emb_b"),
-                    F.col("norm_a"), F.col("norm_b"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
+        .select("vec_a", "vec_b", _cos6("a", "b").alias(sim))
     )
-    w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.col("vec_b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "cos_sim", "rank")
-    )
+    return scored, queries
+
+
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k: the exact ANN baseline.
+
+    The query batch (vec_id < N) is broadcast against the corpus
+    (:func:`_broadcast_scored`); each pair is scored by one JVM HOF
+    fold (interpreted, not codegen — see functions.vectors — but
+    shuffle-free, and its summation order is the oracle's), and
+    :func:`_rank_cut` ranks each query's candidates by the rounded
+    similarity with a vec_id tiebreak, so the order is engine-stable.
+    """
+    scored, _ = _broadcast_scored(spark, sf_dir, "cos_sim")
+    return _rank_cut(scored, "cos_sim")
 
 
 ANN_TOPK_ORACLE = f"""
 {_ORACLE_VECTOR_CTE},
-dots AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dp
-  FROM v a JOIN v b ON a.i = b.i
-  WHERE a.vec_id < {N_QUERY_VECTORS} AND a.vec_id <> b.vec_id
-  GROUP BY 1, 2
-), scored AS (
-  SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM dots
-  JOIN norms na ON na.vec_id = vec_a
-  JOIN norms nb ON nb.vec_id = vec_b
-)
-SELECT vec_a, vec_b, cos_sim,
-       CAST(ROW_NUMBER() OVER (PARTITION BY vec_a ORDER BY cos_sim DESC, vec_b) AS INTEGER) AS rank
-FROM scored
-QUALIFY rank <= {TOPK_K}
+{_exact_topk_cte()}
+SELECT vec_a, vec_b, cos_sim, rank FROM ex_topk
 """
 
 
@@ -139,7 +288,7 @@ def embedding_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     """Embedding-cosine near-duplicate pairs, EXACT O(n²) scorer.
 
     Verification oracle only (pytest, small SF) — NOT registered: a
-    corpus-by-corpus crossJoin is a cartesian scale-killer at 100 TB.
+    corpus-by-corpus crossJoin grows with the square of the corpus.
     The registered query is :func:`embedding_neardup_pairs` (LSH-blocked).
     """
     return neardup_pairs_exact(load_table(spark, sf_dir, "embeddings"))
@@ -148,26 +297,11 @@ def embedding_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
 def neardup_pairs_exact(emb: DataFrame) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold over an embeddings-shaped
     DataFrame (vec_id, embedding). O(n²) — pytest-oracle use only."""
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"), to_double(F.col("embedding")).alias("emb_a")
-    ).withColumn("norm_a", norm(F.col("emb_a")))
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"), to_double(F.col("embedding")).alias("emb_b")
-    ).withColumn("norm_b", norm(F.col("emb_b")))
     return (
-        a.crossJoin(b)
+        _vectors(emb, "vec_a", "a")
+        .crossJoin(_vectors(emb, "vec_b", "b"))
         .where(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                cosine_pre(
-                    F.col("emb_a"), F.col("emb_b"),
-                    F.col("norm_a"), F.col("norm_b"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
+        .select("vec_a", "vec_b", _cos6("a", "b").alias("cos_sim"))
         .where(F.col("cos_sim") >= NEARDUP_COSINE_THRESHOLD)
     )
 
@@ -203,29 +337,16 @@ def neardup_pairs_blocked(emb: DataFrame) -> DataFrame:
     """
     from duckdb_gsheets_spark.operators.dedup import _wide
 
-    # Round 14 (guide §8 / §2.3): the bucket self-join used to carry
-    # BOTH 64-dim arrays on every candidate row (≤ LSH_TABLES
-    # duplicate scorings per pair) and AQE folded the exploding join
-    # onto 1-2 tasks — exec-only swung 6.8-62 s at sf0.1. Now the
-    # join moves (vec_id, tbl, bkt) METADATA only and is explicitly
-    # widened; candidates dedup to distinct id pairs BEFORE the
-    # embeddings attach, so each pair is scored exactly once and the
-    # arrays cross exactly one join. The GEMM/bucket frame is
+    # The bucket self-join moves (vec_id, tbl, bkt) metadata only and
+    # is explicitly widened. Carrying both 64-dim arrays on every
+    # candidate row scored a pair up to LSH_TABLES times, and AQE
+    # folded the exploding join onto 1-2 tasks (exec alone swung
+    # 6.8-62 s at sf0.1). Candidates dedup to distinct id pairs BEFORE
+    # the embeddings attach, so each pair is scored exactly once and
+    # the arrays cross exactly one join. The GEMM/bucket frame is
     # checkpointed once for its three consumers.
     with_buckets = _with_lsh_buckets(emb).localCheckpoint(eager=True)
-    bucket_rows = with_buckets.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"), F.col(f"bucket{t}").alias("bkt")
-                    )
-                    for t in range(LSH_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "tb.tbl", "tb.bkt")
+    bucket_rows = _lsh_bucket_rows(with_buckets, "vec_id")
     cand = (
         _wide(
             _wide(bucket_rows.select(F.col("vec_id").alias("vec_a"), "tbl", "bkt"), "tbl", "bkt")
@@ -333,38 +454,60 @@ def _lsh_planes() -> np.ndarray:
     )
 
 
-def _lsh_bucket_udf(planes: np.ndarray):
-    """pandas_udf: embedding → struct(bucket0..bucketN, nrm).
-
-    All LSH_TABLES × LSH_PLANES_PER_TABLE sign bits come from ONE
-    (batch × dim) @ (dim × 16) GEMM per Arrow batch — the closure
-    carries the tiny plane tensor to executors, broadcast-equivalent
-    at scale. Bit convention matches the original HOF formulation
-    (bit p set iff plane dot > 0). The row L2 norm rides along so the
-    corpus pass is a single Python stage.
-    """
+def _lsh_hash(M: np.ndarray, planes: np.ndarray) -> tuple:
+    """``(buckets, norms)`` of the rows of ``M``: bucket ``[i, t]`` is
+    row i's bucket id in table t (bit p set iff its dot with plane p
+    is > 0), from ONE (rows × dim) @ (dim × 16) GEMM for all tables;
+    the row L2 norms ride along. The corpus stage and the driver-side
+    query hashing both call it, so their buckets cannot drift."""
     n_tables, n_planes, _ = planes.shape
-    flat = planes.reshape(n_tables * n_planes, -1)
+    bits = (M @ planes.reshape(n_tables * n_planes, -1).T) > 0
     weights = 1 << np.arange(n_planes)
+    buckets = np.stack(
+        [
+            (bits[:, t * n_planes : (t + 1) * n_planes] * weights).sum(axis=1)
+            for t in range(n_tables)
+        ],
+        axis=1,
+    )
+    return buckets, np.sqrt(np.einsum("ij,ij->i", M, M))
+
+
+def _lsh_bucket_udf(planes: np.ndarray):
+    """pandas_udf: embedding → struct(bucket0..bucketN, nrm), one
+    :func:`_lsh_hash` per Arrow batch. The closure carries the tiny
+    plane tensor to executors; the norm rides along so the corpus
+    pass is a single Python stage."""
     out_type = StructType(
-        [StructField(f"bucket{t}", LongType()) for t in range(n_tables)]
+        [StructField(f"bucket{t}", LongType()) for t in range(len(planes))]
         + [StructField("nrm", DoubleType())]
     )
 
     @pandas_udf(out_type)
     def assign(emb: pd.Series) -> pd.DataFrame:
-        M = np.stack(emb.to_numpy())
-        bits = (M @ flat.T) > 0
-        cols = {
-            f"bucket{t}": (
-                bits[:, t * n_planes : (t + 1) * n_planes] * weights
-            ).sum(axis=1)
-            for t in range(n_tables)
-        }
-        cols["nrm"] = np.sqrt(np.einsum("ij,ij->i", M, M))
-        return pd.DataFrame(cols)
+        buckets, nrm = _lsh_hash(np.stack(emb.to_numpy()), planes)
+        cols = {f"bucket{t}": buckets[:, t] for t in range(len(planes))}
+        return pd.DataFrame({**cols, "nrm": nrm})
 
     return assign
+
+
+def _lsh_bucket_rows(with_buckets: DataFrame, *cols: str) -> DataFrame:
+    """``(*cols, tbl, bkt)``: one row per vector and LSH table, the
+    shuffle key of the bucket equi-joins."""
+    return with_buckets.select(
+        *cols,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("tbl"), F.col(f"bucket{t}").alias("bkt")
+                    )
+                    for t in range(LSH_TABLES)
+                ]
+            )
+        ).alias("tb"),
+    ).select(*cols, "tb.tbl", "tb.bkt")
 
 
 def _with_lsh_buckets(emb: DataFrame) -> DataFrame:
@@ -388,51 +531,27 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     generate candidates (union over tables), then an exact cosine
     rerank picks the top k.
 
-    The scale path: no cross join anywhere — candidate generation is
-    LSH_TABLES equi-joins on bucket ids. Query-side hashing runs
-    driver-side (same numpy GEMM, same bit convention, on the bounded
-    query batch) and ships as a literal broadcast relation — deriving
-    it from the distributed bucket stage made the broadcast build
-    re-execute the whole corpus Python stage. Recall vs the exact
-    baseline is pytest-measured; the deterministic plane tensor also
-    makes the full path SQL-expressible — value-exact DuckDB oracle
+    No cross join anywhere — candidate generation is LSH_TABLES
+    equi-joins on bucket ids. Query-side hashing runs driver-side
+    (same numpy GEMM, same bit convention, on the bounded query batch)
+    and ships as a literal broadcast relation — deriving it from the
+    distributed bucket stage made the broadcast build re-execute the
+    whole corpus Python stage. Recall vs the exact baseline is
+    pytest-measured; the deterministic plane tensor also makes the
+    full path SQL-expressible — value-exact DuckDB oracle
     (_lsh_oracle) with the planes embedded as literals.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    with_buckets = _with_lsh_buckets(emb)
-    # (vec_id, table, bucket) rows: one shuffle key per table.
-    bucket_rows = with_buckets.select(
+    bucket_rows = _lsh_bucket_rows(
+        _with_lsh_buckets(load_table(spark, sf_dir, "embeddings")),
         "vec_id",
         "emb",
         "nrm",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"), F.col(f"bucket{t}").alias("bkt")
-                    )
-                    for t in range(LSH_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "emb", "nrm", "tb.tbl", "tb.bkt")
+    )
     q_rows = _driver_vec_rows(sf_dir, list(range(N_QUERY_VECTORS)))
-    planes = _lsh_planes()
-    flat = planes.reshape(LSH_TABLES * LSH_PLANES_PER_TABLE, -1)
-    weights = 1 << np.arange(LSH_PLANES_PER_TABLE)
-    Q = np.array([r.emb for r in q_rows])
-    bits = (Q @ flat.T) > 0
-    qnorm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-    p = LSH_PLANES_PER_TABLE
+    buckets, qnorm = _lsh_hash(np.array([r.emb for r in q_rows]), _lsh_planes())
     queries = spark.createDataFrame(
         [
-            (
-                int(r.vec_id),
-                list(r.emb),
-                float(qnorm[i]),
-                t,
-                int((bits[i, t * p : (t + 1) * p] * weights).sum()),
-            )
+            (int(r.vec_id), list(r.emb), float(qnorm[i]), t, int(buckets[i, t]))
             for i, r in enumerate(q_rows)
             for t in range(LSH_TABLES)
         ],
@@ -454,8 +573,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            # Arrow-batched numpy dot — oracle-safe after round-6 (the
-            # < 1e-12 summation-order drift is erased by round 6).
+            # Arrow-batched numpy dot: the < 1e-12 summation-order
+            # drift against the oracle is erased by the 6-decimal round.
             F.round(
                 dot_np(F.col("emb_a"), F.col("emb"))
                 / (F.col("norm_a") * F.col("nrm")),
@@ -463,12 +582,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.col("vec_b"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "cos_sim", "rank")
-    )
+    return _rank_cut(cands, "cos_sim")
 
 
 #: IVF parameters: corpus is partitioned into NUM_CENTROIDS inverted
@@ -535,8 +649,8 @@ def _collect_quantizer_inputs(
 
     The sample ids are generated ARITHMETICALLY (multiples of the
     stride) and pushed down as an ``in`` filter — never by scanning
-    the id column into driver memory, which is O(corpus) driver state
-    (the 100 TB scale-killer this function used to carry). If the id
+    the id column into driver memory, which would grow with the
+    corpus. If the id
     space is so sparse that the bounded grid finds fewer than
     ``n_samples`` multiples, fall back to a DISTRIBUTED strided
     sample (bounded Spark collect) — same semantics: first
@@ -584,9 +698,8 @@ def ivf_assignments(
     doubles) and shipped inside a pandas_udf closure — exactly how a
     trained quantizer ships to executors at scale. Assignment is then a
     NARROW map: one (batch × dim) @ (dim × 16) GEMM per Arrow batch
-    with first-occurrence argmax — zero shuffle over the corpus, so at
-    100 TB it pipelines into the scan (persist ``list_id`` as the
-    partition key and a probe reads nprobe/nlists of the data).
+    with first-occurrence argmax — zero shuffle over the corpus, so it
+    pipelines into the scan.
     """
     if centroid_rows is None:
         # DataFrame-only callers (tests over synthetic frames): take
@@ -625,19 +738,17 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted lists, probe each query's nprobe nearest lists, exact
     cosine rerank inside the probed lists only.
 
-    Execution is ONE fused Arrow stage over the corpus (mapInPandas):
-    each batch is coarse-quantized (batch × 16 GEMM, first-occurrence
-    argmax) and immediately scored against the probes targeting its
-    lists — the FAISS scan kernel. Query preprocessing (probe
-    selection) happens driver-side: the quantizer and query batch are
-    small by contract, so their 10×16 GEMM belongs at the coordinator.
-    Semantically this equals the declarative probe ⋈ assignment
-    equi-join on ``list_id`` (verified in-process at adoption time:
-    identical 6-decimal result set), but fuses quantization, probe
+    Execution is ONE fused Arrow stage over the corpus
+    (:func:`_corpus_kernel` running :func:`_ivf_kernel`): each batch
+    is coarse-quantized (batch × 16 GEMM, first-occurrence argmax) and
+    immediately scored against the probes targeting its lists — the
+    FAISS scan kernel. Query preprocessing (probe selection) happens
+    driver-side: the quantizer and query batch are small by contract,
+    so their 10×16 GEMM belongs at the coordinator. Semantically this
+    equals the declarative probe ⋈ assignment equi-join on
+    ``list_id`` (the oracle's shape), but fuses quantization, probe
     pruning and scoring into a single pass with no broadcast builds
-    and no second Python stage. At 100 TB, persist ``list_id`` as the
-    partition key and the per-batch list mask becomes partition
-    pruning: a probe reads nprobe/nlists of the data.
+    and no second Python stage.
 
     Value-exact DuckDB oracle (_ivf_oracle — the deterministic
     quantizer replays in SQL); recall vs exact is pytest-bounded.
@@ -645,19 +756,90 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk_frame(spark, sf_dir, IVF_NPROBE)
 
 
+def _corpus_kernel(
+    spark: SparkSession, sf_dir: str, score, schema: str
+) -> DataFrame:
+    """One fused Arrow stage over the corpus (``mapInPandas``):
+    ``score(M, vec_ids)`` turns each batch, given as its float64
+    matrix and ids, into a list of pandas frames of ``schema``. The
+    corpus is read and decoded once and never shuffled; only the
+    kernel's output reaches the rank window."""
+
+    def score_batches(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            outs = score(
+                np.stack(pdf["emb"].to_numpy()), pdf["vec_id"].to_numpy()
+            )
+            if outs:
+                yield pd.concat(outs)
+
+    return (
+        fan_out(load_table(spark, sf_dir, "embeddings"))
+        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
+        .mapInPandas(score_batches, schema)
+    )
+
+
+def _batch_topk(sims: np.ndarray, qids, vec_ids, sim: str) -> list:
+    """Per query (row of ``sims``, |queries| × batch rows) the batch's
+    top ``TOPK_K`` other vectors by the global (sim DESC, vec_b) order:
+    the map-side combine of top-k, sound because the global top-k is a
+    subset of the union of batch top-ks, so the rank window sees
+    ≤ |queries|·k rows per batch, never the corpus."""
+    outs = []
+    for qi, qid in enumerate(qids):
+        keep = vec_ids != qid
+        ids, s = vec_ids[keep], sims[qi][keep]
+        order = np.lexsort((ids, -s))[:TOPK_K]
+        outs.append(
+            pd.DataFrame(
+                {
+                    "vec_a": np.full(len(order), qid, dtype="int64"),
+                    "vec_b": ids[order],
+                    sim: s[order],
+                }
+            )
+        )
+    return outs
+
+
+def _cosine_kernel(query_rows: list, width: int = EMBEDDING_DIM):
+    """Exact cosine kernel for :func:`_corpus_kernel` over the first
+    ``width`` dims: one GEMM of the batch's prefix view against the
+    query batch's, rounded to 6 decimals, cut to the batch-local
+    top-k."""
+    Q = np.array([r.emb for r in query_rows])[:, :width]
+    qids = np.asarray([r.vec_id for r in query_rows], dtype="int64")
+    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+
+    def score(M, vec_ids):
+        M = M[:, :width]
+        norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+        S = np.round((M @ Q.T) / (norms[:, None] * qn[None, :]), 6)
+        return _batch_topk(S.T, qids, vec_ids, "cos_sim")
+
+    return score
+
+
 def _probe_selection(
-    centroid_rows: list, query_rows: list, nprobe: int
+    centroid_rows: list,
+    query_rows: list,
+    nprobe: int,
+    width: int = EMBEDDING_DIM,
 ) -> tuple:
-    """Driver-side coarse-quantizer probe selection, the ONE home of
-    the (round-6 sims, nprobe lowest (−sim, centroid_id)) contract the
-    IVF oracles replay — shared by the IVF-Flat scan and the IVF-PQ
-    scan. Returns ``(unit, id_arr, Q, qids, qnorm,
-    by_list)`` where ``by_list`` inverts probes to
-    {list_id: query indices}."""
-    C = np.array([r.emb for r in centroid_rows])
+    """Driver-side coarse-quantizer probe selection over the first
+    ``width`` dims, the ONE home of the rule the IVF oracles replay:
+    each query probes the ``nprobe`` lists lowest in (−sim,
+    centroid_id), sims rounded to 6 decimals. Returns ``(unit,
+    id_arr, by_list, Q, qids, qnorm)``: the unit centroids and their
+    ids, ``by_list`` inverting the probes to {list_id: query
+    indices}, and the sliced query batch with its ids and norms."""
+    C = np.array([r.emb for r in centroid_rows])[:, :width]
     id_arr = np.asarray([r.vec_id for r in centroid_rows])
     unit = C / np.linalg.norm(C, axis=1, keepdims=True)
-    Q = np.array([r.emb for r in query_rows])
+    Q = np.array([r.emb for r in query_rows])[:, :width]
     qids = np.array([r.vec_id for r in query_rows])
     qnorm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     sims = np.round((Q @ unit.T) / qnorm[:, None], 6)
@@ -666,18 +848,59 @@ def _probe_selection(
         # lexsort: last key primary — sim desc, centroid id asc.
         for j in np.lexsort((id_arr, -sims[qi]))[:nprobe]:
             by_list.setdefault(int(id_arr[j]), []).append(qi)
-    return unit, id_arr, Q, qids, qnorm, by_list
+    return unit, id_arr, by_list, Q, qids, qnorm
 
 
-def _pq_codebook(code_rows: list) -> tuple:
-    """PQ codebook arrays shared by the plain ADC scan and the IVF-PQ
-    scan: ``(Csub, cc, sub)`` — the per-subspace codeword stack, the
-    codeword squared norms, and the subspace width."""
-    Cb = np.array([r.emb for r in code_rows])
-    sub = EMBEDDING_DIM // PQ_M
-    Csub = np.stack([Cb[:, s * sub : (s + 1) * sub] for s in range(PQ_M)])
-    cc = np.einsum("sjd,sjd->sj", Csub, Csub)
-    return Csub, cc, sub
+def _ivf_kernel(
+    centroid_rows: list,
+    query_rows: list,
+    nprobe: int,
+    width: int = EMBEDDING_DIM,
+    adc=None,
+):
+    """The IVF probe-and-score kernel for :func:`_corpus_kernel`, at
+    one probe depth over the first ``width`` dims. Each batch row is
+    coarse-quantized (unit-centroid sims rounded to 6 decimals,
+    first-occurrence argmax, i.e. the (−sim, centroid_id) rule); rows
+    of lists no query
+    probes are dropped, and every other row is scored against the
+    queries probing its list: 6-decimal exact cosine (IVF-Flat,
+    ``cos_sim``), or ``adc`` (IVF-PQ, :func:`_pq_adc`, ``adc_sim``)."""
+    unit, id_arr, by_list, Q, qids, qnorm = _probe_selection(
+        centroid_rows, query_rows, nprobe, width
+    )
+    sim = "cos_sim" if adc is None else "adc_sim"
+
+    def score(M, vec_ids):
+        M = M[:, :width]
+        norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+        s = np.round((M @ unit.T) / norms[:, None], 6)
+        lists = id_arr[s.argmax(axis=1)]
+        outs = []
+        for lid in np.unique(lists):
+            if lid not in by_list:
+                continue
+            ix, mask = by_list[lid], lists == lid
+            if adc is None:
+                sims = np.round(
+                    (M[mask] @ Q[ix].T)
+                    / (norms[mask][:, None] * qnorm[ix][None, :]),
+                    6,
+                ).T
+            else:
+                sims = adc(M[mask], ix)
+            outs.append(
+                pd.DataFrame(
+                    {
+                        "vec_a": np.repeat(qids[ix], sims.shape[1]),
+                        "vec_b": np.tile(vec_ids[mask], len(ix)),
+                        sim: sims.ravel(),
+                    }
+                )
+            )
+        return outs
+
+    return score
 
 
 def _ivf_topk_frame(
@@ -690,61 +913,16 @@ def _ivf_topk_frame(
     registered top-k query (``IVF_NPROBE``) and the nprobe recall
     curve (which sweeps it, passing the centroid/query collect ONCE
     via ``inputs`` so three depths don't re-run the driver jobs)."""
-    emb = load_table(spark, sf_dir, "embeddings")
     centroid_rows, query_rows = (
         inputs if inputs is not None else _collect_ivf_inputs(spark, sf_dir)
     )
-    unit, id_arr, Q, qids, qnorm, by_list = _probe_selection(
-        centroid_rows, query_rows, nprobe
+    cands = _corpus_kernel(
+        spark,
+        sf_dir,
+        _ivf_kernel(centroid_rows, query_rows, nprobe),
+        "vec_a long, vec_b long, cos_sim double",
     )
-    probes = {
-        lid: (qids[ix], Q[ix], qnorm[ix]) for lid, ix in by_list.items()
-    }
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf["emb"].to_numpy())
-            norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-            s = np.round((M @ unit.T) / norms[:, None], 6)
-            lists = id_arr[s.argmax(axis=1)]
-            vec_ids = pdf["vec_id"].to_numpy()
-            outs = []
-            for lid in np.unique(lists):
-                if lid not in probes:
-                    continue
-                qid_a, qmat, qn = probes[lid]
-                mask = lists == lid
-                S = np.round(
-                    (M[mask] @ qmat.T) / (norms[mask][:, None] * qn[None, :]),
-                    6,
-                )
-                nb, nq = int(mask.sum()), len(qid_a)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.repeat(qid_a[None, :], nb, axis=0).ravel(),
-                            "vec_b": np.repeat(vec_ids[mask], nq),
-                            "cos_sim": S.ravel(),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    cands = (
-        fan_out(emb)
-        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
-        .mapInPandas(score_batches, "vec_a long, vec_b long, cos_sim double")
-        .where(F.col("vec_a") != F.col("vec_b"))
-    )
-    w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.col("vec_b"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "cos_sim", "rank")
-    )
+    return _rank_cut(cands.where(F.col("vec_a") != F.col("vec_b")), "cos_sim")
 
 
 def _ivf_oracle() -> str:
@@ -755,8 +933,8 @@ def _ivf_oracle() -> str:
 
     Cross-engine float note: first-stage dot products are unrounded in
     both engines; numpy GEMM and SQL SUM accumulate in different
-    orders, but every comparison below happens AFTER a round-6 (the
-    same ≤1e-12-drift argument that underwrites the hash-checked
+    orders, but every comparison below happens AFTER a 6-decimal round
+    (the same ≤1e-12-drift argument that underwrites the hash-checked
     neardup/cosine queries)."""
     return f"""
 {_ORACLE_VECTOR_CTE},
@@ -766,10 +944,10 @@ SELECT vec_a, vec_b, cos_sim, rank FROM ivf_topk
 
 
 def _ivf_cte(
-    nprobe: int = IVF_NPROBE,
     prefix: str = "ivf",
     vname: str = "v",
     nname: str = "norms",
+    nprobe: int = IVF_NPROBE,
 ) -> str:
     """CTE chain (no WITH header) from ``vname``/``nname`` (positional
     components + per-vector norms, default the shared full-width
@@ -778,33 +956,18 @@ def _ivf_cte(
     distinct prefixes; the prefix-IVF audit points it at width-sliced
     component CTEs."""
     p = prefix
-    return _ivf_assign_cte(nprobe, prefix, vname, nname) + f""", {p}_cand AS (
+    return _ivf_assign_cte(prefix, vname, nname, nprobe) + f""", {p}_cand AS (
   SELECT p.qid AS vec_a, a.vec_id AS vec_b
   FROM {p}_probes p JOIN {p}_assign a ON a.list_id = p.list_id
   WHERE p.qid <> a.vec_id
-), {p}_scored AS (
-  SELECT c.vec_a, c.vec_b,
-         ROUND(SUM(qa.x * qb.x) / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM {p}_cand c
-  JOIN {vname} qa ON qa.vec_id = c.vec_a
-  JOIN {vname} qb ON qb.vec_id = c.vec_b AND qb.i = qa.i
-  JOIN {nname} na ON na.vec_id = c.vec_a
-  JOIN {nname} nb ON nb.vec_id = c.vec_b
-  GROUP BY c.vec_a, c.vec_b, na.nrm, nb.nrm
-), {p}_topk AS (
-  SELECT vec_a, vec_b, cos_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
-              ORDER BY cos_sim DESC, vec_b) AS INTEGER) AS rank
-  FROM {p}_scored
-  QUALIFY rank <= {TOPK_K}
-)"""
+), {_rescored_topk_sql(p, vname, nname)}"""
 
 
 def _ivf_assign_cte(
-    nprobe: int = IVF_NPROBE,
     prefix: str = "ivf",
     vname: str = "v",
     nname: str = "norms",
+    nprobe: int = IVF_NPROBE,
 ) -> str:
     """The quantizer half of :func:`_ivf_cte` — CTE chain (no WITH
     header) to ``{prefix}_assign`` (corpus → nearest list) and
@@ -881,22 +1044,7 @@ lsh_pw AS (
   FROM lsh_buckets q JOIN lsh_buckets c
     ON q.tbl = c.tbl AND q.bkt = c.bkt
   WHERE q.vec_id < {N_QUERY_VECTORS} AND q.vec_id <> c.vec_id
-), lsh_scored AS (
-  SELECT c.vec_a, c.vec_b,
-         ROUND(SUM(qa.x * qb.x) / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM lsh_cand c
-  JOIN v qa ON qa.vec_id = c.vec_a
-  JOIN v qb ON qb.vec_id = c.vec_b AND qb.i = qa.i
-  JOIN norms na ON na.vec_id = c.vec_a
-  JOIN norms nb ON nb.vec_id = c.vec_b
-  GROUP BY c.vec_a, c.vec_b, na.nrm, nb.nrm
-), lsh_topk AS (
-  SELECT vec_a, vec_b, cos_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
-              ORDER BY cos_sim DESC, vec_b) AS INTEGER) AS rank
-  FROM lsh_scored
-  QUALIFY rank <= {TOPK_K}
-)"""
+), {_rescored_topk_sql("lsh")}"""
 
 
 #: Symmetric int8 quantization levels (SQ8 absmax convention).
@@ -1077,26 +1225,10 @@ def knn_label_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KNN_LABEL_PROBE_ORACLE = f"""
 {_ORACLE_VECTOR_CTE},
-dots AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dp
-  FROM v a JOIN v b ON a.i = b.i
-  WHERE a.vec_id < {N_QUERY_VECTORS} AND a.vec_id <> b.vec_id
-  GROUP BY 1, 2
-), scored AS (
-  SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM dots
-  JOIN norms na ON na.vec_id = vec_a
-  JOIN norms nb ON nb.vec_id = vec_b
-), topk AS (
-  SELECT vec_a, vec_b FROM (
-    SELECT vec_a, vec_b,
-           ROW_NUMBER() OVER (PARTITION BY vec_a
-                              ORDER BY cos_sim DESC, vec_b) AS rank
-    FROM scored
-  ) WHERE rank <= {TOPK_K}
-), votes AS (
+{_exact_topk_cte()},
+votes AS (
   SELECT t.vec_a, e.label AS nb_label, COUNT(*) AS votes
-  FROM topk t JOIN embeddings e ON e.vec_id = t.vec_b
+  FROM ex_topk t JOIN embeddings e ON e.vec_id = t.vec_b
   GROUP BY 1, 2
 ), pred AS (
   SELECT vec_a, nb_label AS pred_label, CAST(votes AS BIGINT) AS votes
@@ -1197,30 +1329,12 @@ def dedup_lexical_semantic_pairs(
     from duckdb_gsheets_spark.operators.dedup import dedup_minhash_lsh
 
     pairs = dedup_minhash_lsh(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double(F.col("embedding")).alias("emb")
-    )
-    emb = emb.withColumn("nrm", norm(F.col("emb")))
-    a = emb.select(
-        F.col("vec_id").alias("doc_a"),
-        F.col("emb").alias("emb_a"),
-        F.col("nrm").alias("norm_a"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("doc_b"),
-        F.col("emb").alias("emb_b"),
-        F.col("nrm").alias("norm_b"),
-    )
-    cos = F.round(
-        cosine_pre(
-            F.col("emb_a"), F.col("emb_b"), F.col("norm_a"), F.col("norm_b")
-        ),
-        6,
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    cos = _cos6("a", "b")
     return (
         F.broadcast(pairs)
-        .join(a, "doc_a")
-        .join(b, "doc_b")
+        .join(_vectors(emb, "doc_a", "a"), "doc_a")
+        .join(_vectors(emb, "doc_b", "b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -1267,137 +1381,12 @@ JOIN norms nb ON nb.vec_id = d.doc_b
 """
 
 
-def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k audit of the approximate ANN paths against the exact
-    brute-force baseline — the acceptance gate run before routing
-    production similarity traffic through an index.
-
-    For each method (LSH, IVF, PQ) and each query vector: |approx
-    top-k ∩ exact top-k| / k, rolled up to mean/min recall and the
-    count of perfect queries. All rankings reuse the registered
-    operators, so this audits exactly what users run; the overlap join
-    keys on (query, neighbor) pairs — k·|queries| rows per side, a
-    trivially small join at any corpus size (the heavy work is inside
-    the audited queries themselves).
-
-    Oracle-checked end to end: the exact, LSH and IVF chains replay
-    in one generated DuckDB statement (_recall_oracle);
-    recall floors are pytest-pinned.
-    """
-    exact = ann_cosine_topk(spark, sf_dir).select("vec_a", "vec_b")
-    spine = exact.select("vec_a").distinct()
-    methods = spark.createDataFrame(
-        [("lsh",), ("ivf",), ("pq",)], "method string"
-    )
-    approx = (
-        ann_lsh_topk(spark, sf_dir)
-        .select(F.lit("lsh").alias("method"), "vec_a", "vec_b")
-        .unionByName(
-            ann_ivf_topk(spark, sf_dir).select(
-                F.lit("ivf").alias("method"), "vec_a", "vec_b"
-            )
-        )
-        .unionByName(
-            ann_pq_adc_topk(spark, sf_dir).select(
-                F.lit("pq").alias("method"), "vec_a", "vec_b"
-            )
-        )
-    )
-    matched = (
-        exact.join(approx, ["vec_a", "vec_b"])
-        .groupBy("method", "vec_a")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    per_query = (
-        spine.crossJoin(methods)
-        .join(matched, ["method", "vec_a"], "left")
-        .select(
-            "method",
-            "vec_a",
-            F.coalesce(F.col("n_matched"), F.lit(0)).alias("n_matched"),
-        )
-    )
-    k = float(TOPK_K)
-    return per_query.groupBy("method").agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.sum("n_matched") / (F.count(F.lit(1)) * F.lit(k)), 6).alias(
-            "mean_recall"
-        ),
-        F.round(F.min("n_matched") / F.lit(k), 6).alias("min_recall"),
-        F.sum(
-            (F.col("n_matched") == TOPK_K).cast("int")
-        ).alias("n_perfect"),
-    )
-
-
-def _exact_topk_cte() -> str:
-    """CTE fragment (no WITH header) from v/norms to ``ex_topk`` — the
-    brute-force exact top-k baseline shared by the recall report and
-    the nprobe recall curve oracles."""
-    return f"""ex_dots AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dp
-  FROM v a JOIN v b ON a.i = b.i
-  WHERE a.vec_id < {N_QUERY_VECTORS} AND a.vec_id <> b.vec_id
-  GROUP BY 1, 2
-), ex_scored AS (
-  SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM ex_dots
-  JOIN norms na ON na.vec_id = vec_a
-  JOIN norms nb ON nb.vec_id = vec_b
-), ex_topk AS (
-  SELECT vec_a, vec_b FROM ex_scored
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_a
-          ORDER BY cos_sim DESC, vec_b) <= {TOPK_K}
-)"""
-
-
-def _recall_oracle() -> str:
-    """DuckDB oracle for :func:`ann_recall_report`: the exact top-k,
-    LSH, IVF and PQ top-k chains replay in one statement (sharing the
-    v/norms CTEs), then the same overlap/rollup as the Spark query.
-    Every branch is the already-verified per-method oracle, so this
-    audits the audit."""
-    return f"""
-{_ORACLE_VECTOR_CTE},
-{_exact_topk_cte()},
-{_lsh_cte()},
-{_ivf_cte()},
-{_pq_cte()},
-rr_approx AS (
-  SELECT 'lsh' AS method, vec_a, vec_b FROM lsh_topk
-  UNION ALL
-  SELECT 'ivf' AS method, vec_a, vec_b FROM ivf_topk
-  UNION ALL
-  SELECT 'pq' AS method, vec_a, vec_b FROM pq_topk
-), rr_matched AS (
-  SELECT a.method, e.vec_a, COUNT(*) AS n_matched
-  FROM ex_topk e JOIN rr_approx a
-    ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b
-  GROUP BY a.method, e.vec_a
-), rr_per_query AS (
-  SELECT m.method, s.vec_a, COALESCE(x.n_matched, 0) AS n_matched
-  FROM (SELECT DISTINCT vec_a FROM ex_topk) s
-  CROSS JOIN (VALUES ('lsh'), ('ivf'), ('pq')) m(method)
-  LEFT JOIN rr_matched x
-    ON x.method = m.method AND x.vec_a = s.vec_a
-)
-SELECT method, COUNT(*) AS n_queries,
-       ROUND(SUM(n_matched) / (COUNT(*) * {float(TOPK_K)}), 6)
-         AS mean_recall,
-       ROUND(MIN(n_matched) / {float(TOPK_K)}, 6) AS min_recall,
-       CAST(SUM(CASE WHEN n_matched = {TOPK_K} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_perfect
-FROM rr_per_query
-GROUP BY method
-"""
-
-
 #: Product quantization: PQ_M subspaces of EMBEDDING_DIM/PQ_M dims,
 #: PQ_CODES codewords per subspace from a deterministic strided corpus
 #: sample (stride coprime to the IVF stride, so beyond the shared
 #: vector 0 the two quantizers draw disjoint samples below 29·31).
-#: 8×4 bits/vector = 64 dims → 8 bytes: the 32× compression that
-#: makes a 100 TB corpus RAM-resident.
+#: Stored a byte per 4-bit code, a 64-dim float32 vector (256 bytes)
+#: becomes 8 bytes: 32× compression.
 PQ_M = 8
 PQ_CODES = 16
 PQ_ID_STRIDE = 29
@@ -1409,6 +1398,43 @@ def _collect_pq_inputs(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     return _collect_quantizer_inputs(spark, sf_dir, PQ_ID_STRIDE, PQ_CODES)
 
 
+def _pq_adc(code_rows: list, query_rows: list):
+    """The PQ kernel of the plain ADC scan and the IVF-PQ scan. Builds
+    the codebook's subspace split and the query-side lookup tables
+    once (``lut[s, q, j]`` = dot of query q's and codeword j's
+    subspace s), and returns ``adc(M, ix)``: the 6-decimal ADC cosine of
+    the queries ``ix`` (default all) against each row of ``M``,
+    |ix| × rows. Encoding picks per subspace the codeword maximizing
+    round6(x·c − ‖c‖²/2), ties to the smallest index (argmax is
+    first-occurrence); ADC sums the codes' table entries over the
+    query norm and the reconstructed vector's norm."""
+    Cb = np.array([r.emb for r in code_rows])
+    sub = EMBEDDING_DIM // PQ_M
+    Csub = np.stack([Cb[:, s * sub : (s + 1) * sub] for s in range(PQ_M)])
+    cc = np.einsum("sjd,sjd->sj", Csub, Csub)
+    Q = np.array([r.emb for r in query_rows])
+    qnorm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    Qsub = np.stack([Q[:, s * sub : (s + 1) * sub] for s in range(PQ_M)])
+    lut = np.einsum("sqd,sjd->sqj", Qsub, Csub)
+
+    def adc(M, ix=slice(None)):
+        codes = np.empty((len(M), PQ_M), dtype=np.int64)
+        for s in range(PQ_M):
+            codes[:, s] = np.round(
+                M[:, s * sub : (s + 1) * sub] @ Csub[s].T - 0.5 * cc[s], 6
+            ).argmax(axis=1)
+        dots = np.zeros((len(qnorm[ix]), len(M)))
+        rec2 = np.zeros(len(M))
+        for s in range(PQ_M):
+            dots += lut[s][ix][:, codes[:, s]]
+            rec2 += cc[s][codes[:, s]]
+        return np.round(
+            dots / (qnorm[ix][:, None] * np.sqrt(rec2)[None, :]), 6
+        )
+
+    return adc
+
+
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011).
@@ -1418,15 +1444,13 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector is encoded as ``PQ_M`` 4-bit codes (argmin-distance
     codeword per subspace), and queries score candidates through
     per-subspace lookup tables (asymmetric distance computation)
-    without ever touching the original floats. At 100 TB that's the
-    difference between scanning 25 TB of float32 and 0.8 TB of codes.
+    without ever touching the original floats, so a scan reads 32×
+    fewer bytes than the float32 vectors.
 
-    One fused Arrow stage over the corpus (mapInPandas): encode the
-    batch (PQ_M small GEMMs), ADC-score it against the whole query
-    batch via LUT gather, and emit only the PER-BATCH top-k per query
-    — selection by a total order ``(score DESC, vec_b)`` commutes with
-    union, so the global window over batch winners equals the global
-    top-k while shuffling ≤ batches × queries × k rows. Zero corpus
+    One fused Arrow stage over the corpus (:func:`_corpus_kernel`):
+    encode the batch (PQ_M small GEMMs), ADC-score it against the
+    whole query batch via LUT gather (:func:`_pq_adc`), and emit only
+    the PER-BATCH top-k per query (:func:`_batch_topk`). Zero corpus
     shuffle, zero broadcast build.
 
     Every comparison happens after a 6-decimal round (assignment
@@ -1434,70 +1458,16 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift between numpy GEMMs and the oracle's SQL SUMs — the same
     determinism contract the LSH/IVF paths are hash-checked under.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
     code_rows, query_rows = _collect_pq_inputs(spark, sf_dir)
-    # (PQ_M, codes, sub): codebook; (PQ_M, codes): codeword sq-norms.
-    Csub, cc, sub = _pq_codebook(code_rows)
-    Q = np.array([r.emb for r in query_rows])
+    adc = _pq_adc(code_rows, query_rows)
     qids = np.array([r.vec_id for r in query_rows])
-    qnorm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-    # LUT[s, q, j] = dot(q_sub_s, codeword_sj)
-    Qsub = np.stack([Q[:, s * sub : (s + 1) * sub] for s in range(PQ_M)])
-    lut = np.einsum("sqd,sjd->sqj", Qsub, Csub)
-    k = TOPK_K
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf["emb"].to_numpy())
-            vec_ids = pdf["vec_id"].to_numpy()
-            # Encode: per-subspace argmax of round6(x·c - ||c||²/2),
-            # ties to the smallest codeword index (argmax is
-            # first-occurrence).
-            codes = np.empty((len(M), PQ_M), dtype=np.int64)
-            for s in range(PQ_M):
-                ascore = np.round(
-                    M[:, s * sub : (s + 1) * sub] @ Csub[s].T - 0.5 * cc[s], 6
-                )
-                codes[:, s] = ascore.argmax(axis=1)
-            # ADC: adc[q, b] = Σ_s lut[s, q, codes[b, s]]
-            adc = np.zeros((len(qids), len(M)))
-            rec2 = np.zeros(len(M))
-            for s in range(PQ_M):
-                adc += lut[s][:, codes[:, s]]
-                rec2 += cc[s][codes[:, s]]
-            sims = np.round(
-                adc / (qnorm[:, None] * np.sqrt(rec2)[None, :]), 6
-            )
-            outs = []
-            for qi in range(len(qids)):
-                keep = vec_ids != qids[qi]
-                ids_q, s_q = vec_ids[keep], sims[qi][keep]
-                order = np.lexsort((ids_q, -s_q))[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": qids[qi],
-                            "vec_b": ids_q[order],
-                            "adc_sim": s_q[order],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    cands = (
-        fan_out(emb)
-        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
-        .mapInPandas(score_batches, "vec_a long, vec_b long, adc_sim double")
+    cands = _corpus_kernel(
+        spark,
+        sf_dir,
+        lambda M, vec_ids: _batch_topk(adc(M), qids, vec_ids, "adc_sim"),
+        "vec_a long, vec_b long, adc_sim double",
     )
-    w = Window.partitionBy("vec_a").orderBy(F.desc("adc_sim"), F.col("vec_b"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "adc_sim", "rank")
-    )
+    return _rank_cut(cands, "adc_sim")
 
 
 def _pq_oracle() -> str:
@@ -1512,6 +1482,18 @@ SELECT vec_a, vec_b, adc_sim, rank FROM pq_topk
 """
 
 
+def _adc_topk_sql(prefix: str) -> str:
+    """CTE chain (no WITH header) from ``{prefix}_adc`` (summed LUT
+    terms ``adc_dot`` and reconstructed squared norm ``rec2`` per
+    pair) to ``{prefix}_topk`` on the 6-decimal ADC cosine."""
+    p = prefix
+    return f"""{p}_scored AS (
+  SELECT a.vec_a, a.vec_b,
+         ROUND(a.adc_dot / (n.nrm * SQRT(a.rec2)), 6) AS adc_sim
+  FROM {p}_adc a JOIN norms n ON n.vec_id = a.vec_a
+), {_topk_sql(f"{p}_topk", f"{p}_scored", "adc_sim")}"""
+
+
 def _pq_cte() -> str:
     """CTE chain (no WITH header) from v/norms to ``pq_topk``.
     Subspace of component ``i`` (1-based) is ``(i-1) // sub``."""
@@ -1522,17 +1504,7 @@ def _pq_cte() -> str:
   JOIN pq_xc q ON q.s = b.s AND q.j = b.code
   WHERE q.vec_id < {N_QUERY_VECTORS} AND q.vec_id <> b.vec_id
   GROUP BY 1, 2
-), pq_scored AS (
-  SELECT a.vec_a, a.vec_b,
-         ROUND(a.adc_dot / (n.nrm * SQRT(a.rec2)), 6) AS adc_sim
-  FROM pq_adc a JOIN norms n ON n.vec_id = a.vec_a
-), pq_topk AS (
-  SELECT vec_a, vec_b, adc_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
-              ORDER BY adc_sim DESC, vec_b) AS INTEGER) AS rank
-  FROM pq_scored
-  QUALIFY rank <= {TOPK_K}
-)"""
+), {_adc_topk_sql("pq")}"""
 
 
 def _pq_codes_cte() -> str:
@@ -1569,6 +1541,130 @@ pq_cids AS (
   QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, s
                              ORDER BY ascore DESC, j) = 1
 )"""
+
+
+#: The approximate methods the recall and nDCG reports grade.
+ANN_METHODS = ("lsh", "ivf", "pq")
+
+
+def _method_topks(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """``(method, vec_a, vec_b, *cols)``: the registered LSH, IVF and
+    PQ top-k queries, as users run them, in one frame."""
+    topk = {"lsh": ann_lsh_topk, "ivf": ann_ivf_topk, "pq": ann_pq_adc_topk}
+    return reduce(
+        DataFrame.unionByName,
+        [
+            topk[m](spark, sf_dir).select(
+                F.lit(m).alias("method"), "vec_a", "vec_b", *cols
+            )
+            for m in ANN_METHODS
+        ],
+    )
+
+
+def _per_query(
+    spark: SparkSession,
+    exact: DataFrame,
+    per_arm: DataFrame,
+    key: str,
+    values: tuple,
+    col: str,
+) -> DataFrame:
+    """``(key, vec_a, col)`` for every query of ``exact`` crossed with
+    every value in ``values``: ``per_arm``'s ``col`` where it has a
+    row, else 0, so a query an arm misses entirely still counts.
+
+    Both sides are bounded (|values| rows; k·|queries| at most), so
+    both broadcast: a cartesian of two |cores|-partition sides
+    otherwise schedules |cores|² near-empty tasks (about 15 s at
+    local[32])."""
+    kind = "string" if isinstance(values[0], str) else "int"
+    arms = spark.createDataFrame([(v,) for v in values], f"{key} {kind}")
+    return (
+        exact.select("vec_a")
+        .distinct()
+        .crossJoin(F.broadcast(arms))
+        .join(F.broadcast(per_arm), [key, "vec_a"], "left")
+        .select(key, "vec_a", F.coalesce(F.col(col), F.lit(0)).alias(col))
+    )
+
+
+def _recall_rollup(
+    spark: SparkSession,
+    exact: DataFrame,
+    approx: DataFrame,
+    key: str,
+    values: tuple,
+) -> DataFrame:
+    """Recall@k of each arm of ``approx`` ``(key, vec_a, vec_b)``
+    against the exact top-k ``exact`` ``(vec_a, vec_b)``:
+    ``(key, n_queries, mean_recall, min_recall, n_perfect)``, one row
+    per value in ``values``. ``exact`` is k·|queries| rows and
+    broadcasts into the overlap join; passed as the checkpointed
+    baseline (:func:`_exact_baseline_ckpt`), its two reads here hit
+    the same block-manager blocks instead of re-running the scoring
+    subtree. The twin of :func:`_recall_rollup_sql`."""
+    matched = (
+        F.broadcast(exact)
+        .join(approx, ["vec_a", "vec_b"])
+        .groupBy(key, "vec_a")
+        .agg(F.count(F.lit(1)).alias("n_matched"))
+    )
+    per_query = _per_query(spark, exact, matched, key, values, "n_matched")
+    k = float(TOPK_K)
+    return per_query.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        F.round(F.sum("n_matched") / (F.count(F.lit(1)) * F.lit(k)), 6).alias(
+            "mean_recall"
+        ),
+        F.round(F.min("n_matched") / F.lit(k), 6).alias("min_recall"),
+        F.sum((F.col("n_matched") == TOPK_K).cast("int")).alias("n_perfect"),
+    )
+
+
+def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@k audit of the approximate ANN paths against the exact
+    brute-force baseline — the acceptance gate run before routing
+    production similarity traffic through an index.
+
+    For each method (LSH, IVF, PQ) and each query vector: |approx
+    top-k ∩ exact top-k| / k, rolled up to mean/min recall and the
+    count of perfect queries (:func:`_recall_rollup`). All rankings
+    reuse the registered operators, so this audits exactly what users
+    run; the overlap join keys on (query, neighbor) pairs —
+    k·|queries| rows per side, a trivially small join at any corpus
+    size (the heavy work is inside the audited queries themselves).
+
+    Oracle-checked end to end: the exact, LSH, IVF and PQ chains
+    replay in one generated DuckDB statement (_recall_oracle); recall
+    floors are pytest-pinned.
+    """
+    exact = ann_cosine_topk(spark, sf_dir).select("vec_a", "vec_b")
+    return _recall_rollup(
+        spark, exact, _method_topks(spark, sf_dir), "method", ANN_METHODS
+    )
+
+
+def _methods_cte() -> str:
+    """CTE chain (after the WITH of _ORACLE_VECTOR_CTE) of the exact
+    baseline and the LSH, IVF and PQ top-k oracles, to ``ex_topk`` and
+    ``<method>_topk``."""
+    return f"""{_exact_topk_cte()},
+{_lsh_cte()},
+{_ivf_cte()},
+{_pq_cte()}"""
+
+
+def _recall_oracle() -> str:
+    """DuckDB oracle for :func:`ann_recall_report`: the exact top-k,
+    LSH, IVF and PQ top-k chains replay in one statement (sharing the
+    v/norms CTEs), then the same overlap/rollup as the Spark query.
+    Every branch is the already-verified per-method oracle, so this
+    audits the audit."""
+    return f"""
+{_ORACLE_VECTOR_CTE},
+{_methods_cte()},
+{_recall_rollup_sql("method", {m: f"{m}_topk" for m in ANN_METHODS})}"""
 
 
 def embedding_doc_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1667,81 +1763,29 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     report's IVF row by construction (pytest-pinned).
     """
     exact = ann_cosine_topk(spark, sf_dir).select("vec_a", "vec_b")
-    spine = exact.select("vec_a").distinct()
-    depths = spark.createDataFrame(
-        [(n,) for n in NPROBE_SWEEP], "nprobe int"
-    )
     inputs = _collect_ivf_inputs(spark, sf_dir)
-    approx = None
-    for n in NPROBE_SWEEP:
-        fr = _ivf_topk_frame(spark, sf_dir, n, inputs=inputs).select(
-            F.lit(n).alias("nprobe"), "vec_a", "vec_b"
-        )
-        approx = fr if approx is None else approx.unionByName(fr)
-    matched = (
-        exact.join(approx, ["vec_a", "vec_b"])
-        .groupBy("nprobe", "vec_a")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
+    approx = reduce(
+        DataFrame.unionByName,
+        [
+            _ivf_topk_frame(spark, sf_dir, n, inputs=inputs).select(
+                F.lit(n).alias("nprobe"), "vec_a", "vec_b"
+            )
+            for n in NPROBE_SWEEP
+        ],
     )
-    per_query = (
-        spine.crossJoin(F.broadcast(depths))
-        .join(F.broadcast(matched), ["nprobe", "vec_a"], "left")
-        .select(
-            "nprobe",
-            "vec_a",
-            F.coalesce(F.col("n_matched"), F.lit(0)).alias("n_matched"),
-        )
-    )
-    k = float(TOPK_K)
-    return per_query.groupBy("nprobe").agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.sum("n_matched") / (F.count(F.lit(1)) * F.lit(k)), 6).alias(
-            "mean_recall"
-        ),
-        F.round(F.min("n_matched") / F.lit(k), 6).alias("min_recall"),
-        F.sum((F.col("n_matched") == TOPK_K).cast("int")).alias("n_perfect"),
-    )
+    return _recall_rollup(spark, exact, approx, "nprobe", NPROBE_SWEEP)
 
 
 def _nprobe_curve_oracle() -> str:
     """One generated statement: the exact baseline + one IVF chain per
     swept depth (distinct CTE prefixes) + the same overlap/rollup as
     the Spark query."""
-    chains = ",\n".join(
-        _ivf_cte(nprobe=n, prefix=f"np{n}") for n in NPROBE_SWEEP
-    )
-    union = "\n  UNION ALL\n  ".join(
-        f"SELECT {n} AS nprobe, vec_a, vec_b FROM np{n}_topk"
-        for n in NPROBE_SWEEP
-    )
-    vals = ", ".join(f"({n})" for n in NPROBE_SWEEP)
+    chains = ",\n".join(_ivf_cte(f"np{n}", nprobe=n) for n in NPROBE_SWEEP)
     return f"""
 {_ORACLE_VECTOR_CTE},
 {_exact_topk_cte()},
 {chains},
-nc_approx AS (
-  {union}
-), nc_matched AS (
-  SELECT a.nprobe, e.vec_a, COUNT(*) AS n_matched
-  FROM ex_topk e JOIN nc_approx a
-    ON a.vec_a = e.vec_a AND a.vec_b = e.vec_b
-  GROUP BY a.nprobe, e.vec_a
-), nc_per_query AS (
-  SELECT m.nprobe, s.vec_a, COALESCE(x.n_matched, 0) AS n_matched
-  FROM (SELECT DISTINCT vec_a FROM ex_topk) s
-  CROSS JOIN (VALUES {vals}) m(nprobe)
-  LEFT JOIN nc_matched x
-    ON x.nprobe = m.nprobe AND x.vec_a = s.vec_a
-)
-SELECT nprobe, COUNT(*) AS n_queries,
-       ROUND(SUM(n_matched) / (COUNT(*) * {float(TOPK_K)}), 6)
-         AS mean_recall,
-       ROUND(MIN(n_matched) / {float(TOPK_K)}, 6) AS min_recall,
-       CAST(SUM(CASE WHEN n_matched = {TOPK_K} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_perfect
-FROM nc_per_query
-GROUP BY nprobe
-"""
+{_recall_rollup_sql("nprobe", {n: f"np{n}_topk" for n in NPROBE_SWEEP})}"""
 
 
 def embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1851,41 +1895,16 @@ def ann_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rankings and rolls up per method.
     """
     exact = ann_cosine_topk(spark, sf_dir).select("vec_a", "vec_b")
-    spine = exact.select("vec_a").distinct()
-    methods = spark.createDataFrame(
-        [("lsh",), ("ivf",), ("pq",)], "method string"
-    )
-    approx = (
-        ann_lsh_topk(spark, sf_dir)
-        .select(F.lit("lsh").alias("method"), "vec_a", "vec_b", "rank")
-        .unionByName(
-            ann_ivf_topk(spark, sf_dir).select(
-                F.lit("ivf").alias("method"), "vec_a", "vec_b", "rank"
-            )
-        )
-        .unionByName(
-            ann_pq_adc_topk(spark, sf_dir).select(
-                F.lit("pq").alias("method"), "vec_a", "vec_b", "rank"
-            )
-        )
-    )
     discount = F.element_at(
         F.array(*[F.lit(d) for d in NDCG_DISCOUNTS]), F.col("rank")
     )
     dcg = (
-        approx.join(exact.withColumn("rel", F.lit(1)), ["vec_a", "vec_b"])
+        _method_topks(spark, sf_dir, "rank")
+        .join(exact, ["vec_a", "vec_b"])
         .groupBy("method", "vec_a")
         .agg(F.sum(discount.cast("long")).alias("dcg_s"))
     )
-    per_query = (
-        spine.crossJoin(methods)
-        .join(dcg, ["method", "vec_a"], "left")
-        .select(
-            "method",
-            "vec_a",
-            F.coalesce(F.col("dcg_s"), F.lit(0).cast("long")).alias("dcg_s"),
-        )
-    )
+    per_query = _per_query(spark, exact, dcg, "method", ANN_METHODS, "dcg_s")
     return per_query.groupBy("method").agg(
         F.count(F.lit(1)).alias("n_queries"),
         F.round(
@@ -1904,18 +1923,12 @@ def _ndcg_oracle() -> str:
     """DuckDB oracle for :func:`ann_ndcg_report`: the same method
     chains as the recall oracle, with the integer discount lookup."""
     disc_list = ", ".join(str(d) for d in NDCG_DISCOUNTS)
+    arms = {m: f"{m}_topk" for m in ANN_METHODS}
     return f"""
 {_ORACLE_VECTOR_CTE},
-{_exact_topk_cte()},
-{_lsh_cte()},
-{_ivf_cte()},
-{_pq_cte()},
+{_methods_cte()},
 nd_approx AS (
-  SELECT 'lsh' AS method, vec_a, vec_b, rank FROM lsh_topk
-  UNION ALL
-  SELECT 'ivf' AS method, vec_a, vec_b, rank FROM ivf_topk
-  UNION ALL
-  SELECT 'pq' AS method, vec_a, vec_b, rank FROM pq_topk
+  {_union_sql("method", arms, "vec_a, vec_b, rank")}
 ), nd_dcg AS (
   SELECT a.method, a.vec_a,
          CAST(SUM([{disc_list}][a.rank]) AS BIGINT) AS dcg_s
@@ -1925,7 +1938,7 @@ nd_approx AS (
 ), nd_per_query AS (
   SELECT m.method, s.vec_a, COALESCE(x.dcg_s, 0) AS dcg_s
   FROM (SELECT DISTINCT vec_a FROM ex_topk) s
-  CROSS JOIN (VALUES ('lsh'), ('ivf'), ('pq')) m(method)
+  CROSS JOIN (VALUES {_values_sql(ANN_METHODS)}) m(method)
   LEFT JOIN nd_dcg x ON x.method = m.method AND x.vec_a = s.vec_a
 )
 SELECT method, COUNT(*) AS n_queries,
@@ -1963,62 +1976,33 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays flat. No unbounded state anywhere; the oracle unrolls the
     same greedy selection into a generated CTE chain.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        to_double(F.col("embedding")).alias("emb_b"),
-    ).withColumn("norm_b", norm(F.col("emb_b")))
-    q_rows = _driver_vec_rows(sf_dir, [MMR_QUERY_ID])
-    query = spark.createDataFrame(
-        [(int(r.vec_id), list(r.emb)) for r in q_rows],
-        "vec_a long, emb_a array<double>",
-    ).withColumn("norm_a", norm(F.col("emb_a")))
+    corpus = _vectors(load_table(spark, sf_dir, "embeddings"), "vec_id", "b")
     rel = (
-        F.broadcast(query)
+        F.broadcast(_query_batch(spark, sf_dir, [MMR_QUERY_ID]))
         .crossJoin(corpus)
-        .where(F.col("vec_b") != MMR_QUERY_ID)
-        .select(
-            F.col("vec_b").alias("vec_id"),
-            F.round(
-                cosine_pre(
-                    F.col("emb_a"), F.col("emb_b"),
-                    F.col("norm_a"), F.col("norm_b"),
-                ),
-                6,
-            ).alias("rel"),
-        )
+        .where(F.col("vec_id") != MMR_QUERY_ID)
+        .select("vec_id", _cos6("a", "b").alias("rel"))
     )
     pool = (
         rel.orderBy(F.desc("rel"), "vec_id")
         .limit(MMR_POOL)
         .localCheckpoint(eager=True)
     )
-    pe = pool.join(
-        corpus.withColumnRenamed("vec_b", "vec_id"), "vec_id"
-    ).select("vec_id", "rel", "emb_b", "norm_b")
+    pe = pool.join(corpus, "vec_id")
     a = pe.select(
         F.col("vec_id").alias("d"),
-        F.col("emb_b").alias("e_d"),
-        F.col("norm_b").alias("n_d"),
+        F.col("emb_b").alias("emb_d"),
+        F.col("norm_b").alias("norm_d"),
     )
     b = pe.select(
         F.col("vec_id").alias("s"),
-        F.col("emb_b").alias("e_s"),
-        F.col("norm_b").alias("n_s"),
+        F.col("emb_b").alias("emb_s"),
+        F.col("norm_b").alias("norm_s"),
     )
     sims = (
         a.crossJoin(b)
         .where(F.col("d") != F.col("s"))
-        .select(
-            "d",
-            "s",
-            F.round(
-                cosine_pre(
-                    F.col("e_d"), F.col("e_s"), F.col("n_d"), F.col("n_s")
-                ),
-                6,
-            ).alias("sim"),
-        )
+        .select("d", "s", _cos6("d", "s").alias("sim"))
         .localCheckpoint(eager=True)
     )
     lam, one_m = F.lit(0.7), F.lit(0.3)
@@ -2155,123 +2139,66 @@ mmr_ids{t} AS (SELECT vec_id FROM mmr_ids{t - 1} UNION ALL SELECT vec_id FROM mm
 MATRYOSHKA_WIDTHS = (8, 16, 32)
 
 
+def _prefix_topk(
+    spark: SparkSession, sf_dir: str, kernels: dict
+) -> DataFrame:
+    """``(width, vec_a, vec_b, cos_sim, rank)`` for every width's
+    kernel (``kernels`` maps width → :func:`_corpus_kernel` kernel) in
+    ONE corpus pass: each batch is read and decoded once, and each
+    width scores a prefix view of it (no copy), so adding a width
+    costs one GEMM, not one more parquet scan — array slicing happens
+    after the columnar read, so per-width scans would re-read the full
+    vector bytes |widths| times. Then one rank window per (width,
+    query)."""
+
+    def score(M, vec_ids):
+        outs = []
+        for w, kernel in kernels.items():
+            for f in kernel(M, vec_ids):
+                f.insert(0, "width", np.full(len(f), w, dtype="int32"))
+                outs.append(f)
+        return outs
+
+    cands = _corpus_kernel(
+        spark, sf_dir, score, "width int, vec_a long, vec_b long, cos_sim double"
+    )
+    return _rank_cut(
+        cands.where(F.col("vec_a") != F.col("vec_b")),
+        "cos_sim",
+        keys=("width", "vec_a"),
+    )
+
+
 def _prefix_cosine_topk(
     spark: SparkSession, sf_dir: str, widths: tuple[int, ...]
 ) -> DataFrame:
-    """Exact prefix-cosine top-k at EVERY width in one fused Arrow
-    pass: ``(width, vec_a, vec_b, cos_sim, rank)``.
-
-    The bounded query batch (the same driver-side batch as
-    :func:`ann_cosine_topk`) ships in the kernel closure, pre-sliced
-    per width. Each corpus batch is read ONCE; inside the kernel the
-    width-w scorer reuses the already-decoded float matrix (a prefix
-    view, no copy), so adding a width costs one GEMM, not one more
-    parquet scan. Per (width, query) the kernel emits only its
-    batch-local top ``TOPK_K`` by the global (−cos_sim, vec_b) order —
-    the map-side-combine of top-k, sound because the global top-k is a
-    subset of the union of batch top-ks — so the rank window sees
-    ≤ |widths|·|queries|·k rows per batch, never the corpus.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
+    """Exact prefix-cosine top-k at every width in ``widths``, one
+    corpus pass (:func:`_prefix_topk` over :func:`_cosine_kernel`)
+    against the same driver-side query batch as
+    :func:`ann_cosine_topk`."""
     q_rows = _driver_vec_rows(sf_dir, list(range(N_QUERY_VECTORS)))
-    Q_full = np.array([r.emb for r in q_rows])
-    qids = np.asarray([r.vec_id for r in q_rows], dtype="int64")
-    per_width = {}
-    for w in widths:
-        Q = Q_full[:, :w]
-        per_width[w] = (Q, np.sqrt(np.einsum("ij,ij->i", Q, Q)))
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M_full = np.stack(pdf["emb"].to_numpy())
-            vec_ids = pdf["vec_id"].to_numpy()
-            outs = []
-            for w, (Q, qn) in per_width.items():
-                M = M_full[:, :w]
-                norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-                S = np.round((M @ Q.T) / (norms[:, None] * qn[None, :]), 6)
-                for qi in range(len(qids)):
-                    keep = vec_ids != qids[qi]
-                    ids_k = vec_ids[keep]
-                    col = S[keep, qi]
-                    # batch-local top-k by the exact global order:
-                    # rounded cos_sim desc, vec_b asc tiebreak.
-                    order = np.lexsort((ids_k, -col))[:TOPK_K]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "width": np.full(
-                                    len(order), w, dtype="int32"
-                                ),
-                                "vec_a": np.full(
-                                    len(order), qids[qi], dtype="int64"
-                                ),
-                                "vec_b": ids_k[order],
-                                "cos_sim": col[order],
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs)
-
-    cands = (
-        fan_out(emb)
-        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
-        .mapInPandas(
-            score_batches,
-            "width int, vec_a long, vec_b long, cos_sim double",
-        )
-    )
-    w_rank = Window.partitionBy("width", "vec_a").orderBy(
-        F.desc("cos_sim"), F.col("vec_b")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= TOPK_K)
-        .select("width", "vec_a", "vec_b", "cos_sim", "rank")
+    return _prefix_topk(
+        spark, sf_dir, {w: _cosine_kernel(q_rows, w) for w in widths}
     )
 
 
-def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka truncation audit: recall@k of PREFIX-DIMENSION
-    cosine retrieval against the full-dimension exact baseline, one
-    row per truncation width. This is the acceptance gate for serving
-    a cheaper prefix of the embedding (Kusupati et al., MRL): if
-    recall@k at width 16 is already ~1.0, the ANN index can store a
-    4× smaller vector — a 100 TB corpus decision worth an audit
-    table.
-
-    ALL widths run in ONE fused Arrow kernel over ONE corpus scan
-    (:func:`_prefix_cosine_topk`) — the same fusion
-    :func:`ann_prefix_ivf_recall` uses, because a per-width scan
-    re-reads the same embedding bytes |widths| times at 100 TB.
-    Width-w scores are GEMMs over prefix views of the once-decoded
-    batch, each (width, query) pre-reduced to its batch-local top-k,
-    then one rank window per (width, query) over the bounded
-    candidates. Ranking uses the same rounded-similarity + vec_id
-    tiebreak as the baseline. The overlap join keys on (width, query,
-    neighbor) — |widths|·k·|queries| rows, trivially small at any
-    corpus size; the |queries|×|widths| audit spine is the same
-    bounded cross the recall report uses.
-
-    Oracle-checked end to end: per-width truncated norms/dots replay
-    over the shared positional-unnest CTE with ``i <= w`` (DuckDB
-    subscripts are 1-based, matching the kernel's prefix view).
-    """
-    # NOTE (r15): round 14 overlapped the exact-baseline checkpoint
-    # build with the trunc-side prep via ThreadPoolExecutor(1) (guide
-    # §2.6). The driver's graded 32-core bench showed the overlap
-    # REGRESSES this config (2.29→5.41 s; 8-core runs 2.5× faster than
-    # 32-core — the concurrent baseline job contends with the
-    # trunc-side collects under 32-way AQE scheduling), so the builds
-    # run sequentially again. VERDICT r14 "What's wrong" #1.
-    full = _exact_baseline_ckpt(spark, sf_dir)
-    trunc = _prefix_cosine_topk(spark, sf_dir, MATRYOSHKA_WIDTHS).select(
-        "width", "vec_a", "vec_b"
+def _prefix_ivf_topk(
+    spark: SparkSession, sf_dir: str, widths: tuple[int, ...]
+) -> DataFrame:
+    """IVF top-k re-quantized at every width in ``widths``, one corpus
+    pass (:func:`_prefix_topk` over :func:`_ivf_kernel`): per width,
+    the centroids and the query batch are sliced driver-side, and
+    each batch is sliced, coarse-quantized against that width's unit
+    centroids and probe-scored at ``IVF_NPROBE``."""
+    centroid_rows, query_rows = _collect_ivf_inputs(spark, sf_dir)
+    return _prefix_topk(
+        spark,
+        sf_dir,
+        {
+            w: _ivf_kernel(centroid_rows, query_rows, IVF_NPROBE, w)
+            for w in widths
+        },
     )
-    return _width_recall_rollup(spark, full, trunc)
 
 
 #: Session memo (plans.catalog.session_memo) for the exact full-dim
@@ -2284,17 +2211,14 @@ def _exact_baseline_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact full-dimension cosine top-k ``(vec_a, vec_b)``
     baseline as a SHARED, eagerly-checkpointed |queries|·k-row frame.
 
-    Both prefix audits (:func:`ann_matryoshka_recall`,
-    :func:`ann_prefix_ivf_recall`) grade against this same baseline;
-    round 7 had each audit recompute it AND re-expand it into every
-    rollup branch, leaving a chain of ~8 dependent sub-second jobs
-    per audit — a pure scheduling-floor cost at sf0.1 and a doubled
-    baseline scan at 100 TB. Materializing it once per (session,
-    sf_dir) is the "persist the ground-truth index artifact"
-    production pattern: the second audit's baseline cost drops to a
-    block-manager read, and the rollup's three consumptions (overlap
-    join build, query spine, left-join probe) all read the same
-    50-row checkpoint instead of re-deriving the scoring subtree.
+    The prefix audits (:func:`ann_matryoshka_recall`,
+    :func:`ann_prefix_ivf_recall`) and the SQ8 rerank report grade
+    against this same baseline. Materializing it once per (session,
+    sf_dir) turns each later audit's baseline into a block-manager
+    read, and a rollup's several reads of it (overlap-join build,
+    query spine) read the same 50-row checkpoint instead of
+    re-deriving the scoring subtree, each as its own chain of
+    dependent sub-second jobs.
     """
     return session_memo(
         _EXACT_BASELINE_CACHE,
@@ -2307,207 +2231,65 @@ def _exact_baseline_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _width_recall_rollup(
-    spark: SparkSession, full: DataFrame, trunc: DataFrame
-) -> DataFrame:
-    """Shared overlap/rollup for the per-width recall audits:
-    ``(width, n_queries, mean_recall, min_recall, n_perfect)``.
+def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka truncation audit: recall@k of PREFIX-DIMENSION
+    cosine retrieval against the full-dimension exact baseline, one
+    row per truncation width. This is the acceptance gate for serving
+    a cheaper prefix of the embedding (Kusupati et al., MRL): if
+    recall@k at width 16 is already ~1.0, the ANN index can store a
+    4× smaller vector.
 
-    ``full`` arrives as the eagerly-checkpointed shared baseline
-    (:func:`_exact_baseline_ckpt`), so its three consumptions here —
-    overlap-join build side, ``DISTINCT vec_a`` query spine, and the
-    left-join probe — read the same |queries|·k-row block-manager
-    blocks instead of re-expanding the exact-scoring subtree per
-    branch (round 7 leaned on AQE's ReusedExchange for that dedup;
-    the checkpoint makes it structural and drops the dependent
-    broadcast-build job chain). The widths side is explicitly
-    broadcast: a cartesian of two |cores|-partition sides otherwise
-    schedules |cores|² near-empty tasks (~15 s at local[32] — the
-    round-7 bench caught exactly this).
+    ALL widths run in ONE fused Arrow kernel over ONE corpus scan
+    (:func:`_prefix_cosine_topk`), as in :func:`ann_prefix_ivf_recall`.
+    Width-w scores are GEMMs over prefix views of the once-decoded
+    batch, each (width, query) pre-reduced to its batch-local top-k,
+    then one rank window per (width, query) over the bounded
+    candidates, with the baseline's rounded-similarity + vec_id
+    tiebreak. The overlap join keys on (width, query, neighbor) —
+    |widths|·k·|queries| rows (:func:`_recall_rollup`).
+
+    The baseline checkpoint is built before the prefix side's driver
+    reads, not alongside them: overlapping the two on a thread
+    measured slower on 32 cores (2.29 → 5.41 s), as the concurrent
+    baseline job contends with the prefix side's collects.
+
+    Oracle-checked end to end: per-width truncated norms/dots replay
+    over the shared positional-unnest CTE with ``i <= w`` (DuckDB
+    subscripts are 1-based, matching the kernel's prefix view).
     """
-    matched = (
-        F.broadcast(full)
-        .join(trunc, ["vec_a", "vec_b"])
-        .groupBy("width", "vec_a")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
+    full = _exact_baseline_ckpt(spark, sf_dir)
+    trunc = _prefix_cosine_topk(spark, sf_dir, MATRYOSHKA_WIDTHS).select(
+        "width", "vec_a", "vec_b"
     )
-    widths = spark.createDataFrame(
-        [(int(w),) for w in MATRYOSHKA_WIDTHS], "width int"
-    )
-    per_query = (
-        full.select("vec_a")
-        .distinct()
-        .crossJoin(F.broadcast(widths))
-        .join(F.broadcast(matched), ["width", "vec_a"], "left")
-        .select(
-            "width",
-            "vec_a",
-            F.coalesce(F.col("n_matched"), F.lit(0)).alias("n_matched"),
-        )
-    )
-    k = float(TOPK_K)
-    return per_query.groupBy("width").agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.round(F.sum("n_matched") / (F.count(F.lit(1)) * F.lit(k)), 6).alias(
-            "mean_recall"
-        ),
-        F.round(F.min("n_matched") / F.lit(k), 6).alias("min_recall"),
-        F.sum((F.col("n_matched") == TOPK_K).cast("int")).alias("n_perfect"),
-    )
+    return _recall_rollup(spark, full, trunc, "width", MATRYOSHKA_WIDTHS)
 
 
-def _matryoshka_oracle() -> str:
-    """DuckDB oracle for :func:`ann_matryoshka_recall`: the exact
-    full-dim top-k plus one truncated top-k chain per width over the
-    shared positional-unnest CTE (``i <= w`` — 1-based, exactly the
-    Spark prefix slice), then the same overlap/rollup."""
-    width_ctes = []
-    width_union = []
-    for w in MATRYOSHKA_WIDTHS:
-        width_ctes.append(f"""mt_norms_{w} AS (
-  SELECT vec_id, SQRT(SUM(x * x)) AS nrm FROM v WHERE i <= {w}
-  GROUP BY vec_id
-), mt_dots_{w} AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dp
-  FROM v a JOIN v b ON a.i = b.i
-  WHERE a.i <= {w} AND b.i <= {w}
-    AND a.vec_id < {N_QUERY_VECTORS} AND a.vec_id <> b.vec_id
-  GROUP BY 1, 2
-), mt_topk_{w} AS (
-  SELECT CAST({w} AS INTEGER) AS width, vec_a, vec_b
-  FROM (
-    SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cs
-    FROM mt_dots_{w}
-    JOIN mt_norms_{w} na ON na.vec_id = vec_a
-    JOIN mt_norms_{w} nb ON nb.vec_id = vec_b
-  )
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_a
-          ORDER BY cs DESC, vec_b) <= {TOPK_K}
-)""")
-        width_union.append(f"SELECT * FROM mt_topk_{w}")
-    widths_values = ", ".join(
-        f"({w})" for w in MATRYOSHKA_WIDTHS
+def _width_cte(w: int) -> str:
+    """``pv{w}``/``pn{w}``: each vector's components and norm over its
+    first ``w`` dims (``i <= w``: DuckDB subscripts are 1-based, like
+    the kernels' prefix slice)."""
+    return f"""pv{w} AS (
+  SELECT vec_id, i, x FROM v WHERE i <= {w}
+), pn{w} AS (
+  SELECT vec_id, SQRT(SUM(x * x)) AS nrm FROM pv{w} GROUP BY vec_id
+)"""
+
+
+def _width_recall_oracle(prefix: str, topk_cte) -> str:
+    """DuckDB oracle of a prefix-width recall audit: the full-dim
+    exact top-k, then per width ``w`` the :func:`_width_cte` slices
+    and ``topk_cte(prefix + w, "pv{w}", "pn{w}")``, a chain ending in
+    ``{prefix}{w}_topk``, then the recall rollup by width."""
+    chains = ",\n".join(
+        f"{_width_cte(w)}, {topk_cte(f'{prefix}{w}', f'pv{w}', f'pn{w}').strip()}"
+        for w in MATRYOSHKA_WIDTHS
     )
+    arms = {w: f"{prefix}{w}_topk" for w in MATRYOSHKA_WIDTHS}
     return f"""
 {_ORACLE_VECTOR_CTE},
 {_exact_topk_cte()},
-{", ".join(width_ctes)},
-mt_trunc AS (
-  {" UNION ALL ".join(width_union)}
-), mt_matched AS (
-  SELECT t.width, e.vec_a, COUNT(*) AS n_matched
-  FROM ex_topk e JOIN mt_trunc t
-    ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b
-  GROUP BY t.width, e.vec_a
-), mt_per_query AS (
-  SELECT CAST(wd.width AS INTEGER) AS width, s.vec_a,
-         COALESCE(x.n_matched, 0) AS n_matched
-  FROM (SELECT DISTINCT vec_a FROM ex_topk) s
-  CROSS JOIN (VALUES {widths_values}) wd(width)
-  LEFT JOIN mt_matched x
-    ON x.width = wd.width AND x.vec_a = s.vec_a
-)
-SELECT width, COUNT(*) AS n_queries,
-       ROUND(SUM(n_matched) / (COUNT(*) * {float(TOPK_K)}), 6)
-         AS mean_recall,
-       ROUND(MIN(n_matched) / {float(TOPK_K)}, 6) AS min_recall,
-       CAST(SUM(CASE WHEN n_matched = {TOPK_K} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_perfect
-FROM mt_per_query
-GROUP BY width
-"""
-
-
-def _prefix_ivf_topk(
-    spark: SparkSession, sf_dir: str, widths: tuple[int, ...]
-) -> DataFrame:
-    """IVF top-k at EVERY prefix width in one fused Arrow pass:
-    ``(width, vec_a, vec_b, cos_sim, rank)``. Per batch, per width:
-    prefix-slice → coarse-quantize against the width's re-derived
-    unit centroids (first-occurrence argmax = (−sim, cid) rule) →
-    score the probes targeting the batch's lists — the single-width
-    kernel of :func:`_ivf_topk_frame` looped over widths inside one
-    corpus read."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroid_rows, query_rows = _collect_ivf_inputs(spark, sf_dir)
-    cids = [r.vec_id for r in centroid_rows]
-    id_arr = np.asarray(cids)
-    C_full = np.array([r.emb for r in centroid_rows])
-    Q_full = np.array([r.emb for r in query_rows])
-    qids = np.array([r.vec_id for r in query_rows])
-    per_width = {}
-    for w in widths:
-        C = C_full[:, :w]
-        unit = C / np.linalg.norm(C, axis=1, keepdims=True)
-        Q = Q_full[:, :w]
-        qnorm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-        sims = np.round((Q @ unit.T) / qnorm[:, None], 6)
-        by_list: dict[int, list[int]] = {}
-        for qi in range(len(qids)):
-            for j in sorted(
-                range(len(cids)), key=lambda j: (-sims[qi, j], cids[j])
-            )[:IVF_NPROBE]:
-                by_list.setdefault(cids[j], []).append(qi)
-        probes = {
-            lid: (qids[ix], Q[ix], qnorm[ix]) for lid, ix in by_list.items()
-        }
-        per_width[w] = (unit, probes)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M_full = np.stack(pdf["emb"].to_numpy())
-            vec_ids = pdf["vec_id"].to_numpy()
-            outs = []
-            for w, (unit, probes) in per_width.items():
-                M = M_full[:, :w]
-                norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-                s = np.round((M @ unit.T) / norms[:, None], 6)
-                lists = id_arr[s.argmax(axis=1)]
-                for lid in np.unique(lists):
-                    if lid not in probes:
-                        continue
-                    qid_a, qmat, qn = probes[lid]
-                    mask = lists == lid
-                    S = np.round(
-                        (M[mask] @ qmat.T)
-                        / (norms[mask][:, None] * qn[None, :]),
-                        6,
-                    )
-                    nb, nq = int(mask.sum()), len(qid_a)
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "width": np.full(nb * nq, w, dtype="int32"),
-                                "vec_a": np.repeat(
-                                    qid_a[None, :], nb, axis=0
-                                ).ravel(),
-                                "vec_b": np.repeat(vec_ids[mask], nq),
-                                "cos_sim": S.ravel(),
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs)
-
-    cands = (
-        fan_out(emb)
-        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
-        .mapInPandas(
-            score_batches,
-            "width int, vec_a long, vec_b long, cos_sim double",
-        )
-        .where(F.col("vec_a") != F.col("vec_b"))
-    )
-    w_rank = Window.partitionBy("width", "vec_a").orderBy(
-        F.desc("cos_sim"), F.col("vec_b")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= TOPK_K)
-        .select("width", "vec_a", "vec_b", "cos_sim", "rank")
-    )
+{chains},
+{_recall_rollup_sql("width", arms)}"""
 
 
 def ann_prefix_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2521,96 +2303,39 @@ def ann_prefix_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-recall × IVF-recall (list-boundary errors compound).
 
     All widths run in ONE fused Arrow kernel over ONE corpus scan
-    (``mapInPandas``): centroids and the query batch are sliced
-    driver-side (bounded structures), and each batch is sliced,
-    re-quantized and probe-scored per width inside the kernel — the
-    embedding column is read from parquet exactly once for the whole
-    audit instead of once per width (array slicing happens after the
-    columnar read, so per-width scan projections would re-read the
-    full vector bytes |widths| times at 100 TB). The standard
-    ``IVF_NPROBE`` probe runs against each width's re-quantized
-    lists. Overlap joins key on (width, query, neighbor) —
-    |widths|·k·|queries| rows; the audit spine is the same bounded
-    |queries|×|widths| cross the width-recall audit uses. Shuffle
+    (:func:`_prefix_ivf_topk`): the embedding column is read from
+    parquet exactly once for the whole audit. The standard
+    ``IVF_NPROBE`` probe runs against each width's re-quantized lists.
+    Overlap joins key on (width, query, neighbor) —
+    |widths|·k·|queries| rows (:func:`_recall_rollup`). Shuffle
     ledger: nothing but the bounded candidate sets and the k-row rank
     windows (partitioned per (width, query)); the corpus itself never
-    shuffles.
+    shuffles. As in :func:`ann_matryoshka_recall`, the baseline is
+    built first: overlapping it with the IVF input reads on a thread
+    measured slower on 32 cores (2.36 → 3.26 s).
 
     Oracle: per-width component/norm CTEs (``i <= w``, 1-based like
     the kernel's prefix slice) feed the shared :func:`_ivf_cte`
     chain — the same deterministic strided quantizer replayed in SQL
     at each width.
     """
-    # NOTE (r15): the round-14 §2.6 thread overlap of the baseline
-    # build with the IVF input collects regressed the graded 32-core
-    # config (2.36→3.26 s, scaling ratio 0.47) — reverted to the
-    # sequential shape. VERDICT r14 "What's wrong" #1.
     full = _exact_baseline_ckpt(spark, sf_dir)
     trunc = _prefix_ivf_topk(spark, sf_dir, MATRYOSHKA_WIDTHS).select(
         "width", "vec_a", "vec_b"
     )
-    return _width_recall_rollup(spark, full, trunc)
-
-
-def _prefix_ivf_oracle() -> str:
-    """DuckDB oracle for :func:`ann_prefix_ivf_recall`: the exact
-    full-dim top-k plus one re-quantized IVF chain per width, each
-    over width-sliced component/norm CTEs, then the same
-    overlap/rollup as the width-recall audit."""
-    width_ctes = []
-    width_union = []
-    for w in MATRYOSHKA_WIDTHS:
-        width_ctes.append(f"""pv{w} AS (
-  SELECT vec_id, i, x FROM v WHERE i <= {w}
-), pn{w} AS (
-  SELECT vec_id, SQRT(SUM(x * x)) AS nrm FROM pv{w} GROUP BY vec_id
-), {_ivf_cte(nprobe=IVF_NPROBE, prefix=f"pw{w}", vname=f"pv{w}", nname=f"pn{w}").strip()}""")
-        width_union.append(
-            f"SELECT CAST({w} AS INTEGER) AS width, vec_a, vec_b "
-            f"FROM pw{w}_topk"
-        )
-    widths_values = ", ".join(f"({w})" for w in MATRYOSHKA_WIDTHS)
-    return f"""
-{_ORACLE_VECTOR_CTE},
-{_exact_topk_cte()},
-{", ".join(width_ctes)},
-pi_trunc AS (
-  {" UNION ALL ".join(width_union)}
-), pi_matched AS (
-  SELECT t.width, e.vec_a, COUNT(*) AS n_matched
-  FROM ex_topk e JOIN pi_trunc t
-    ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b
-  GROUP BY t.width, e.vec_a
-), pi_per_query AS (
-  SELECT CAST(wd.width AS INTEGER) AS width, s.vec_a,
-         COALESCE(x.n_matched, 0) AS n_matched
-  FROM (SELECT DISTINCT vec_a FROM ex_topk) s
-  CROSS JOIN (VALUES {widths_values}) wd(width)
-  LEFT JOIN pi_matched x
-    ON x.width = wd.width AND x.vec_a = s.vec_a
-)
-SELECT width, COUNT(*) AS n_queries,
-       ROUND(SUM(n_matched) / (COUNT(*) * {float(TOPK_K)}), 6)
-         AS mean_recall,
-       ROUND(MIN(n_matched) / {float(TOPK_K)}, 6) AS min_recall,
-       CAST(SUM(CASE WHEN n_matched = {TOPK_K} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_perfect
-FROM pi_per_query
-GROUP BY width
-"""
+    return _recall_rollup(spark, full, trunc, "width", MATRYOSHKA_WIDTHS)
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-k (IVFADC — Jégou et al., TPAMI 2011 §V): the
     production FAISS configuration, composing the two registered
-    quantizers that until now ran separately. The IVF coarse
+    quantizers that otherwise run separately. The IVF coarse
     quantizer PRUNES (each query scans only its nprobe nearest
     inverted lists) and PQ COMPRESSES (in-list candidates are scored
     through 4-bit codes via asymmetric-distance lookup tables, never
-    touching the floats). At 100 TB that stacks both wins: a probe
-    reads nprobe/nlists of the corpus AND reads it 32× smaller —
-    IVF-Flat re-reads full vectors per candidate, plain PQ scans
-    every code.
+    touching the floats): a probe reads nprobe/nlists of the corpus
+    AND reads it 32× smaller — IVF-Flat re-reads full vectors per
+    candidate, plain PQ scans every code.
 
     Codes here quantize the RAW vector (not the list residual):
     both registered quantizers are deterministic strided-id samples,
@@ -2619,91 +2344,32 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a trained residual IVFADC, and the pytest floor pins it against
     the exact baseline.
 
-    Execution is the same ONE fused Arrow stage as the parents
-    (mapInPandas over the corpus): per batch — coarse-assign (batch ×
-    nlists GEMM, round-6, first-occurrence argmax), keep only rows
-    whose list some query probes, PQ-encode exactly those rows
-    (PQ_M small GEMMs), ADC-score them against the probing queries
-    only (LUT gather), emit scored pairs. Zero corpus shuffle, zero
+    Execution is the same ONE fused Arrow stage as the parents: the
+    IVF kernel (:func:`_ivf_kernel`) coarse-assigns each batch and
+    keeps only rows whose list some query probes, and the PQ kernel
+    (:func:`_pq_adc`) encodes exactly those rows and ADC-scores them
+    against the probing queries only. Zero corpus shuffle, zero
     broadcast build; the final per-query top-k window sees only
     in-probed-list candidates.
 
     Value-exact DuckDB oracle: the IVF assignment fragment and the
     PQ codebook fragment replay verbatim (shared CTE builders with
     the parent oracles), joined by the probe⋈assignment candidate
-    restriction — every comparison after a round-6, the contract the
-    parents are hash-checked under.
+    restriction — every comparison after a 6-decimal round, the
+    contract the parents are hash-checked under.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
     centroid_rows, query_rows = _collect_ivf_inputs(spark, sf_dir)
     code_rows, _ = _collect_pq_inputs(spark, sf_dir)
-
-    # Coarse quantizer + probe selection and the PQ codebook — the
-    # same helpers the parents use, so the contracts cannot drift.
-    unit, id_arr, Q, qids, qnorm, by_list = _probe_selection(
-        centroid_rows, query_rows, IVF_NPROBE
+    kernel = _ivf_kernel(
+        centroid_rows,
+        query_rows,
+        IVF_NPROBE,
+        adc=_pq_adc(code_rows, query_rows),
     )
-    Csub, cc, sub = _pq_codebook(code_rows)
-    Qsub = np.stack([Q[:, s * sub : (s + 1) * sub] for s in range(PQ_M)])
-    lut = np.einsum("sqd,sjd->sqj", Qsub, Csub)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf["emb"].to_numpy())
-            vec_ids = pdf["vec_id"].to_numpy()
-            norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-            s = np.round((M @ unit.T) / norms[:, None], 6)
-            lists = id_arr[s.argmax(axis=1)]
-            outs = []
-            for lid in np.unique(lists):
-                if lid not in by_list:
-                    continue
-                mask = lists == lid
-                Mm = M[mask]
-                codes = np.empty((len(Mm), PQ_M), dtype=np.int64)
-                for sp in range(PQ_M):
-                    ascore = np.round(
-                        Mm[:, sp * sub : (sp + 1) * sub] @ Csub[sp].T
-                        - 0.5 * cc[sp],
-                        6,
-                    )
-                    codes[:, sp] = ascore.argmax(axis=1)
-                ix = by_list[lid]  # query indices probing this list
-                adc = np.zeros((len(ix), len(Mm)))
-                rec2 = np.zeros(len(Mm))
-                for sp in range(PQ_M):
-                    adc += lut[sp][ix][:, codes[:, sp]]
-                    rec2 += cc[sp][codes[:, sp]]
-                sims = np.round(
-                    adc / (qnorm[ix][:, None] * np.sqrt(rec2)[None, :]), 6
-                )
-                nb, nq = len(Mm), len(ix)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.repeat(qids[ix], nb),
-                            "vec_b": np.tile(vec_ids[mask], nq),
-                            "adc_sim": sims.ravel(),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    cands = (
-        fan_out(emb)
-        .select("vec_id", to_double(F.col("embedding")).alias("emb"))
-        .mapInPandas(score_batches, "vec_a long, vec_b long, adc_sim double")
-        .where(F.col("vec_a") != F.col("vec_b"))
+    cands = _corpus_kernel(
+        spark, sf_dir, kernel, "vec_a long, vec_b long, adc_sim double"
     )
-    w = Window.partitionBy("vec_a").orderBy(F.desc("adc_sim"), F.col("vec_b"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "adc_sim", "rank")
-    )
+    return _rank_cut(cands.where(F.col("vec_a") != F.col("vec_b")), "adc_sim")
 
 
 def _ivfpq_oracle() -> str:
@@ -2726,17 +2392,7 @@ ipq_cand AS (
   JOIN pq_codes b ON b.vec_id = c.vec_b
   JOIN pq_xc q ON q.vec_id = c.vec_a AND q.s = b.s AND q.j = b.code
   GROUP BY 1, 2
-), ipq_scored AS (
-  SELECT a.vec_a, a.vec_b,
-         ROUND(a.adc_dot / (n.nrm * SQRT(a.rec2)), 6) AS adc_sim
-  FROM ipq_adc a JOIN norms n ON n.vec_id = a.vec_a
-), ipq_topk AS (
-  SELECT vec_a, vec_b, adc_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
-              ORDER BY adc_sim DESC, vec_b) AS INTEGER) AS rank
-  FROM ipq_scored
-  QUALIFY rank <= {TOPK_K}
-)
+), {_adc_topk_sql("ipq")}
 SELECT vec_a, vec_b, adc_sim, rank FROM ipq_topk
 """
 
@@ -2759,12 +2415,7 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-sim + vec_id engine-stable ranking.
     """
     scored, _ = _sq8_scored_frame(spark, sf_dir)
-    w = Window.partitionBy("vec_a").orderBy(F.desc("sq_sim"), F.col("vec_b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "sq_sim", "rank")
-    )
+    return _rank_cut(scored, "sq_sim")
 
 
 def _sq8_scored_frame(
@@ -2772,36 +2423,16 @@ def _sq8_scored_frame(
 ) -> tuple[DataFrame, DataFrame]:
     """The SQ8-scored pair frame ``(vec_a, vec_b, sq_sim)`` plus the
     broadcast-ready query batch — one home for the asymmetric scoring
-    expressions so the flat index (:func:`ann_sq8_topk`) and the
-    two-stage rerank (:func:`ann_sq8_rerank_topk`) cannot drift."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    absmax = _absmax_literal(emb)
-    deq = _sq8_dequant(to_double(F.col("embedding")), absmax)
-    corpus = emb.select(
-        F.col("vec_id").alias("vec_b"), deq.alias("emb_b")
-    ).withColumn("norm_b", norm(F.col("emb_b")))
-    q_rows = _driver_vec_rows(sf_dir, list(range(N_QUERY_VECTORS)))
-    queries = spark.createDataFrame(
-        [(int(r.vec_id), list(r.emb)) for r in q_rows],
-        "vec_a long, emb_a array<double>",
-    ).withColumn("norm_a", norm(F.col("emb_a")))
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .where(F.col("vec_a") != F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                cosine_pre(
-                    F.col("emb_a"), F.col("emb_b"),
-                    F.col("norm_a"), F.col("norm_b"),
-                ),
-                6,
-            ).alias("sq_sim"),
-        )
+    so the flat index (:func:`ann_sq8_topk`) and the two-stage rerank
+    (:func:`ann_sq8_rerank_topk`) cannot drift."""
+    return _broadcast_scored(
+        spark,
+        sf_dir,
+        "sq_sim",
+        lambda emb: _sq8_dequant(
+            to_double(F.col("embedding")), _absmax_literal(emb)
+        ),
     )
-    return scored, queries
 
 
 #: Candidate depth of the two-stage retrieval: the SQ8 index proposes
@@ -2842,20 +2473,14 @@ def _sq8_rerank_cut(
     callers: the recovery report reads it twice (the rerank side and
     — because the flat index's top-k is by construction the first k
     rows of the same (−sq_sim, vec_b) ranking — the flat-SQ8 side,
-    which previously re-ran the corpus scoring through ann_sq8_topk).
-    The plain two-stage query consumes the cut exactly once (inside
-    its stage-2 broadcast build), so it passes ``materialize=False``
-    and saves the checkpoint round-trip — the scoring subtree then
-    runs inside the broadcast-exchange job of the one action
-    (round-14 job-floor cut)."""
+    so the corpus is scored once). The plain two-stage query consumes
+    the cut exactly once (inside its stage-2 broadcast build), so it
+    passes ``materialize=False`` and saves the checkpoint round-trip:
+    the scoring subtree then runs inside the broadcast-exchange job
+    of the one action, one Spark job fewer."""
     scored, queries = _sq8_scored_frame(spark, sf_dir)
-    w1 = Window.partitionBy("vec_a").orderBy(
-        F.desc("sq_sim"), F.col("vec_b")
-    )
-    cut = (
-        scored.withColumn("r1", F.row_number().over(w1))
-        .where(F.col("r1") <= SQ8_RERANK_R)
-        .select("vec_a", "vec_b", "r1")
+    cut = _rank_cut(scored, "sq_sim", SQ8_RERANK_R, rank="r1").select(
+        "vec_a", "vec_b", "r1"
     )
     if materialize:
         cut = cut.localCheckpoint(eager=True)
@@ -2867,41 +2492,20 @@ def _sq8_rerank_from(
 ) -> DataFrame:
     """Stage 2: exact float rerank of the bounded candidate cut —
     broadcast the winner list against the float corpus (semi-join-
-    shaped prune, no second corpus-scan shuffle), round-6 cosine,
+    shaped prune, no second corpus-scan shuffle), 6-decimal cosine,
     rank ≤ k on the house (−sim, vec_b) order."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus_f = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        to_double(F.col("embedding")).alias("emb_bf"),
-    ).withColumn("norm_bf", norm(F.col("emb_bf")))
+    corpus_f = _vectors(load_table(spark, sf_dir, "embeddings"), "vec_b", "bf")
     rer = (
         F.broadcast(cut.select("vec_a", "vec_b"))
         .join(corpus_f, "vec_b")
         .join(F.broadcast(queries), "vec_a")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                cosine_pre(
-                    F.col("emb_a"), F.col("emb_bf"),
-                    F.col("norm_a"), F.col("norm_bf"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
+        .select("vec_a", "vec_b", _cos6("a", "bf").alias("cos_sim"))
     )
-    w2 = Window.partitionBy("vec_a").orderBy(
-        F.desc("cos_sim"), F.col("vec_b")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= TOPK_K)
-        .select("vec_a", "vec_b", "cos_sim", "rank")
-    )
+    return _rank_cut(rer, "cos_sim")
 
 
 #: 1e-6 grid for the similarity-shift rollup: both sims are already
-#: round-6 values, so the scaled difference is exact integer mass.
+#: 6-decimal values, so the scaled difference is exact integer mass.
 _SQ8_SHIFT_SCALE = 1_000_000.0
 
 _SQ8_CTE = f"""
@@ -2925,13 +2529,7 @@ sq_stats AS (
   FROM sq_dots
   JOIN norms na ON na.vec_id = vec_a
   JOIN nq nb ON nb.vec_id = vec_b
-), sq_topk AS (
-  SELECT vec_a, vec_b, sq_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
-              ORDER BY sq_sim DESC, vec_b) AS INTEGER) AS rank
-  FROM sq_scored
-  QUALIFY rank <= {TOPK_K}
-)"""
+), {_topk_sql("sq_topk", "sq_scored", "sq_sim")}"""
 
 ANN_SQ8_TOPK_ORACLE = f"""
 {_ORACLE_VECTOR_CTE},
@@ -2942,28 +2540,7 @@ SELECT vec_a, vec_b, sq_sim, rank FROM sq_topk
 #: Rerank CTE chain on top of _SQ8_CTE: the R-deep SQ8 candidate cut,
 #: then exact float re-scoring of ONLY those pairs.
 _SQ8_RERANK_CTE = f"""
-sq_cand AS (
-  SELECT vec_a, vec_b FROM sq_scored
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_a
-          ORDER BY sq_sim DESC, vec_b) <= {SQ8_RERANK_R}
-), rr_dots AS (
-  SELECT c.vec_a, c.vec_b, SUM(a.x * b.x) AS dp
-  FROM sq_cand c
-  JOIN v a ON a.vec_id = c.vec_a
-  JOIN v b ON b.vec_id = c.vec_b AND b.i = a.i
-  GROUP BY 1, 2
-), rr_scored AS (
-  SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM rr_dots
-  JOIN norms na ON na.vec_id = vec_a
-  JOIN norms nb ON nb.vec_id = vec_b
-), rr_topk AS (
-  SELECT vec_a, vec_b, cos_sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY vec_a
-              ORDER BY cos_sim DESC, vec_b) AS INTEGER) AS rank
-  FROM rr_scored
-  QUALIFY rank <= {TOPK_K}
-)"""
+{_topk_sql("rr_cand", "sq_scored", "sq_sim", SQ8_RERANK_R)}, {_rescored_topk_sql("rr")}"""
 
 ANN_SQ8_RERANK_TOPK_ORACLE = f"""
 {_ORACLE_VECTOR_CTE},
@@ -2989,7 +2566,7 @@ def ann_sq8_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut instead of re-scoring the corpus, and the exact side reads
     the shared checkpointed baseline. The recovery delta is computed
     in the same operation order in both engines (two integer-sum
-    ratios subtracted, then one round-6), per the determinism
+    ratios subtracted, then one 6-decimal round), per the determinism
     contract.
     """
     exact = _exact_baseline_ckpt(spark, sf_dir)
@@ -3077,7 +2654,7 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     The overlap join keys on (query, neighbor) pairs — k·|queries|
     rows per side regardless of corpus size; the heavy work is inside
     the two audited top-k queries. The shift rides the 1e-6 integer
-    grid (both sims are round-6 values), so the rollup is exact in
+    grid (both sims are 6-decimal values), so the rollup is exact in
     both engines.
     """
     exact = ann_cosine_topk(spark, sf_dir)
@@ -3123,21 +2700,7 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_SQ8_RECALL_ORACLE = f"""
 {_ORACLE_VECTOR_CTE},
-ex_dots AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dp
-  FROM v a JOIN v b ON a.i = b.i
-  WHERE a.vec_id < {N_QUERY_VECTORS} AND a.vec_id <> b.vec_id
-  GROUP BY 1, 2
-), ex_scored AS (
-  SELECT vec_a, vec_b, ROUND(dp / (na.nrm * nb.nrm), 6) AS cos_sim
-  FROM ex_dots
-  JOIN norms na ON na.vec_id = vec_a
-  JOIN norms nb ON nb.vec_id = vec_b
-), ex_topk AS (
-  SELECT vec_a, vec_b, cos_sim FROM ex_scored
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_a
-          ORDER BY cos_sim DESC, vec_b) <= {TOPK_K}
-),
+{_exact_topk_cte()},
 {_SQ8_CTE},
 sr_matched AS (
   SELECT e.vec_a, COUNT(*) AS n_matched,
@@ -3187,8 +2750,6 @@ QUERIES: list[QueryDef] = [
     QueryDef("ann_mmr_rerank", ann_mmr_rerank, _mmr_oracle(), "MMR diversification rerank of the cosine top-pool (unrolled greedy oracle)"),
     QueryDef("ann_ndcg_report", ann_ndcg_report, _ndcg_oracle(), "nDCG@k audit of the ANN paths (rank-aware recall sibling; integer-scaled discounts)"),
     QueryDef("embedding_isotropy", embedding_isotropy, EMBEDDING_ISOTROPY_ORACLE, "anisotropy audit: exact mean pairwise dot via the sum-vector identity (no pairs)"),
-    # -- round-5 additions (round-6 driver-window rotation queue) --
-    QueryDef("ann_matryoshka_recall", ann_matryoshka_recall, _matryoshka_oracle(), "Matryoshka prefix-dimension recall@k audit vs the full-dim exact baseline"),
-    # -- round-6 additions --
-    QueryDef("ann_prefix_ivf_recall", ann_prefix_ivf_recall, _prefix_ivf_oracle(), "recall@k of the IVF index re-quantized at each Matryoshka prefix width"),
+    QueryDef("ann_matryoshka_recall", ann_matryoshka_recall, _width_recall_oracle("mt", _exact_topk_cte), "Matryoshka prefix-dimension recall@k audit vs the full-dim exact baseline"),
+    QueryDef("ann_prefix_ivf_recall", ann_prefix_ivf_recall, _width_recall_oracle("pw", _ivf_cte), "recall@k of the IVF index re-quantized at each Matryoshka prefix width"),
 ]

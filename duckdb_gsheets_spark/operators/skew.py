@@ -1,12 +1,13 @@
 """Skew-handling operators: explicit salting patterns for hot keys.
 
-AQE's skew-join splitting (on in plans.session) handles most runtime
-skew; these operators encode the *manual* patterns for the cases AQE
-can't see — a pre-aggregation under a hot grouping key, and a shuffle
-join where one key dominates — in deterministic form (salt =
-hash-mod, never rand()) so results are oracle-checkable: salting is a
-pure execution-strategy change, the relational result is identical to
-the unsalted plan, and the DuckDB oracle is simply the plain SQL.
+AQE's skew-join splitting (on by default in Spark; plans.session
+leaves it on) handles most runtime skew; these operators encode the
+*manual* patterns for the cases AQE can't see — a pre-aggregation
+under a hot grouping key, and a shuffle join where one key dominates
+— in deterministic form (salt = hash-mod, never rand()) so results
+are oracle-checkable: salting is a pure execution-strategy change,
+the relational result is identical to the unsalted plan, and the
+DuckDB oracle is simply the plain SQL.
 """
 
 from __future__ import annotations

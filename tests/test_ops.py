@@ -6443,6 +6443,35 @@ def test_ann_prefix_ivf_recall_matches_numpy_recompute(spark):
         assert 0 <= n_perf <= n
 
 
+@pytest.mark.parametrize(
+    "kernel, whole",
+    [
+        ("_prefix_ivf_topk", "ann_ivf_topk"),
+        ("_prefix_cosine_topk", "ann_cosine_topk"),
+    ],
+)
+def test_prefix_kernel_at_full_width_is_the_whole_vector_query(
+    spark, kernel, whole
+):
+    """At width EMBEDDING_DIM a prefix kernel slices nothing, so it
+    returns exactly the whole-vector query's rows: the prefix-IVF
+    kernel those of ann_ivf_topk, the prefix-cosine kernel (a numpy
+    GEMM) those of ann_cosine_topk (the JVM fold), equal after the
+    6-decimal round."""
+    from duckdb_gsheets_spark.operators import similarity
+
+    dim = similarity.EMBEDDING_DIM
+    got = getattr(similarity, kernel)(spark, SF, (dim,)).collect()
+    assert {r.width for r in got} == {dim}
+
+    def rows(rs):
+        return sorted((r.vec_a, r.vec_b, r.cos_sim, r.rank) for r in rs)
+
+    want = rows(getattr(similarity, whole)(spark, SF).collect())
+    assert len(want) == similarity.N_QUERY_VECTORS * similarity.TOPK_K
+    assert rows(got) == want
+
+
 def test_pipeline_ccnet_corpus_matches_python_recompute(spark):
     """CCNet gate ledger against a direct Python recompute: the shared
     xent core + tercile rank (identical to the tertiles test) plus the
