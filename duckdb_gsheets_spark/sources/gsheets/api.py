@@ -80,18 +80,24 @@ def read_gsheet(spark: SparkSession, url_or_id: str, **options) -> DataFrame:
     concurrent ``createDataFrame`` elsewhere may also skip the
     LocalRelation, which changes its plan, not its rows. Options go
     through :func:`_options`, so this and the Data Source read a sheet
-    identically."""
+    identically.
+
+    The returned frame's ``arrow_nbytes`` attribute holds the Arrow
+    table's size in bytes, which Catalyst cannot see through the
+    scan: :func:`sheets_sql` sizes its tabs by it."""
     schema, table = bind(_options(url_or_id, options))
     with _THRESHOLD_LOCK:
         previous = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
         spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
         try:
-            return spark.createDataFrame(table, schema.to_struct_type())
+            df = spark.createDataFrame(table, schema.to_struct_type())
         finally:
             if previous is None:
                 spark.conf.unset(_LOCAL_RELATION_THRESHOLD)
             else:
                 spark.conf.set(_LOCAL_RELATION_THRESHOLD, previous)
+    df.arrow_nbytes = table.nbytes
+    return df
 
 
 #: Only URLs with this prefix are replaced — the reference's exact
@@ -142,6 +148,10 @@ _NON_ALIAS_KEYWORDS = frozenset(
 #: but SKIP the injection; the caller aliases after the clause.
 _ALIAS_UNSAFE_KEYWORDS = frozenset({"tablesample"})
 
+#: Words that, right after a table reference and its alias, start a
+#: join of which the reference is the left side.
+_JOIN_HEADS = frozenset("join inner left right full cross natural".split())
+
 
 class _SheetRef(NamedTuple):
     start: int  # span of the URL literal in the statement
@@ -149,27 +159,46 @@ class _SheetRef(NamedTuple):
     url: str
     word: str  # the lowercased word after the literal, or ""
     in_list: bool  # comma-chained after an earlier ref
+    joined: bool  # a side of a join: after JOIN, before one, or in a list
 
 
 def _is_user_alias(word: str) -> bool:
     return bool(word) and word not in _NON_ALIAS_KEYWORDS
 
 
+def _next_word(sql: str, pos: int) -> tuple[str, int]:
+    """The lowercased word at ``pos`` (after blanks and an ``AS``) and
+    where it ends; ``""`` and ``pos`` when none is there."""
+    probe = _ALIAS_PROBE_RE.match(sql, pos)
+    return (probe.group(1).strip("`").lower(), probe.end()) if probe else ("", pos)
+
+
 def _sheet_refs(sql: str) -> list[_SheetRef]:
     """Every sheet-URL literal in table position, in text order: each
     FROM/JOIN literal, then the comma-separated literals chained after
-    it and its alias."""
+    it and its alias. A reference is ``joined`` when the text makes it
+    a side of a join: it follows JOIN, a join starts right after it
+    and its alias, or it is in a comma list of sheet literals. That
+    reads the text, not the plan, so it misses joins the text does not
+    show at the reference (a sheet inside a joined subquery)."""
     refs = []
     m, in_list = _FROM_URL_RE.search(sql), False
     while m:
         end = pos = m.end()
-        probe = _ALIAS_PROBE_RE.match(sql, pos)
-        word = probe.group(1).strip("`").lower() if probe else ""
-        url = m.group(2) or m.group(3)
-        refs.append(_SheetRef(*m.span(1), url, word, in_list))
+        word, after = _next_word(sql, pos)
+        next_word = word
         if _is_user_alias(word):
-            pos = probe.end()
+            pos = after
+            next_word = _next_word(sql, pos)[0]
         chained = _COMMA_URL_RE.match(sql, pos)
+        joined = (
+            in_list
+            or bool(chained)
+            or m.group(0)[:4].lower() == "join"
+            or next_word in _JOIN_HEADS
+        )
+        url = m.group(2) or m.group(3)
+        refs.append(_SheetRef(*m.span(1), url, word, in_list, joined))
         if chained:
             m, in_list = chained, True
         else:
@@ -227,11 +256,18 @@ def sheets_sql(spark: SparkSession, sql: str, **options) -> DataFrame:
     are then numbered over the FROM/JOIN references in text order,
     then the comma-listed ones. One splice puts the view names in the
     statement.
+
+    Before registering, :func:`_broadcast_small` hints each small tab
+    that the statement joins, except its largest, for a broadcast join:
+    Spark's size rule applied to the tab's Arrow size, which Catalyst
+    cannot see through the scan. The hint stays on the tab's view.
     """
     refs = _sheet_refs(sql)
     urls = list(dict.fromkeys(ref.url for ref in refs))
     views = {url: _view_name(url, options) for url in urls}
-    for url, df in zip(urls, _read_all(spark, urls, options)):
+    joined = [all(r.joined for r in refs if r.url == url) for url in urls]
+    frames = _broadcast_small(spark, _read_all(spark, urls, options), joined)
+    for url, df in zip(urls, frames):
         df.createOrReplaceTempView(views[url])
     user_aliases = {r.word for r in refs if _is_user_alias(r.word)}
     used_aliases = set(user_aliases)
@@ -272,6 +308,32 @@ def _read_all(spark: SparkSession, urls: list[str], options: dict) -> list[DataF
         rest = [pool.submit(read_gsheet, spark, url, **options) for url in urls[1:]]
         first = read_gsheet(spark, urls[0], **options)
         return [first] + [read.result() for read in rest]
+
+
+def _broadcast_small(
+    spark: SparkSession, frames: list[DataFrame], joined: list[bool]
+) -> list[DataFrame]:
+    """``frames`` (one per tab of a statement), each small tab hinted for
+    a broadcast join. Catalyst sees no size through a tab's Arrow scan,
+    so without the hint it plans a sort-merge join that shuffles both
+    tabs. Spark's size rule decides what is small: an Arrow size
+    (``arrow_nbytes``) of at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1: nothing is).
+
+    The statement's largest tab is never hinted: with both sides hinted,
+    Catalyst picks the build side by the pruned projection's estimate,
+    which can be the large tab. Nor is a tab that the text does not
+    show as a side of a join at every reference (``_SheetRef.joined``):
+    Spark warns about a join hint that no join uses."""
+    if len(frames) < 2:
+        return frames
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    sizes = [df.arrow_nbytes for df in frames]
+    largest = sizes.index(max(sizes))
+    return [
+        df.hint("broadcast") if i != largest and join and size <= threshold else df
+        for i, (df, join, size) in enumerate(zip(frames, joined, sizes))
+    ]
 
 
 def sheets(spark: SparkSession, url_or_id: str, **options) -> DataFrame:

@@ -10,8 +10,12 @@ sheet lookup by id/name/index with SheetNotFoundError.
 
 from __future__ import annotations
 
+import io
 import json
 from dataclasses import dataclass, field
+
+import pyarrow as pa
+import pyarrow.json as pa_json
 
 from duckdb_gsheets_spark.sources.gsheets.auth import AuthProvider
 from duckdb_gsheets_spark.sources.gsheets.errors import (
@@ -48,17 +52,79 @@ class SpreadsheetMetadata:
     sheets: tuple[SheetProperties, ...] = field(default_factory=tuple)
 
 
+#: The grid of a values response: one list of cell texts per row, JSON
+#: ``null`` as NULL. Large offsets: a grid near the Sheets cap (10M
+#: cells) can hold more than 2 GB of text.
+GRID_TYPE = pa.large_list(pa.large_string())
+
+
 @dataclass(frozen=True)
 class ValueRange:
     """Row-oriented payload (reference: types.hpp:95-101). ``values``
-    holds the cells as the response JSON has them: strings under the
-    default FORMATTED_VALUE rendering, any JSON scalar otherwise. The
-    reader's inference turns them into text and types
-    (``inference.cast_rows``), so no per-cell pass runs here."""
+    is the grid as one :data:`GRID_TYPE` array, every row as the
+    response has it (header row included), each cell as text: a string
+    cell as is, any other JSON scalar as ``str()`` of its Python value
+    (see :func:`as_grid`). The reader's inference types the columns
+    (``inference.cast_rows``)."""
 
     range: str
-    values: list[list]
+    values: pa.LargeListArray
     major_dimension: str = "ROWS"
+
+
+def as_grid(rows: list) -> pa.LargeListArray:
+    """Decoded JSON rows as a :data:`GRID_TYPE` array: a row of strings
+    and ``null`` as is, any other scalar (a number or boolean under a
+    non-default value rendering) as ``str()`` of it."""
+    try:
+        return pa.array(rows, GRID_TYPE)
+    except pa.ArrowTypeError:
+        return pa.array(
+            [[c if c is None else str(c) for c in row] for row in rows], GRID_TYPE
+        )
+
+
+#: The fields of a values response, as Arrow's JSON reader decodes
+#: them; any other field is skipped.
+_VALUES_SCHEMA = pa.schema(
+    [
+        ("range", pa.string()),
+        ("majorDimension", pa.string()),
+        ("values", pa.list_(pa.list_(pa.string()))),
+    ]
+)
+_VALUES_PARSE = pa_json.ParseOptions(
+    explicit_schema=_VALUES_SCHEMA,
+    newlines_in_values=True,  # the API indents its JSON
+    unexpected_field_behavior="ignore",
+)
+
+
+def _arrow_values(body: str, a1: str) -> ValueRange | None:
+    """A 2xx values body read by Arrow's JSON reader, or None when that
+    reader cannot type it as exactly one object under
+    :data:`_VALUES_SCHEMA`. A body that is not an object never reaches
+    the reader: it crashes on a bare ``null``."""
+    if not body.lstrip(" \t\n\r").startswith("{"):
+        return None
+    try:
+        data = body.encode()
+        table = pa_json.read_json(
+            io.BytesIO(data),
+            read_options=pa_json.ReadOptions(
+                use_threads=False, block_size=len(data) + 1
+            ),
+            parse_options=_VALUES_PARSE,
+        )
+    except (ValueError, OverflowError):  # ArrowInvalid, UnicodeEncodeError
+        return None
+    if table.num_rows != 1:
+        return None
+    return ValueRange(
+        range=table.column("range")[0].as_py() or a1,
+        values=table.column("values").combine_chunks().flatten().cast(GRID_TYPE),
+        major_dimension=table.column("majorDimension")[0].as_py() or "ROWS",
+    )
 
 
 def _parse_json(resp: HttpResponse) -> dict:
@@ -197,10 +263,20 @@ class ValuesResource:
         )
 
     def get(self, a1: str) -> ValueRange:
-        payload = _parse_json(self._client.do_get(self._path(a1)))
+        """One values GET, its body decoded once, straight into the
+        grid by Arrow's JSON reader. A body that reader cannot read as
+        one object of string cells (a number or boolean cell, a lone
+        surrogate escape, malformed JSON) is read as before:
+        :func:`_parse_json`, then :func:`as_grid`, with the same
+        results and errors."""
+        resp = self._client.do_get(self._path(a1))
+        decoded = _arrow_values(resp.body, a1) if resp.status < 300 else None
+        if decoded is not None:
+            return decoded
+        payload = _parse_json(resp)
         return ValueRange(
             range=payload.get("range", a1),
-            values=payload.get("values", []),
+            values=as_grid(payload.get("values") or []),
             major_dimension=payload.get("majorDimension", "ROWS"),
         )
 

@@ -268,8 +268,9 @@ class GSheetsStreamReader(SimpleDataSourceStreamReader):
     ) -> tuple[Iterator[pa.RecordBatch], dict]:
         """Fetch the range and return the data rows from ``start`` up to
         ``end`` (the current last row when ``end`` is None), cast, with
-        the offset they end at. Only those rows are cast; no rows give
-        no batch, as Spark wants of a read that did not advance."""
+        the offset they end at. Only those rows, a slice of the fetched
+        Arrow grid, are cast; no rows give no batch, as Spark wants of a
+        read that did not advance."""
         if self._client is None:
             self._client = _build_client(self._options)
             self._target = _resolve_target(self._options, self._client)

@@ -17,9 +17,10 @@ Exact behavior parity with the reference's bind-time inference
   like the engine cast the reference delegates to. The cast grid is
   one Arrow table, the single read format of every entry point.
 
-The grid arrives as the API sent it: strings under the default
-FORMATTED_VALUE rendering, but any JSON scalar is accepted and reads
-as ``str()`` of itself. :func:`cast_cell` is the per-cell rule;
+The grid arrives as the client decoded it: one Arrow list array of
+cell texts per row (``client.GRID_TYPE``). Rows given as Python lists
+are accepted too, with any JSON scalar read as ``str()`` of itself
+(``client.as_grid``). :func:`cast_cell` is the per-cell rule;
 :func:`cast_rows` applies it a column at a time with pyarrow compute
 and gives the same values.
 """
@@ -38,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from duckdb_gsheets_spark.sources.gsheets.client import as_grid
 from duckdb_gsheets_spark.sources.gsheets.errors import EmptyRangeError
 
 
@@ -86,18 +88,23 @@ class SheetSchema:
 
 
 def infer_schema(
-    values: list[list[str]],
+    values: pa.LargeListArray | list[list],
     header: bool = True,
     all_varchar: bool = False,
     range_label: str = "",
 ) -> SheetSchema:
-    """Infer names and types from the fetched grid. Only the header row
-    and the first data row are read, each cell as :func:`_text` of it."""
-    if not values:
+    """Infer names and types from the fetched grid, a ``GRID_TYPE``
+    array (``ValueRange.values``) or a list of rows. Only the header row
+    and the first data row are read, as Python lists, each cell as
+    :func:`_text` of it."""
+    head = values[:2]
+    if isinstance(head, pa.Array):
+        head = head.to_pylist()
+    if not head:
         raise EmptyRangeError(range_label or "(unspecified)")
-    header_row = values[0] if header else []
-    first_data = values[1] if header and len(values) > 1 else (
-        values[0] if not header else []
+    header_row = head[0] if header else []
+    first_data = head[1] if header and len(head) > 1 else (
+        head[0] if not header else []
     )
     header_row = [_text(c) for c in header_row]
     first_data = [_text(c) for c in first_data]
@@ -155,9 +162,6 @@ def cast_cell(value: str | None, type_name: str):
     return value
 
 
-#: The data rows as one Arrow list array. Large offsets: a grid near the
-#: Sheets cap (10M cells) can hold more than 2 GB of text.
-_GRID_TYPE = pa.large_list(pa.large_string())
 _NULL_TEXT = pa.scalar(None, pa.large_string())
 _NULL_INDEX = pa.scalar(None, pa.int64())
 
@@ -191,19 +195,19 @@ def _cast_column(column: pa.Array, type_name: str) -> pa.Array:
     return column.cast(pa.string())
 
 
-def cast_rows(values: list[list], schema: SheetSchema, header: bool) -> pa.Table:
-    """Materialize the data rows as a typed Arrow table. The rows become
-    one Arrow list array; column ``i`` takes each row's ``i``-th cell,
-    NULL past the end of a short row, and is cast as a whole."""
-    rows = values[1:] if header else values
-    try:
-        grid = pa.array(rows, _GRID_TYPE)
-    except pa.ArrowTypeError:  # a non-string JSON scalar
-        grid = pa.array(
-            [[c if c is None else str(c) for c in row] for row in rows], _GRID_TYPE
-        )
-    cells = pc.if_else(pc.equal(grid.values, ""), _NULL_TEXT, grid.values)
-    starts, lengths = grid.offsets[:-1], pc.list_value_length(grid)
+def cast_rows(
+    values: pa.LargeListArray | list[list], schema: SheetSchema, header: bool
+) -> pa.Table:
+    """Materialize the data rows as a typed Arrow table. ``values`` is
+    the grid as ``ValueRange.values`` holds it, or a list of rows, which
+    becomes one first (``client.as_grid``). Column ``i`` takes each data
+    row's ``i``-th cell, NULL past the end of a short row, and is cast
+    as a whole."""
+    grid = values if isinstance(values, pa.Array) else as_grid(values)
+    rows = grid[1:] if header else grid
+    # A slice keeps its parent's child array; its offsets index into it.
+    cells = pc.if_else(pc.equal(rows.values, ""), _NULL_TEXT, rows.values)
+    starts, lengths = rows.offsets[:-1], pc.list_value_length(rows)
     columns = []
     for i, type_name in enumerate(schema.types):
         at = pc.if_else(pc.greater(lengths, i), pc.add(starts, i), _NULL_INDEX)

@@ -4,10 +4,17 @@ metadata decode, sheet lookup, addSheet."""
 
 import json
 
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from duckdb_gsheets_spark.sources.gsheets.auth import BearerTokenAuth
-from duckdb_gsheets_spark.sources.gsheets.client import GSheetsClient
+from duckdb_gsheets_spark.sources.gsheets.client import (
+    GRID_TYPE,
+    GSheetsClient,
+    _arrow_values,
+)
 from duckdb_gsheets_spark.sources.gsheets.errors import (
     SheetNotCreatedError,
     SheetNotFoundError,
@@ -60,7 +67,7 @@ def test_values_get_url():
     assert transport.requests[0].url.endswith(
         "/spreadsheets/sid1/values/Sheet1%21A1%3AB2"
     )
-    assert vr.values == [["a", "b"]]
+    assert vr.values.to_pylist() == [["a", "b"]]
 
 
 def test_values_update_url():
@@ -151,3 +158,56 @@ def test_create_sheet_malformed_reply():
     transport.add_response(200, json.dumps({"replies": [{}]}))
     with pytest.raises(SheetNotCreatedError):
         client.spreadsheet("sid1").create_sheet("New")
+
+
+_CELL_TEXT = st.one_of(
+    st.none(),
+    st.text(max_size=6),  # escapes, NUL, non-BMP characters
+    st.sampled_from(["", "1", "TRUE", '"q"', "a\\b", "\n", "😀", "\x00"]),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    rows=st.lists(st.lists(_CELL_TEXT, max_size=5), max_size=8),
+    with_values=st.booleans(),
+    indent=st.sampled_from([None, 2]),
+    ensure_ascii=st.booleans(),
+)
+def test_arrow_decode_equals_json_loads(rows, with_values, indent, ensure_ascii):
+    """Arrow's JSON reader decodes a string-celled values body, compact
+    or indented as the real API sends it, into the grid that
+    ``json.loads`` and ``pa.array`` give, ragged, empty and missing rows
+    included."""
+    payload = {"range": "S!A1:E8", "majorDimension": "ROWS"}
+    if with_values:
+        payload["values"] = rows
+    body = json.dumps(payload, indent=indent, ensure_ascii=ensure_ascii)
+    decoded = _arrow_values(body, "S")
+    assert decoded is not None
+    expected = pa.array(json.loads(body).get("values", []), GRID_TYPE)
+    assert decoded.values.type == GRID_TYPE
+    assert decoded.values.equals(expected)
+    assert (decoded.range, decoded.major_dimension) == ("S!A1:E8", "ROWS")
+    client, transport = make_client()
+    transport.add_response(200, body)
+    assert client.values("sid1").get("S").values.equals(expected)
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        '{"values": [["a", 1]]}',
+        '{"values": [["a", true]]}',
+        '{"values": [["\\ud800"]]}',
+        '{"values": [["a"]]',
+        '{"values": [["a"]]}\n{"values": [["b"]]}',
+        "null",
+        "",
+    ],
+)
+def test_arrow_decode_declines_what_it_cannot_type(body):
+    """A number or boolean cell, a lone surrogate escape, malformed JSON,
+    more than one object and a body that is no object are left to the
+    ``json.loads`` path."""
+    assert _arrow_values(body, "S") is None

@@ -5,6 +5,7 @@ import pytest
 
 from duckdb_gsheets_spark.sources.gsheets import read_gsheet
 from duckdb_gsheets_spark.sources.gsheets.api import register
+from duckdb_gsheets_spark.sources.gsheets.errors import SheetsParseError
 
 
 def url_for(sid: str) -> str:
@@ -543,3 +544,43 @@ def test_read_gsheet_under_thread_stress(spark, sheets_server, people_sheet):
         spark.conf.unset(key)
     assert results == [6] * 8
 
+
+
+def _bind_grid(server, sid, grid, body=None):
+    from duckdb_gsheets_spark.sources.gsheets.datasource import bind
+
+    store = server.new_spreadsheet(sid)
+    store.add_sheet("Sheet1", grid)
+    if body is not None:  # the emulator serves a cached body as is
+        store.get_cache["Sheet1"] = body
+    return bind({"path": sid, **opts(server)})
+
+
+def test_cells_arrow_cannot_type_bind_as_before(sheets_server):
+    """A body Arrow's JSON reader cannot type as string cells binds
+    through ``json.loads``: numbers and booleans read as ``str()`` of
+    them (``True`` is text, not a boolean), JSON ``null`` as NULL."""
+    schema, table = _bind_grid(
+        sheets_server,
+        "scalar-cells",
+        [["a", "b", "c"], [1, True, 2.5], [False, None, 1e300]],
+    )
+    assert schema.types == ("double", "string", "double")
+    assert [tuple(r.values()) for r in table.to_pylist()] == [
+        (1.0, "True", 2.5),
+        (None, None, 1e300),
+    ]
+
+
+@pytest.mark.parametrize(
+    "sid, grid, body, error",
+    [
+        ("truncated", [["a"]], b'{"values": [["a"], ["b"', SheetsParseError),
+        ("surrogate", [["a", "b"], ["\ud800", "x"]], None, UnicodeEncodeError),
+    ],
+)
+def test_bodies_arrow_cannot_read_fail_as_before(sheets_server, sid, grid, body, error):
+    """Truncated JSON is a ``SheetsParseError``; a lone surrogate escape
+    fails converting to Arrow text."""
+    with pytest.raises(error):
+        _bind_grid(sheets_server, sid, grid, body)

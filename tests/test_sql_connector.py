@@ -545,3 +545,131 @@ def test_sheets_sql_raises_the_first_failing_tab_in_text_order(
         _sheets_sql(
             spark, sheets_server, f"SELECT * FROM '{bad[1]}' JOIN '{bad[0]}' USING (k)"
         )
+
+
+def _sized_book(server, sid):
+    """A 300-row fact tab and a 30-row dim tab: the dim tab is the small
+    one by any measure."""
+    store = server.new_spreadsheet(sid)
+    store.add_sheet("fact", [["k", "v"]] + [[str(i % 30), str(i)] for i in range(300)])
+    store.add_sheet("dim", [["key", "region"]] + [[str(i), f"r{i % 3}"] for i in range(30)])
+    return [f"{url_for(sid)}?gid={gid}" for gid in (0, 1)]
+
+
+_JOIN_SQL = (
+    "SELECT d.region, sum(f.v) AS total FROM '{fact}' AS f "
+    "JOIN '{dim}' AS d ON f.k = d.key GROUP BY d.region ORDER BY 1"
+)
+#: Every group sums the fact's v over the keys of its region.
+_JOIN_ROWS = [
+    (f"r{g}", float(sum(i for i in range(300) if i % 30 % 3 == g))) for g in range(3)
+]
+
+
+def _children(node):
+    """A physical plan node's children, AQE query stages opened up."""
+    if "QueryStage" in node.nodeName():
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _subtree(node) -> list:
+    """``node`` and every node under it, preorder."""
+    nodes = [node]
+    for child in _children(node):
+        nodes += _subtree(child)
+    return nodes
+
+
+def _executed(df) -> list:
+    """Every node of ``df``'s executed plan after AQE has finished it."""
+    return _subtree(df._jdf.queryExecution().executedPlan().executedPlan())
+
+
+def _scans(nodes) -> list[str]:
+    return [n.output().toString() for n in nodes if n.nodeName().startswith("Scan")]
+
+
+def _hinted(df) -> bool:
+    return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_sheets_sql_broadcasts_the_small_tab_of_a_join(spark, sheets_server):
+    """The join builds its hash table from the small tab, broadcast, and
+    the large tab's scan feeds the join with no shuffle in between."""
+    fact, dim = _sized_book(sheets_server, "broadcast-plan")
+    df = _sheets_sql(spark, sheets_server, _JOIN_SQL.format(fact=fact, dim=dim))
+    assert [tuple(r) for r in df.collect()] == _JOIN_ROWS
+    joins = [n for n in _executed(df) if n.nodeName() == "BroadcastHashJoin"]
+    assert len(joins) == 1
+    join = joins[0]
+    build, stream = (
+        (join.right(), join.left())
+        if join.buildSide().toString() == "BuildRight"
+        else (join.left(), join.right())
+    )
+    assert [s for s in _scans(_subtree(build)) if "region" in s]
+    stream_nodes = _subtree(stream)
+    assert [s for s in _scans(stream_nodes) if "v#" in s]
+    assert not [n for n in stream_nodes if "Exchange" in n.nodeName()]
+
+
+def test_sheets_sql_hints_nothing_when_broadcast_is_off_or_one_tab(
+    spark, sheets_server
+):
+    """``spark.sql.autoBroadcastJoinThreshold=-1`` keeps the sort-merge
+    join and the statement unhinted; a self join reads one tab and is
+    never hinted."""
+    fact, dim = _sized_book(sheets_server, "no-broadcast-plan")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = _sheets_sql(spark, sheets_server, _JOIN_SQL.format(fact=fact, dim=dim))
+        assert [tuple(r) for r in df.collect()] == _JOIN_ROWS
+        names = [n.nodeName() for n in _executed(df)]
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert not _hinted(df)
+    assert "SortMergeJoin" in names and "BroadcastHashJoin" not in names
+    self_join = _sheets_sql(
+        spark,
+        sheets_server,
+        f"SELECT count(*) AS n FROM '{dim}' AS a JOIN '{dim}' AS b ON a.key = b.key",
+    )
+    assert self_join.first().n == 30
+    assert not _hinted(self_join)
+
+
+def test_sheets_sql_union_of_two_tabs_is_not_hinted(spark, sheets_server):
+    """Tabs that no join uses get no hint, which Spark would log as an
+    unused join hint; the rows are the tabs' rows."""
+    fact, dim = _sized_book(sheets_server, "union-tabs")
+    df = _sheets_sql(
+        spark,
+        sheets_server,
+        f"SELECT k FROM '{fact}' UNION ALL SELECT key FROM '{dim}'",
+    )
+    assert sorted(r.k for r in df.collect()) == sorted(
+        [float(i % 30) for i in range(300)] + [float(i) for i in range(30)]
+    )
+    assert not _hinted(df)
+
+
+@pytest.mark.parametrize(
+    "sql, joined",
+    [
+        ("SELECT * FROM 'A' f JOIN 'B' d ON f.k = d.k", [True, True]),
+        ("SELECT * FROM 'A' LEFT JOIN 'B' USING (k)", [True, True]),
+        ("SELECT * FROM 'A' AS f, 'B' AS d WHERE f.k = d.k", [True, True]),
+        ("SELECT k FROM 'A' UNION ALL SELECT k FROM 'B'", [False, False]),
+        ("SELECT * FROM 'A' f WHERE f.k IN (SELECT k FROM 'B')", [False, False]),
+        ("SELECT * FROM (SELECT * FROM 'A') t JOIN 'B' d ON t.k = d.k", [False, True]),
+    ],
+)
+def test_sheet_refs_mark_the_sides_of_a_join(sql, joined):
+    """A reference is a join side when it follows JOIN, a join starts
+    right after it and its alias, or it is in a comma list."""
+    from duckdb_gsheets_spark.sources.gsheets.api import _sheet_refs
+
+    sql = sql.replace("'A'", f"'{url_for('a')}'").replace("'B'", f"'{url_for('b')}'")
+    assert [r.joined for r in _sheet_refs(sql)] == joined
